@@ -24,15 +24,21 @@ DEC = "decimal(30,6)"
 #: decimal(30,6) runs BigDecimal adds in every partial-aggregate
 #: buffer update — measured as ~2x the whole of a1 under the noop
 #: action.  The exact value x rendered at scale 6 is an integer
-#: u = unscaled(x) < 2^63 of millionths; u splits as
-#: u = (u >> 20) * 2^20 + pmod(u, 2^20), and BOTH halves sum exactly
-#: in bigints far past 100 TB: |sum(lo)| < n * 2^20 (exact to
-#: ~8.8e12 rows per group) and |sum(hi)| < n * |x|_max / 2^20.  The
-#: two bigint totals recombine into the identical decimal(38,6) on
+#: u = unscaled(x) of millionths; u splits as
+#: u = (u >> 20) * 2^20 + pmod(u, 2^20), both halves sum in bigints,
+#: and the two totals recombine into the identical decimal(38,6) on
 #: the final (group-count-sized) rows, where BigDecimal cost is
-#: irrelevant.  Domain bound (documented, was 1e24 on the decimal
-#: path): |x| <= 9.2e12 so u fits a bigint — every caller sums
-#: monetary/quantity/score columns orders of magnitude below that.
+#: irrelevant.  The envelope is JOINT in the group's row count N and
+#: its largest magnitude |x|: the sum is exact while
+#:     N · (|x|·1e6 >> 20) < 2^63
+#: (with each lo half < 2^20 adding N < 2^43 ≈ 8.8e12, and u itself
+#: needing |x| < 9.2e12).  Rows and magnitude trade against each
+#: other: at |x| = 2^43 ≈ 8.8e12 only 1,099,511 rows fit, at 8.8e12
+#: rows only |x| < ~1.1e6.  Outside the envelope a bigint partial
+#: overflows, which ANSI mode (Spark 4's default) raises as
+#: ARITHMETIC_OVERFLOW instead of wrapping (test-pinned in
+#: tests/test_twin_types.py).  Every caller sums monetary/quantity/
+#: score columns far inside it.
 _DSUM_SHIFT = 20
 _DSUM_LO = 1 << _DSUM_SHIFT
 _DSUM_SCALE = 1_000_000

@@ -1001,81 +1001,40 @@ def dedup_clusters(pairs: DataFrame, *, id_a: str = "doc_a",
     CLUSTERS (each doc labeled with the min doc_id of its component
     — the canonical representative to keep).
 
-    Iterative label propagation: each round every node adopts the
-    minimum label among itself and its neighbors; converged when no
-    label changes.  O(graph diameter) rounds, each one shuffle; the
-    driver only sees a changed-row COUNT per round (no data
-    collect), and lineage is truncated with localCheckpoint so plans
-    don't grow unboundedly — the standard Spark iterative-algorithm
-    discipline.  The iteration itself is non-SQL-expressible, but its
-    FIXPOINT is: the l11 registry row oracles the converged clusters
-    against a recursive-CTE reachability twin; equality vs union-find
-    is pytest-checked.
-    """
-    edges = (pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-             .unionByName(
-                 pairs.select(F.col(id_b).alias("src"),
-                              F.col(id_a).alias("dst")))
-             .distinct())
-    edges = edges.localCheckpoint()
-    labels = (edges.select(F.col("src").alias("node")).distinct()
-              .withColumn("label", F.col("node")))
-    for _ in range(max_iter):
-        neighbor_min = (edges.join(labels, edges.dst == labels.node)
-                        .groupBy("src")
-                        .agg(F.min("label").alias("nbr_label")))
-        new_labels = (labels.join(neighbor_min,
-                                  labels.node == neighbor_min.src, "left")
-                      .select("node",
-                              F.least("label", F.coalesce(
-                                  "nbr_label", "label")).alias("label")))
-        new_labels = new_labels.localCheckpoint()
-        changed = (new_labels.alias("n")
-                   .join(labels.alias("o"), "node")
-                   .filter(F.col("n.label") != F.col("o.label")).count())
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels.select(F.col("node").alias("doc_id"),
-                         F.col("label").alias("cluster_id"))
-
-
-def cc_two_phase(pairs: DataFrame, *, id_a: str = "doc_a",
-                 id_b: str = "doc_b", max_iter: int = 25) -> DataFrame:
-    """Connected components by ALTERNATING LARGE-STAR / SMALL-STAR
-    (Kiveris et al. 2014, "Connected Components in MapReduce and
-    Beyond", public) — the published alternative to plain label
-    propagation (:func:`dedup_clusters`) whose round count scales
-    with log(component size) instead of graph DIAMETER: a 10^6-node
-    path graph converges in ~20 rounds, not 10^6.
-
-    Each round is two conditional re-attachment passes over the edge
-    relation:
+    ALTERNATING LARGE-STAR / SMALL-STAR (Kiveris et al. 2014,
+    "Connected Components in MapReduce and Beyond"): the round count
+    scales with log(component size), not graph DIAMETER, so a long
+    chain of near-duplicates (versioned pages) converges in a few
+    rounds — a 10^6-node path in ~20.  Each round is two conditional
+    re-attachment passes over the edge relation:
     - large-star: every node u attaches its LARGER neighbors to
       m = min(N(u) ∪ {u});
     - small-star: every node u attaches its smaller-or-equal
       neighbors to the same m.
     The edge set converges to stars centered at each component's
     minimum; a node's root is then its minimum neighbor (or itself).
-    Convergence test = edge-multiset fixpoint via a changed-count
-    (no driver data collect, lineage truncated per round — the
-    dedup_clusters discipline).
+    Convergence test = edge-set fixpoint via a changed-count (no
+    driver data collect), lineage truncated per round with
+    localCheckpoint.  Running out of rounds RAISES: labels from a
+    non-converged edge set would be plausible but wrong clusters.
 
-    Returns the same (doc_id, cluster_id=component min) contract as
-    :func:`dedup_clusters`, so the two implementations are mutual
-    differentials and share the recursive-CTE oracle."""
+    The iteration itself is non-SQL-expressible, but its FIXPOINT
+    is: the l11/x104 registry rows oracle the clusters against a
+    recursive-CTE reachability twin; equality vs union-find is
+    pytest-checked."""
     if max_iter < 1:
         # delta starts at 0, so a never-entered loop would skip the
         # non-convergence guard below and silently emit cluster_ids
-        # computed from the raw, never-iterated edge set (r8 ADVICE).
+        # computed from the raw, never-iterated edge set.
         raise ValueError(f"max_iter must be >= 1, got {max_iter}")
-    nodes = (pairs.select(F.col(id_a).alias("n"))
-             .unionByName(pairs.select(F.col(id_b).alias("n")))
-             .distinct().localCheckpoint(eager=True))
     edges = (pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
              .unionByName(pairs.select(F.col(id_b).alias("u"),
                                        F.col(id_a).alias("v")))
              .distinct().localCheckpoint(eager=True))
+    # The initial edge set is symmetric and keeps self-pairs, so every
+    # endpoint appears as u: the node set rides on this checkpoint
+    # instead of costing a scan of its own.
+    nodes = edges.select(F.col("u").alias("n")).distinct()
 
     def _sym(e: DataFrame) -> DataFrame:
         return (e.unionByName(e.select(F.col("v").alias("u"),
@@ -1109,12 +1068,9 @@ def cc_two_phase(pairs: DataFrame, *, id_a: str = "doc_a",
     for _ in range(max_iter):
         new_e = small_star(large_star(edges))
         new_e = new_e.localCheckpoint(eager=True)
-        # r15 (guide §1.2): ONE tagged-union job per round instead of
-        # two exceptAll jobs.  Both relations are distinct SETS
-        # (post-_sym), so sum(tag) per (u, v) is +1/-1/0 and the
-        # nonzero-key count IS the symmetric difference size — the
-        # exact value the exceptAll pair returned.  One shuffle of
-        # the union vs two exceptAll shuffles.
+        # ONE tagged-union job per round: both relations are distinct
+        # SETS, so sum(tag) per (u, v) is +1/-1/0 and the nonzero-key
+        # count IS the symmetric difference size.
         delta = (new_e.withColumn("__t", F.lit(1))
                  .unionByName(edges.withColumn("__t", F.lit(-1)))
                  .groupBy("u", "v").agg(F.sum("__t").alias("__s"))
@@ -1123,12 +1079,11 @@ def cc_two_phase(pairs: DataFrame, *, id_a: str = "doc_a",
         if delta == 0:
             break
     if delta != 0:
-        # roots from a non-converged edge set would be silently wrong
-        # cluster_ids; the alternating rounds converge in O(log
-        # component size), so hitting this means max_iter was set far
-        # too low for the graph, not a transient condition.
+        # the alternating rounds converge in O(log component size), so
+        # hitting this means max_iter was set far too low for the
+        # graph, not a transient condition.
         raise RuntimeError(
-            f"cc_two_phase did not converge in {max_iter} rounds "
+            f"dedup_clusters did not converge in {max_iter} rounds "
             f"(last round still changed {delta} edges)")
     roots = (edges.groupBy("u")
              .agg(F.least(F.min("v"), F.col("u")).alias("root")))

@@ -2,7 +2,9 @@
 
 PageRank here is the canonical "iterate a join-agg to fixpoint"
 Spark pattern (same driver-synchronized loop family as the
-connected-components operator in ``dedup.py::dedup_clusters``).
+large-star/small-star connected-components operator in
+``dedup.py::dedup_clusters``, which also raises when it runs out of
+rounds).
 No reference ancestry — the reference (`GetJobs.py`) has no graph
 surface; this is the Spark-first design for link analysis over an
 edge list.
@@ -298,7 +300,7 @@ def kcore(edges: DataFrame, k: int, a: str = "a", b: str = "b",
     SQL oracle exact as long as its round count covers convergence
     (the x29/x47 unrolled-CTE discipline).
 
-    Guard rails (the cc_two_phase r7/r8 lesson): ``max_iter`` < 1 is
+    Guard rails (the dedup_clusters lesson): ``max_iter`` < 1 is
     rejected up front, and running out of rounds RAISES instead of
     returning the un-converged edge set as if it were the core.
 

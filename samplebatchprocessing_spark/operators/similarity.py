@@ -701,6 +701,25 @@ def recluster_is_due(max_cell: int, n_cells: int, total: int,
     return max_cell * n_cells >= skew_threshold * total
 
 
+def _ivf_rank(cands: DataFrame, probe_df: DataFrame,
+              k: int) -> DataFrame:
+    """The shared IVF tail: join the cell-assigned candidates to the
+    probe relation on cell, drop the self match, exact cosine
+    rescore, then the per-query (cosine desc, vec_id) top-k window.
+    The caller decides whether ``probe_df`` is wrapped in
+    ``F.broadcast`` — that choice is what shapes each probe's plan."""
+    pairs = (cands.join(probe_df, "cell")
+             .filter(F.col("vec_id") != F.col("query_id")))
+    cos = cosine_expr(F.col("q_emb"), F.col("embedding"))
+    w = W.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("vec_id"))
+    return (pairs.select("query_id", "vec_id", cos.alias("cosine"))
+            .filter(F.col("cosine").isNotNull() & ~F.isnan("cosine"))
+            .withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .withColumn("cosine", F.round("cosine", 6)))
+
+
 def ivf_index_probe(spark, index_dir: str, cmat, emb: DataFrame,
                     query_pred, k: int = 5,
                     n_probe: int = 4) -> DataFrame:
@@ -723,16 +742,7 @@ def ivf_index_probe(spark, index_dir: str, cmat, emb: DataFrame,
     cells = sorted({int(c) for c in probe.ravel()})
     index = (spark.read.parquet(index_dir)
              .filter(F.col("cell").isin(cells)))
-    pairs = (index.join(F.broadcast(probe_df), "cell")
-             .filter(F.col("vec_id") != F.col("query_id")))
-    cos = cosine_expr(F.col("q_emb"), F.col("embedding"))
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id"))
-    return (pairs.select("query_id", "vec_id", cos.alias("cosine"))
-            .filter(F.col("cosine").isNotNull() & ~F.isnan("cosine"))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .withColumn("cosine", F.round("cosine", 6)))
+    return _ivf_rank(index, F.broadcast(probe_df), k)
 
 
 def ivf_topk(emb: DataFrame, query_pred, k: int = 5,
@@ -769,16 +779,7 @@ def ivf_topk(emb: DataFrame, query_pred, k: int = 5,
     cmat = ivf_centroids(emb, n_cells, quantizer, sample_cap)
     cands = ivf_assign(emb, cmat)
     probe_df = ivf_probe_df(emb, query_pred, cmat, n_probe)
-    pairs = (cands.join(F.broadcast(probe_df), "cell")
-             .filter(F.col("vec_id") != F.col("query_id")))
-    cos = cosine_expr(F.col("q_emb"), F.col("embedding"))
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id"))
-    return (pairs.select("query_id", "vec_id", cos.alias("cosine"))
-            .filter(F.col("cosine").isNotNull() & ~F.isnan("cosine"))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .withColumn("cosine", F.round("cosine", 6)))
+    return _ivf_rank(cands, F.broadcast(probe_df), k)
 
 
 def ivf_probe_cells_distributed(queries: DataFrame, cmat,
@@ -848,16 +849,7 @@ def ivf_batch_topk(emb: DataFrame, query_pred, k: int = 5,
     cands = ivf_assign(emb, cmat)
     probe_df = ivf_probe_cells_distributed(emb.filter(query_pred),
                                            cmat, n_probe)
-    pairs = (cands.join(probe_df, "cell")
-             .filter(F.col("vec_id") != F.col("query_id")))
-    cos = cosine_expr(F.col("q_emb"), F.col("embedding"))
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id"))
-    return (pairs.select("query_id", "vec_id", cos.alias("cosine"))
-            .filter(F.col("cosine").isNotNull() & ~F.isnan("cosine"))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .withColumn("cosine", F.round("cosine", 6)))
+    return _ivf_rank(cands, probe_df, k)
 
 
 def ivf_index_probe_distributed(spark, index_dir: str, cmat,
@@ -876,16 +868,7 @@ def ivf_index_probe_distributed(spark, index_dir: str, cmat,
                    probe_df.select("cell").distinct().collect())
     index = (spark.read.parquet(index_dir)
              .filter(F.col("cell").isin(cells)))
-    pairs = (index.join(probe_df, "cell")
-             .filter(F.col("vec_id") != F.col("query_id")))
-    cos = cosine_expr(F.col("q_emb"), F.col("embedding"))
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id"))
-    return (pairs.select("query_id", "vec_id", cos.alias("cosine"))
-            .filter(F.col("cosine").isNotNull() & ~F.isnan("cosine"))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .withColumn("cosine", F.round("cosine", 6)))
+    return _ivf_rank(index, probe_df, k)
 
 
 def _pq_codebooks(sample_mat, m: int = 8, ksub: int = 16,

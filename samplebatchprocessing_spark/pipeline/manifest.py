@@ -89,6 +89,22 @@ def _command_transform(command: str) -> Callable[[bytes], bytes]:
     return _run
 
 
+def _resolve_transform(transform: Callable[[bytes], bytes] | None,
+                       command: str | None,
+                       commit: str) -> Callable[[bytes], bytes]:
+    """Argument set-up shared by the batch and the watch paths: check
+    that ``transform`` and ``command`` are not both given and that
+    ``commit`` is a known strategy, then return the per-file
+    ``bytes -> bytes`` transform (identity when neither is given)."""
+    if transform is not None and command is not None:
+        raise ValueError("pass either transform= or command=, not both")
+    if commit not in ("replace", "tempkey"):
+        raise ValueError(f"unknown commit strategy {commit!r}")
+    if command is not None:
+        return _command_transform(command)
+    return transform or (lambda b: b)   # user-data.sh:4: cp = identity
+
+
 def run_pipeline(spark: SparkSession, manifest: DataFrame,
                  transform: Callable[[bytes], bytes] | None = None,
                  command: str | None = None,
@@ -121,13 +137,7 @@ def run_pipeline(spark: SparkSession, manifest: DataFrame,
     output files directly (the reference's worker-side S3 put,
     GetJobs.py:57-60); rerunning overwrites the same keys.
     """
-    if transform is not None and command is not None:
-        raise ValueError("pass either transform= or command=, not both")
-    if commit not in ("replace", "tempkey"):
-        raise ValueError(f"unknown commit strategy {commit!r}")
-    if command is not None:
-        transform = _command_transform(command)
-    transform = transform or (lambda b: b)   # user-data.sh:4: cp = identity
+    transform = _resolve_transform(transform, command, commit)
 
     jobs = manifest.filter(F.col("action") == "process")   # GetJobs.py:30
     # one driver job for the (bucket, prefix) config set — these are
@@ -751,13 +761,9 @@ def _start_watch_stream(spark: SparkSession, bucket_dir: str,
                         store: ObjectStoreClient | None = None):
     """Shared stream starter for watch_prefix (AvailableNow drain) and
     watch_daemon (ProcessingTime long-poll loop)."""
+    transform = _resolve_transform(transform, command, commit)
     from ..session import ship_package
     ship_package(spark)
-    if transform is not None and command is not None:
-        raise ValueError("pass either transform= or command=, not both")
-    if command is not None:
-        transform = _command_transform(command)
-    transform = transform or (lambda b: b)
 
     in_dir = os.path.join(bucket_dir, in_prefix)
     log_dir = os.path.join(bucket_dir, "_commit_log")

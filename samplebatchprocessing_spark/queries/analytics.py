@@ -2297,7 +2297,7 @@ def x118_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     two keyed semi-joins (no cartesian, per-round plan gated via the
     factored ``_peel_once``), per-round localCheckpoint so lineage
     stays flat, loop guarded by a non-convergence RAISE rather than
-    a silent partial peel (the cc_two_phase discipline).
+    a silent partial peel (the dedup_clusters discipline).
 
     Oracle: the SAME peel unrolled as a fixed 24-round CTE chain —
     a fixed point is stable under extra rounds, so the unroll is
@@ -2476,7 +2476,7 @@ def x130_hash_col():
 
 #: x130's modulus and the fan-out of the two-level exact reduction.
 #: 4096 buckets x 2^33 rows of bigint-safe per-bucket accumulation
-#: covers ~3.5e16 rows per group — far past 100 TB lineitem.
+#: covers ~3.5e13 (2^45) rows per group — far past 100 TB lineitem.
 _X130_P = 1_000_000_007
 _X130_BUCKETS = 4096
 

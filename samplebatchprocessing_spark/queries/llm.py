@@ -321,7 +321,7 @@ FROM read_blob('/root/testdata/sf0.01/*.parquet')
 def l11_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L11 (beyond the survey list): duplicate-cluster assignment —
     connected components over the Jaccard>=0.9 near-dup graph.
-    Spark side is iterative label propagation; the oracle reproduces
+    Spark side is large-star/small-star iteration; the oracle reproduces
     the same fixpoint with a recursive CTE (reachability closure ->
     MIN reachable node per doc), so this IS hash-matchable: both
     engines must assign every doc the minimum doc_id of its
@@ -3870,19 +3870,18 @@ def x103_prefix_filter_join(spark: SparkSession,
 
 
 def x104_cc_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X104 (r6): L11's duplicate clusters computed by the
-    ALTERNATING large-star/small-star algorithm
-    (``operators.dedup.cc_two_phase``, Kiveris et al. 2014) — round
-    count O(log component size) instead of label propagation's
-    O(diameter), the published fix for the long-chain components a
-    transitive near-dup graph grows at corpus scale.  Same output
-    contract as L11 (every doc labeled with its component minimum),
-    so it shares L11's recursive-CTE oracle and the two Spark
-    implementations are mutual differentials (pytest-checked)."""
+    """X104 (r6): L11's duplicate clusters through the same
+    ``operators.dedup.dedup_clusters`` (alternating large-star/
+    small-star, Kiveris et al. 2014 — round count O(log component
+    size), not O(diameter), the fix for the long-chain components a
+    transitive near-dup graph grows at corpus scale).  Kept as its
+    own row so the registry still names the algorithm; it shares
+    L11's output contract (every doc labeled with its component
+    minimum) and its recursive-CTE oracle."""
     doc = load_table(spark, sf_dir, "documents")
     pairs = dedup.jaccard_pairs(doc, threshold=0.9,
                                 open_vocab="signature")
-    return dedup.cc_two_phase(pairs)
+    return dedup.dedup_clusters(pairs)
 
 
 def mm6_interleaved_assembly(spark: SparkSession,

@@ -963,41 +963,39 @@ def test_prefix_filter_hot_token_never_enters_prefixes(spark):
     assert got == truth and truth
 
 
-def test_cc_two_phase_matches_label_propagation(spark, sf_smoke):
-    """X104 differential: large-star/small-star must produce the
-    identical component labeling as L11's label propagation on the
-    same pair graph — and on a constructed long PATH graph (the
-    diameter case the algorithm exists for) it must converge to one
-    component well inside the round budget."""
-    from samplebatchprocessing_spark.catalog import load_table
+def test_dedup_clusters_contracts_long_path(spark):
+    """On a 200-node PATH graph (diameter 199 — the case
+    large-star/small-star exists for) dedup_clusters converges to one
+    component in O(log n) rounds, well inside a 12-round budget."""
     from samplebatchprocessing_spark.operators import dedup
-    doc = load_table(spark, sf_smoke, "documents")
-    pairs = dedup.jaccard_pairs(doc, threshold=0.9,
-                                open_vocab="signature")
-    lp = {(r["doc_id"], r["cluster_id"])
-          for r in dedup.dedup_clusters(pairs).collect()}
-    ts = {(r["doc_id"], r["cluster_id"])
-          for r in dedup.cc_two_phase(pairs).collect()}
-    assert lp == ts
-    # 200-node path: diameter 199 >> the 25-round budget that label
-    # propagation would need; two-phase contracts it in O(log n)
     path = spark.createDataFrame(
         [(i, i + 1) for i in range(200)], "doc_a long, doc_b long")
-    out = dedup.cc_two_phase(path, max_iter=12).collect()
+    out = dedup.dedup_clusters(path, max_iter=12).collect()
     assert len(out) == 201
     assert {r["cluster_id"] for r in out} == {0}
 
 
-def test_cc_two_phase_raises_on_nonconvergence(spark):
-    """r7 (ADVICE): exhausting max_iter without reaching the edge-set
-    fixpoint must raise, never silently label from a non-converged
-    edge set."""
+def test_dedup_clusters_long_chain_is_one_cluster(spark):
+    """A chain of 41 near-duplicates (versioned pages) is ONE cluster
+    under the default max_iter: a diameter-40 chain needs more rounds
+    than the budget when each round moves a label one hop."""
+    from samplebatchprocessing_spark.operators import dedup
+    path = spark.createDataFrame(
+        [(i, i + 1) for i in range(40)], "doc_a long, doc_b long")
+    out = dedup.dedup_clusters(path).collect()
+    assert len(out) == 41
+    assert {r["cluster_id"] for r in out} == {0}
+
+
+def test_dedup_clusters_raises_on_nonconvergence(spark):
+    """Exhausting max_iter without reaching the edge-set fixpoint must
+    raise, never silently label from a non-converged edge set."""
     import pytest
     from samplebatchprocessing_spark.operators import dedup
     path = spark.createDataFrame(
         [(i, i + 1) for i in range(200)], "doc_a long, doc_b long")
     with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.cc_two_phase(path, max_iter=1)
+        dedup.dedup_clusters(path, max_iter=1)
 
 
 def test_qgram_edit_join_bitmap_equals_array_path(spark, sf_smoke):
@@ -1050,8 +1048,8 @@ def test_qgram_edit_join_finds_cross_band_pairs(spark):
         assert (1, 3) not in pairs, cf
 
 
-def test_cc_two_phase_rejects_nonpositive_max_iter(spark):
-    """r8 (ADVICE): max_iter < 1 skips the loop entirely, leaving
+def test_dedup_clusters_rejects_nonpositive_max_iter(spark):
+    """max_iter < 1 skips the loop entirely, leaving
     delta at its 0 sentinel — which would bypass the non-convergence
     guard and silently label from the raw edge set.  Must raise up
     front instead."""
@@ -1061,7 +1059,7 @@ def test_cc_two_phase_rejects_nonpositive_max_iter(spark):
         [(1, 2)], "doc_a long, doc_b long")
     for bad in (0, -3):
         with pytest.raises(ValueError, match="max_iter"):
-            dedup.cc_two_phase(pairs, max_iter=bad)
+            dedup.dedup_clusters(pairs, max_iter=bad)
 
 
 def test_multi_asof_rejects_left_column_collision(spark):

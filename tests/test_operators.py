@@ -286,7 +286,7 @@ def test_binary_ingest_md5_parity(spark, sf_smoke):
 
 
 def test_dedup_clusters_match_union_find(spark, sf_smoke):
-    """Label-propagation connected components == driver-side
+    """dedup_clusters' connected components == driver-side
     union-find on the same edge list."""
     doc = load_table(spark, sf_smoke, "documents")
     pairs = dedup.jaccard_pairs(doc, threshold=0.9)
@@ -923,7 +923,7 @@ def test_kcore_path_graph_peels_to_empty(spark):
     """2-core of a path is empty, and peeling exposes only one layer
     per round (the documented worst case) — a 5-path needs multiple
     rounds, so max_iter=1 must RAISE (non-convergence is loud, per
-    the cc_two_phase guard discipline), never return a partial peel."""
+    the dedup_clusters guard discipline), never return a partial peel."""
     from samplebatchprocessing_spark.operators.graph import kcore
     path = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 5)], "a long, b long")
@@ -1146,7 +1146,7 @@ def test_label_propagation_two_bridged_triangles(spark):
 
 def test_label_propagation_rejects_zero_rounds(spark):
     """rounds < 1 would silently return the init labels as if they
-    were propagated — reject up front (the kcore/cc_two_phase
+    were propagated — reject up front (the kcore/dedup_clusters
     guard-rail discipline)."""
     from samplebatchprocessing_spark.operators.graph import (
         label_propagation)

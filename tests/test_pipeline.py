@@ -187,6 +187,19 @@ def test_watch_prefix_retry_dedupes_log(spark, bucket):
     assert all(r["ok"] for r in rows)
 
 
+
+def test_watch_prefix_rejects_unknown_commit(spark, bucket):
+    """The watch path validates ``commit`` exactly like run_pipeline:
+    an unknown strategy raises before any stream starts, instead of
+    silently running the tempkey branch."""
+    from samplebatchprocessing_spark.pipeline.manifest import watch_prefix
+    active = len(spark.streams.active)
+    with pytest.raises(ValueError, match="unknown commit strategy"):
+        watch_prefix(spark, bucket, commit="bogus")
+    assert len(spark.streams.active) == active
+    assert not os.path.exists(os.path.join(bucket, "_checkpoint"))
+    assert not os.path.exists(os.path.join(bucket, "output"))
+
 def test_watch_daemon_two_drops_and_stop(spark, bucket, sf_smoke):
     """The daemon form of watch (GetJobs.py:21-23's infinite loop):
     drains the startup backlog, picks up a file dropped WHILE RUNNING

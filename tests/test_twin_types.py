@@ -94,3 +94,27 @@ def test_dsum_split_bigint_equals_direct_decimal_sum(spark):
     n = {r["g"]: (r["s"], r["a"]) for r in new.collect()}
     assert o == n
     assert n[99] == (None, None)
+
+
+def test_dsum_joint_envelope_boundary(spark):
+    """exprs._dec_sum is exact while N · (|x|·1e6 >> 20) < 2^63 — a
+    JOINT rows × magnitude envelope.  At |x| = 2^43 the hi half of
+    every row is 2^23·1e6, so 1,099,511 rows are the last count that
+    fits: just inside, the sum is exact; one row more, the bigint
+    partial overflows and must fail loudly (ANSI), never wrap."""
+    from pyspark.errors import ArithmeticException
+    from pyspark.sql import functions as F
+
+    from samplebatchprocessing_spark.exprs import dsum
+
+    x = float(2 ** 43)
+    n_max = (2 ** 63 - 1) // ((int(x) * 10 ** 6) >> 20)
+    assert n_max == 1_099_511
+
+    def total(n):
+        return (spark.range(n).select(F.lit(x).alias("x"))
+                .agg(dsum("x", "s")).first()["s"])
+
+    assert total(n_max) == n_max * 2 ** 43
+    with pytest.raises(ArithmeticException, match="OVERFLOW"):
+        total(n_max + 1)
