@@ -13,14 +13,15 @@ Reference pipeline (danilop/SampleBatchProcessing):
 - GetJobs.py:37-40    SQS delete-on-success             -> at-least-once
 
 Spark mapping:
-- file listing + download  -> `binaryFile` source (one task per file;
-  `spark.sql.files.maxPartitionBytes` bounds task size at 100 TB)
+- file listing             -> path-only `binaryFile` scan (one task per
+  size-balanced split; `spark.sql.files.maxPartitionBytes` bounds it)
 - job message              -> manifest DataFrame (same 5 columns)
-- dispatch                 -> `filter(action = 'process')` + equi-join
-  manifest x file content on file_name
-- per-file transform       -> a plugin `bytes -> bytes` callable run
-  inside `mapInPandas` (Arrow batches; the generalization of the
-  reference's arbitrary `command`, D4)
+- dispatch                 -> `filter(action = 'process')` + one
+  `mapInPandas` over the manifest's own partitions; no join
+- download + transform     -> the per-file worker reads its input from
+  the job row (POSIX read or object-store GET) and runs a plugin
+  `bytes -> bytes` callable (the generalization of the reference's
+  arbitrary `command`, D4)
 - upload + delete-on-success -> idempotent per-file write with the
   deterministic output key `out_prefix + file_name + ext`
   (user-data.sh:6); Spark task retry (`spark.task.maxFailures`)
@@ -53,15 +54,21 @@ def build_manifest(spark: SparkSession, bucket_dir: str,
     # streaming-sink metadata probe log a WARN+stack per query —
     # stderr noise a real failure could hide in.
     listing = (spark.read.format("binaryFile")
-               .load(os.path.join(bucket_dir, in_prefix))
-               .select(F.regexp_extract("path", r"([^/]+)$", 1)
-                       .alias("file_name")))
+               .load(os.path.join(bucket_dir, in_prefix)))
+    return _job_rows(listing, bucket_dir, in_prefix, out_prefix)
+
+
+def _job_rows(listing: DataFrame, bucket_dir: str, in_prefix: str,
+              out_prefix: str) -> DataFrame:
+    """A ``binaryFile`` listing as manifest rows, one 'process' job per
+    file (SendJobs.py:31-34).  Only ``path`` is read: the worker
+    fetches each file's bytes itself."""
     return listing.select(
         F.lit("process").alias("action"),
         F.lit(bucket_dir).alias("bucket"),
         F.lit(in_prefix).alias("in_prefix"),
         F.lit(out_prefix).alias("out_prefix"),
-        "file_name",
+        F.regexp_extract("path", r"([^/]+)$", 1).alias("file_name"),
     )
 
 
@@ -132,39 +139,22 @@ def run_pipeline(spark: SparkSession, manifest: DataFrame,
       a reader never observes a partial final object because the copy
       is a single PUT).  See SCALE.md "Object-store commit".
 
-    Returns a result DataFrame (file_name, in_bytes, out_bytes,
-    out_path, ok) — the pipeline's commit log.  Executors write the
-    output files directly (the reference's worker-side S3 put,
-    GetJobs.py:57-60); rerunning overwrites the same keys.
+    The worker reads each job's input itself, so the work split is
+    the manifest's partitioning (for :func:`build_manifest`,
+    binaryFile's size-balanced file splits).  Returns the commit log
+    (file_name, in_bytes, out_bytes, out_path, ok), one row per
+    'process' job: an unreadable input is ``ok=false``,
+    ``in_bytes=0``, nothing written; no 'process' job, an empty log.
+    (An unmaterialized :func:`build_manifest` re-stats its listing
+    when run, so a file deleted since then fails that scan task.)
+    Executors write the outputs directly (GetJobs.py:57-60);
+    rerunning overwrites the same keys.
     """
-    transform = _resolve_transform(transform, command, commit)
-
-    jobs = manifest.filter(F.col("action") == "process")   # GetJobs.py:30
-    # one driver job for the (bucket, prefix) config set — these are
-    # deployment constants (a handful), never data-scale
-    locations = [(r["bucket"], r["in_prefix"]) for r in
-                 jobs.select("bucket", "in_prefix").distinct().collect()]
-    files = None
-    for b, p in locations:
-        part = (spark.read.format("binaryFile")
-                .load(os.path.join(b, p))
-                .select(
-                    F.lit(b).alias("bucket"),
-                    F.lit(p).alias("in_prefix"),
-                    F.regexp_extract("path", r"([^/]+)$", 1)
-                    .alias("file_name"),
-                    "content"))
-        files = part if files is None else files.unionByName(part)
-    if files is None:
-        raise ValueError("manifest contains no 'process' jobs")
-
-    joined = jobs.join(files, ["bucket", "in_prefix", "file_name"])
-    return (joined
-            .select("bucket", "in_prefix", "out_prefix", "file_name",
-                    "content")
-            .mapInPandas(_file_processor(transform, ext, commit,
-                                         store=store),
-                         LOG_SCHEMA))
+    proc = _file_processor(_resolve_transform(transform, command, commit),
+                           ext, commit, store=store)
+    return (manifest.filter(F.col("action") == "process")  # GetJobs.py:30
+            .select("bucket", "in_prefix", "out_prefix", "file_name")
+            .mapInPandas(proc, LOG_SCHEMA))
 
 
 LOG_SCHEMA = ("file_name string, in_bytes long, out_bytes long, "
@@ -377,9 +367,8 @@ class LocalObjectStoreClient(ObjectStoreClient):
         # __main__._store_from_uri re-rooting) — or through a symlink
         # alias of it (macOS /tmp -> /private/tmp) — serialize on the
         # same lock file when they target the same object.  The dir is
-        # PER-UID and 0700 (a fixed world-shared /tmp name would hand
-        # a second user a PermissionError on every CAS write, and a
-        # pre-created hostile dir could squat the path), and the
+        # PER-UID (a fixed world-shared /tmp name would hand a second
+        # user a PermissionError on every CAS write), and the
         # namespace is SHARDED to 4096 slots rather than one file per
         # object: flock is advisory, so hash collisions merely
         # over-serialize two unrelated writers for the lock's
@@ -390,13 +379,12 @@ class LocalObjectStoreClient(ObjectStoreClient):
         # plus a fresh creator on the new one would both hold "the"
         # lock).
         import hashlib
-        import tempfile
-        d = os.path.join(tempfile.gettempdir(),
-                         f"sbp_object_locks_{os.getuid()}")
-        os.makedirs(d, mode=0o700, exist_ok=True)
+
+        from ..session import private_tmpdir
         obj = os.path.realpath(self._p(key))
         shard = int(hashlib.md5(obj.encode()).hexdigest(), 16) % 4096
-        return os.path.join(d, f"{shard:04x}")
+        return os.path.join(private_tmpdir("sbp_object_locks"),
+                            f"{shard:04x}")
 
     def get_with_etag(self, key: str) -> tuple[bytes, str]:
         data = self.get(key)
@@ -477,7 +465,7 @@ class S3ObjectStoreClient(ObjectStoreClient):
         store = LocalObjectStoreClient(root)        # sandbox double
         store = S3ObjectStoreClient("my-bucket")    # real deployment
 
-    and every consumer — ``pipeline_from_manifest(..., store=...)``,
+    and every consumer — ``run_pipeline(..., store=...)``,
     ``quarantine_sweep(..., store=...)``,
     ``publish.StorePublisher(store, root)`` — takes it unchanged.
     Contract-tested in tests/test_s3_client.py against an in-memory
@@ -588,10 +576,10 @@ class S3ObjectStoreClient(ObjectStoreClient):
 
 
 def _fs_local_path(uri: str) -> str:
-    """Scheme shim for the WORKER-side commit: Spark's binaryFile
-    reader accepts any Hadoop filesystem URI (`file://`, `s3a://`,
-    ...), but the per-file commit runs in the Python worker against
-    the filesystem client for that scheme.  Bare paths and
+    """Scheme shim for the WORKER-side read and commit: Spark's
+    binaryFile listing accepts any Hadoop filesystem URI (`file://`,
+    `s3a://`, ...), but the per-file I/O runs in the Python worker
+    against the filesystem client for that scheme.  Bare paths and
     ``file://`` URIs map to POSIX I/O (what this container can
     execute); object-store schemes dispatch to the caller-supplied
     :class:`ObjectStoreClient` (see ``_file_processor``) and raise
@@ -611,14 +599,15 @@ def _fs_local_path(uri: str) -> str:
 def _file_processor(transform: Callable[[bytes], bytes],
                     ext: str, commit: str,
                     store: ObjectStoreClient | None = None):
-    """Arrow-batched per-file worker shared by the batch pipeline and
-    the streaming watcher: transform bytes, commit to the
-    deterministic key, emit one log row per file.
+    """Arrow-batched per-file worker over job rows ``(bucket,
+    in_prefix, out_prefix, file_name)`` (GetJobs.py:48-60): read the
+    input, transform it, commit to the deterministic key, emit one log
+    row per file.  A failed read fails the job like a failed transform.
 
-    Commit dispatch is by BUCKET SCHEME: bare paths and ``file://``
-    use POSIX I/O (write temp + ``os.replace`` / copy+delete); any
-    other scheme commits through ``store`` (an
-    :class:`ObjectStoreClient`, shipped via the task closure):
+    I/O dispatch is by BUCKET SCHEME: bare paths and ``file://`` use
+    POSIX I/O (write temp + ``os.replace`` / copy+delete); any other
+    scheme goes through ``store`` (an :class:`ObjectStoreClient`,
+    shipped via the task closure): ``get`` the input, then commit:
     - ``tempkey``: put temp key -> server-side copy to the final key
       (a single PUT, so a reader never observes a partial final
       object) -> delete temp — the SCALE.md object-store recipe.
@@ -635,19 +624,28 @@ def _file_processor(transform: Callable[[bytes], bytes],
             rows = []
             for r in pdf.itertuples(index=False):
                 scheme, rest = _split_scheme(r.bucket)
-                obj_store = scheme not in ("", "file")
-                if obj_store and store is not None:
+                remote = scheme not in ("", "file") and store is not None
+                if remote:
+                    in_key = posixpath.join(rest, r.in_prefix,
+                                            r.file_name)
                     key = posixpath.join(rest, r.out_prefix,
                                          r.file_name + ext)
                     out_path = f"{scheme}://{key}"
                 else:
-                    out_dir = os.path.join(_fs_local_path(r.bucket),
-                                           r.out_prefix)
+                    root = _fs_local_path(r.bucket)
+                    in_path = os.path.join(root, r.in_prefix,
+                                           r.file_name)
+                    out_dir = os.path.join(root, r.out_prefix)
                     out_path = os.path.join(out_dir, r.file_name + ext)
-                raw = bytes(r.content)
+                raw = b""
                 try:
+                    if remote:
+                        raw = store.get(in_key)
+                    else:
+                        with open(in_path, "rb") as f:
+                            raw = f.read()
                     result = transform(raw)
-                    if obj_store and store is not None:
+                    if remote:
                         if commit == "replace":
                             store.put(key, result)
                         else:                       # tempkey
@@ -656,8 +654,6 @@ def _file_processor(transform: Callable[[bytes], bytes],
                             store.copy(tmp_key, key)
                             store.delete(tmp_key)
                     else:
-                        out_dir = os.path.join(
-                            _fs_local_path(r.bucket), r.out_prefix)
                         os.makedirs(out_dir, exist_ok=True)
                         tmp = out_path + ".inprogress"
                         with open(tmp, "wb") as f:
@@ -742,15 +738,31 @@ def watch_daemon(spark: SparkSession, bucket_dir: str,
     never drains to completion — the caller owns the loop's lifetime
     and stops it with ``query.stop()``, which is exactly where the
     CLI wires the reference's SIGINT graceful-shutdown handler
-    (GetJobs.py:63-65,80; see ``__main__.cmd_watch``).  Checkpoint +
+    (GetJobs.py:63-65,80; see ``__main__.cmd_watch``).  ``stop()``
+    first lets an in-flight micro-batch finish, so a file whose output
+    is written also has its commit-log row.  Checkpoint +
     idempotent per-file commit give the same delivery contract as
     watch_prefix: no redelivery across restarts, failed files retried
     by the next discovery of a fresh copy."""
-    return _start_watch_stream(
+    q = _start_watch_stream(
         spark, bucket_dir, in_prefix, out_prefix, transform, command,
         ext, commit, checkpoint,
         trigger={"processingTime": f"{poll_seconds} seconds"},
         store=store)
+    interrupt = q.stop
+
+    def stop() -> None:
+        # StreamingQuery.stop() alone interrupts a micro-batch between
+        # its workers' output writes and its commit-log append; a
+        # trigger starting after this wait is interrupted and its
+        # files are redelivered on restart (at-least-once)
+        import time
+        while q.isActive and q.status["isTriggerActive"]:
+            time.sleep(0.05)
+        interrupt()
+
+    q.stop = stop
+    return q
 
 
 def _start_watch_stream(spark: SparkSession, bucket_dir: str,
@@ -760,20 +772,20 @@ def _start_watch_stream(spark: SparkSession, bucket_dir: str,
                         checkpoint: str | None, trigger: dict,
                         store: ObjectStoreClient | None = None):
     """Shared stream starter for watch_prefix (AvailableNow drain) and
-    watch_daemon (ProcessingTime long-poll loop)."""
+    watch_daemon (ProcessingTime long-poll loop): each micro-batch's
+    listing becomes manifest rows dispatched by :func:`run_pipeline`."""
     transform = _resolve_transform(transform, command, commit)
     from ..session import ship_package
     ship_package(spark)
 
-    in_dir = os.path.join(bucket_dir, in_prefix)
     log_dir = os.path.join(bucket_dir, "_commit_log")
     checkpoint = checkpoint or os.path.join(bucket_dir, "_checkpoint")
     # file streams need an explicit schema; binaryFile's is fixed
     schema = ("path string, modificationTime timestamp, "
               "length long, content binary")
-    sdf = (spark.readStream.format("binaryFile").schema(schema)
-           .load(in_dir))
-    proc = _file_processor(transform, ext, commit, store=store)
+    jobs = _job_rows(spark.readStream.format("binaryFile").schema(schema)
+                     .load(os.path.join(bucket_dir, in_prefix)),
+                     bucket_dir, in_prefix, out_prefix)
 
     import time
     # Monotone across runs (unlike the checkpointed batch id, which
@@ -782,18 +794,13 @@ def _start_watch_stream(spark: SparkSession, bucket_dir: str,
     run_seq = float(time.time())
 
     def _each_batch(batch_df: DataFrame, bid: int) -> None:
-        log = (batch_df.select(
-            F.lit(bucket_dir).alias("bucket"),
-            F.lit(in_prefix).alias("in_prefix"),
-            F.lit(out_prefix).alias("out_prefix"),
-            F.regexp_extract("path", r"([^/]+)$", 1).alias("file_name"),
-            "content")
-            .mapInPandas(proc, LOG_SCHEMA)
-            .withColumn("run_seq", F.lit(run_seq))
-            .withColumn("batch_id", F.lit(bid)))
-        log.write.mode("append").parquet(log_dir)
+        (run_pipeline(spark, batch_df, transform, ext=ext, commit=commit,
+                      store=store)
+         .withColumn("run_seq", F.lit(run_seq))
+         .withColumn("batch_id", F.lit(bid))
+         .write.mode("append").parquet(log_dir))
 
-    return (sdf.writeStream.foreachBatch(_each_batch)
+    return (jobs.writeStream.foreachBatch(_each_batch)
             .option("checkpointLocation", checkpoint)
             .trigger(**trigger).start())
 

@@ -410,8 +410,8 @@ def p21_object_store_quarantine(spark: SparkSession,
                                 sf_dir: str) -> DataFrame:
     """P21 (r10, VERDICT r9 #3): the p20 poison quarantine on the
     reference's REAL deployment surface — an OBJECT-STORE bucket
-    driven end to end through the 4-verb :class:`ObjectStoreClient`
-    (put/copy/delete + the new ``list``), never a POSIX path.  The
+    driven end to end through the :class:`ObjectStoreClient` verbs
+    (put/get/copy/delete/list), never a POSIX path.  The
     reference's flow is S3-native (GetJobs.py:48-60 downloads from
     s3InputBucket, uploads via key put); the sandbox has no network
     store, so the scheme-faithful ``LocalObjectStoreClient`` double
@@ -419,17 +419,13 @@ def p21_object_store_quarantine(spark: SparkSession,
     contract.
 
     Scenario: stage the fixture files plus one poison object INTO
-    the store with the same executor-side worker the pipeline uses
-    (``_file_processor``, identity transform, single-PUT 'replace'
-    commit); deliver everything three times (tempkey commit,
-    returncode gate — the poison object fails each delivery, and
-    each run's log rows append run_seq-tagged exactly like a watch
-    drain; delivery BYTES come from the binaryFile scan of the
-    fixture dir, because the contract ships no GET verb — the real
-    deployment's read side is Spark's own s3a scan, not a per-object
-    client download; the store governs object EXISTENCE, commits,
-    and the sweep's moves); sweep through the store verbs; then
-    PROVE via
+    the store with ``put`` before any Spark job (SendJobs.py:26-28);
+    deliver one job row per object three times through
+    :func:`run_pipeline` (tempkey commit, returncode gate — the
+    worker GETs each input object by its job row, the poison object
+    fails each delivery, and each run's log rows append
+    run_seq-tagged exactly like a watch drain); sweep through the
+    store verbs; then PROVE via
     ``store.list`` that the poison object left ``input/`` and landed
     in ``quarantine/`` (``moved_in_store``), that a fourth delivery
     over the SURVIVING input listing adds zero failure rows
@@ -439,11 +435,13 @@ def p21_object_store_quarantine(spark: SparkSession,
     seam — on a real deployment they live in the bucket itself (s3a
     is a Hadoop filesystem; the listing verbs only govern DATA
     objects)."""
+    import glob
     import shutil
 
-    from ..pipeline.manifest import (LOG_SCHEMA, LocalObjectStoreClient,
-                                     _file_processor, commit_log,
-                                     quarantine_sweep)
+    from ..exprs import local_df
+    from ..pipeline.manifest import (MANIFEST_SCHEMA,
+                                     LocalObjectStoreClient, commit_log,
+                                     quarantine_sweep, run_pipeline)
     from ..session import ship_package
     ship_package(spark)   # store class unpickles in the Python worker
 
@@ -457,37 +455,25 @@ def p21_object_store_quarantine(spark: SparkSession,
     store = LocalObjectStoreClient(root)
     bucket = "mock://p21-bucket"
 
-    files = (spark.read.format("binaryFile")
-             .load(f"{sf_dir.rstrip('/')}/*.parquet")
-             .select(F.regexp_extract("path", r"([^/]+)$", 1)
-                     .alias("file_name"), "content"))
-    # local_df (r15): bytes survive the Arrow path bit-identically
-    # (round-trip test-pinned), retiring the last deliberate
-    # pickled-RDD holdout
-    from ..exprs import local_df
-    poison = local_df(
-        spark, [("poison.bin", bytearray(b"POISON"))],
-        "file_name string, content binary")
-    staged = files.unionByName(poison).select(
-        F.lit(bucket).alias("bucket"),
-        F.lit("input/").alias("in_prefix"),
-        F.lit("input/").alias("out_prefix"), "file_name", "content")
-    # executor-side staging through the verb contract: identity
-    # transform, empty ext, single-PUT replace commit into input/
-    n_staged = (staged.mapInPandas(
-        _file_processor(lambda b: b, "", "replace", store=store),
-        LOG_SCHEMA).filter("ok").count())
+    names = [os.path.basename(p) for p in
+             sorted(glob.glob(f"{sf_dir.rstrip('/')}/*.parquet"))]
+    for name in names:
+        with open(os.path.join(sf_dir, name), "rb") as f:
+            store.put(f"p21-bucket/input/{name}", f.read())
+    store.put("p21-bucket/input/poison.bin", b"POISON")
+    names.append("poison.bin")
 
     def guard(raw: bytes) -> bytes:
         if raw[:6] == b"POISON":
             raise ValueError("poison input")
         return raw
 
-    jobs = staged.withColumn("out_prefix", F.lit("output/"))
-    proc = _file_processor(guard, ".out", "tempkey", store=store)
+    jobs = local_df(spark, [("process", bucket, "input/", "output/", n)
+                            for n in names], MANIFEST_SCHEMA)
 
     def deliver(frame: DataFrame, run_seq: float) -> None:
-        (frame.mapInPandas(proc, LOG_SCHEMA)
+        (run_pipeline(spark, frame, transform=guard, ext=".out",
+                      commit="tempkey", store=store)
          .withColumn("run_seq", F.lit(run_seq))
          .withColumn("batch_id", F.lit(0))
          .write.mode("append").parquet(log_dir))
@@ -503,7 +489,7 @@ def p21_object_store_quarantine(spark: SparkSession,
     q_keys = store.list("p21-bucket/quarantine/")
     moved_in_store = ("p21-bucket/input/poison.bin" not in in_keys
                       and "p21-bucket/quarantine/poison.bin" in q_keys
-                      and len(in_keys) == n_staged - 1)
+                      and len(in_keys) == len(names) - 1)
 
     # 4th delivery over what the STORE says is still in input/
     alive = sorted(k.rsplit("/", 1)[-1] for k in in_keys)

@@ -68,6 +68,25 @@ def get_spark(app_name: str = "samplebatchprocessing_spark",
     return spark
 
 
+def private_tmpdir(name: str) -> str:
+    """``<tempdir>/<name>_<uid>``, created with mode 0700.  In a
+    world-writable tempdir another user could pre-create the path (or
+    a symlink to theirs) and plant files in it, so a directory that
+    is not ours alone (not a real directory, another owner, any group
+    or other access) raises :class:`PermissionError`."""
+    import stat
+    import tempfile
+    d = os.path.join(tempfile.gettempdir(), f"{name}_{os.getuid()}")
+    os.makedirs(d, mode=0o700, exist_ok=True)
+    st = os.lstat(d)
+    if (not stat.S_ISDIR(st.st_mode) or st.st_uid != os.getuid()
+            or st.st_mode & 0o077):
+        raise PermissionError(
+            f"{d} must be a directory owned by uid {os.getuid()} "
+            f"with mode 0700")
+    return d
+
+
 _SHIPPED: set[int] = set()
 
 
@@ -103,7 +122,10 @@ def ship_package(spark: SparkSession) -> None:
                 with open(full, "rb") as fh:
                     digest.update(fh.read())
     tag = digest.hexdigest()[:12]
-    zip_path = f"/tmp/sbp_pkg_{tag}.zip"
+    # not a fixed shared /tmp name: another user could plant the zip
+    # the workers import
+    zip_path = os.path.join(private_tmpdir("sbp_pkg"),
+                            f"sbp_pkg_{tag}.zip")
     if not os.path.exists(zip_path):
         tmp = zip_path + ".tmp"
         with zipfile.ZipFile(tmp, "w") as zf:

@@ -72,6 +72,53 @@ def test_pipeline_idempotent_rerun(spark, bucket):
     assert first == second
 
 
+def test_pipeline_missing_input_is_a_failed_row(spark, bucket):
+    """A job whose input file is gone by the time the worker runs
+    (SQS delivered the message, the object was deleted) is a failed
+    job, not a vanished one: one ok=false row with in_bytes=0 and no
+    output.  The manifest is materialized first, as the CLI's `send`
+    does; a manifest with no 'process' job yields an empty log."""
+    m_path = os.path.join(bucket, "manifest.parquet")
+    build_manifest(spark, bucket).write.parquet(m_path)
+    manifest = spark.read.parquet(m_path)
+    victim = sorted(os.listdir(os.path.join(bucket, "input")))[0]
+    os.remove(os.path.join(bucket, "input", victim))
+    rows = {r["file_name"]: r for r in run_pipeline(spark, manifest)
+            .collect()}
+    assert len(rows) == 4
+    assert not rows[victim]["ok"] and rows[victim]["in_bytes"] == 0
+    assert all(r["ok"] for n, r in rows.items() if n != victim)
+    assert sorted(os.listdir(os.path.join(bucket, "output"))) == sorted(
+        n + ".out" for n in rows if n != victim)
+
+    idle = manifest.withColumn("action", F.lit("shutdown"))
+    assert run_pipeline(spark, idle).collect() == []
+
+
+def test_pipeline_plan_is_one_listing_without_join(spark, bucket):
+    """The worker reads its own input by the job row, so the whole
+    batch is one path-only binaryFile scan feeding the per-file
+    worker: no join, no second listing, no file content in the scan.
+    The watch stream's micro-batch scan is path-only too."""
+    from samplebatchprocessing_spark.pipeline.manifest import watch_daemon
+    log = run_pipeline(spark, build_manifest(spark, bucket))
+    plan = log._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan, plan
+    assert plan.count("FileScan binaryFile") == 1, plan
+    assert "ReadSchema: struct<path:string>" in plan, plan
+    assert len(log.collect()) == 4
+
+    q = watch_daemon(spark, bucket, poll_seconds=0.5)
+    try:
+        q.processAllAvailable()
+        plan = (q._jsq.streamingQuery().lastExecution()
+                .executedPlan().toString())
+    finally:
+        q.stop()
+    assert plan.count("FileScan binaryFile") == 1, plan
+    assert "ReadSchema: struct<path:string>" in plan, plan
+
+
 def test_pipeline_subprocess_cp_byte_exact(spark, bucket):
     """The reference's true transform contract: an external command
     run as [command, in, out] (GetJobs.py:51-53), default `cp`
@@ -254,6 +301,36 @@ def test_watch_daemon_two_drops_and_stop(spark, bucket, sf_smoke):
             == hashlib.md5(open(out, "rb").read()).hexdigest())
 
 
+def test_watch_daemon_stop_finishes_inflight_batch(spark, bucket):
+    """stop() while a micro-batch is in flight lets that batch commit:
+    every file whose output exists has its commit-log row (GetJobs.py:
+    63-65 finishes the current message before exiting).  A slow
+    transform holds the backlog batch open past the first output."""
+    import time
+
+    from samplebatchprocessing_spark.pipeline.manifest import (
+        commit_log, watch_daemon)
+
+    def slow(raw: bytes) -> bytes:
+        time.sleep(1.0)
+        return raw
+
+    def outs() -> list[str]:
+        return glob.glob(os.path.join(bucket, "output", "*.out"))
+
+    q = watch_daemon(spark, bucket, transform=slow, poll_seconds=0.5)
+    try:
+        deadline = time.time() + 600
+        while not outs() and time.time() < deadline:
+            time.sleep(0.05)
+        assert outs(), "backlog batch never wrote an output"
+    finally:
+        q.stop()
+    q.awaitTermination()
+    rows = commit_log(spark, bucket).collect()
+    assert len(rows) == len(outs()) == 4 and all(r["ok"] for r in rows)
+
+
 def test_cli_watch_sigint_graceful(bucket):
     """End-to-end CLI daemon: ``python -m samplebatchprocessing_spark
     watch`` processes the backlog, then a SIGINT produces a graceful
@@ -324,10 +401,11 @@ def test_pipeline_object_store_scheme_raises_not_silent():
 
 def _recording_store(root: str):
     """File-backed ObjectStoreClient double (VERDICT r7 #4): objects
-    live under <root>/objects/<key>; every put/copy/delete appends a
-    time-ordered journal entry, so the test can assert the exact
-    commit call sequence the reference's S3 flow would receive
-    (GetJobs.py:48-60 upload, :37-40 delete-on-success).  Defined
+    live under <root>/objects/<key>; every get/put/copy/delete appends
+    a time-ordered journal entry, so the test can assert the exact
+    call sequence the reference's S3 flow would receive
+    (GetJobs.py:48-53 download, :57-60 upload, :37-40
+    delete-on-success).  Defined
     inside a factory so cloudpickle serializes the CLASS BY VALUE —
     the commit runs in the executor's Python worker, which cannot
     import the test module."""
@@ -347,6 +425,12 @@ def _recording_store(root: str):
             name = f"{time.time_ns():020d}_{uuid.uuid4().hex[:8]}"
             with open(os.path.join(d, name), "w") as f:
                 f.write(line)
+
+        def get(self, key: str) -> bytes:
+            with open(self._obj(key), "rb") as f:
+                data = f.read()
+            self._journal(f"GET {key}")
+            return data
 
         def put(self, key: str, data: bytes) -> None:
             p = self._obj(key)
@@ -378,27 +462,35 @@ def _store_ops(root: str) -> list[str]:
 
 
 def _object_store_log(spark, store, commit, transform=None):
-    """Drive the SHARED worker (`_file_processor` — the same callable
-    run_pipeline and the streaming watcher map over Arrow batches)
-    against an object-store bucket URI with the recording double."""
+    """Stage three input objects with ``put``, clear the journal, then
+    send their job rows for an object-store bucket URI through
+    :func:`run_pipeline` — the same dispatch the streaming watcher
+    uses per micro-batch."""
+    from samplebatchprocessing_spark.exprs import local_df
     from samplebatchprocessing_spark.pipeline.manifest import (
-        LOG_SCHEMA, _file_processor)
-    rows = [("s3a://contract-bucket/data", "input/", "output/",
-             f"f{i}.bin", bytes([i]) * (i + 1)) for i in range(3)]
-    frame = spark.createDataFrame(
-        rows, "bucket string, in_prefix string, out_prefix string, "
-              "file_name string, content binary")
-    proc = _file_processor(transform or (lambda b: b), ".out", commit,
-                           store=store)
-    return frame.mapInPandas(proc, LOG_SCHEMA).collect()
+        MANIFEST_SCHEMA)
+    for i in range(3):
+        store.put(f"contract-bucket/data/input/f{i}.bin",
+                  bytes([i]) * (i + 1))
+    shutil.rmtree(os.path.join(store.root, "journal"))
+    manifest = local_df(
+        spark, [("process", "s3a://contract-bucket/data", "input/",
+                 "output/", f"f{i}.bin") for i in range(3)],
+        MANIFEST_SCHEMA)
+    return run_pipeline(spark, manifest, transform or (lambda b: b),
+                        commit=commit, store=store).collect()
+
+
+def _file_ops(root: str, i: int) -> list[str]:
+    return [o for o in _store_ops(root) if f"/f{i}.bin" in o]
 
 
 def test_object_store_tempkey_commit_contract(spark, tmp_path):
     """VERDICT r7 #4: the tempkey commit against an object-store
-    scheme is PUT temp key -> server-side COPY to the final key (a
-    single PUT, so a reader never observes a partial final object) ->
-    DELETE temp — per file, in that order, with no POSIX path ever
-    touched for the s3a bucket."""
+    scheme is GET input -> PUT temp key -> server-side COPY to the
+    final key (a single PUT, so a reader never observes a partial
+    final object) -> DELETE temp — per file, in that order, with no
+    POSIX path ever touched for the s3a bucket."""
     store = _recording_store(str(tmp_path))
     log = _object_store_log(spark, store, "tempkey",
                             transform=lambda b: b + b"!")
@@ -412,32 +504,37 @@ def test_object_store_tempkey_commit_contract(spark, tmp_path):
         tmp_key = key + ".inprogress"
         assert not os.path.exists(
             os.path.join(str(tmp_path), "objects", tmp_key))
-        ops = [o for o in _store_ops(str(tmp_path)) if key in o]
-        assert ops == [f"PUT {tmp_key}",
-                       f"COPY {tmp_key} -> {key}",
-                       f"DELETE {tmp_key}"]
+        assert r["in_bytes"] == i + 1
+        assert _file_ops(str(tmp_path), i) == [
+            f"GET contract-bucket/data/input/f{i}.bin",
+            f"PUT {tmp_key}",
+            f"COPY {tmp_key} -> {key}",
+            f"DELETE {tmp_key}"]
     # the fake bucket never materialized as a local directory
     assert not os.path.exists("s3a:")
 
 
 def test_object_store_replace_commit_is_single_put(spark, tmp_path):
     """On an object store the PUT itself is the atomic visibility
-    switch, so the 'replace' strategy degenerates to ONE direct put
-    of the final key — no temp object, no copy, no delete."""
+    switch, so the 'replace' strategy degenerates to the input's GET
+    plus ONE direct put of the final key — no temp object, no copy,
+    no delete."""
     store = _recording_store(str(tmp_path))
     log = _object_store_log(spark, store, "replace")
     assert len(log) == 3 and all(r["ok"] for r in log)
-    ops = _store_ops(str(tmp_path))
-    assert len(ops) == 3 and all(o.startswith("PUT ") for o in ops)
-    assert not any(".inprogress" in o for o in ops)
+    assert len(_store_ops(str(tmp_path))) == 6
+    for i in range(3):
+        assert _file_ops(str(tmp_path), i) == [
+            f"GET contract-bucket/data/input/f{i}.bin",
+            f"PUT contract-bucket/data/output/f{i}.bin.out"]
 
 
 def test_object_store_failed_transform_commits_nothing(spark, tmp_path):
     """The returncode gate over an object store: a failing transform
-    must emit ok=False and touch the store with ZERO calls for that
-    file — no partial upload, no delete — so redelivery/task retry
-    re-runs it cleanly (the reference's skip-upload-and-redeliver,
-    GetJobs.py:54-56)."""
+    must emit ok=False and touch the store with no write call for
+    that file — its only call is the input's GET; no partial upload,
+    no delete — so redelivery/task retry re-runs it cleanly (the
+    reference's skip-upload-and-redeliver, GetJobs.py:54-56)."""
     def _boom(b: bytes) -> bytes:
         if b[:1] == bytes([1]):
             raise RuntimeError("bad file")
@@ -448,7 +545,8 @@ def test_object_store_failed_transform_commits_nothing(spark, tmp_path):
     by_name = {r["file_name"]: r for r in log}
     assert not by_name["f1.bin"]["ok"]
     assert by_name["f0.bin"]["ok"] and by_name["f2.bin"]["ok"]
-    assert not any("f1.bin" in o for o in _store_ops(str(tmp_path)))
+    assert _file_ops(str(tmp_path), 1) == [
+        "GET contract-bucket/data/input/f1.bin"]
 
 
 def test_pipeline_concurrent_runs_stay_byte_exact(spark, bucket):

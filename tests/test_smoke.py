@@ -3,6 +3,8 @@ counts, the driver contract works end-to-end."""
 
 from __future__ import annotations
 
+import pytest
+
 from samplebatchprocessing_spark.catalog import TABLES, load_table, register_views
 
 EXPECTED_SF0001 = {
@@ -55,3 +57,36 @@ def test_engine_facade(spark, sf_smoke, tmp_path):
         shutil.copy(f, f"{bucket}/input/")
     log = eng.process_prefix(bucket).collect()
     assert len(log) == 2 and all(r["ok"] for r in log)
+
+
+def test_ship_package_zip_in_private_tempdir(spark, tmp_path, monkeypatch):
+    """The shipped package zip goes to a per-user 0700 directory under
+    the tempdir, never a fixed shared /tmp path; a directory another
+    user could write to is refused.  The object-store lock files use
+    the same helper."""
+    import os
+    import stat
+    import tempfile
+
+    from samplebatchprocessing_spark import session
+    shipped = []
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(session, "_SHIPPED", set())
+    monkeypatch.setattr(spark.sparkContext, "addPyFile", shipped.append)
+    session.ship_package(spark)
+    pkg_root = tmp_path / f"sbp_pkg_{os.getuid()}"
+    assert len(shipped) == 1
+    assert os.path.dirname(shipped[0]) == str(pkg_root)
+    assert os.path.isfile(shipped[0])
+    assert stat.S_IMODE(os.stat(pkg_root).st_mode) == 0o700
+
+    os.chmod(pkg_root, 0o777)
+    monkeypatch.setattr(session, "_SHIPPED", set())
+    with pytest.raises(PermissionError, match="0700"):
+        session.ship_package(spark)
+
+    from samplebatchprocessing_spark.pipeline.manifest import (
+        LocalObjectStoreClient)
+    lock = LocalObjectStoreClient(str(tmp_path / "store"))._lock_path("k")
+    assert os.path.dirname(lock) == str(
+        tmp_path / f"sbp_object_locks_{os.getuid()}")
