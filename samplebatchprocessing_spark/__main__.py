@@ -190,9 +190,11 @@ def cmd_maintain(args: argparse.Namespace) -> int:
         # is NOW, not as it was at startup
         return spark.read.parquet(args.fresh_parquet)
 
-    # index_root may be an OBJECT-STORE uri (r13): route the index
-    # kinds to the store-native sweep twins, with --cas electing the
-    # multi-maintainer conditional-write pointer mode.
+    # index_root may be an OBJECT-STORE uri (r13): the index kinds
+    # then sweep that bucket's key prefix (store=/spark_uri=), with
+    # --cas electing the multi-maintainer conditional-write pointer
+    # mode; a plain path sweeps the POSIX root.
+    root, plane = args.index_root, {}
     store_parts = _store_from_uri(args.index_root)
     if store_parts is not None:
         if args.kind in ("vocab", "nb"):
@@ -202,43 +204,23 @@ def cmd_maintain(args: argparse.Namespace) -> int:
                   f"cover the index kinds", file=sys.stderr)
             return 2
         store, root, spark_uri = store_parts
-        sweeps = {
-            "lsh": lambda: maintenance.lsh_maintenance_sweep_store(
-                spark, store, root, cas=args.cas,
-                max_files_per_bucket=args.threshold,
-                spark_uri=spark_uri),
-            "postings": lambda:
-                maintenance.postings_maintenance_sweep_store(
-                    spark, store, root, cas=args.cas,
-                    max_files_per_bucket=args.threshold,
-                    spark_uri=spark_uri),
-            "ivf": lambda: maintenance.ivf_maintenance_sweep_store(
-                spark, store, root, cas=args.cas,
-                n_cells=args.n_cells,
-                skew_threshold=args.threshold,
-                spark_uri=spark_uri),
-        }
-    else:
-        sweeps = {
-            "lsh": lambda: maintenance.lsh_maintenance_sweep(
-                spark, args.index_root,
-                max_files_per_bucket=args.threshold),
-            "postings": lambda: maintenance.postings_maintenance_sweep(
-                spark, args.index_root,
-                max_files_per_bucket=args.threshold),
-            "ivf": lambda: maintenance.ivf_maintenance_sweep(
-                spark, args.index_root, n_cells=args.n_cells,
-                skew_threshold=args.threshold),
-            "vocab": lambda: maintenance.vocab_maintenance_sweep(
-                spark, args.index_root, _fresh(),
-                n_merges=args.n_merges,
-                max_drift_x1000=args.max_drift),
-            "nb": lambda: maintenance.nb_maintenance_sweep(
-                spark, args.index_root, _fresh(),
-                pos_col=args.pos_col,
-                max_oov_x1000=args.max_oov,
-                max_prior_drift_x1000=args.max_prior_drift),
-        }
+        plane = {"store": store, "cas": args.cas, "spark_uri": spark_uri}
+    sweeps = {
+        "lsh": lambda: maintenance.lsh_maintenance_sweep(
+            spark, root, max_files_per_bucket=args.threshold, **plane),
+        "postings": lambda: maintenance.postings_maintenance_sweep(
+            spark, root, max_files_per_bucket=args.threshold, **plane),
+        "ivf": lambda: maintenance.ivf_maintenance_sweep(
+            spark, root, n_cells=args.n_cells,
+            skew_threshold=args.threshold, **plane),
+        "vocab": lambda: maintenance.vocab_maintenance_sweep(
+            spark, root, _fresh(), n_merges=args.n_merges,
+            max_drift_x1000=args.max_drift),
+        "nb": lambda: maintenance.nb_maintenance_sweep(
+            spark, root, _fresh(), pos_col=args.pos_col,
+            max_oov_x1000=args.max_oov,
+            max_prior_drift_x1000=args.max_prior_drift),
+    }
     sweep = sweeps[args.kind]
 
     def _print(r: dict) -> None:

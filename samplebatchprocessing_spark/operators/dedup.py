@@ -613,18 +613,6 @@ def _sig_from_hashes(hs):
         for a, b in _hash_params()])
 
 
-def _sig_expr(toks):
-    """MinHash signature expression over a token-array column."""
-    return _sig_from_hashes(_h31_expr(toks))
-
-
-def minhash_signatures(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """L6: 32-hash MinHash signature per document, computed
-    row-locally from the token set with the fixed hash family."""
-    return df.select(
-        "doc_id", _sig_expr(token_set(F.col(text_col))).alias("sig"))
-
-
 def _check_bands(n_bands: int) -> int:
     """Validate a band count against the frozen hash family (r10,
     ADVICE): ``N_HASHES // n_bands`` with a non-dividing ``n_bands``
@@ -641,27 +629,36 @@ def _check_bands(n_bands: int) -> int:
     return N_HASHES // n_bands
 
 
-def _lsh_pairs_from_sets(sets_df: DataFrame,
-                         n_bands: int = N_BANDS) -> DataFrame:
-    """Banded-LSH candidate pairs from a (doc_id, toks) frame.
-    Signature -> ``n_bands`` band hashes (rows-per-band =
-    N_HASHES/n_bands; more bands -> lower s-curve threshold) ->
-    explode -> equi-join on (band_idx, band_hash)."""
+def _band_rows(sets: DataFrame, id_col: str, n_bands: int) -> DataFrame:
+    """(``id_col``, band_idx, band_hash) from an (``id_col``, toks)
+    frame: the one MinHash signature -> band-hash projection, shared
+    by in-memory candidate generation (:func:`_lsh_pairs_from_sets`)
+    and the persisted index (:func:`lsh_band_relation`) so both band
+    a document identically.  Rows-per-band = N_HASHES/n_bands,
+    validated by :func:`_check_bands`."""
     rpb = _check_bands(n_bands)
-    sigs = (sets_df.withColumn("_hs", _h31_expr(F.col("toks")))
-            .select("doc_id", _sig_from_hashes(F.col("_hs")).alias("sig")))
-    # r14 (guide §2.4): both sides of the band self-join consumed
-    # this subtree, recomputing the 32-hash MinHash signature per
-    # side (~0.6 s each at sf0.1).  One eager checkpoint of the
-    # narrow (doc_id, band_idx, band_hash) relation computes it once.
-    bands = (sigs.select(
-        "doc_id",
+    sigs = (sets.withColumn("_hs", _h31_expr(F.col("toks")))
+            .select(id_col, _sig_from_hashes(F.col("_hs")).alias("sig")))
+    return sigs.select(
+        id_col,
         F.posexplode(F.array(*[
             F.hash(*[F.col("sig")[i] for i in
                      range(b * rpb, (b + 1) * rpb)])
             for b in range(n_bands)
         ])).alias("band_idx", "band_hash"))
-        .localCheckpoint(eager=True))
+
+
+def _lsh_pairs_from_sets(sets_df: DataFrame,
+                         n_bands: int = N_BANDS) -> DataFrame:
+    """Banded-LSH candidate pairs from a (doc_id, toks) frame: the
+    :func:`_band_rows` relation (more bands -> lower s-curve
+    threshold) self-equi-joined on (band_idx, band_hash)."""
+    # r14 (guide §2.4): both sides of the band self-join consumed
+    # this subtree, recomputing the 32-hash MinHash signature per
+    # side (~0.6 s each at sf0.1).  One eager checkpoint of the
+    # narrow (doc_id, band_idx, band_hash) relation computes it once.
+    bands = _band_rows(sets_df, "doc_id", n_bands).localCheckpoint(
+        eager=True)
     a = bands.select(F.col("doc_id").alias("doc_a"), "band_idx", "band_hash")
     b = bands.select(F.col("doc_id").alias("doc_b"), "band_idx", "band_hash")
     return (a.join(b, ["band_idx", "band_hash"])
@@ -688,19 +685,9 @@ def lsh_band_relation(df: DataFrame, text_col: str = "text",
     build and probe).  All built-ins (xxhash64 / transform /
     array_min / hash), fully JVM-side: signature + bands are
     row-local, no shuffle until the caller's layout step."""
-    rpb = _check_bands(n_bands)
     sets = df.select(F.col(id_col).alias("did"),
                      token_set(F.col(text_col)).alias("toks"))
-    sigs = (sets.withColumn("_hs", _h31_expr(F.col("toks")))
-            .select("did", _sig_from_hashes(F.col("_hs")).alias("sig")))
-    bands = sigs.select(
-        "did",
-        F.posexplode(F.array(*[
-            F.hash(*[F.col("sig")[i] for i in
-                     range(b * rpb, (b + 1) * rpb)])
-            for b in range(n_bands)
-        ])).alias("band_idx", "band_hash"))
-    return bands.withColumn(
+    return _band_rows(sets, "did", n_bands).withColumn(
         "bucket", F.pmod(F.xxhash64("band_idx", "band_hash"),
                          F.lit(n_buckets)).cast("int"))
 
@@ -853,7 +840,7 @@ def lsh_index_compact(spark, layers: list[str], out_dir: str) -> None:
         raise ValueError("layers must be non-empty")
     # read-then-overwrite of a path being read corrupts or fails
     # mid-job — out_dir must be a FRESH directory, published to
-    # readers via the pointer swap (ADVICE r10; see layout.publish)
+    # readers via the pointer swap (ADVICE r10; see publish.publish)
     out_real = os.path.realpath(out_dir)
     for layer in layers:
         if os.path.realpath(layer) == out_real:
@@ -1145,15 +1132,6 @@ def semantic_dup_ids(emb: DataFrame, threshold: float = 0.3,
             .filter(cos >= threshold)
             .select(F.col("_idb").alias(id_col))
             .distinct())
-
-
-def semantic_dedup(emb: DataFrame, threshold: float = 0.3,
-                   id_col: str = "vec_id") -> DataFrame:
-    """Materialized semantic dedup: the input minus
-    :func:`semantic_dup_ids` (anti-join on the id — one hash join,
-    keep-lowest-id-representative semantics)."""
-    return emb.join(semantic_dup_ids(emb, threshold, id_col),
-                    id_col, "left_anti")
 
 
 def paragraph_dedup(df: DataFrame, chunk: int = 5,

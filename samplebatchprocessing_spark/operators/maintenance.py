@@ -15,14 +15,21 @@ caller-owned background loop over the sweeps with graceful stop,
 where the CLI wires SIGINT exactly as ``__main__.cmd_watch`` does
 for the file watcher).
 
-Every sweep follows the same invariant chain:
-1. CENSUS the live layout (``publish.resolve`` — one consistent
-   version) with an o(index-metadata) probe;
+Every index sweep (LSH, postings, IVF) runs one chain,
+:func:`_sweep`; the kind supplies only its census, due-predicate
+and rewrite.  The same chain serves both storage planes: with
+``store=None`` the root is a POSIX directory published through the
+module-level :mod:`publish` functions; with a ``store`` it is a key
+prefix in that bucket published through
+:class:`publish.StorePublisher`, and Spark reads the layout parquet
+at ``spark_uri(key)``.  The chain:
+1. CENSUS the live layout (``resolve`` — one consistent version)
+   with an o(index-metadata) probe;
 2. apply the PURE integer due-predicate (unit-testable apart from
    the operator it steers — the ``orientation_is_skewed``
    discipline);
 3. if due, rewrite into a FRESH layout directory
-   (``publish.new_layout_dir`` — never in place, ADVICE r10) while
+   (``new_layout_dir`` — never in place, ADVICE r10) while
    probes keep serving the old version;
 4. PUBLISH the pointer atomically and prune retired layouts beyond
    the read horizon (keep >= 2, the m10 vacuum-horizon rule).
@@ -65,108 +72,6 @@ def bucket_file_census(layout_dir: str) -> tuple[int, int, int]:
     return max(counts), len(counts), sum(counts)
 
 
-def compact_is_due(max_files: int, threshold: int = 4) -> bool:
-    """The compaction-cadence decision predicate (pure, integer): a
-    freshly-compacted bucket holds ONE file; every delta append adds
-    one file per touched bucket, and each extra file costs a task +
-    an open + a lost chance at cross-file row-group skipping on the
-    sort key.  Compaction is due when the hottest bucket has
-    accumulated >= ``threshold`` files — by then a probe of that
-    bucket pays ``threshold`` opens for one bucket's worth of rows.
-    ``threshold`` >= 2 (at 1 the sweep would rewrite a
-    just-compacted index forever)."""
-    if threshold < 2:
-        raise ValueError(f"threshold must be >= 2, got {threshold}")
-    return max_files >= threshold
-
-
-def _require_versioned(index_root: str, kind: str) -> str:
-    if publish.current_version(index_root) is None:
-        raise ValueError(
-            f"{kind} sweep needs a VERSIONED index root (no "
-            f"{publish.POINTER} under {index_root!r}): build into "
-            f"publish.new_layout_dir(root), then publish.publish it "
-            f"— an unversioned directory has nowhere to swap to")
-    return publish.resolve(index_root)
-
-
-def lsh_maintenance_sweep(spark, index_root: str,
-                          max_files_per_bucket: int = 4,
-                          keep_versions: int = 2) -> dict:
-    """One maintenance decision for a versioned LSH band index:
-    census the live layout's bucket files, compact into a fresh
-    layout iff :func:`compact_is_due`, publish, prune.  Returns the
-    report row (REPORT_SCHEMA keys); ``acted=False`` sweeps cost one
-    directory glob and nothing else."""
-    live = _require_versioned(index_root, "LSH")
-    before = publish.current_version(index_root)
-    mx, _n, total = bucket_file_census(live)
-    due = compact_is_due(mx, max_files_per_bucket)
-    if due:
-        out = publish.new_layout_dir(index_root)
-        lsh_index_compact(spark, [live], out)
-        publish.publish(index_root, out)
-        publish.prune(index_root, keep=keep_versions)
-    after_dir = publish.resolve(index_root)
-    mx2, _n2, total2 = bucket_file_census(after_dir)
-    return {"index_root": index_root, "kind": "lsh", "due": due,
-            "acted": due, "version_before": before,
-            "version_after": publish.current_version(index_root),
-            "files_before": total, "files_after": total2}
-
-
-def postings_maintenance_sweep(spark, index_root: str,
-                               max_files_per_bucket: int = 4,
-                               keep_versions: int = 2) -> dict:
-    """:func:`lsh_maintenance_sweep` for the x117/x121/x123 postings
-    index — same census, same due-predicate, x123's compaction as
-    the rewrite."""
-    live = _require_versioned(index_root, "postings")
-    before = publish.current_version(index_root)
-    mx, _n, total = bucket_file_census(live)
-    due = compact_is_due(mx, max_files_per_bucket)
-    if due:
-        out = publish.new_layout_dir(index_root)
-        postings_index_compact(spark, [live], out)
-        publish.publish(index_root, out)
-        publish.prune(index_root, keep=keep_versions)
-    mx2, _n2, total2 = bucket_file_census(publish.resolve(index_root))
-    return {"index_root": index_root, "kind": "postings", "due": due,
-            "acted": due, "version_before": before,
-            "version_after": publish.current_version(index_root),
-            "files_before": total, "files_after": total2}
-
-
-def ivf_maintenance_sweep(spark, index_root: str, n_cells: int = 16,
-                          skew_threshold: int = 4,
-                          sample_cap: int = 4096,
-                          keep_versions: int = 2) -> dict:
-    """One maintenance decision for a versioned IVF ANN index:
-    ``ivf_cell_census`` the live layout (one cell-keyed aggregate),
-    re-centroid into a fresh layout iff ``recluster_is_due``
-    (drifted appends crowding stale cells — the x133 trigger), stamp
-    the new centroids INTO the layout (``ivf_centroids_write``, so
-    the pointer swap versions quantizer and cells together),
-    publish, prune.  ``files_*`` report the max-cell row count here
-    (the skew measure the predicate acts on)."""
-    live = _require_versioned(index_root, "IVF")
-    before = publish.current_version(index_root)
-    mx, n, total = ivf_cell_census(spark, live)
-    due = recluster_is_due(mx, n_cells, total, skew_threshold)
-    if due:
-        out = publish.new_layout_dir(index_root)
-        cmat = ivf_index_recluster(spark, live, out, n_cells,
-                                   sample_cap)
-        ivf_centroids_write(out, cmat)
-        publish.publish(index_root, out)
-        publish.prune(index_root, keep=keep_versions)
-    mx2, _n2, _t2 = ivf_cell_census(spark, publish.resolve(index_root))
-    return {"index_root": index_root, "kind": "ivf", "due": due,
-            "acted": due, "version_before": before,
-            "version_after": publish.current_version(index_root),
-            "files_before": mx, "files_after": mx2}
-
-
 def store_bucket_census(store, layout_key: str) -> tuple[int, int, int]:
     """:func:`bucket_file_census` over an object-store layout prefix
     (r12): page the layout's keys (memory bounded by the page size,
@@ -188,121 +93,160 @@ def store_bucket_census(store, layout_key: str) -> tuple[int, int, int]:
     return max(counts.values()), len(counts), sum(counts.values())
 
 
-def lsh_maintenance_sweep_store(spark, store, root: str,
-                                cas: bool = False,
-                                max_files_per_bucket: int = 4,
-                                keep_versions: int = 2,
-                                spark_uri=None) -> dict:
-    """:func:`lsh_maintenance_sweep` over an object-store bucket
-    (r12, completing VERDICT r11 #3: publish went store-native in
-    m13b; this takes the census -> due? -> rewrite -> publish loop
-    with it, so index upkeep runs where a 100 TB index actually
-    lives).  Control plane = the 5-verb client via
-    :class:`publish.StorePublisher`; census = one paged listing;
-    data plane = Spark parquet against ``spark_uri(key)`` — the
-    file-backed double's ``fs_path`` by default, a
-    ``lambda k: f"s3a://{bucket}/{k}"`` on a real deployment."""
-    from . import publish as _pub
+def compact_is_due(max_files: int, threshold: int = 4) -> bool:
+    """The compaction-cadence decision predicate (pure, integer): a
+    freshly-compacted bucket holds ONE file; every delta append adds
+    one file per touched bucket, and each extra file costs a task +
+    an open + a lost chance at cross-file row-group skipping on the
+    sort key.  Compaction is due when the hottest bucket has
+    accumulated >= ``threshold`` files — by then a probe of that
+    bucket pays ``threshold`` opens for one bucket's worth of rows.
+    ``threshold`` >= 2 (at 1 the sweep would rewrite a
+    just-compacted index forever)."""
+    if threshold < 2:
+        raise ValueError(f"threshold must be >= 2, got {threshold}")
+    return max_files >= threshold
 
-    pub = _pub.StorePublisher(store, root, cas=cas)
-    if pub.current_version() is None:
+
+def _require_versioned(pub, kind: str) -> int:
+    """The live version of ``pub``'s root; raises for an unversioned
+    root, which has no pointer to swap."""
+    version = pub.current_version()
+    if version is None:
         raise ValueError(
-            f"LSH store sweep needs a VERSIONED index root (no "
-            f"{_pub.POINTER} object under {root!r}): build into "
-            f"pub.new_layout_dir(), then pub.publish() it")
-    if spark_uri is None:
-        spark_uri = store.fs_path      # the sandbox double's plane
+            f"{kind} sweep needs a VERSIONED index root (no "
+            f"{publish.POINTER} under {pub.root!r}): build into a "
+            f"fresh new_layout_dir, then publish it — an unversioned "
+            f"root has nowhere to swap to")
+    return version
+
+
+class _PosixPublisher:
+    """The module-level :mod:`publish` functions bound to one POSIX
+    root, under :class:`publish.StorePublisher`'s method names, so one
+    chain drives either storage plane."""
+
+    def __init__(self, root: str) -> None:
+        self.root = root
+
+    def current_version(self) -> int | None:
+        return publish.current_version(self.root)
+
+    def resolve(self) -> str:
+        return publish.resolve(self.root)
+
+    def new_layout_dir(self) -> str:
+        return publish.new_layout_dir(self.root)
+
+    def publish(self, layout_dir: str) -> int:
+        return publish.publish(self.root, layout_dir)
+
+    def prune(self, keep: int = 2) -> list[str]:
+        return publish.prune(self.root, keep=keep)
+
+
+def _plane(index_root: str, store, cas: bool, spark_uri):
+    """(publisher, layout -> Spark path, layout -> ``bucket=N`` file
+    census) for ``index_root``: a POSIX directory when ``store`` is
+    None, else a key prefix in ``store`` whose parquet Spark reads at
+    ``spark_uri(key)`` — the file-backed double's ``fs_path`` by
+    default, a ``lambda k: f"s3a://{bucket}/{k}"`` on a real
+    deployment."""
+    if store is None:
+        return (_PosixPublisher(index_root), lambda path: path,
+                bucket_file_census)
+    return (publish.StorePublisher(store, index_root, cas=cas),
+            spark_uri or store.fs_path,
+            lambda key: store_bucket_census(store, key))
+
+
+def _sweep(kind: str, pub, census, due, rewrite,
+           keep_versions: int) -> dict:
+    """The one maintenance chain: census the live layout, decide with
+    the pure ``due`` predicate, rewrite into a fresh layout, publish,
+    prune, census again.  ``census`` maps a layout to ``(max, n,
+    total)``; ``rewrite(live, out)`` writes layout ``out``.  The
+    report's ``files_*`` are total files for the bucket kinds and the
+    max-cell row count for IVF (the skew its predicate acts on)."""
+    before = _require_versioned(pub, kind)
     live = pub.resolve()
-    before = pub.current_version()
-    mx, _n, total = store_bucket_census(store, live)
-    due = compact_is_due(mx, max_files_per_bucket)
-    if due:
+    stats = census(live)
+    acted = due(*stats)
+    if acted:
         out = pub.new_layout_dir()
-        lsh_index_compact(spark, [spark_uri(live)], spark_uri(out))
+        rewrite(live, out)
         pub.publish(out)
         pub.prune(keep=keep_versions)
-    mx2, _n2, total2 = store_bucket_census(store, pub.resolve())
-    return {"index_root": root, "kind": "lsh", "due": due,
-            "acted": due, "version_before": before,
+    after = census(pub.resolve())
+    i = 0 if kind == "ivf" else 2
+    return {"index_root": pub.root, "kind": kind, "due": acted,
+            "acted": acted, "version_before": before,
             "version_after": pub.current_version(),
-            "files_before": total, "files_after": total2}
+            "files_before": stats[i], "files_after": after[i]}
 
 
-def postings_maintenance_sweep_store(spark, store, root: str,
-                                     cas: bool = False,
-                                     max_files_per_bucket: int = 4,
-                                     keep_versions: int = 2,
-                                     spark_uri=None) -> dict:
-    """:func:`postings_maintenance_sweep` over a bucket — the
-    postings index shares the ``bucket=N`` layout, so the store
-    census is :func:`store_bucket_census` verbatim and the rewrite
-    is x123's compaction against the ``spark_uri`` data plane."""
-    from . import publish as _pub
-
-    pub = _pub.StorePublisher(store, root, cas=cas)
-    if pub.current_version() is None:
-        raise ValueError(
-            f"postings store sweep needs a VERSIONED index root (no "
-            f"{_pub.POINTER} object under {root!r})")
-    if spark_uri is None:
-        spark_uri = store.fs_path
-    live = pub.resolve()
-    before = pub.current_version()
-    mx, _n, total = store_bucket_census(store, live)
-    due = compact_is_due(mx, max_files_per_bucket)
-    if due:
-        out = pub.new_layout_dir()
-        postings_index_compact(spark, [spark_uri(live)],
-                               spark_uri(out))
-        pub.publish(out)
-        pub.prune(keep=keep_versions)
-    mx2, _n2, total2 = store_bucket_census(store, pub.resolve())
-    return {"index_root": root, "kind": "postings", "due": due,
-            "acted": due, "version_before": before,
-            "version_after": pub.current_version(),
-            "files_before": total, "files_after": total2}
+def lsh_maintenance_sweep(spark, index_root: str,
+                          max_files_per_bucket: int = 4,
+                          keep_versions: int = 2, *, store=None,
+                          cas: bool = False, spark_uri=None) -> dict:
+    """One maintenance decision for a versioned LSH band index:
+    census the live layout's bucket files, compact into a fresh
+    layout iff :func:`compact_is_due`, publish, prune.  Returns the
+    report row (REPORT_SCHEMA keys); ``acted=False`` sweeps cost one
+    listing and nothing else.  With ``store`` the root is a key
+    prefix in that bucket (``cas`` elects the multi-maintainer
+    pointer mode of :class:`publish.StorePublisher`)."""
+    pub, uri, census = _plane(index_root, store, cas, spark_uri)
+    return _sweep(
+        "lsh", pub, census,
+        lambda mx, _n, _t: compact_is_due(mx, max_files_per_bucket),
+        lambda live, out: lsh_index_compact(spark, [uri(live)],
+                                            uri(out)),
+        keep_versions)
 
 
-def ivf_maintenance_sweep_store(spark, store, root: str,
-                                cas: bool = False,
-                                n_cells: int = 16,
-                                skew_threshold: int = 4,
-                                sample_cap: int = 4096,
-                                keep_versions: int = 2,
-                                spark_uri=None) -> dict:
-    """:func:`ivf_maintenance_sweep` over a bucket — the IVF census
-    is already a Spark aggregate over the layout parquet, so only
-    the control plane changes: resolve/name/publish/prune through
-    :class:`publish.StorePublisher`, parquet I/O through
-    ``spark_uri``.  The recluster stamps the new centroids INTO the
-    fresh layout before the publish, so the one-PUT swap versions
-    quantizer and cells together (the x133 invariant, unchanged)."""
-    from . import publish as _pub
+def postings_maintenance_sweep(spark, index_root: str,
+                               max_files_per_bucket: int = 4,
+                               keep_versions: int = 2, *, store=None,
+                               cas: bool = False,
+                               spark_uri=None) -> dict:
+    """:func:`lsh_maintenance_sweep` for the x117/x121/x123 postings
+    index — same ``bucket=N`` census, same due-predicate, x123's
+    compaction as the rewrite."""
+    pub, uri, census = _plane(index_root, store, cas, spark_uri)
+    return _sweep(
+        "postings", pub, census,
+        lambda mx, _n, _t: compact_is_due(mx, max_files_per_bucket),
+        lambda live, out: postings_index_compact(spark, [uri(live)],
+                                                 uri(out)),
+        keep_versions)
 
-    pub = _pub.StorePublisher(store, root, cas=cas)
-    if pub.current_version() is None:
-        raise ValueError(
-            f"IVF store sweep needs a VERSIONED index root (no "
-            f"{_pub.POINTER} object under {root!r})")
-    if spark_uri is None:
-        spark_uri = store.fs_path
-    live = pub.resolve()
-    before = pub.current_version()
-    mx, n, total = ivf_cell_census(spark, spark_uri(live))
-    due = recluster_is_due(mx, n_cells, total, skew_threshold)
-    if due:
-        out = pub.new_layout_dir()
-        cmat = ivf_index_recluster(spark, spark_uri(live),
-                                   spark_uri(out), n_cells,
+
+def ivf_maintenance_sweep(spark, index_root: str, n_cells: int = 16,
+                          skew_threshold: int = 4,
+                          sample_cap: int = 4096,
+                          keep_versions: int = 2, *, store=None,
+                          cas: bool = False, spark_uri=None) -> dict:
+    """One maintenance decision for a versioned IVF ANN index:
+    ``ivf_cell_census`` the live layout (one cell-keyed aggregate),
+    re-centroid into a fresh layout iff ``recluster_is_due``
+    (drifted appends crowding stale cells — the x133 trigger), stamp
+    the new centroids INTO the layout (``ivf_centroids_write``, so
+    the pointer swap versions quantizer and cells together),
+    publish, prune.  ``files_*`` report the max-cell row count here
+    (the skew measure the predicate acts on)."""
+    pub, uri, _ = _plane(index_root, store, cas, spark_uri)
+
+    def rewrite(live: str, out: str) -> None:
+        cmat = ivf_index_recluster(spark, uri(live), uri(out), n_cells,
                                    sample_cap)
-        ivf_centroids_write(spark_uri(out), cmat)
-        pub.publish(out)
-        pub.prune(keep=keep_versions)
-    mx2, _n2, _t2 = ivf_cell_census(spark, spark_uri(pub.resolve()))
-    return {"index_root": root, "kind": "ivf", "due": due,
-            "acted": due, "version_before": before,
-            "version_after": pub.current_version(),
-            "files_before": mx, "files_after": mx2}
+        ivf_centroids_write(uri(out), cmat)
+
+    return _sweep(
+        "ivf", pub, lambda layout: ivf_cell_census(spark, uri(layout)),
+        lambda mx, _n, total: recluster_is_due(mx, n_cells, total,
+                                               skew_threshold),
+        rewrite, keep_versions)
 
 
 def vocab_retrain_is_due(fresh_x1000: int, trained_x1000: int,
@@ -373,8 +317,7 @@ def vocab_maintenance_sweep(spark, root: str, fresh_df,
     from . import artifacts
     from .text import bpe_train_merges, encode_fertility_x1000
 
-    _require_versioned(root, "vocab")
-    before = publish.current_version(root)
+    before = _require_versioned(_PosixPublisher(root), "vocab")
     meta = artifacts.bpe_vocab_meta(root)
     if "fertility_x1000" not in meta:
         raise ValueError(
@@ -434,8 +377,7 @@ def nb_maintenance_sweep(spark, root: str, fresh_doc,
     from . import artifacts
     from .text import tokenize
 
-    _require_versioned(root, "nb")
-    before = publish.current_version(root)
+    before = _require_versioned(_PosixPublisher(root), "nb")
     cnt, np_, nn = artifacts.nb_model_read(spark, root)
 
     toks = fresh_doc.select(

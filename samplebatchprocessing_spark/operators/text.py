@@ -158,16 +158,6 @@ FROM documents
 """
 
 
-def lang_scores(toks: Column) -> list[tuple[str, Column]]:
-    """Marker-overlap score per language."""
-    dis = F.array_distinct(toks)
-    return [
-        (lang, F.size(F.array_intersect(
-            dis, F.array(*[F.lit(m) for m in markers]))))
-        for lang, markers in sorted(LANG_MARKERS.items())
-    ]
-
-
 def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Heuristic language-ID: argmax marker overlap, alphabetical
     tie-break, 'und' (undetermined) when no marker hits.

@@ -805,6 +805,16 @@ def _start_watch_stream(spark: SparkSession, bucket_dir: str,
             .trigger(**trigger).start())
 
 
+def _read_log(spark: SparkSession, log_dir: str) -> DataFrame | None:
+    """The on-disk commit log, or None while it holds no part file:
+    never written, or its first append was interrupted (kill, crash)
+    before the commit and left only ``_temporary/``."""
+    if not os.path.isdir(log_dir) or not any(
+            f.startswith("part-") for f in os.listdir(log_dir)):
+        return None
+    return spark.read.parquet(log_dir)
+
+
 def commit_log(spark: SparkSession, bucket_dir: str,
                log_dir: str | None = None) -> DataFrame:
     """Cumulative per-file commit log for a watched bucket, deduped to
@@ -814,10 +824,10 @@ def commit_log(spark: SparkSession, bucket_dir: str,
     ``log_dir`` overrides the default location (same seam as
     :func:`quarantine_ledger`: an object-store bucket keeps its
     Spark-written control tables on a Spark-readable filesystem)."""
-    log_dir = log_dir or os.path.join(bucket_dir, "_commit_log")
-    if not os.path.exists(log_dir):     # nothing ever processed
+    full = _read_log(spark,
+                     log_dir or os.path.join(bucket_dir, "_commit_log"))
+    if full is None:                    # nothing ever committed
         return spark.createDataFrame([], LOG_SCHEMA)
-    full = spark.read.parquet(log_dir)
     if "run_seq" not in full.columns:   # pre-tagging log on disk
         return full
     w = (W.partitionBy("file_name")
@@ -915,9 +925,9 @@ def quarantine_sweep(spark: SparkSession, bucket_dir: str,
     log_dir = log_dir or os.path.join(bucket_dir, "_commit_log")
     ledger_dir = ledger_dir or os.path.join(bucket_dir,
                                             "_quarantine_ledger")
-    if not os.path.exists(log_dir):
+    full = _read_log(spark, log_dir)
+    if full is None:
         return quarantine_ledger(spark, bucket_dir, ledger_dir)
-    full = spark.read.parquet(log_dir)
     if "run_seq" in full.columns:
         newest_ok = F.max(F.struct("run_seq", "batch_id", "ok"))["ok"]
     else:                               # legacy pre-tagging log

@@ -2464,16 +2464,6 @@ _X130_COLS = tuple(_netstring(b) for b in (
 ))
 
 
-def x130_hash_col():
-    """The per-row checksum term shared by x130/x131 (and bench.py's
-    delta-maintenance probe): md5 of the canonical '|'-joined
-    netstring rendering (length-prefixed values, NULL -> 'n'; see
-    :func:`_netstring`), top 15 hex chars as decimal(38,0)."""
-    return F.conv(F.substring(F.md5(F.concat_ws(
-        "|", *[F.expr(c) for c in _X130_COLS])), 1, 15), 16, 10) \
-        .cast("decimal(38,0)")
-
-
 #: x130's modulus and the fan-out of the two-level exact reduction.
 #: 4096 buckets x 2^33 rows of bigint-safe per-bucket accumulation
 #: covers ~3.5e13 (2^45) rows per group — far past 100 TB lineitem.

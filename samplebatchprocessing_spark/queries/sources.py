@@ -687,6 +687,7 @@ def p17_python_stream_source(spark: SparkSession,
     into the same per-bucket aggregate as P14, so the twin audits
     the whole streaming read path — offset management included: a
     skipped or double-read batch changes the counts."""
+    from ..exprs import local_df
     from ..operators import pysource
     pysource.register(spark)
     # r15 (guide §2.2): the stateful aggregate's key space is the
@@ -700,27 +701,34 @@ def p17_python_stream_source(spark: SparkSession,
     # has more than 16 rows; batch-side parallelism is unaffected
     # (the source's range partitions are planned independently).
     # Output identical (oracle + equality-checked when this landed).
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
+    # The pin lives on a CLONE of the caller's session, so the
+    # caller's conf never changes, not even while the stream runs.
+    # cloneSession (Spark's own session fork, reached through py4j)
+    # carries the caller's conf and registered data sources, where
+    # newSession() starts from neither and cannot re-register a
+    # source name the caller already holds.
+    stream_spark = SparkSession(spark.sparkContext,
+                                spark._jsparkSession.cloneSession())
+    stream_spark.conf.set("spark.sql.shuffle.partitions", "16")
+    sdf = (stream_spark.readStream.format("synth_events")
+           .option("n_rows", 10000).option("chunk", 128).load())
+    agg = (sdf.groupBy("bucket")
+           .agg(F.count(F.lit(1)).alias("n"),
+                F.sum("value").alias("sum_value"),
+                F.min("id").alias("min_id"),
+                F.max("id").alias("max_id")))
+    name = "p17_stream_out"
+    q = (agg.writeStream.outputMode("complete").format("memory")
+         .queryName(name).trigger(processingTime="0 seconds")
+         .start())
     try:
-        sdf = (spark.readStream.format("synth_events")
-               .option("n_rows", 10000).option("chunk", 128).load())
-        agg = (sdf.groupBy("bucket")
-               .agg(F.count(F.lit(1)).alias("n"),
-                    F.sum("value").alias("sum_value"),
-                    F.min("id").alias("min_id"),
-                    F.max("id").alias("max_id")))
-        name = "p17_stream_out"
-        q = (agg.writeStream.outputMode("complete").format("memory")
-             .queryName(name).trigger(processingTime="0 seconds")
-             .start())
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        q.processAllAvailable()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return spark.table(name)
+        q.stop()
+    # the memory sink's view lives in the clone; hand the caller its
+    # 16 result rows on the caller's own session
+    out = stream_spark.table(name)
+    return local_df(spark, out.collect(), out.schema)
 
 
 

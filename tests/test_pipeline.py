@@ -776,6 +776,32 @@ def test_quarantine_sweep_rejects_bad_max_attempts(spark, bucket):
         quarantine_sweep(spark, bucket, max_attempts=0)
 
 
+def test_commit_log_without_part_file_is_empty(spark, tmp_path):
+    """A log append killed before its commit leaves ``_commit_log/``
+    holding only ``_temporary/``: the log reads as empty (not
+    UNABLE_TO_INFER_SCHEMA) and the quarantine sweep moves nothing."""
+    from samplebatchprocessing_spark.pipeline.manifest import (
+        LOG_SCHEMA, commit_log, quarantine_sweep)
+
+    bucket = str(tmp_path / "b")
+    os.makedirs(os.path.join(bucket, "input"))
+    with open(os.path.join(bucket, "input", "a.bin"), "wb") as f:
+        f.write(b"x")
+    attempt = os.path.join(bucket, "_commit_log", "_temporary", "0",
+                           "_temporary", "attempt_0")
+    os.makedirs(attempt)
+    with open(os.path.join(attempt, "part-00000.snappy.parquet"),
+              "wb") as f:
+        f.write(b"PAR1")                 # the killed task's torn file
+
+    log = commit_log(spark, bucket)
+    assert log.schema == spark.createDataFrame([], LOG_SCHEMA).schema
+    assert log.count() == 0
+    assert quarantine_sweep(spark, bucket, max_attempts=1).count() == 0
+    assert os.listdir(os.path.join(bucket, "input")) == ["a.bin"]
+    assert not os.path.exists(os.path.join(bucket, "quarantine"))
+
+
 def test_watch_daemon_with_quarantine_sweep(spark, bucket):
     """Operational composition: the CONTINUOUS daemon form + the
     quarantine sweep — poison arrives mid-stream, fails its delivery,

@@ -905,11 +905,11 @@ def test_store_lsh_maintenance_sweep(spark, sf_smoke, tmp_path):
     pub.publish(v1)
 
     with pytest.raises(ValueError, match="VERSIONED"):
-        maintenance.lsh_maintenance_sweep_store(
-            spark, store, "idx/other")
+        maintenance.lsh_maintenance_sweep(
+            spark, "idx/other", store=store)
 
-    r0 = maintenance.lsh_maintenance_sweep_store(
-        spark, store, "idx/lsh", max_files_per_bucket=3)
+    r0 = maintenance.lsh_maintenance_sweep(
+        spark, "idx/lsh", max_files_per_bucket=3, store=store)
     assert not r0["due"] and r0["version_after"] == 1
 
     for _ in range(3):                   # decay: 3 delta layers
@@ -920,13 +920,13 @@ def test_store_lsh_maintenance_sweep(spark, sf_smoke, tmp_path):
     probe = lambda: sorted(map(tuple, dedup.lsh_index_probe(
         spark, store.fs_path(pub.resolve()), batch).collect()))
     before = probe()
-    r1 = maintenance.lsh_maintenance_sweep_store(
-        spark, store, "idx/lsh", max_files_per_bucket=3)
+    r1 = maintenance.lsh_maintenance_sweep(
+        spark, "idx/lsh", max_files_per_bucket=3, store=store)
     assert r1["due"] and r1["acted"] and r1["version_after"] == 2
     assert probe() == before and before
 
-    r2 = maintenance.lsh_maintenance_sweep_store(
-        spark, store, "idx/lsh", max_files_per_bucket=3)
+    r2 = maintenance.lsh_maintenance_sweep(
+        spark, "idx/lsh", max_files_per_bucket=3, store=store)
     assert not r2["due"] and r2["version_after"] == 2
     mx2, n2, t2 = maintenance.store_bucket_census(store, pub.resolve())
     assert mx2 == 1 and t2 == n2         # canonical one-file layout
@@ -949,8 +949,8 @@ def test_store_postings_maintenance_sweep(spark, tmp_path):
         T.postings_index_append(doc.filter(f"doc_id = {did}"),
                                 store.fs_path(pub.resolve()),
                                 n_buckets=8)
-    r = maintenance.postings_maintenance_sweep_store(
-        spark, store, "idx/post", max_files_per_bucket=2)
+    r = maintenance.postings_maintenance_sweep(
+        spark, "idx/post", max_files_per_bucket=2, store=store)
     assert r["due"] and r["version_after"] == 2
     got = {(x["doc_id"], x["total_tf"])
            for x in T.postings_probe_and(
@@ -960,8 +960,8 @@ def test_store_postings_maintenance_sweep(spark, tmp_path):
     mx, n, total = maintenance.store_bucket_census(store,
                                                    pub.resolve())
     assert mx == 1 and total == n
-    r2 = maintenance.postings_maintenance_sweep_store(
-        spark, store, "idx/post", max_files_per_bucket=2)
+    r2 = maintenance.postings_maintenance_sweep(
+        spark, "idx/post", max_files_per_bucket=2, store=store)
     assert not r2["due"] and r2["version_after"] == 2
 
 
@@ -984,8 +984,8 @@ def test_store_ivf_maintenance_sweep_on_planted_drift(spark,
     S.ivf_centroids_write(store.fs_path(v1), cmat)
     pub.publish(v1)
 
-    r0 = maintenance.ivf_maintenance_sweep_store(spark, store,
-                                                 "idx/ivf", n_cells=8)
+    r0 = maintenance.ivf_maintenance_sweep(spark, "idx/ivf",
+                                           n_cells=8, store=store)
     assert not r0["due"] and r0["version_after"] == 1
 
     center = np.array([8.0, 0.0, 0.0, 0.0])
@@ -996,8 +996,8 @@ def test_store_ivf_maintenance_sweep_on_planted_drift(spark,
     (S.ivf_assign(drift, cmat).write.mode("append")
      .partitionBy("cell").parquet(store.fs_path(pub.resolve())))
 
-    r1 = maintenance.ivf_maintenance_sweep_store(spark, store,
-                                                 "idx/ivf", n_cells=8)
+    r1 = maintenance.ivf_maintenance_sweep(spark, "idx/ivf",
+                                           n_cells=8, store=store)
     assert r1["due"] and r1["acted"] and r1["version_after"] == 2
     live = store.fs_path(pub.resolve())
     assert os.path.exists(os.path.join(live, "_ivf_centroids.json"))

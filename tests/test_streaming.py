@@ -248,3 +248,34 @@ def test_s25_batch_replay_rewrites_byte_identical(spark, tmp_path):
         .select("doc_id", "n_tok", "start_off", "first_seq",
                 "last_seq", "n_seqs").collect())
     assert first == oneshot
+
+
+def test_p17_leaves_the_callers_conf_alone(spark, sf_smoke):
+    """P17 pins its stream's shuffle width on a child session: a
+    thread polling the caller's ``spark.sql.shuffle.partitions``
+    while the stream runs never reads a changed value."""
+    import threading
+
+    from samplebatchprocessing_spark.queries.sources import (
+        p17_python_stream_source)
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")            # not the pin, so a change shows
+    seen, done = set(), threading.Event()
+
+    def poll():
+        while not done.is_set():
+            seen.add(spark.conf.get(key))
+            done.wait(0.01)
+
+    t = threading.Thread(target=poll)
+    t.start()
+    try:
+        rows = p17_python_stream_source(spark, sf_smoke).collect()
+    finally:
+        done.set()
+        t.join(timeout=10)
+        spark.conf.set(key, old)
+    assert not t.is_alive()
+    assert seen == {"7"}
+    assert sum(r["n"] for r in rows) == 10000
