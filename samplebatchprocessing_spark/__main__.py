@@ -80,7 +80,8 @@ def cmd_get(args: argparse.Namespace) -> int:
     failed = [r for r in rows if not r["ok"]]
     for r in rows:
         print(f"{'ok ' if r['ok'] else 'ERR'} {r['file_name']} "
-              f"{r['in_bytes']}B -> {r['out_bytes']}B {r['out_path']}")
+              f"{r['in_bytes']}B -> {r['out_bytes']}B {r['out_path']}"
+              + ("" if r["ok"] else f" {r['error']}"))
     print(f"{len(rows) - len(failed)}/{len(rows)} files processed")
     return 1 if failed else 0
 

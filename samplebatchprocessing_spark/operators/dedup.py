@@ -165,14 +165,25 @@ def jaccard_pairs(df: DataFrame, threshold: float = 0.8,
     if open_vocab == "signature":
         return _signature_banded_pairs(sets_df, threshold, band_width)
     if open_vocab == "lsh":
-        cand = _lsh_pairs_from_sets(sets_df)
+        return _exact_jaccard(_lsh_pairs_from_sets(sets_df), threshold,
+                              sets_df)
+    return _exact_jaccard(_banded_self_pairs(sets_df, band_width),
+                          threshold)
+
+
+def _exact_jaccard(pairs: DataFrame, threshold: float,
+                   sets_df: DataFrame | None = None) -> DataFrame:
+    """Exact-Jaccard verify: (doc_a, doc_b, jaccard) for the pairs
+    with |A∩B| / |A∪B| >= ``threshold``.  ``pairs`` carries the token
+    arrays as ``toks_a``/``toks_b``, or — given ``sets_df`` — only
+    ``(doc_a, doc_b)`` candidates, whose arrays are joined back from
+    ``sets_df`` first."""
+    if sets_df is not None:
         a = sets_df.select(F.col("doc_id").alias("doc_a"),
                            F.col("toks").alias("toks_a"))
         b = sets_df.select(F.col("doc_id").alias("doc_b"),
                            F.col("toks").alias("toks_b"))
-        pairs = cand.join(a, "doc_a").join(b, "doc_b")
-    else:
-        pairs = _banded_self_pairs(sets_df, band_width)
+        pairs = pairs.join(a, "doc_a").join(b, "doc_b")
     inter = F.size(F.array_intersect("toks_a", "toks_b"))
     union = F.size("toks_a") + F.size("toks_b") - inter
     jac = inter.cast("double") / union
@@ -523,16 +534,7 @@ def _signature_banded_pairs(sets_df: DataFrame, threshold: float,
                     / (F.col("sz_a") + F.col("sz_b") - F.col("_iub"))
                     >= threshold)
             .select("doc_a", "doc_b"))
-    ta = sets_df.select(F.col("doc_id").alias("doc_a"),
-                        F.col("toks").alias("toks_a"))
-    tb = sets_df.select(F.col("doc_id").alias("doc_b"),
-                        F.col("toks").alias("toks_b"))
-    pairs = cand.join(ta, "doc_a").join(tb, "doc_b")
-    inter = F.size(F.array_intersect("toks_a", "toks_b"))
-    union = F.size("toks_a") + F.size("toks_b") - inter
-    jac = inter.cast("double") / union
-    return (pairs.select("doc_a", "doc_b", jac.alias("jaccard"))
-            .filter(F.col("jaccard") >= threshold))
+    return _exact_jaccard(cand, threshold, sets_df)
 
 
 def ngram_shingle_sets(df: DataFrame, n: int = 2,
@@ -580,17 +582,8 @@ def ngram_jaccard_pairs(df: DataFrame, n: int = 2,
     """
     sets_df = _stage_sets(ngram_shingle_sets(df, n, text_col))
     if method == "lsh":
-        cand = _lsh_pairs_from_sets(sets_df, n_bands=8)
-        a = sets_df.select(F.col("doc_id").alias("doc_a"),
-                           F.col("toks").alias("toks_a"))
-        b = sets_df.select(F.col("doc_id").alias("doc_b"),
-                           F.col("toks").alias("toks_b"))
-        pairs = cand.join(a, "doc_a").join(b, "doc_b")
-        inter = F.size(F.array_intersect("toks_a", "toks_b"))
-        union = F.size("toks_a") + F.size("toks_b") - inter
-        jac = inter.cast("double") / union
-        return (pairs.select("doc_a", "doc_b", jac.alias("jaccard"))
-                .filter(F.col("jaccard") >= threshold))
+        return _exact_jaccard(_lsh_pairs_from_sets(sets_df, n_bands=8),
+                              threshold, sets_df)
     return _signature_banded_pairs(sets_df, threshold, band_width)
 
 

@@ -18,16 +18,20 @@ Spark mapping:
 - job message              -> manifest DataFrame (same 5 columns)
 - dispatch                 -> `filter(action = 'process')` + one
   `mapInPandas` over the manifest's own partitions; no join
-- download + transform     -> the per-file worker reads its input from
-  the job row (POSIX read or object-store GET) and runs a plugin
-  `bytes -> bytes` callable (the generalization of the reference's
-  arbitrary `command`, D4)
-- upload + delete-on-success -> idempotent per-file write with the
+- download + transform     -> the per-file worker GETs its input by the
+  job row and runs a plugin `bytes -> bytes` callable (the
+  generalization of the reference's arbitrary `command`, D4)
+- upload + delete-on-success -> idempotent per-file PUT of the
   deterministic output key `out_prefix + file_name + ext`
   (user-data.sh:6); Spark task retry (`spark.task.maxFailures`)
   re-runs failed files and the overwrite makes redelivery harmless —
   the same at-least-once/effectively-once contract as the reference's
   visibility timeout + delete (README.md:44-47).
+- storage client            -> one `ObjectStoreClient` per bucket for
+  every scheme: bare and `file://` buckets through
+  `LocalObjectStoreClient` at the bucket root, object-store schemes
+  through the caller's `store` (the reference's one boto S3
+  connection, GetJobs.py:48-60)
 """
 
 from __future__ import annotations
@@ -130,10 +134,12 @@ def run_pipeline(spark: SparkSession, manifest: DataFrame,
     migrating user brings their shell tool unchanged.  ``transform``
     and ``command`` are mutually exclusive; neither means identity.
 
-    ``commit`` picks the per-file commit strategy:
-    - ``"replace"`` (default): write a temp file, ``os.replace`` onto
-      the final key — atomic on POSIX filesystems.
-    - ``"tempkey"``: write the temp key, COPY to the final key, delete
+    ``commit`` picks the per-file commit strategy, the same on every
+    bucket scheme (bare and ``file://`` buckets go through
+    :class:`LocalObjectStoreClient`, whose PUT is temp + ``os.replace``):
+    - ``"replace"`` (default): one PUT of the final key — the atomic
+      visibility switch.
+    - ``"tempkey"``: PUT the temp key, COPY to the final key, delete
       the temp key — the strategy for object stores (s3a has no atomic
       rename; copy-to-final-key is what rename compiles to there, and
       a reader never observes a partial final object because the copy
@@ -142,9 +148,11 @@ def run_pipeline(spark: SparkSession, manifest: DataFrame,
     The worker reads each job's input itself, so the work split is
     the manifest's partitioning (for :func:`build_manifest`,
     binaryFile's size-balanced file splits).  Returns the commit log
-    (file_name, in_bytes, out_bytes, out_path, ok), one row per
-    'process' job: an unreadable input is ``ok=false``,
-    ``in_bytes=0``, nothing written; no 'process' job, an empty log.
+    (file_name, in_bytes, out_bytes, out_path, ok, error), one row per
+    'process' job: a failed job is ``ok=false`` with ``error`` =
+    ``"<ExceptionClass>: <first message line>"`` (null on ok rows) and
+    nothing written; an unreadable input also has ``in_bytes=0``; no
+    'process' job, an empty log.
     (An unmaterialized :func:`build_manifest` re-stats its listing
     when run, so a file deleted since then fails that scan task.)
     Executors write the outputs directly (GetJobs.py:57-60);
@@ -158,7 +166,7 @@ def run_pipeline(spark: SparkSession, manifest: DataFrame,
 
 
 LOG_SCHEMA = ("file_name string, in_bytes long, out_bytes long, "
-              "out_path string, ok boolean")
+              "out_path string, ok boolean, error string")
 
 
 def _split_scheme(uri: str) -> tuple[str, str]:
@@ -205,8 +213,9 @@ class ObjectStoreClient:
     Implementations must be PICKLABLE: the commit runs inside the
     executor's Python worker, so the client ships through the task
     closure (module state set on the driver does NOT reach workers).
-    Three implementations: :class:`LocalObjectStoreClient` (the
-    sandbox double, file-backed), :class:`S3ObjectStoreClient` (the
+    Three implementations: :class:`LocalObjectStoreClient`
+    (file-backed: the plane of bare and ``file://`` buckets, and the
+    sandbox double), :class:`S3ObjectStoreClient` (the
     real bucket over boto3, import-guarded — r13, VERDICT r12 #4),
     and the recording double in tests/test_pipeline.py that asserts
     the exact commit call sequence.
@@ -271,13 +280,16 @@ class ObjectStoreClient:
 
 
 class LocalObjectStoreClient(ObjectStoreClient):
-    """File-backed reference implementation of the 4-verb contract:
-    one file per key under ``root``, PUT visibility made atomic with
-    the POSIX temp + ``os.replace`` dance (modeling S3's
-    all-or-nothing PUT).  Picklable by construction (state = the
-    root string), so it ships through task closures like any real
-    client; doubles as the sandbox stand-in for the ``mock://``
-    scheme in tests and the p21 registry row."""
+    """File-backed implementation of the contract: one file per key
+    under ``root``, PUT visibility made atomic with the POSIX temp
+    (``<key>.<8hex>.inprogress``, one per writer) + ``os.replace``
+    dance (modeling S3's all-or-nothing PUT).  Picklable by
+    construction (state = the root string), so it ships through task
+    closures like any real client.  It is the storage plane of every
+    bare and ``file://`` bucket in the pipeline (``run_pipeline``,
+    the watch paths and ``quarantine_sweep`` root one at the bucket),
+    and the sandbox stand-in for the ``mock://`` scheme in tests and
+    the p21 registry row."""
 
     def __init__(self, root: str) -> None:
         self.root = root
@@ -292,7 +304,7 @@ class LocalObjectStoreClient(ObjectStoreClient):
         # unique temp per writer: concurrent puts of the SAME key
         # must each stay atomic (S3 = last-writer-wins, never an
         # interleaved object), so they may not share a temp path
-        tmp = f"{p}.{uuid.uuid4().hex[:8]}.tmp"
+        tmp = f"{p}.{uuid.uuid4().hex[:8]}.inprogress"
         with open(tmp, "wb") as f:
             f.write(data)
         os.replace(tmp, p)
@@ -325,17 +337,20 @@ class LocalObjectStoreClient(ObjectStoreClient):
             os.remove(self._p(key))
 
     # only THIS client's own in-flight temp objects are invisible —
-    # a legitimately-named key ending in ".tmp" lists fine (ADVICE
-    # r10; the pattern matches put()'s "<key>.<8hex>.tmp")
-    _TMP_RE = re.compile(r"\.[0-9a-f]{8}\.tmp$")
+    # a legitimately-named key ending in ".inprogress" lists fine
+    # (ADVICE r10; the pattern matches put()'s
+    # "<key>.<8hex>.inprogress")
+    _TMP_RE = re.compile(r"\.[0-9a-f]{8}\.inprogress$")
 
     def list(self, prefix: str) -> list[str]:
         # S3 ListObjectsV2 matches by STRING prefix over the flat key
         # namespace — 'b/inp' matches 'b/input/x' (ADVICE r10), so
-        # walk the whole root and filter, never treat the prefix as a
-        # directory
+        # never treat the prefix as a directory: walk the directory
+        # holding the prefix's last component (every key with that
+        # string prefix lives under it) and filter
         out = []
-        for dirpath, _dirs, files in os.walk(self.root):
+        top = os.path.join(self.root, os.path.dirname(prefix))
+        for dirpath, _dirs, files in os.walk(top):
             for name in files:
                 if self._TMP_RE.search(name):  # crashed put: invisible
                     continue
@@ -576,15 +591,13 @@ class S3ObjectStoreClient(ObjectStoreClient):
 
 
 def _fs_local_path(uri: str) -> str:
-    """Scheme shim for the WORKER-side read and commit: Spark's
+    """The POSIX root of a bare or ``file://`` bucket.  Spark's
     binaryFile listing accepts any Hadoop filesystem URI (`file://`,
-    `s3a://`, ...), but the per-file I/O runs in the Python worker
-    against the filesystem client for that scheme.  Bare paths and
-    ``file://`` URIs map to POSIX I/O (what this container can
-    execute); object-store schemes dispatch to the caller-supplied
-    :class:`ObjectStoreClient` (see ``_file_processor``) and raise
-    explicitly here when none is given, rather than writing a local
-    directory literally named ``s3a:``."""
+    `s3a://`, ...), but the worker-side read and commit need a client
+    for the scheme: an object-store scheme raises here (rather than
+    writing a local directory literally named ``s3a:``) unless the
+    caller supplies an :class:`ObjectStoreClient` (see
+    :func:`_bucket_plane`)."""
     scheme, rest = _split_scheme(uri)
     if scheme == "":
         return uri
@@ -596,26 +609,37 @@ def _fs_local_path(uri: str) -> str:
         f"SCALE.md 'Object-store commit')")
 
 
+def _bucket_plane(bucket: str, store: ObjectStoreClient | None
+                  ) -> tuple[ObjectStoreClient, str, Callable[[str], str]]:
+    """(store, base key, key -> reported path) for a bucket: one
+    storage plane for every scheme.  A bare or ``file://`` bucket is a
+    :class:`LocalObjectStoreClient` rooted at its POSIX path (base
+    ``""``; paths reported as POSIX paths); any other scheme is the
+    caller's ``store`` under the bucket's key prefix (paths reported
+    as ``scheme://key``).  An object-store scheme with no ``store``
+    raises."""
+    scheme, rest = _split_scheme(bucket)
+    if scheme not in ("", "file") and store is not None:
+        return store, rest, lambda key: f"{scheme}://{key}"
+    local = LocalObjectStoreClient(_fs_local_path(bucket))
+    return local, "", local.fs_path
+
+
 def _file_processor(transform: Callable[[bytes], bytes],
                     ext: str, commit: str,
                     store: ObjectStoreClient | None = None):
     """Arrow-batched per-file worker over job rows ``(bucket,
-    in_prefix, out_prefix, file_name)`` (GetJobs.py:48-60): read the
-    input, transform it, commit to the deterministic key, emit one log
-    row per file.  A failed read fails the job like a failed transform.
-
-    I/O dispatch is by BUCKET SCHEME: bare paths and ``file://`` use
-    POSIX I/O (write temp + ``os.replace`` / copy+delete); any other
-    scheme goes through ``store`` (an :class:`ObjectStoreClient`,
-    shipped via the task closure): ``get`` the input, then commit:
-    - ``tempkey``: put temp key -> server-side copy to the final key
-      (a single PUT, so a reader never observes a partial final
-      object) -> delete temp — the SCALE.md object-store recipe.
-    - ``replace``: one direct put of the final key — on an object
-      store the PUT itself is the atomic visibility switch, so the
-      POSIX temp/rename dance degenerates to a single call.
-    An object-store scheme with no ``store`` raises (never a local
-    directory named ``s3a:``)."""
+    in_prefix, out_prefix, file_name)`` (GetJobs.py:48-60): ``get`` the
+    input from the bucket's one storage plane (:func:`_bucket_plane`;
+    ``store`` ships via the task closure), transform it, commit to the
+    deterministic key, emit one log row per file.  ``replace`` is one
+    put of the final key; ``tempkey`` puts a temp key, copies it to
+    the final key (a single PUT, so a reader never observes a partial
+    final object) and deletes the temp — the SCALE.md object-store
+    recipe.  A failed read fails the job like a failed transform; a
+    failed job's row carries its ``error``.  An object-store scheme
+    with no ``store`` raises (never a local directory named
+    ``s3a:``)."""
     def _process(batches: Iterator) -> Iterator:
         import posixpath
 
@@ -623,56 +647,33 @@ def _file_processor(transform: Callable[[bytes], bytes],
         for pdf in batches:
             rows = []
             for r in pdf.itertuples(index=False):
-                scheme, rest = _split_scheme(r.bucket)
-                remote = scheme not in ("", "file") and store is not None
-                if remote:
-                    in_key = posixpath.join(rest, r.in_prefix,
-                                            r.file_name)
-                    key = posixpath.join(rest, r.out_prefix,
-                                         r.file_name + ext)
-                    out_path = f"{scheme}://{key}"
-                else:
-                    root = _fs_local_path(r.bucket)
-                    in_path = os.path.join(root, r.in_prefix,
-                                           r.file_name)
-                    out_dir = os.path.join(root, r.out_prefix)
-                    out_path = os.path.join(out_dir, r.file_name + ext)
-                raw = b""
+                bucket, base, path_of = _bucket_plane(r.bucket, store)
+                in_key = posixpath.join(base, r.in_prefix, r.file_name)
+                key = posixpath.join(base, r.out_prefix,
+                                     r.file_name + ext)
+                raw, error = b"", None
                 try:
-                    if remote:
-                        raw = store.get(in_key)
-                    else:
-                        with open(in_path, "rb") as f:
-                            raw = f.read()
+                    raw = bucket.get(in_key)
                     result = transform(raw)
-                    if remote:
-                        if commit == "replace":
-                            store.put(key, result)
-                        else:                       # tempkey
-                            tmp_key = key + ".inprogress"
-                            store.put(tmp_key, result)
-                            store.copy(tmp_key, key)
-                            store.delete(tmp_key)
-                    else:
-                        os.makedirs(out_dir, exist_ok=True)
-                        tmp = out_path + ".inprogress"
-                        with open(tmp, "wb") as f:
-                            f.write(result)
-                        if commit == "replace":
-                            os.replace(tmp, out_path)  # atomic on POSIX
-                        else:                       # tempkey: copy+delete
-                            import shutil
-                            shutil.copyfile(tmp, out_path)
-                            os.remove(tmp)
-                    ok = True
-                except Exception:
+                    if commit == "replace":
+                        bucket.put(key, result)
+                    else:                           # tempkey
+                        tmp_key = key + ".inprogress"
+                        bucket.put(tmp_key, result)
+                        bucket.copy(tmp_key, key)
+                        bucket.delete(tmp_key)
+                except Exception as e:
                     # returncode gate (GetJobs.py:54-56): no upload,
-                    # no delete -> Spark task retry redelivers.
-                    result, ok = b"", False
+                    # no delete -> Spark task retry redelivers; the
+                    # row says why: class + first message line
+                    result = b""
+                    error = (f"{type(e).__name__}: "
+                             + str(e).partition("\n")[0])
                 rows.append((r.file_name, len(raw), len(result),
-                             out_path, ok))
+                             path_of(key), error is None, error))
             yield pd.DataFrame(rows, columns=[
-                "file_name", "in_bytes", "out_bytes", "out_path", "ok"])
+                "file_name", "in_bytes", "out_bytes", "out_path", "ok",
+                "error"])
     return _process
 
 
@@ -808,11 +809,20 @@ def _start_watch_stream(spark: SparkSession, bucket_dir: str,
 def _read_log(spark: SparkSession, log_dir: str) -> DataFrame | None:
     """The on-disk commit log, or None while it holds no part file:
     never written, or its first append was interrupted (kill, crash)
-    before the commit and left only ``_temporary/``."""
+    before the commit and left only ``_temporary/``.  Rows from part
+    files written before the ``error`` column read it as null."""
     if not os.path.isdir(log_dir) or not any(
             f.startswith("part-") for f in os.listdir(log_dir)):
         return None
-    return spark.read.parquet(log_dir)
+    full = spark.read.parquet(log_dir)
+    if "error" in full.columns:
+        return full
+    # the schema came from a part file older than the ``error``
+    # column: read it as null there, and as written in newer parts
+    from pyspark.sql.types import StructType
+    return (spark.read.schema(StructType(full.schema.fields)
+                              .add("error", "string"))
+            .parquet(log_dir))
 
 
 def commit_log(spark: SparkSession, bucket_dir: str,
@@ -886,14 +896,15 @@ def quarantine_sweep(spark: SparkSession, bucket_dir: str,
     The candidate set is computed as one Spark aggregation over the
     log; only the resulting POISON LIST (bounded by the number of
     forever-failing files — operational metadata, not data) is
-    collected for the driver-side moves.  Moves dispatch on the
-    bucket SCHEME (r10, VERDICT r9 #3): local and ``file://``
-    buckets move via ``os.replace``; any other scheme moves through
-    the caller-supplied :class:`ObjectStoreClient` (``list`` for
-    existence, ``copy`` + ``delete`` for the move — copy FIRST, so a
-    crash between the two leaves the object visible in both places
-    and the re-run's re-copy/delete converges).  An object-store
-    bucket with no ``store`` raises.  ``log_dir``/``ledger_dir``
+    collected for the driver-side moves.  Moves run on the bucket's
+    one storage plane (r10, VERDICT r9 #3): a
+    :class:`LocalObjectStoreClient` at the root of a local or
+    ``file://`` bucket, the caller-supplied :class:`ObjectStoreClient`
+    for any other scheme — ``list`` for existence, ``copy`` +
+    ``delete`` for the move on both planes (copy FIRST, so a crash
+    between the two leaves the object visible in both places and the
+    re-run's re-copy/delete converges).  An object-store bucket with
+    no ``store`` raises.  ``log_dir``/``ledger_dir``
     override the Spark-written control-table locations — on a real
     deployment they stay in the bucket (s3a is a Hadoop filesystem);
     the sandbox's ``mock://`` tests keep them on local disk.
@@ -916,9 +927,8 @@ def quarantine_sweep(spark: SparkSession, bucket_dir: str,
     exists, so a second sweep moves nothing and appends nothing."""
     if max_attempts < 1:
         raise ValueError(f"max_attempts must be >= 1, got {max_attempts}")
-    scheme, rest = _split_scheme(bucket_dir)
-    obj_store = scheme not in ("", "file")
-    if obj_store and store is None:
+    scheme, _ = _split_scheme(bucket_dir)
+    if scheme not in ("", "file") and store is None:
         raise ValueError(
             f"bucket scheme {scheme!r} needs an ObjectStoreClient "
             f"(put/copy/delete/list) to sweep — pass store=")
@@ -942,45 +952,16 @@ def quarantine_sweep(spark: SparkSession, bucket_dir: str,
     candidates = stats.collect()
 
     import posixpath
-    if obj_store:
-        in_key = posixpath.join(rest, in_prefix)
-        q_key = posixpath.join(rest, quarantine_prefix)
-        # POINT lookups, one per poison candidate (list with the FULL
-        # key as prefix — ListObjectsV2 semantics make that an
-        # existence check), NOT two whole-prefix listings: driver
-        # memory is priced by the poison count, never the bucket size
-        # (VERDICT r10 #7)
-        def _exists(key):
-            return key in store.list(key)
+    bucket, base, path_of = _bucket_plane(bucket_dir, store)
+    in_key = posixpath.join(base, in_prefix)
+    q_key = posixpath.join(base, quarantine_prefix)
 
-        def _has_input(name):
-            return _exists(posixpath.join(in_key, name))
-
-        def _in_quarantine(name):
-            return _exists(posixpath.join(q_key, name))
-
-        def _move(name):
-            src = posixpath.join(in_key, name)
-            dst = posixpath.join(q_key, name)
-            store.copy(src, dst)        # copy-then-delete: re-runnable
-            store.delete(src)
-            return f"{scheme}://{dst}"
-    else:
-        in_dir = _fs_local_path(os.path.join(bucket_dir, in_prefix))
-        q_dir = _fs_local_path(os.path.join(bucket_dir,
-                                            quarantine_prefix))
-
-        def _has_input(name):
-            return os.path.exists(os.path.join(in_dir, name))
-
-        def _in_quarantine(name):
-            return os.path.exists(os.path.join(q_dir, name))
-
-        def _move(name):
-            dst = os.path.join(q_dir, name)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            os.replace(os.path.join(in_dir, name), dst)
-            return dst
+    # POINT lookups, one per poison candidate (list with the FULL key
+    # as prefix — ListObjectsV2 semantics make that an existence
+    # check), NOT two whole-prefix listings: driver memory is priced
+    # by the poison count, never the bucket size (VERDICT r10 #7)
+    def _exists(key):
+        return key in bucket.list(key)
 
     # ledger names: bounded by the poison count (same order as the
     # candidate list — operational metadata)
@@ -990,13 +971,15 @@ def quarantine_sweep(spark: SparkSession, bucket_dir: str,
     new_rows = []
     for r in sorted(candidates, key=lambda r: r["file_name"]):
         name, n_fail = r["file_name"], r["n_failures"]
-        if _has_input(name):            # not yet swept: move it
-            new_rows.append((name, n_fail, _move(name)))
-        elif _in_quarantine(name) and name not in ledgered:
-            # reconcile: moved by a sweep that died pre-append
-            dst = (f"{scheme}://{posixpath.join(q_key, name)}"
-                   if obj_store else os.path.join(q_dir, name))
-            new_rows.append((name, n_fail, dst))
+        src = posixpath.join(in_key, name)
+        dst = posixpath.join(q_key, name)
+        if _exists(src):                # not yet swept: move it
+            bucket.copy(src, dst)       # copy-then-delete: re-runnable
+            bucket.delete(src)
+        elif name in ledgered or not _exists(dst):
+            continue
+        # else reconcile: moved by a sweep that died pre-append
+        new_rows.append((name, n_fail, path_of(dst)))
     if new_rows:
         # local_df (r15, guide §4): the pickled-RDD scan of a
         # createDataFrame(list) re-enters through a Python worker in

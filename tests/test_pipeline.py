@@ -61,6 +61,64 @@ def test_pipeline_failure_gate(spark, bucket):
     assert not glob.glob(os.path.join(bucket, "output", "*.x"))
 
 
+def test_failed_file_logs_its_error(spark, bucket, capsys):
+    """A failed file's commit-log row says why: ``error`` holds the
+    exception class and the first line of its message (null on ok
+    rows) — from ``run_pipeline``, from ``watch_prefix``'s returned
+    log, and on the CLI ``get`` command's ERR lines."""
+    from samplebatchprocessing_spark.__main__ import main
+    from samplebatchprocessing_spark.pipeline.manifest import watch_prefix
+
+    def bad_header(b: bytes) -> bytes:
+        raise ValueError("bad header\nmore")
+
+    manifest = build_manifest(spark, bucket)
+    for kwargs, reason in [
+            ({"transform": bad_header}, "ValueError: bad header"),
+            ({"command": "false"}, "RuntimeError: 'false' returned 1")]:
+        rows = run_pipeline(spark, manifest, **kwargs).collect()
+        assert len(rows) == 4
+        assert all(not r["ok"] and r["error"] == reason for r in rows)
+    assert all(r["ok"] and r["error"] is None
+               for r in run_pipeline(spark, manifest).collect())
+
+    rows = watch_prefix(spark, bucket, transform=bad_header).collect()
+    assert len(rows) == 4
+    assert all(r["error"] == "ValueError: bad header" for r in rows)
+
+    manifest.write.parquet(os.path.join(bucket, "manifest.parquet"))
+    assert main(["get", bucket, "--command", "false"]) == 1
+    err_lines = [ln for ln in capsys.readouterr().out.splitlines()
+                 if ln.startswith("ERR")]
+    assert len(err_lines) == 4
+    assert all(ln.endswith(" RuntimeError: 'false' returned 1")
+               for ln in err_lines)
+
+
+def test_commit_log_reads_pre_error_parts_as_null(spark, tmp_path):
+    """A commit log whose part files predate the ``error`` column
+    reads it as null there and as written in newer parts, whichever
+    part file the schema is read from."""
+    from samplebatchprocessing_spark.pipeline.manifest import (
+        LOG_SCHEMA, commit_log)
+
+    bucket = str(tmp_path / "b")
+    log_dir = os.path.join(bucket, "_commit_log")
+    tags = ", run_seq double, batch_id long"
+    spark.createDataFrame(
+        [("old.bin", 1, 0, "", False, 1.0, 0)],
+        LOG_SCHEMA.replace(", error string", "") + tags,
+    ).write.parquet(log_dir)
+    assert commit_log(spark, bucket).collect()[0]["error"] is None
+
+    spark.createDataFrame(
+        [("new.bin", 1, 0, "", False, "ValueError: bad", 2.0, 0)],
+        LOG_SCHEMA + tags).write.mode("append").parquet(log_dir)
+    assert {r["file_name"]: r["error"]
+            for r in commit_log(spark, bucket).collect()} == {
+        "old.bin": None, "new.bin": "ValueError: bad"}
+
+
 def test_pipeline_idempotent_rerun(spark, bucket):
     """Rerunning overwrites the same deterministic keys — the
     reference's at-least-once + idempotent-output contract (R8/R9)."""
@@ -386,6 +444,30 @@ def test_pipeline_file_scheme_uri_end_to_end(spark, bucket):
                         == hashlib.md5(f_out.read()).hexdigest())
         assert not glob.glob(os.path.join(bucket, "output",
                                           "*.inprogress"))
+
+
+@pytest.mark.parametrize("commit", ["replace", "tempkey"])
+def test_posix_commit_never_rewrites_live_output(spark, bucket, commit):
+    """Both commits swap the final key to a new file; neither rewrites
+    the live output in place.  A reader holding the old output (here a
+    hard link, as an open handle would) keeps reading the old bytes,
+    and the final key holds the new ones (SCALE.md 'Object-store
+    commit': a reader never sees a partial object)."""
+    name = sorted(os.listdir(os.path.join(bucket, "input")))[0]
+    live = os.path.join(bucket, "output", name + ".out")
+    os.makedirs(os.path.dirname(live))
+    with open(live, "wb") as f:
+        f.write(b"old bytes")
+    reader = os.path.join(bucket, "reader_handle")
+    os.link(live, reader)
+    log = run_pipeline(spark, build_manifest(spark, bucket),
+                       commit=commit).collect()
+    assert len(log) == 4 and all(r["ok"] for r in log)
+    with open(os.path.join(bucket, "input", name), "rb") as src, \
+            open(live, "rb") as out:
+        assert out.read() == src.read()
+    with open(reader, "rb") as f:
+        assert f.read() == b"old bytes"
 
 
 def test_pipeline_object_store_scheme_raises_not_silent():
@@ -882,8 +964,8 @@ def test_object_store_list_is_string_prefix_semantics(tmp_path):
     over the flat key namespace, not a directory walk.  A partial
     key prefix ('b/inp') must match 'b/input/*', a key that
     legitimately ends in '.tmp' must be visible (only this client's
-    own '<key>.<8hex>.tmp' in-flight objects are hidden), and a
-    point lookup (full key as prefix) is an existence check."""
+    own '<key>.<8hex>.inprogress' in-flight objects are hidden), and
+    a point lookup (full key as prefix) is an existence check."""
     from samplebatchprocessing_spark.pipeline.manifest import (
         LocalObjectStoreClient)
 
@@ -901,11 +983,35 @@ def test_object_store_list_is_string_prefix_semantics(tmp_path):
     # point lookup: full key as prefix -> membership
     assert "b/input/a.bin" in store.list("b/input/a.bin")
     assert store.list("b/input/a.bin.nope") == []
-    # a crashed put's temp object ('<key>.<8hex>.tmp') stays hidden
-    with open(tmp_path / "b" / "input" / "a.bin.deadbeef.tmp",
+    # a crashed put's temp object ('<key>.<8hex>.inprogress') stays
+    # hidden
+    with open(tmp_path / "b" / "input" / "a.bin.deadbeef.inprogress",
               "wb") as f:
         f.write(b"partial")
     assert store.list("b/input/a.bin") == ["b/input/a.bin"]
+
+
+def test_object_store_list_walks_only_the_prefix_directory(
+        tmp_path, monkeypatch):
+    """A point lookup walks the directory holding the key, not the
+    whole root: on a POSIX bucket the quarantine sweep's existence
+    checks must not walk outputs, ``_commit_log`` or ``_checkpoint``."""
+    from samplebatchprocessing_spark.pipeline.manifest import (
+        LocalObjectStoreClient)
+
+    store = LocalObjectStoreClient(str(tmp_path))
+    store.put("b/input/a.bin", b"1")
+    store.put("b/output/a.bin.out", b"1")
+    tops = []
+    walk = os.walk
+
+    def recording_walk(top, *args, **kwargs):
+        tops.append(top)
+        return walk(top, *args, **kwargs)
+
+    monkeypatch.setattr(os, "walk", recording_walk)
+    assert store.list("b/input/a.bin") == ["b/input/a.bin"]
+    assert tops == [os.path.join(str(tmp_path), "b/input")]
 
 
 def test_object_store_delete_is_idempotent(tmp_path):
