@@ -400,11 +400,11 @@ def main() -> None:
             spark, _x109["idx"], _x109["cmat"], emb,
             F.col("vec_id") % 50 == 0, k=5, n_probe=4)
 
-    # p10 bench = one FULL AvailableNow drain of a fresh backlog
+    # p10 bench = one FULL watch_prefix drain of a fresh backlog
     # (fresh bucket + checkpoint per sample — the registry entry's
     # repeat call is deliberately a no-op drain, which would time the
-    # no-work path).  Covers discovery, the Arrow transform/commit
-    # worker, the parquet log sink, and the dedup read-back.
+    # no-work path).  Covers the listing, the Arrow transform/commit
+    # worker, the parquet log append, and the dedup read-back.
     _p10_dirs: list[str] = []
 
     def _p10_watch_raw(spark, sf_dir):

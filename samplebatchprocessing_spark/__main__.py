@@ -25,7 +25,7 @@ surface (it is driven entirely from the shell):
   ``bucket_dir/in_prefix`` continuously (new-file discovery == SQS
   message arrival), processes each new file through the same
   transform/commit worker, and exits gracefully on SIGINT/SIGTERM
-  (GetJobs.py:63-65,80) after finishing the in-flight micro-batch.
+  (GetJobs.py:63-65,80) after finishing the in-flight drain.
 
 Differences from the reference, by design: the work queue is a
 manifest DataFrame (restart = re-run; Spark task retry replaces SQS
@@ -90,11 +90,12 @@ def cmd_watch(args: argparse.Namespace) -> int:
     """GetJobs.py:21-23's ``while (True)`` long-poll consumer.
 
     SIGINT/SIGTERM handling mirrors GetJobs.py:63-65,80 — first
-    signal requests a graceful stop (finish the in-flight micro-batch,
-    then exit 0).  The handler only sets an Event; ``query.stop()``
+    signal requests a graceful stop (finish the in-flight drain, then
+    exit 0).  The handler only sets an Event; the daemon's ``stop()``
     runs on the main thread outside the handler because py4j
     connections are thread-affine and a signal handler interrupting a
-    blocked gateway call must not reuse its connection.
+    blocked gateway call must not reuse its connection.  A drain that
+    raises ends the loop, and ``awaitTermination`` re-raises it here.
     """
     from .pipeline.manifest import commit_log, watch_daemon
     spark = _spark()
@@ -105,7 +106,7 @@ def cmd_watch(args: argparse.Namespace) -> int:
     stop = threading.Event()
 
     def _on_signal(signum, _frame):
-        print(f"signal {signum}: stopping after current micro-batch",
+        print(f"signal {signum}: stopping after current drain",
               file=sys.stderr, flush=True)
         stop.set()
 
@@ -173,10 +174,10 @@ def _store_from_uri(index_root: str):
 def cmd_maintain(args: argparse.Namespace) -> int:
     """The maintenance-daemon CLI (r11, VERDICT r10 #3): run the
     census -> due? -> rewrite -> publish sweep for a versioned index
-    root, either once (``--once``, the AvailableNow analog — cron
-    drives the cadence) or as a continuous loop with the same
-    SIGINT/SIGTERM graceful-stop wiring as ``watch`` (GetJobs.py:
-    63-65,80's signal discipline applied to index upkeep)."""
+    root, either once (``--once`` — cron drives the cadence) or as
+    a continuous loop with the same SIGINT/SIGTERM graceful-stop
+    wiring as ``watch`` (GetJobs.py:63-65,80's signal discipline
+    applied to index upkeep)."""
     from .operators import maintenance
 
     spark = _spark()
@@ -308,7 +309,7 @@ def main(argv: list[str] | None = None) -> int:
     pw.add_argument("--commit", default="replace",
                     choices=("replace", "tempkey"))
     pw.add_argument("--poll", type=float, default=5.0,
-                    help="micro-batch poll interval in seconds "
+                    help="drain poll interval in seconds "
                     "(the reference's 20 s long-poll wait)")
     pw.set_defaults(fn=cmd_watch)
 

@@ -56,14 +56,21 @@ def _dec_sum(c: Column) -> Column:
 
 
 def dsum(col: Column | str, alias: str | None = None) -> Column:
-    """Order-independent sum of a double column via exact decimals."""
+    """Order-independent sum of a double column via exact decimals,
+    exact on the joint domain of a group's row count N and largest
+    magnitude |x|: ``N·(|x|·1e6 >> 20) < 2^63`` and ``|x| < ~9.2e12``.
+    Outside it, ANSI mode raises ``CAST_OVERFLOW`` (|x| too large) or
+    ``ARITHMETIC_OVERFLOW`` (the sum)."""
     c = F.col(col) if isinstance(col, str) else col
     out = _dec_sum(c).cast("double")
     return out.alias(alias) if alias else out
 
 
 def davg(col: Column | str, alias: str | None = None) -> Column:
-    """Order-independent mean: exact decimal sum / count, one double div."""
+    """Order-independent mean: exact decimal sum / count, one double
+    div.  The sum is :func:`dsum`'s, exact on the same joint domain
+    (``N·(|x|·1e6 >> 20) < 2^63`` and ``|x| < ~9.2e12``; outside it,
+    ANSI mode raises ``CAST_OVERFLOW`` or ``ARITHMETIC_OVERFLOW``)."""
     c = F.col(col) if isinstance(col, str) else col
     out = _dec_sum(c).cast("double") / F.count(c)
     return out.alias(alias) if alias else out

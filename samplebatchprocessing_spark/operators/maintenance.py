@@ -6,14 +6,14 @@ maintenance passes (``dedup.lsh_index_compact``, ``text.
 postings_index_compact``, ``similarity.ivf_index_recluster``) and
 their decision predicates (``similarity.recluster_is_due``, the l17
 small-file decay story) existed, but nothing executed the loop
-census -> due? -> rewrite -> publish.  This module is that loop,
-shaped like ``pipeline.manifest.watch_daemon``: one-shot ``*_sweep``
-entry points (the ``Trigger.AvailableNow`` analog — run the decision
-once, act if due, return a report row) plus
-:func:`maintenance_daemon` (the ``ProcessingTime`` analog — a
-caller-owned background loop over the sweeps with graceful stop,
-where the CLI wires SIGINT exactly as ``__main__.cmd_watch`` does
-for the file watcher).
+census -> due? -> rewrite -> publish.  This module is that loop:
+one-shot ``*_sweep`` entry points (run the decision once, act if
+due, return a report row) plus :func:`maintenance_daemon` (a
+caller-owned background loop over zero-arg thunks with graceful
+stop).  The loop is shared: ``pipeline.manifest.watch_daemon`` runs
+its file drain (the one-shot ``watch_prefix``) on it, and the CLI
+wires SIGINT to ``stop()`` the same way in ``cmd_maintain`` and
+``cmd_watch``.
 
 Every index sweep (LSH, postings, IVF) runs one chain,
 :func:`_sweep`; the kind supplies only its census, due-predicate
@@ -446,22 +446,23 @@ def nb_maintenance_sweep(spark, root: str, fresh_doc,
 
 
 def maintenance_daemon(sweeps, poll_seconds: float = 5.0):
-    """The continuously-running form (the ``watch_daemon`` analog):
-    run every thunk in ``sweeps`` (zero-arg callables returning a
-    report row, e.g. ``lambda: ivf_maintenance_sweep(spark, root)``)
+    """The continuously-running form: run every thunk in ``sweeps``
+    (zero-arg callables, e.g. ``lambda: ivf_maintenance_sweep(spark,
+    root)``; ``pipeline.manifest.watch_daemon`` passes its file drain)
     once per ``poll_seconds`` tick on a background thread.  Returns a
     handle whose ``stop()`` finishes the in-flight tick and joins
-    (graceful SIGINT wiring is the caller's, exactly as
-    ``__main__.cmd_watch`` does for the file watcher); ``reports``
-    accumulates every sweep's report row for inspection.  Sweep
-    exceptions stop the daemon and re-raise on ``stop()`` — a
-    maintenance loop that silently skips failed sweeps would let an
-    index decay unboundedly while looking healthy."""
+    (graceful SIGINT wiring is the caller's, as in ``__main__``);
+    ``reports`` accumulates every thunk's return value;
+    ``awaitTermination(timeout=None)`` is True once the loop ended.
+    A thunk's exception ends the loop (``isActive`` turns false) and
+    re-raises on ``stop()`` and ``awaitTermination`` — a maintenance
+    loop that silently skipped failed sweeps would let an index decay
+    unboundedly while looking healthy."""
     import threading
 
     class _Daemon:
         def __init__(self):
-            self.reports: list[dict] = []
+            self.reports: list = []
             self._stop = threading.Event()
             self._error: BaseException | None = None
             self._thread = threading.Thread(target=self._run,
@@ -478,10 +479,18 @@ def maintenance_daemon(sweeps, poll_seconds: float = 5.0):
                         return
                 self._stop.wait(poll_seconds)
 
-        def stop(self):
-            self._stop.set()
-            self._thread.join()
+        @property
+        def isActive(self) -> bool:
+            return self._thread.is_alive()
+
+        def awaitTermination(self, timeout: float | None = None) -> bool:
+            self._thread.join(timeout)        # as StreamingQuery's
             if self._error is not None:
                 raise self._error
+            return not self._thread.is_alive()
+
+        def stop(self):
+            self._stop.set()
+            self.awaitTermination()
 
     return _Daemon()

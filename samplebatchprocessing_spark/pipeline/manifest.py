@@ -32,6 +32,11 @@ Spark mapping:
   `LocalObjectStoreClient` at the bucket root, object-store schemes
   through the caller's `store` (the reference's one boto S3
   connection, GetJobs.py:48-60)
+- long-poll consumer        -> one batch drain (`watch_prefix`): list,
+  drop the files already logged under the checkpoint, run the rest
+  through `run_pipeline`, append their commit-log rows; the daemon
+  (`watch_daemon`) runs that drain every poll on the
+  `maintenance_daemon` loop (GetJobs.py:21-40)
 """
 
 from __future__ import annotations
@@ -42,6 +47,7 @@ from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 MANIFEST_SCHEMA = ("action string, bucket string, in_prefix string, "
                    "out_prefix string, file_name string")
@@ -51,22 +57,28 @@ def build_manifest(spark: SparkSession, bucket_dir: str,
                    in_prefix: str = "input/",
                    out_prefix: str = "output/") -> DataFrame:
     """SendJobs equivalent: list `bucket_dir/in_prefix`, emit one
-    'process' job row per file (SendJobs.py:16-34)."""
+    'process' job row per file (SendJobs.py:16-34).  Only ``path`` is
+    read: the worker fetches each file's bytes itself."""
+    return _manifest(spark, bucket_dir, in_prefix, out_prefix)
+
+
+def _manifest(spark: SparkSession, bucket_dir: str, in_prefix: str,
+              out_prefix: str, names: set[str] | None = None) -> DataFrame:
+    """:func:`build_manifest` over the files in ``names`` only, when
+    given: binaryFile's ``pathGlobFilter`` ``{name,...}`` drops the
+    rest from the listing, so they are never stat'ed or scanned (a
+    pattern match per listed file and name)."""
     from ..session import ship_package
     ship_package(spark)
+    reader = spark.read.format("binaryFile")
+    if names is not None:
+        reader = reader.option("pathGlobFilter", "{%s}" % ",".join(
+            re.sub(r"([\\*?\[\]{},])", r"\\\1", n)
+            for n in sorted(names)))
     # load(dir), not load(dir/*): a literal glob makes Spark's
     # streaming-sink metadata probe log a WARN+stack per query —
     # stderr noise a real failure could hide in.
-    listing = (spark.read.format("binaryFile")
-               .load(os.path.join(bucket_dir, in_prefix)))
-    return _job_rows(listing, bucket_dir, in_prefix, out_prefix)
-
-
-def _job_rows(listing: DataFrame, bucket_dir: str, in_prefix: str,
-              out_prefix: str) -> DataFrame:
-    """A ``binaryFile`` listing as manifest rows, one 'process' job per
-    file (SendJobs.py:31-34).  Only ``path`` is read: the worker
-    fetches each file's bytes itself."""
+    listing = reader.load(os.path.join(bucket_dir, in_prefix))
     return listing.select(
         F.lit("process").alias("action"),
         F.lit(bucket_dir).alias("bucket"),
@@ -103,7 +115,7 @@ def _command_transform(command: str) -> Callable[[bytes], bytes]:
 def _resolve_transform(transform: Callable[[bytes], bytes] | None,
                        command: str | None,
                        commit: str) -> Callable[[bytes], bytes]:
-    """Argument set-up shared by the batch and the watch paths: check
+    """Argument set-up shared by run_pipeline and the watch drain: check
     that ``transform`` and ``command`` are not both given and that
     ``commit`` is a known strategy, then return the per-file
     ``bytes -> bytes`` transform (identity when neither is given)."""
@@ -686,33 +698,27 @@ def watch_prefix(spark: SparkSession, bucket_dir: str,
                  commit: str = "replace",
                  checkpoint: str | None = None,
                  store: ObjectStoreClient | None = None) -> DataFrame:
-    """The reference's LONG-POLL CONSUMER (GetJobs.py:21-23), made
-    rigorous: watch ``bucket_dir/in_prefix`` as a binaryFile
-    micro-batch stream; every newly discovered file is one job
-    (new-file discovery == SQS message arrival, R3/R4), processed by
-    the same transform/commit worker as :func:`run_pipeline`.
+    """The reference's LONG-POLL CONSUMER (GetJobs.py:21-40) as one
+    batch drain: list ``bucket_dir/in_prefix``, drop every file that
+    already has a commit-log row under ``checkpoint``, run the rest
+    through :func:`run_pipeline` and append their rows to
+    ``bucket_dir/_commit_log`` (executor-written parquet; a drain with
+    no new file appends nothing).  Returns :func:`commit_log`, the
+    cumulative log deduped to the NEWEST row per file.
 
-    Exactly the reference's delivery contract, strengthened:
-    - streaming CHECKPOINT == delete-on-success (GetJobs.py:37-40) —
-      a processed file is never redelivered across restarts;
-    - task retry + idempotent deterministic output key == visibility
-      timeout redelivery (README.md:44-47);
-    - ``Trigger.AvailableNow`` == one drain-the-queue run — the call
-      returns when the backlog is empty instead of looping forever.
-
-    The per-file commit LOG is appended to
-    ``bucket_dir/_commit_log`` (parquet) by each micro-batch — an
-    executor-written sink, no driver accumulation.  Each row is
-    tagged with a per-run sequence number and the micro-batch id; the
-    RETURNED DataFrame is the cumulative log deduped to the NEWEST
-    row per file (a file that failed under an old checkpoint and
-    succeeded after a fresh one must not surface both its ok=false
-    and ok=true rows).  The on-disk log keeps full history.
+    ``checkpoint`` names the delivery state (default
+    ``bucket_dir/_checkpoint``; a tag on the log rows, nothing is
+    written there).  A logged file is a deleted SQS message
+    (GetJobs.py:37-40): under one name no file is redelivered, failed
+    ones included; a new name redelivers every file (how quarantine
+    attempts accumulate); every spelling of a path is one name.  Task
+    retry + idempotent output keys == visibility-timeout redelivery
+    (README.md:44-47).  Log rows written before the ``checkpoint``
+    column belong to no name, so the first drain after an upgrade
+    redelivers their files once, harmlessly.
     """
-    q = _start_watch_stream(spark, bucket_dir, in_prefix, out_prefix,
-                            transform, command, ext, commit, checkpoint,
-                            trigger={"availableNow": True}, store=store)
-    q.awaitTermination()
+    _drainer(spark, bucket_dir, in_prefix, out_prefix, transform,
+             command, ext, commit, checkpoint, store)()
     return commit_log(spark, bucket_dir)
 
 
@@ -726,103 +732,122 @@ def watch_daemon(spark: SparkSession, bucket_dir: str,
                  checkpoint: str | None = None,
                  poll_seconds: float = 5.0,
                  store: ObjectStoreClient | None = None):
-    """The reference's INFINITE long-poll loop (GetJobs.py:21-23
-    ``while (True): get_messages(wait_time_seconds=20)``), as a
-    continuously-running micro-batch stream: new files under
-    ``bucket_dir/in_prefix`` are discovered every ``poll_seconds``
-    (the long-poll wait, shortened from the reference's 20 s for
-    tests) and processed by the same transform/commit worker as
-    :func:`run_pipeline`.
-
-    Unlike :func:`watch_prefix` (``Trigger.AvailableNow`` = one
-    drain-the-backlog run) this RETURNS the running StreamingQuery and
-    never drains to completion — the caller owns the loop's lifetime
-    and stops it with ``query.stop()``, which is exactly where the
-    CLI wires the reference's SIGINT graceful-shutdown handler
-    (GetJobs.py:63-65,80; see ``__main__.cmd_watch``).  ``stop()``
-    first lets an in-flight micro-batch finish, so a file whose output
-    is written also has its commit-log row.  Checkpoint +
-    idempotent per-file commit give the same delivery contract as
-    watch_prefix: no redelivery across restarts, failed files retried
-    by the next discovery of a fresh copy."""
-    q = _start_watch_stream(
+    """The reference's INFINITE long-poll loop (GetJobs.py:21-23): the
+    :func:`watch_prefix` drain, under one ``checkpoint`` as there, run
+    every ``poll_seconds`` (the long-poll wait) on the
+    :func:`operators.maintenance.maintenance_daemon` loop.  Returns
+    the loop's handle; the caller owns its lifetime.  ``stop()``
+    finishes the in-flight drain (outputs AND log rows) and joins —
+    the CLI's SIGINT graceful stop (GetJobs.py:63-65,80; see
+    ``__main__.cmd_watch``).  ``isActive`` turns false when the loop
+    ends; ``awaitTermination(timeout=None)`` re-raises a drain's
+    error."""
+    from ..operators.maintenance import maintenance_daemon
+    return maintenance_daemon([_drainer(
         spark, bucket_dir, in_prefix, out_prefix, transform, command,
-        ext, commit, checkpoint,
-        trigger={"processingTime": f"{poll_seconds} seconds"},
-        store=store)
-    interrupt = q.stop
-
-    def stop() -> None:
-        # StreamingQuery.stop() alone interrupts a micro-batch between
-        # its workers' output writes and its commit-log append; a
-        # trigger starting after this wait is interrupted and its
-        # files are redelivered on restart (at-least-once)
-        import time
-        while q.isActive and q.status["isTriggerActive"]:
-            time.sleep(0.05)
-        interrupt()
-
-    q.stop = stop
-    return q
+        ext, commit, checkpoint, store)], poll_seconds)
 
 
-def _start_watch_stream(spark: SparkSession, bucket_dir: str,
-                        in_prefix: str, out_prefix: str,
-                        transform: Callable[[bytes], bytes] | None,
-                        command: str | None, ext: str, commit: str,
-                        checkpoint: str | None, trigger: dict,
-                        store: ObjectStoreClient | None = None):
-    """Shared stream starter for watch_prefix (AvailableNow drain) and
-    watch_daemon (ProcessingTime long-poll loop): each micro-batch's
-    listing becomes manifest rows dispatched by :func:`run_pipeline`."""
-    transform = _resolve_transform(transform, command, commit)
-    from ..session import ship_package
-    ship_package(spark)
-
-    log_dir = os.path.join(bucket_dir, "_commit_log")
-    checkpoint = checkpoint or os.path.join(bucket_dir, "_checkpoint")
-    # file streams need an explicit schema; binaryFile's is fixed
-    schema = ("path string, modificationTime timestamp, "
-              "length long, content binary")
-    jobs = _job_rows(spark.readStream.format("binaryFile").schema(schema)
-                     .load(os.path.join(bucket_dir, in_prefix)),
-                     bucket_dir, in_prefix, out_prefix)
-
+def _drainer(spark: SparkSession, bucket_dir: str, in_prefix: str,
+             out_prefix: str, transform: Callable[[bytes], bytes] | None,
+             command: str | None, ext: str, commit: str,
+             checkpoint: str | None, store: ObjectStoreClient | None
+             ) -> Callable[[], int]:
+    """The one drain of watch_prefix and watch_daemon, as a zero-arg
+    callable that returns the count run.  Each call lists the prefix,
+    drops the files logged under the checkpoint, runs the rest through
+    :func:`run_pipeline` and appends their log rows tagged ``run_seq``,
+    ``batch_id`` (the call count) and ``checkpoint``.  The logged
+    names are read on the first call, then kept in memory (a file
+    stream's seen-file map): a daemon's poll is one listing at any
+    log length."""
+    import itertools
+    import posixpath
     import time
-    # Monotone across runs (unlike the checkpointed batch id, which
-    # RESETS when the user starts a fresh checkpoint) — gives the
-    # history-wide dedupe a global "newest wins" order.
-    run_seq = float(time.time())
+    from urllib.parse import unquote
+    transform = _resolve_transform(transform, command, commit)
 
-    def _each_batch(batch_df: DataFrame, bid: int) -> None:
-        (run_pipeline(spark, batch_df, transform, ext=ext, commit=commit,
+    def norm(path: str) -> str:
+        if _split_scheme(path)[0] in ("", "file"):
+            return os.path.abspath(_fs_local_path(path))
+        return posixpath.normpath(path)
+    # the name is relative to the bucket when inside it, so every
+    # spelling of the bucket (and a moved bucket) keeps its state
+    bucket = norm(bucket_dir)
+    checkpoint = norm(checkpoint or os.path.join(bucket_dir, "_checkpoint"))
+    if checkpoint.startswith(bucket + "/"):
+        checkpoint = checkpoint[len(bucket) + 1:]
+    log_dir = os.path.join(bucket_dir, "_commit_log")
+    run_seq, batch_ids = time.time(), itertools.count()
+    done: set[str] | None = None
+
+    def drain() -> int:
+        nonlocal done
+        if done is None:
+            # a given schema skips the inference job; parts older than
+            # the ``checkpoint`` column read it as null: no name
+            log = _read_parts(spark, log_dir,
+                              "file_name string, checkpoint string")
+            done = set() if log is None else {r[0] for r in log.filter(
+                F.col("checkpoint") == checkpoint).collect()}
+        manifest = build_manifest(spark, bucket_dir, in_prefix, out_prefix)
+        # the file index's listing, no job; URI-encoded, unlike names
+        listed = {unquote(p.rsplit("/", 1)[-1])
+                  for p in manifest.inputFiles()}
+        new = listed - done
+        if not new:             # an idle poll appends no empty part file
+            return 0
+        if new != listed:       # scan the new files only; a backlog
+            # reuses its listing (no second one, no backlog-wide glob)
+            manifest = _manifest(spark, bucket_dir, in_prefix, out_prefix,
+                                 new)
+        (run_pipeline(spark, manifest, transform, ext=ext, commit=commit,
                       store=store)
          .withColumn("run_seq", F.lit(run_seq))
-         .withColumn("batch_id", F.lit(bid))
+         .withColumn("batch_id", F.lit(next(batch_ids)))
+         .withColumn("checkpoint", F.lit(checkpoint))
          .write.mode("append").parquet(log_dir))
+        done |= new
+        return len(new)
+    return drain
 
-    return (jobs.writeStream.foreachBatch(_each_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(**trigger).start())
+
+def _read_parts(spark: SparkSession, table_dir: str,
+                schema: str | StructType | None = None
+                ) -> DataFrame | None:
+    """A Spark-written table (commit log, quarantine ledger), or None
+    while it holds no committed part file.  The read passes the part
+    files, not the ``_``-prefixed directory that Spark's file index
+    WARNs about as hidden, while Spark lists them on the driver
+    (``spark.sql.sources.parallelPartitionDiscovery.threshold``, 32
+    by default); past that it would list them with a job of one task
+    per file, so one listing of the directory (and the WARN) is the
+    cheaper read."""
+    glob = spark._jvm.org.apache.hadoop.fs.Path(table_dir + "/part-*")
+    found = (glob.getFileSystem(spark._jsc.hadoopConfiguration())
+             .globStatus(glob)) or []           # null: no directory
+    if not len(found):
+        return None
+    reader = spark.read.schema(schema) if schema else spark.read
+    if len(found) > int(spark.conf.get(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold")):
+        return reader.parquet(table_dir)
+    return reader.parquet(*sorted(s.getPath().toString() for s in found))
 
 
 def _read_log(spark: SparkSession, log_dir: str) -> DataFrame | None:
     """The on-disk commit log, or None while it holds no part file:
     never written, or its first append was interrupted (kill, crash)
     before the commit and left only ``_temporary/``.  Rows from part
-    files written before the ``error`` column read it as null."""
-    if not os.path.isdir(log_dir) or not any(
-            f.startswith("part-") for f in os.listdir(log_dir)):
-        return None
-    full = spark.read.parquet(log_dir)
-    if "error" in full.columns:
+    files written before the ``error`` column read it as null (and
+    ``checkpoint``, when the schema came from a newer part)."""
+    full = _read_parts(spark, log_dir)
+    if full is None or "error" in full.columns:
         return full
     # the schema came from a part file older than the ``error``
     # column: read it as null there, and as written in newer parts
-    from pyspark.sql.types import StructType
-    return (spark.read.schema(StructType(full.schema.fields)
-                              .add("error", "string"))
-            .parquet(log_dir))
+    return _read_parts(spark, log_dir, StructType(full.schema.fields)
+                       .add("error", "string"))
 
 
 def commit_log(spark: SparkSession, bucket_dir: str,
@@ -845,7 +870,7 @@ def commit_log(spark: SparkSession, bucket_dir: str,
                   F.col("ok").desc()))
     return (full.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
-            .drop("_rn", "run_seq", "batch_id"))
+            .drop("_rn", "run_seq", "batch_id", "checkpoint"))
 
 
 LEDGER_SCHEMA = ("file_name string, n_failures long, "
@@ -862,11 +887,11 @@ def quarantine_ledger(spark: SparkSession, bucket_dir: str,
     Spark-readable filesystem (in production s3a IS one; the sandbox
     has no Hadoop object-store connector, so tests pass a local
     path)."""
-    ledger_dir = ledger_dir or os.path.join(bucket_dir,
-                                            "_quarantine_ledger")
-    if not os.path.exists(ledger_dir):
+    ledger = _read_parts(spark, ledger_dir or os.path.join(
+        bucket_dir, "_quarantine_ledger"))
+    if ledger is None:
         return spark.createDataFrame([], LEDGER_SCHEMA)
-    return spark.read.parquet(ledger_dir)
+    return ledger
 
 
 def quarantine_sweep(spark: SparkSession, bucket_dir: str,
@@ -881,8 +906,9 @@ def quarantine_sweep(spark: SparkSession, bucket_dir: str,
     skips the SQS delete on a nonzero returncode, so the visibility
     timeout redelivers a permanently-failing job FOREVER
     (README.md:44-47 documents the loop; there is no dead-letter
-    queue).  The repo's watch path faithfully preserves
-    retry-via-redelivery; this sweep is the operational escape hatch.
+    queue).  The watch drain keeps retry-via-redelivery (a new
+    checkpoint redelivers every file); this sweep is the operational
+    escape hatch.
 
     Policy: a file whose NEWEST commit-log row is a failure and which
     has accumulated >= ``max_attempts`` failure rows (each redelivery

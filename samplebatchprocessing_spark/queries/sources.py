@@ -294,11 +294,11 @@ FROM read_blob('/root/testdata/sf0.01/*.parquet')
 
 def p10_watch_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P10: the reference's long-poll consumer as a CHECKPOINTED
-    binaryFile stream (R4 made rigorous) — stage the fixture files as
-    input objects, drain with Trigger.AvailableNow, return the
-    distinct commit log.  Re-running is a no-op drain (checkpoint ==
-    SQS delete-on-success), so the log is stable across repeats and
-    oracle-checkable against the blob listing."""
+    batch drain (R4 made rigorous) — stage the fixture files as input
+    objects, drain with ``watch_prefix``, return the distinct commit
+    log.  Re-running is a no-op drain (a file logged under the
+    checkpoint == SQS delete-on-success), so the log is stable across
+    repeats and oracle-checkable against the blob listing."""
     import glob
 
     from ..pipeline.manifest import watch_prefix

@@ -21,6 +21,31 @@ def spark():
     yield s
 
 
+@pytest.fixture()
+def spark_jobs(spark):
+    """``spark_jobs(fn)`` -> ``(fn(), n)``: runs ``fn`` under a Spark
+    job group of its own and counts the group's jobs through the
+    status tracker, as perfbench/trace.py ``Tracer`` counts a span's.
+    The job budget of a call is an upper bound on ``n``: job counts on
+    a fixed input do not move with host load, wall time does."""
+    import itertools
+    sc = spark.sparkContext
+    groups = itertools.count()
+
+    def run(fn):
+        group = f"test-jobs-{next(groups)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        # job-start events reach the status store asynchronously
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    return run
+
+
 @pytest.fixture(scope="session")
 def sf_smoke() -> str:
     return SF_SMOKE
@@ -134,9 +159,6 @@ _SLOW_TESTS = frozenset({
     "test_oracle_parity.py::test_oracle_parity[x48_cluster_safe_split]",
     "test_oracle_parity.py::test_oracle_parity[x58_cluster_size_histogram]",
     "test_oracle_parity.py::test_oracle_parity[x66_containment_neardup]",
-    "test_pipeline.py::test_cli_watch_sigint_graceful",
-    "test_pipeline.py::test_quarantine_sweep_drains_poison_file",
-    "test_pipeline.py::test_watch_daemon_with_quarantine_sweep",
     "test_publish.py::test_ivf_maintenance_sweep_on_planted_drift",
     "test_publish.py::test_lsh_maintenance_sweep_end_to_end",
     "test_publish.py::test_lsh_probe_through_pointer",

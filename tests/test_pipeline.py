@@ -157,24 +157,13 @@ def test_pipeline_plan_is_one_listing_without_join(spark, bucket):
     """The worker reads its own input by the job row, so the whole
     batch is one path-only binaryFile scan feeding the per-file
     worker: no join, no second listing, no file content in the scan.
-    The watch stream's micro-batch scan is path-only too."""
-    from samplebatchprocessing_spark.pipeline.manifest import watch_daemon
+    The watch drains dispatch through this same plan."""
     log = run_pipeline(spark, build_manifest(spark, bucket))
     plan = log._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan, plan
     assert plan.count("FileScan binaryFile") == 1, plan
     assert "ReadSchema: struct<path:string>" in plan, plan
     assert len(log.collect()) == 4
-
-    q = watch_daemon(spark, bucket, poll_seconds=0.5)
-    try:
-        q.processAllAvailable()
-        plan = (q._jsq.streamingQuery().lastExecution()
-                .executedPlan().toString())
-    finally:
-        q.stop()
-    assert plan.count("FileScan binaryFile") == 1, plan
-    assert "ReadSchema: struct<path:string>" in plan, plan
 
 
 def test_pipeline_subprocess_cp_byte_exact(spark, bucket):
@@ -304,6 +293,157 @@ def test_watch_prefix_rejects_unknown_commit(spark, bucket):
     assert len(spark.streams.active) == active
     assert not os.path.exists(os.path.join(bucket, "_checkpoint"))
     assert not os.path.exists(os.path.join(bucket, "output"))
+
+
+def test_failed_file_is_not_redelivered_under_its_checkpoint(spark,
+                                                            bucket):
+    """Under one checkpoint a logged file is delivered once, failed
+    ones included (a deleted SQS message is gone whatever happened to
+    it); a new checkpoint redelivers it.  The idle drain in between
+    appends no log part file (the daemon drains every poll)."""
+    from samplebatchprocessing_spark.pipeline.manifest import watch_prefix
+
+    def boom(raw: bytes) -> bytes:
+        raise ValueError("transform failed")
+
+    def log_parts() -> list[str]:
+        return sorted(glob.glob(os.path.join(bucket, "_commit_log",
+                                             "part-*")))
+
+    ckpt_a = os.path.join(bucket, "_ckpt_a")
+    assert not any(r["ok"] for r in
+                   watch_prefix(spark, bucket, transform=boom,
+                                checkpoint=ckpt_a).collect())
+    parts = log_parts()
+    # identity would succeed now: no output proves no retry
+    rows = watch_prefix(spark, bucket, checkpoint=ckpt_a).collect()
+    assert len(rows) == 4 and not any(r["ok"] for r in rows)
+    assert parts and log_parts() == parts
+    assert not glob.glob(os.path.join(bucket, "output", "*"))
+
+    rows = watch_prefix(spark, bucket,
+                        checkpoint=os.path.join(bucket, "_ckpt_b")).collect()
+    assert len(rows) == 4 and all(r["ok"] for r in rows)
+    assert len(glob.glob(os.path.join(bucket, "output", "*.out"))) == 4
+
+
+def test_watch_checkpoint_survives_bucket_spelling(spark, bucket):
+    """The default checkpoint, and a given one inside the bucket, name
+    the same delivery state under every spelling of the bucket:
+    ``file://`` URI, bare path, ``bucket/.`` and a relative path.  A
+    re-drain under any of them runs nothing (no output, no new log
+    part file); the ``file://`` log is listed like the bare one."""
+    from samplebatchprocessing_spark.pipeline.manifest import watch_prefix
+
+    def boom(raw: bytes) -> bytes:
+        raise ValueError("transform failed")
+
+    def log_parts() -> list[str]:
+        return sorted(glob.glob(os.path.join(bucket, "_commit_log",
+                                             "part-*")))
+
+    uri = f"file://{bucket}"
+    spellings = [uri, bucket, bucket + "/.", os.path.relpath(bucket)]
+    rows = watch_prefix(spark, uri, transform=boom).collect()
+    assert len(rows) == 4 and not any(r["ok"] for r in rows)
+    watch_prefix(spark, uri, transform=boom,
+                 checkpoint=os.path.join(uri, "_ck"))
+    parts = log_parts()
+    for b in spellings:
+        rows = watch_prefix(spark, b).collect()
+        assert len(rows) == 4 and not any(r["ok"] for r in rows), b
+        watch_prefix(spark, b, checkpoint=os.path.join(b, ".", "_ck"))
+        assert log_parts() == parts, b
+    assert not glob.glob(os.path.join(bucket, "output", "*"))
+
+
+def test_log_read_past_the_serial_listing_threshold(spark, bucket):
+    """Past Spark's serial-listing threshold the log is read through
+    its directory (one listing) instead of its part files: the same
+    rows and the same delivery state."""
+    from samplebatchprocessing_spark.pipeline.manifest import watch_prefix
+
+    def boom(raw: bytes) -> bytes:
+        raise ValueError("transform failed")
+
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    serial = spark.conf.get(key)
+    spark.conf.set(key, "0")
+    try:
+        assert not any(r["ok"] for r in
+                       watch_prefix(spark, bucket, transform=boom).collect())
+        parts = glob.glob(os.path.join(bucket, "_commit_log", "part-*"))
+        rows = watch_prefix(spark, bucket).collect()
+        assert len(rows) == 4 and not any(r["ok"] for r in rows)
+        assert glob.glob(os.path.join(bucket, "_commit_log",
+                                      "part-*")) == parts
+        rows = watch_prefix(spark, bucket,
+                            checkpoint=os.path.join(bucket, "_b")).collect()
+        assert len(rows) == 4 and all(r["ok"] for r in rows)
+    finally:
+        spark.conf.set(key, serial)
+
+
+def test_watch_drain_scans_only_new_files(spark, bucket, monkeypatch):
+    """A drain scans only the files it runs: a logged input deleted
+    after the drain's listing (here: just before its dispatch, as a
+    quarantine move or an operator's clean-up may) does not fail it,
+    and a new file whose name holds glob characters runs exactly
+    once."""
+    from samplebatchprocessing_spark.pipeline import manifest
+    assert len(manifest.watch_prefix(spark, bucket).collect()) == 4
+    in_dir = os.path.join(bucket, "input")
+    logged = sorted(os.listdir(in_dir))[0]
+    odd = "new {a,b} [x]*?.bin"
+    with open(os.path.join(in_dir, odd), "wb") as f:
+        f.write(b"fresh bytes")
+    run_pipeline = manifest.run_pipeline
+
+    def delete_then_run(*args, **kwargs):
+        os.remove(os.path.join(in_dir, logged))
+        return run_pipeline(*args, **kwargs)
+    monkeypatch.setattr(manifest, "run_pipeline", delete_then_run)
+    rows = manifest.watch_prefix(spark, bucket).collect()
+    assert len(rows) == 5 and all(r["ok"] for r in rows)
+    assert not os.path.exists(os.path.join(in_dir, logged))
+    with open(os.path.join(bucket, "output", odd + ".out"), "rb") as f:
+        assert f.read() == b"fresh bytes"
+    assert spark.read.parquet(
+        *glob.glob(os.path.join(bucket, "_commit_log", "part-*"))
+    ).filter(F.col("file_name") == odd).count() == 1
+
+
+def test_watch_daemon_drain_error_ends_the_loop(spark, tmp_path):
+    """A drain that raises (here: the watched prefix does not exist)
+    ends the daemon: ``isActive`` turns false and
+    ``awaitTermination()`` re-raises the error, so the CLI's loop
+    exits with it instead of reporting a clean stop."""
+    from samplebatchprocessing_spark.pipeline.manifest import watch_daemon
+    q = watch_daemon(spark, str(tmp_path / "no_bucket"), poll_seconds=0.2)
+    with pytest.raises(Exception, match="PATH_NOT_FOUND|does not exist"):
+        q.awaitTermination(120)
+    assert not q.isActive
+    with pytest.raises(Exception, match="PATH_NOT_FOUND|does not exist"):
+        q.stop()
+
+
+def test_pipeline_job_budgets(spark, bucket, spark_jobs):
+    """Spark jobs per call on the 4-file bucket, pinned as upper
+    bounds (measured the same in 5 fresh sessions): a batch run, a
+    backlog drain and an idle re-drain, each with its ``collect``.
+    An added action on any of these paths fails here.  A change that
+    cuts jobs lowers its bound."""
+    from samplebatchprocessing_spark.pipeline.manifest import watch_prefix
+    rows, n = spark_jobs(
+        lambda: run_pipeline(spark, build_manifest(spark, bucket)).collect())
+    assert len(rows) == 4 and n <= 1, n
+    shutil.rmtree(os.path.join(bucket, "output"))
+
+    rows, n = spark_jobs(lambda: watch_prefix(spark, bucket).collect())
+    assert len(rows) == 4 and n <= 4, n
+    rows, n = spark_jobs(lambda: watch_prefix(spark, bucket).collect())
+    assert len(rows) == 4 and n <= 4, n
+
 
 def test_watch_daemon_two_drops_and_stop(spark, bucket, sf_smoke):
     """The daemon form of watch (GetJobs.py:21-23's infinite loop):
