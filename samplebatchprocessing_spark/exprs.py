@@ -179,10 +179,14 @@ def multiset_diff_and_count(a, b) -> tuple[int, int]:
     from functools import reduce
 
     cols = a.columns
-    ta = a.groupBy(*cols).agg(F.count(F.lit(1)).alias("__na"))
-    tb = b.groupBy(*cols).agg(F.count(F.lit(1)).alias("__nb"))
+    # aliased sides: when a and b share lineage (b = a.filter(...)),
+    # ta[c] == tb[c] would name one attribute twice — Spark warns
+    # "trivially true" and leans on plan-id self-join resolution
+    ta = a.groupBy(*cols).agg(F.count(F.lit(1)).alias("__na")).alias("__l")
+    tb = b.groupBy(*cols).agg(F.count(F.lit(1)).alias("__nb")).alias("__r")
     cond = reduce(lambda x, y: x & y,
-                  [ta[c].eqNullSafe(tb[c]) for c in cols])
+                  [F.col(f"__l.`{c}`").eqNullSafe(F.col(f"__r.`{c}`"))
+                   for c in cols])
     j = ta.join(tb, cond, "full_outer").select(
         F.abs(F.coalesce("__na", F.lit(0))
               - F.coalesce("__nb", F.lit(0))).alias("__d"),

@@ -1,11 +1,17 @@
 """Similarity search over embedding columns (SURVEY §2B L7/L8).
 
-Two tiers, per the north-star mandate:
-- **exact**: cosine via exact-decimal dot products — deterministic
-  across engines (oracle-checkable), expression-only (JVM, codegen);
-- **scale path**: Arrow-vectorized numpy kernel (`mapInPandas`) with
-  per-partition top-k + global merge, and a seeded random-hyperplane
-  LSH bucketing that prunes candidates before the kernel runs.
+Two tiers: an **exact** cosine of order-fixed double folds —
+deterministic across engines (oracle-checkable), expression-only —
+and a **scale path** of Arrow numpy kernels (`mapInPandas`) plus
+seeded LSH / IVF / PQ candidate pruning.  Every top-k is one pattern
+(REPOSE, ICDE 2021): a partition-local prune, then one global merge,
+with one contract — rank by (cosine desc, vec_id), drop self and NaN
+pairs, round to 6 digits — kept in one core: :func:`_topk` (the
+merge window), :func:`_join_pairs` → :func:`_rescore_topk` (the
+IVF/LSH keyed join and the exact ANN rescore), :func:`_block_topk`
+(the numpy prune kernel), and one body each for the expression and
+the tiled top-k (:func:`_exact_topk`, :func:`_tiled_topk`), where a
+hard-negative operator is its top-k twin keyed on the label.
 
 At 100 TB the exact form is a blocked pairwise join (block key
 mandatory); the ANN form scans each partition once with a broadcast
@@ -17,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from ..session import ship_package
 from .publish import resolve as _resolve_layout
 
 def _seq_sum(arr):
@@ -59,6 +66,42 @@ def _norm_col(vec):
     return F.sqrt(_seq_sum(F.zip_with(vd, vd, lambda x, y: x * y)))
 
 
+def _unit(mat):
+    """Rows scaled to unit norm; a zero row becomes NaN, silently."""
+    import numpy as np
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return mat / np.linalg.norm(mat, axis=1, keepdims=True)
+
+
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """The global merge of every top-k: the per-query (cosine desc,
+    vec_id) window, ``rank <= k``, cosine rounded to 6 digits."""
+    w = W.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("vec_id"))
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .withColumn("cosine", F.round("cosine", 6)))
+
+
+def _join_pairs(cands: DataFrame, queries: DataFrame,
+                key: str) -> DataFrame:
+    """The one keyed candidate join: candidates meet the queries that
+    share their ``key`` (IVF ``cell``, LSH ``bucket``), self pairs
+    dropped.  The caller decides whether ``queries`` is wrapped in
+    ``F.broadcast`` — that choice is what shapes each probe's plan."""
+    return (cands.join(queries, key)
+            .filter(F.col("vec_id") != F.col("query_id")))
+
+
+def _rescore_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """Exact :func:`cosine_expr` rescore of (query_id, q_emb, vec_id,
+    embedding) pairs, NULL/NaN scores dropped, then :func:`_topk`."""
+    cos = cosine_expr(F.col("q_emb"), F.col("embedding"))
+    return _topk(pairs.select("query_id", "vec_id", cos.alias("cosine"))
+                 .filter(F.col("cosine").isNotNull()
+                         & ~F.isnan("cosine")), k)
+
+
 def _partition_topk(scored: DataFrame, k: int) -> DataFrame:
     """Partition-local top-k per query_id by (cosine desc, vec_id
     asc), streaming over Arrow batches with a bounded running-best
@@ -88,6 +131,76 @@ def _partition_topk(scored: DataFrame, k: int) -> DataFrame:
     return scored.mapInPandas(_prune, scored.schema)
 
 
+def _block_topk(c_mat, q_mat, c_key, q_key, c_cols, q_cols, k: int):
+    """The one numpy top-k kernel, per Arrow batch or tile pair:
+    normalise both float64 sides, score ``c_mat @ q_mat.T``, keep each
+    query's k best by lexsort on (-cosine, vec_id) — the declared
+    tie-break, so a boundary tie can't drop the smaller vec_id before
+    the global merge.  Candidates whose exclusion key ``c_key`` equals
+    the query's ``q_key`` are masked, and so are NaN (zero-norm)
+    scores, where lexsort and Spark's DESC would disagree.
+    ``c_cols``/``q_cols`` map output names to per-row arrays
+    (``c_cols`` holds ``vec_id``); ``q_mat`` has at least one row."""
+    import numpy as np
+    import pandas as pd
+    sims = _unit(c_mat) @ _unit(q_mat).T       # (n_cand, n_query)
+    ids = c_cols["vec_id"]
+    frames = []
+    for j in range(sims.shape[1]):
+        col = sims[:, j]
+        keep = np.flatnonzero((c_key != q_key[j]) & ~np.isnan(col))
+        if len(keep) > k:
+            keep = keep[np.lexsort((ids[keep], -col[keep]))[:k]]
+        frames.append(pd.DataFrame(
+            {**{n: v[j] for n, v in q_cols.items()},
+             **{n: v[keep] for n, v in c_cols.items()},
+             "cosine": col[keep]}))
+    return pd.concat(frames, ignore_index=True)
+
+
+def _exclusion(label_col):
+    """(query-side carried columns, candidate-side carried columns,
+    (query key, candidate key)): a pair with equal keys is never
+    scored.  A top-k keys on the ids (self pairs drop); hard-negative
+    mining on ``label_col``, carried as ``q_label``/``neg_label``."""
+    if label_col is None:
+        return {}, {}, ("query_id", "vec_id")
+    return ({"q_label": label_col}, {"neg_label": label_col},
+            ("q_label", "neg_label"))
+
+
+def _exact_topk(emb: DataFrame, query_pred, k: int,
+                label_col) -> DataFrame:
+    """The one expression top-k body behind :func:`cosine_topk` and
+    :func:`hard_negative_topk`, which differ only in the exclusion
+    key (:func:`_exclusion`); see :func:`cosine_topk` for the plan."""
+    q_lab, c_lab, (q_key, c_key) = _exclusion(label_col)
+    queries = (emb.filter(query_pred).select(
+        F.col("vec_id").alias("query_id"),
+        *[F.col(c).alias(n) for n, c in q_lab.items()],
+        F.col("embedding").alias("q_emb"),
+        _norm_col(F.col("embedding")).alias("q_norm"))
+        .filter((F.col("q_norm") > 0) & ~F.isnan("q_norm")))
+    cands = (emb.select(
+        "vec_id", *[F.col(c).alias(n) for n, c in c_lab.items()],
+        "embedding", _norm_col(F.col("embedding")).alias("c_norm"))
+        .filter((F.col("c_norm") > 0) & ~F.isnan("c_norm")))
+    # the exclusion applies per pair BEFORE scoring, so excluded pairs
+    # never cost a dot product
+    pairs = (cands.crossJoin(F.broadcast(queries))
+             .filter(F.col(c_key) != F.col(q_key)))
+    qd = F.transform("q_emb", lambda x: x.cast("double"))
+    cd = F.transform("embedding", lambda x: x.cast("double"))
+    dot = _seq_sum(F.zip_with(qd, cd, lambda x, y: x * y))
+    cos = dot / (F.col("q_norm") * F.col("c_norm"))
+    # labels ride through the pruner (it keys on query_id/cosine/
+    # vec_id and passes other columns through) — no corpus-sized
+    # label join after the fact
+    return _topk(_partition_topk(
+        pairs.select("query_id", *q_lab, "vec_id", *c_lab,
+                     cos.alias("cosine")), k), k)
+
+
 def cosine_topk(emb: DataFrame, query_pred, k: int = 5) -> DataFrame:
     """L7: exact top-k neighbors for each query vector (query_pred
     selects the query subset).  Broadcast the (small) query side;
@@ -113,30 +226,7 @@ def cosine_topk(emb: DataFrame, query_pred, k: int = 5) -> DataFrame:
     try_divide instead costs ~80% wall-clock on the pair scan
     (measured 1.79 s vs 1.00 s at sf0.1).  The numpy kernel masks
     NaN scores batch-side the same way."""
-    q_norm = _norm_col(F.col("embedding"))
-    queries = (emb.filter(query_pred).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        q_norm.alias("q_norm"))
-        .filter((F.col("q_norm") > 0) & ~F.isnan("q_norm")))
-    cands = (emb.select(
-        "vec_id", "embedding",
-        _norm_col(F.col("embedding")).alias("c_norm"))
-        .filter((F.col("c_norm") > 0) & ~F.isnan("c_norm")))
-    pairs = (cands.crossJoin(F.broadcast(queries))
-             .filter(F.col("vec_id") != F.col("query_id")))
-    qd = F.transform("q_emb", lambda x: x.cast("double"))
-    cd = F.transform("embedding", lambda x: x.cast("double"))
-    dot = _seq_sum(F.zip_with(qd, cd, lambda x, y: x * y))
-    cos = dot / (F.col("q_norm") * F.col("c_norm"))
-    scored = _partition_topk(
-        pairs.select("query_id", "vec_id", cos.alias("cosine")), k)
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id"))
-    return (scored
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .withColumn("cosine", F.round("cosine", 6)))
+    return _exact_topk(emb, query_pred, k, None)
 
 
 def hard_negative_topk(emb: DataFrame, query_pred, k: int = 3,
@@ -147,43 +237,14 @@ def hard_negative_topk(emb: DataFrame, query_pred, k: int = 3,
     a near-miss the model must learn to push away; random negatives
     are too easy to carry gradient — public InfoNCE/DPR practice).
 
-    Same plan shape and determinism contract as cosine_topk (query
-    side broadcast, per-vector norms, partition-local top-k before
-    the single exchange, (-cosine, vec_id) tie-break, zero-norm
-    vectors dropped per vector); the only difference is the label
-    inequality applied per pair BEFORE scoring, so excluded pairs
-    never cost a dot product.  At 100 TB the label filter doesn't
-    change the bound: the exchange still carries
-    ~partitions x queries x k rows."""
-    queries = (emb.filter(query_pred).select(
-        F.col("vec_id").alias("query_id"),
-        F.col(label_col).alias("q_label"),
-        F.col("embedding").alias("q_emb"),
-        _norm_col(F.col("embedding")).alias("q_norm"))
-        .filter((F.col("q_norm") > 0) & ~F.isnan("q_norm")))
-    cands = (emb.select(
-        "vec_id", F.col(label_col).alias("neg_label"), "embedding",
-        _norm_col(F.col("embedding")).alias("c_norm"))
-        .filter((F.col("c_norm") > 0) & ~F.isnan("c_norm")))
-    pairs = (cands.crossJoin(F.broadcast(queries))
-             .filter(F.col("neg_label") != F.col("q_label")))
-    qd = F.transform("q_emb", lambda x: x.cast("double"))
-    cd = F.transform("embedding", lambda x: x.cast("double"))
-    dot = _seq_sum(F.zip_with(qd, cd, lambda x, y: x * y))
-    cos = dot / (F.col("q_norm") * F.col("c_norm"))
-    # labels ride through the pruner (it keys on query_id/cosine/
-    # vec_id and passes other columns through) — no corpus-sized
-    # label join after the fact
-    scored = _partition_topk(
-        pairs.select("query_id", "q_label", "vec_id", "neg_label",
-                     cos.alias("cosine")), k)
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .withColumn("cosine", F.round("cosine", 6))
-            .select("query_id", "q_label", "vec_id", "neg_label",
-                    "cosine", "rank"))
+    The same body as cosine_topk (query side broadcast, per-vector
+    norms, partition-local top-k before the single exchange,
+    (-cosine, vec_id) tie-break, zero-norm vectors dropped per
+    vector) with the label as the exclusion key: ``neg_label !=
+    q_label`` replaces ``vec_id != query_id`` per pair, before
+    scoring.  At 100 TB the label filter doesn't change the bound:
+    the exchange still carries ~partitions x queries x k rows."""
+    return _exact_topk(emb, query_pred, k, label_col)
 
 
 def sim_join(emb: DataFrame, threshold: float,
@@ -218,59 +279,95 @@ def sim_join(emb: DataFrame, threshold: float,
 
 def brute_force_topk_numpy(emb: DataFrame, query_pred,
                            k: int = 5) -> DataFrame:
-    """L7 scale path: numpy matmul per Arrow batch, partition-local
-    top-k, global merge via window.  ~100x the expression fold's
-    throughput; property-tested equal (to fp tolerance) to
-    :func:`cosine_topk`."""
+    """L7 scale path: the collected queries are broadcast, and every
+    Arrow batch of the corpus runs :func:`_block_topk` against them
+    (one matmul, partition-local top-k); the global merge is the
+    window.  ~100x the expression fold's throughput; property-tested
+    equal (to fp tolerance) to :func:`cosine_topk`."""
     queries = emb.filter(query_pred).select("vec_id", "embedding").collect()
     if not queries:
         raise ValueError("query predicate selected no vectors")
     import numpy as np
-    q_ids = [r["vec_id"] for r in queries]
-    q_mat = np.array([r["embedding"] for r in queries], dtype=np.float64)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        q_mat /= np.linalg.norm(q_mat, axis=1, keepdims=True)
-    spark = emb.sparkSession
-    b_ids = spark.sparkContext.broadcast(q_ids)
-    b_mat = spark.sparkContext.broadcast(q_mat)
-
-    out_schema = "query_id long, vec_id long, cosine double"
+    ship_package(emb.sparkSession)      # the kernel runs worker-side
+    sc = emb.sparkSession.sparkContext
+    b_ids = sc.broadcast(np.array([r["vec_id"] for r in queries]))
+    b_mat = sc.broadcast(np.array([r["embedding"] for r in queries],
+                                  dtype=np.float64))
 
     def _part(batches):
         import numpy as np
-        import pandas as pd
-        qi = np.asarray(b_ids.value)
-        qm = b_mat.value
+        qi = b_ids.value
         for pdf in batches:
             ids = pdf["vec_id"].to_numpy()
-            mat = np.array(list(pdf["embedding"]), dtype=np.float64)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-            sims = mat @ qm.T                      # (n_cand, n_query)
-            frames = []
-            for j in range(sims.shape[1]):
-                col = sims[:, j]
-                # drop NaN (zero-norm) scores — same invariant as the
-                # exact path, where lexsort/DESC would otherwise differ
-                mask = (ids != qi[j]) & ~np.isnan(col)
-                cid, cs = ids[mask], col[mask]
-                if len(cid) > k:                   # partition-local prune
-                    # lexsort on (-cosine, vec_id): keeps the declared
-                    # tie-break, so a boundary tie can't drop the
-                    # smaller vec_id before the global merge.
-                    top = np.lexsort((cid, -cs))[:k]
-                    cid, cs = cid[top], cs[top]
-                frames.append(pd.DataFrame(
-                    {"query_id": qi[j], "vec_id": cid, "cosine": cs}))
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
+            yield _block_topk(
+                np.array(list(pdf["embedding"]), dtype=np.float64),
+                b_mat.value, ids, qi, {"vec_id": ids}, {"query_id": qi}, k)
 
-    local = emb.select("vec_id", "embedding").mapInPandas(_part, out_schema)
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id"))
-    return (local.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .withColumn("cosine", F.round("cosine", 6)))
+    return _topk(emb.select("vec_id", "embedding").mapInPandas(
+        _part, "query_id long, vec_id long, cosine double"), k)
+
+
+def _tiled_topk(emb: DataFrame, query_pred, k: int, q_block: int,
+                c_block: int, label_col) -> DataFrame:
+    """The one block nested-loop body behind :func:`bnl_topk` and
+    :func:`bnl_hard_negatives`, which differ only in the exclusion key
+    (:func:`_exclusion`); see :func:`bnl_topk` for the plan."""
+    from math import ceil
+    n = emb.agg(F.count_if(query_pred).alias("q"),
+                F.count(F.lit(1)).alias("c")).first()
+    if n["q"] == 0:
+        raise ValueError("query predicate selected no vectors")
+    ship_package(emb.sparkSession)      # the kernel runs worker-side
+    q_lab, c_lab, (q_key, c_key) = _exclusion(label_col)
+    queries, cands = emb.filter(query_pred), emb
+    if label_col is not None:
+        # NULL labels drop from BOTH sides before tiling (ADVICE r13
+        # #1): the expression path's `neg_label != q_label` is
+        # NULL-rejecting, while numpy's object-dtype `c_key !=
+        # q_key[j]` evaluates None != x as True — without this filter
+        # the kernel would admit null-label candidates the expression
+        # path excludes.
+        queries, cands = (d.filter(F.col(label_col).isNotNull())
+                          for d in (queries, cands))
+    qs = queries.select(F.col("vec_id").alias("query_id"),
+                        *[F.col(c).alias(n) for n, c in q_lab.items()],
+                        "embedding")
+    cs = cands.select("vec_id",
+                      *[F.col(c).alias(n) for n, c in c_lab.items()],
+                      "embedding")
+    # one matrix tile per hash block: (block id, [struct of a row])
+    q_g = (qs.groupBy(F.pmod(F.hash("query_id"),
+                             F.lit(max(1, ceil(n["q"] / q_block))))
+                      .alias("qb"))
+           .agg(F.collect_list(F.struct(*qs.columns)).alias("qs")))
+    c_g = (cs.groupBy(F.pmod(F.hash("vec_id"),
+                             F.lit(max(1, ceil(n["c"] / c_block))))
+                      .alias("cb"))
+           .agg(F.collect_list(F.struct(*cs.columns)).alias("cs")))
+    q_names, c_names = qs.columns[:-1], cs.columns[:-1]
+    out_schema = ", ".join(
+        [f"{f.name} {f.dataType.simpleString()}"
+         for f in [*qs.schema[:-1], *cs.schema[:-1]]] + ["cosine double"])
+
+    def _tile(batches):
+        import numpy as np
+        for pdf in batches:
+            if not len(pdf):          # empty Arrow batch (r9, ADVICE)
+                continue
+            for crow, qrow in zip(pdf["cs"], pdf["qs"]):
+                if not len(crow) or not len(qrow):
+                    continue
+                c = {n: np.array([r[n] for r in crow]) for n in c_names}
+                q = {n: np.array([r[n] for r in qrow]) for n in q_names}
+                yield _block_topk(
+                    np.array([r["embedding"] for r in crow],
+                             dtype=np.float64),
+                    np.array([r["embedding"] for r in qrow],
+                             dtype=np.float64),
+                    c[c_key], q[q_key], c, q, k)
+
+    return _topk(_partition_topk(
+        c_g.crossJoin(q_g).mapInPandas(_tile, out_schema), k), k)
 
 
 def bnl_topk(emb: DataFrame, query_pred, k: int = 5,
@@ -282,10 +379,11 @@ def bnl_topk(emb: DataFrame, query_pred, k: int = 5,
     driver-collect contract in the similarity family; x114 removed
     it for the IVF path, this removes it for the exact path).
 
-    Plan: queries are hash-packed into ~``q_block``-vector blocks and
-    the corpus into ~``c_block``-vector blocks (one collect_list
-    aggregate each — block rows are matrix tiles, metadata-free);
-    every (corpus-tile x query-tile) pair is ONE numpy dgemm task
+    Plan: one aggregate counts both sides; queries are hash-packed
+    into ~``q_block``-vector blocks and the corpus into
+    ~``c_block``-vector blocks (one collect_list aggregate each —
+    block rows are matrix tiles, metadata-free); every (corpus-tile
+    x query-tile) pair is ONE numpy dgemm task (:func:`_block_topk`)
     emitting at most k rows per query in the tile, pruned again
     per-partition before the single (query_id)-keyed merge exchange.
 
@@ -299,72 +397,14 @@ def bnl_topk(emb: DataFrame, query_pred, k: int = 5,
     when both are big).  Every stage scales out with both counts; the
     driver never sees a vector.
 
-    Determinism contract: float64 normalize + matmul, NaN (zero-norm)
-    and self-pairs masked batch-side, (-cosine, vec_id) lexsort at
-    every prune — same invariants as the collect-query kernel, so the
-    two paths return the same neighbor ids on non-degenerate data
+    Determinism contract: the same kernel as the collect-query path
+    (float64 normalize + matmul, NaN (zero-norm) and self-pairs
+    masked, (-cosine, vec_id) lexsort at every prune), so the two
+    paths return the same neighbor ids on non-degenerate data
     (locked by the x119 registry row + block-size invariance test).
     Tiling CAN change dgemm accumulation order, so raw cosines agree
     only to fp tolerance — same caveat as l7_topk_numpy's oracle."""
-    from math import ceil
-    n_q = emb.filter(query_pred).count()
-    if n_q == 0:
-        raise ValueError("query predicate selected no vectors")
-    n_c = emb.count()
-    n_qb = max(1, ceil(n_q / q_block))
-    n_cb = max(1, ceil(n_c / c_block))
-    q_g = (emb.filter(query_pred)
-           .select(F.col("vec_id").alias("query_id"), "embedding")
-           .groupBy(F.pmod(F.hash("query_id"), F.lit(n_qb)).alias("qb"))
-           .agg(F.collect_list(F.struct("query_id", "embedding"))
-                .alias("qs")))
-    c_g = (emb.select("vec_id", "embedding")
-           .groupBy(F.pmod(F.hash("vec_id"), F.lit(n_cb)).alias("cb"))
-           .agg(F.collect_list(F.struct("vec_id", "embedding"))
-                .alias("cs")))
-    blocks = c_g.crossJoin(q_g)
-
-    out_schema = "query_id long, vec_id long, cosine double"
-
-    def _tile(batches):
-        import numpy as np
-        import pandas as pd
-        for pdf in batches:
-            if not len(pdf):          # empty Arrow batch (r9, ADVICE)
-                continue
-            for crow, qrow in zip(pdf["cs"], pdf["qs"]):
-                if not len(crow) or not len(qrow):
-                    continue
-                c_ids = np.array([r["vec_id"] for r in crow])
-                c_mat = np.array([r["embedding"] for r in crow],
-                                 dtype=np.float64)
-                q_ids = np.array([r["query_id"] for r in qrow])
-                q_mat = np.array([r["embedding"] for r in qrow],
-                                 dtype=np.float64)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    c_mat /= np.linalg.norm(c_mat, axis=1, keepdims=True)
-                    q_mat /= np.linalg.norm(q_mat, axis=1, keepdims=True)
-                sims = c_mat @ q_mat.T             # (n_cand, n_query)
-                frames = []
-                for j in range(sims.shape[1]):
-                    col = sims[:, j]
-                    mask = (c_ids != q_ids[j]) & ~np.isnan(col)
-                    cid, cs_ = c_ids[mask], col[mask]
-                    if len(cid) > k:
-                        top = np.lexsort((cid, -cs_))[:k]
-                        cid, cs_ = cid[top], cs_[top]
-                    frames.append(pd.DataFrame(
-                        {"query_id": q_ids[j], "vec_id": cid,
-                         "cosine": cs_}))
-                if frames:
-                    yield pd.concat(frames, ignore_index=True)
-
-    local = _partition_topk(blocks.mapInPandas(_tile, out_schema), k)
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id"))
-    return (local.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .withColumn("cosine", F.round("cosine", 6)))
+    return _tiled_topk(emb, query_pred, k, q_block, c_block, None)
 
 
 def bnl_hard_negatives(emb: DataFrame, query_pred, k: int = 3,
@@ -374,12 +414,14 @@ def bnl_hard_negatives(emb: DataFrame, query_pred, k: int = 3,
     """X88b (r13): HARD-NEGATIVE MINING on the tiled block
     nested-loop path — :func:`hard_negative_topk`'s semantics
     (top-k most-cosine-similar vectors whose LABEL differs, the
-    contrastive-training near-misses) on :func:`bnl_topk`'s
-    execution shape: both sides stay DataFrames end to end, every
-    (corpus-tile x query-tile) pair is one numpy dgemm task, and the
-    label inequality is a vectorized mask applied to the similarity
-    matrix BEFORE the per-query top-k — excluded pairs cost a
-    compare, never a sort slot.
+    contrastive-training near-misses) on :func:`bnl_topk`'s body with
+    the label as the exclusion key: both sides stay DataFrames end to
+    end, every (corpus-tile x query-tile) pair is one numpy dgemm
+    task, and the label inequality is a vectorized mask applied to
+    the similarity matrix BEFORE the per-query top-k — excluded pairs
+    cost a compare, never a sort slot.  NULL labels drop from both
+    sides before tiling, as the expression path's NULL-rejecting
+    inequality drops them.
 
     Why it exists: the expression-path x88 builds per-pair array
     structs through zip_with/aggregate, which is allocation-heavy
@@ -389,91 +431,24 @@ def bnl_hard_negatives(emb: DataFrame, query_pred, k: int = 3,
     the scale ceiling: a 10 M-query mining job tiles out instead of
     broadcasting the query batch.
 
-    Determinism contract: float64 normalize + matmul, NaN
-    (zero-norm) masked, label-inequality mask (self-pairs fall out
-    for free — a vector shares its own label), (-cosine, vec_id)
-    lexsort at every prune — identical neighbor ids/ranks to the
-    expression path; tiling can change dgemm accumulation order, so
-    raw cosines agree to fp tolerance only (the l7_topk_numpy /
-    x119 oracle discipline)."""
-    from math import ceil
-    n_q = emb.filter(query_pred).count()
-    if n_q == 0:
-        raise ValueError("query predicate selected no vectors")
-    n_c = emb.count()
-    n_qb = max(1, ceil(n_q / q_block))
-    n_cb = max(1, ceil(n_c / c_block))
-    # NULL labels drop from BOTH sides before tiling (ADVICE r13 #1):
-    # the expression path's `neg_label != q_label` is NULL-rejecting,
-    # while numpy's object-dtype `c_lab != q_lab[j]` evaluates
-    # None != x as True — without this filter the tile kernel would
-    # admit null-label candidates the expression path excludes.
-    q_g = (emb.filter(query_pred)
-           .filter(F.col(label_col).isNotNull())
-           .select(F.col("vec_id").alias("query_id"),
-                   F.col(label_col).alias("q_label"), "embedding")
-           .groupBy(F.pmod(F.hash("query_id"), F.lit(n_qb)).alias("qb"))
-           .agg(F.collect_list(
-               F.struct("query_id", "q_label", "embedding"))
-               .alias("qs")))
-    c_g = (emb.filter(F.col(label_col).isNotNull())
-           .select("vec_id", F.col(label_col).alias("neg_label"),
-                   "embedding")
-           .groupBy(F.pmod(F.hash("vec_id"), F.lit(n_cb)).alias("cb"))
-           .agg(F.collect_list(
-               F.struct("vec_id", "neg_label", "embedding"))
-               .alias("cs")))
-    blocks = c_g.crossJoin(q_g)
+    Determinism contract: bnl_topk's, with self-pairs falling out of
+    the label mask (a vector shares its own label) — identical
+    neighbor ids/ranks to the expression path, raw cosines to fp
+    tolerance only (the l7_topk_numpy / x119 oracle discipline)."""
+    return _tiled_topk(emb, query_pred, k, q_block, c_block, label_col)
 
-    out_schema = ("query_id long, q_label int, vec_id long, "
-                  "neg_label int, cosine double")
 
-    def _tile(batches):
-        import numpy as np
-        import pandas as pd
-        for pdf in batches:
-            if not len(pdf):          # empty Arrow batch (r9, ADVICE)
-                continue
-            for crow, qrow in zip(pdf["cs"], pdf["qs"]):
-                if not len(crow) or not len(qrow):
-                    continue
-                c_ids = np.array([r["vec_id"] for r in crow])
-                c_lab = np.array([r["neg_label"] for r in crow])
-                c_mat = np.array([r["embedding"] for r in crow],
-                                 dtype=np.float64)
-                q_ids = np.array([r["query_id"] for r in qrow])
-                q_lab = np.array([r["q_label"] for r in qrow])
-                q_mat = np.array([r["embedding"] for r in qrow],
-                                 dtype=np.float64)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    c_mat /= np.linalg.norm(c_mat, axis=1,
-                                            keepdims=True)
-                    q_mat /= np.linalg.norm(q_mat, axis=1,
-                                            keepdims=True)
-                sims = c_mat @ q_mat.T             # (n_cand, n_query)
-                frames = []
-                for j in range(sims.shape[1]):
-                    col = sims[:, j]
-                    mask = (c_lab != q_lab[j]) & ~np.isnan(col)
-                    cid, cl, cs_ = c_ids[mask], c_lab[mask], col[mask]
-                    if len(cid) > k:
-                        top = np.lexsort((cid, -cs_))[:k]
-                        cid, cl, cs_ = cid[top], cl[top], cs_[top]
-                    frames.append(pd.DataFrame(
-                        {"query_id": q_ids[j], "q_label": q_lab[j],
-                         "vec_id": cid, "neg_label": cl,
-                         "cosine": cs_}))
-                if frames:
-                    yield pd.concat(frames, ignore_index=True)
-
-    local = _partition_topk(blocks.mapInPandas(_tile, out_schema), k)
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id"))
-    return (local.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .withColumn("cosine", F.round("cosine", 6))
-            .select("query_id", "q_label", "vec_id", "neg_label",
-                    "cosine", "rank"))
+def _unit_sample(emb: DataFrame, sample_cap: int):
+    """Up to ``sample_cap`` unit rows drawn by xxhash64(vec_id) order
+    (layout-independent, one TakeOrdered job) — the quantizers'
+    training sample.  Zero-norm rows (no direction) are dropped."""
+    import numpy as np
+    rows = (emb.select("vec_id", "embedding")
+            .orderBy(F.xxhash64(F.col("vec_id")))
+            .limit(sample_cap).collect())
+    smat = _unit(np.array([r["embedding"] for r in rows],
+                          dtype=np.float64))
+    return smat[np.isfinite(smat).all(axis=1)]
 
 
 def _kmeans_centroids(vecs, n_cells: int, n_iter: int = 8,
@@ -481,10 +456,9 @@ def _kmeans_centroids(vecs, n_cells: int, n_iter: int = 8,
     """Seeded spherical k-means on a driver-side SAMPLE (numpy).
     k-means++ init, then Lloyd iterations with cosine assignment and
     renormalized mean updates; empty cells keep their old centroid.
-    Deterministic for a fixed sample + seed."""
+    Deterministic for a fixed sample (:func:`_unit_sample`) + seed."""
     import numpy as np
     rng = np.random.default_rng(seed)
-    vecs = vecs / np.linalg.norm(vecs, axis=1, keepdims=True)
     cents = [vecs[int(rng.integers(len(vecs)))]]
     for _ in range(n_cells - 1):               # k-means++ seeding
         C = np.array(cents)
@@ -512,21 +486,17 @@ def ivf_centroids(emb: DataFrame, n_cells: int,
     Deterministic: the k-means sample is drawn by xxhash64(vec_id)
     order (layout-independent), seeds fixed in
     :func:`_kmeans_centroids`; the "first" quantizer is the
-    ``n_cells`` lowest-vec_id vectors."""
+    ``n_cells`` lowest-vec_id vectors with a nonzero norm (a zero
+    vector would be a NaN centroid that every argmax picks)."""
     import numpy as np
     if quantizer == "kmeans":
-        sample_rows = (emb.select("vec_id", "embedding")
-                       .orderBy(F.xxhash64(F.col("vec_id")))
-                       .limit(sample_cap).collect())
-        smat = np.array([r["embedding"] for r in sample_rows],
-                        dtype=np.float64)
-        return _kmeans_centroids(smat, n_cells)
-    cent_rows = (emb.orderBy("vec_id").limit(n_cells)
+        return _kmeans_centroids(_unit_sample(emb, sample_cap), n_cells)
+    norm = _norm_col(F.col("embedding"))
+    cent_rows = (emb.filter((norm > 0) & ~F.isnan(norm))
+                 .orderBy("vec_id").limit(n_cells)
                  .select("embedding").collect())
-    cmat = np.array([r["embedding"] for r in cent_rows],
-                    dtype=np.float64)
-    cmat /= np.linalg.norm(cmat, axis=1, keepdims=True)
-    return cmat
+    return _unit(np.array([r["embedding"] for r in cent_rows],
+                          dtype=np.float64))
 
 
 def ivf_assign(emb: DataFrame, cmat) -> DataFrame:
@@ -549,27 +519,30 @@ def ivf_assign(emb: DataFrame, cmat) -> DataFrame:
         _assign, assign_schema)
 
 
-def _probe_arrays(emb: DataFrame, query_pred, cmat, n_probe: int):
-    """(collected query rows, per-query probe-cell matrix) — the
-    driver-side arrays both the probe frame and the probed-cell list
-    derive from (the query side is tiny by contract)."""
+def _probe_cells(qmat, cmat, n_probe: int):
+    """Each query row's ``n_probe`` nearest centroid cells — row-local,
+    and the one expression of both probe shapes, so they agree."""
     import numpy as np
+    return np.argsort(-(_unit(qmat) @ cmat.T), axis=1)[:, :n_probe]
+
+
+def _probe_driver(emb: DataFrame, query_pred, cmat, n_probe: int):
+    """(probe frame, sorted probed cells) from the collected query
+    side (tiny by contract): the probed-cell list is known here, in
+    the numpy probe matrix, without a job on the frame."""
+    import numpy as np
+
+    from ..exprs import local_df
     q_rows = emb.filter(query_pred).select("vec_id", "embedding").collect()
     if not q_rows:
         raise ValueError("query predicate selected no vectors")
-    qmat = np.array([r["embedding"] for r in q_rows], dtype=np.float64)
-    qmat /= np.linalg.norm(qmat, axis=1, keepdims=True)
-    probe = np.argsort(-(qmat @ cmat.T), axis=1)[:, :n_probe]
-    return q_rows, probe
-
-
-def _probe_frame(spark, q_rows, probe) -> DataFrame:
-    from ..exprs import local_df
-    return local_df(
-        spark,
-        [(int(r["vec_id"]), r["embedding"], int(c))
-         for r, cells in zip(q_rows, probe) for c in cells],
-        "query_id long, q_emb array<float>, cell int")
+    probe = _probe_cells(np.array([r["embedding"] for r in q_rows],
+                                  dtype=np.float64), cmat, n_probe)
+    return (local_df(emb.sparkSession,
+                     [(int(r["vec_id"]), r["embedding"], int(c))
+                      for r, cells in zip(q_rows, probe) for c in cells],
+                     "query_id long, q_emb array<float>, cell int"),
+            sorted({int(c) for c in probe.ravel()}))
 
 
 def ivf_probe_df(emb: DataFrame, query_pred, cmat,
@@ -579,8 +552,7 @@ def ivf_probe_df(emb: DataFrame, query_pred, cmat,
     driver-side and the frame is broadcast into the candidate join.
     Built via ``exprs.local_df`` (r14): the pickled-list form cost a
     Python-worker round-trip in every consuming stage."""
-    q_rows, probe = _probe_arrays(emb, query_pred, cmat, n_probe)
-    return _probe_frame(emb.sparkSession, q_rows, probe)
+    return _probe_driver(emb, query_pred, cmat, n_probe)[0]
 
 
 def ivf_index_write(emb: DataFrame, index_dir: str,
@@ -701,25 +673,6 @@ def recluster_is_due(max_cell: int, n_cells: int, total: int,
     return max_cell * n_cells >= skew_threshold * total
 
 
-def _ivf_rank(cands: DataFrame, probe_df: DataFrame,
-              k: int) -> DataFrame:
-    """The shared IVF tail: join the cell-assigned candidates to the
-    probe relation on cell, drop the self match, exact cosine
-    rescore, then the per-query (cosine desc, vec_id) top-k window.
-    The caller decides whether ``probe_df`` is wrapped in
-    ``F.broadcast`` — that choice is what shapes each probe's plan."""
-    pairs = (cands.join(probe_df, "cell")
-             .filter(F.col("vec_id") != F.col("query_id")))
-    cos = cosine_expr(F.col("q_emb"), F.col("embedding"))
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id"))
-    return (pairs.select("query_id", "vec_id", cos.alias("cosine"))
-            .filter(F.col("cosine").isNotNull() & ~F.isnan("cosine"))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .withColumn("cosine", F.round("cosine", 6)))
-
-
 def ivf_index_probe(spark, index_dir: str, cmat, emb: DataFrame,
                     query_pred, k: int = 5,
                     n_probe: int = 4) -> DataFrame:
@@ -737,12 +690,11 @@ def ivf_index_probe(spark, index_dir: str, cmat, emb: DataFrame,
     # probe matrix — collecting it back out of the probe FRAME ran a
     # 32-task distinct+collect per probe (r14: 9.3 s of blocked
     # executor runtime for 0.38 s CPU, the pickled-RDD scan cost).
-    q_rows, probe = _probe_arrays(emb, query_pred, cmat, n_probe)
-    probe_df = _probe_frame(spark, q_rows, probe)
-    cells = sorted({int(c) for c in probe.ravel()})
+    probe_df, cells = _probe_driver(emb, query_pred, cmat, n_probe)
     index = (spark.read.parquet(index_dir)
              .filter(F.col("cell").isin(cells)))
-    return _ivf_rank(index, F.broadcast(probe_df), k)
+    return _rescore_topk(
+        _join_pairs(index, F.broadcast(probe_df), "cell"), k)
 
 
 def ivf_topk(emb: DataFrame, query_pred, k: int = 5,
@@ -779,7 +731,8 @@ def ivf_topk(emb: DataFrame, query_pred, k: int = 5,
     cmat = ivf_centroids(emb, n_cells, quantizer, sample_cap)
     cands = ivf_assign(emb, cmat)
     probe_df = ivf_probe_df(emb, query_pred, cmat, n_probe)
-    return _ivf_rank(cands, F.broadcast(probe_df), k)
+    return _rescore_topk(
+        _join_pairs(cands, F.broadcast(probe_df), "cell"), k)
 
 
 def ivf_probe_cells_distributed(queries: DataFrame, cmat,
@@ -790,26 +743,25 @@ def ivf_probe_cells_distributed(queries: DataFrame, cmat,
     (dim x n_cells floats, metadata-sized) is broadcast and each
     query partition assigns its own probe cells in one Arrow pass.
 
-    The per-row arithmetic is the same numpy expression the collect
-    path runs driver-side (``argsort(-(q @ C.T))[:n_probe]``), and
-    probe-cell choice is row-local, so batching cannot change it —
+    The per-row arithmetic is the numpy expression the collect
+    path runs driver-side (:func:`_probe_cells`), and probe-cell
+    choice is row-local, so batching cannot change it —
     the two paths emit the identical probe relation (differential-
     tested in tests/test_operators.py and the x114 registry row)."""
+    ship_package(queries.sparkSession)  # _probe_cells runs worker-side
     b_cent = queries.sparkSession.sparkContext.broadcast(cmat)
     out_schema = "query_id long, q_emb array<float>, cell int"
 
     def _probe(batches):
         import numpy as np
         import pandas as pd
-        C = b_cent.value
         npr = n_probe
         for pdf in batches:
             if not len(pdf):          # empty Arrow batch (r9, ADVICE)
                 continue
-            qm = np.array(list(pdf["embedding"]), dtype=np.float64)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                qm /= np.linalg.norm(qm, axis=1, keepdims=True)
-            cells = np.argsort(-(qm @ C.T), axis=1)[:, :npr]
+            cells = _probe_cells(
+                np.array(list(pdf["embedding"]), dtype=np.float64),
+                b_cent.value, npr)
             n = len(pdf)
             yield pd.DataFrame({
                 "query_id": pdf["vec_id"].to_numpy().repeat(npr),
@@ -849,7 +801,7 @@ def ivf_batch_topk(emb: DataFrame, query_pred, k: int = 5,
     cands = ivf_assign(emb, cmat)
     probe_df = ivf_probe_cells_distributed(emb.filter(query_pred),
                                            cmat, n_probe)
-    return _ivf_rank(cands, probe_df, k)
+    return _rescore_topk(_join_pairs(cands, probe_df, "cell"), k)
 
 
 def ivf_index_probe_distributed(spark, index_dir: str, cmat,
@@ -868,7 +820,7 @@ def ivf_index_probe_distributed(spark, index_dir: str, cmat,
                    probe_df.select("cell").distinct().collect())
     index = (spark.read.parquet(index_dir)
              .filter(F.col("cell").isin(cells)))
-    return _ivf_rank(index, probe_df, k)
+    return _rescore_topk(_join_pairs(index, probe_df, "cell"), k)
 
 
 def _pq_codebooks(sample_mat, m: int = 8, ksub: int = 16,
@@ -944,14 +896,8 @@ def pq_topk(emb: DataFrame, query_pred, k: int = 5,
     floor 0.8 (`queries/llm.py l7_topk_pq`), at 16x compression
     instead of r4's 32x — the documented memory trade-off."""
     import numpy as np
-    sample_rows = (emb.select("vec_id", "embedding")
-                   .orderBy(F.xxhash64(F.col("vec_id")))
-                   .limit(sample_cap).collect())
-    smat = np.array([r["embedding"] for r in sample_rows], dtype=np.float64)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        smat /= np.linalg.norm(smat, axis=1, keepdims=True)
-    smat = smat[~np.isnan(smat).any(axis=1)]
-    books = _pq_codebooks(smat, m=m, ksub=ksub)          # (m, ksub, dsub)
+    books = _pq_codebooks(_unit_sample(emb, sample_cap),
+                          m=m, ksub=ksub)                # (m, ksub, dsub)
     spark = emb.sparkSession
     b_books = spark.sparkContext.broadcast(books)
 
@@ -959,9 +905,8 @@ def pq_topk(emb: DataFrame, query_pred, k: int = 5,
     if not q_rows:
         raise ValueError("query predicate selected no vectors")
     q_ids = np.asarray([r["vec_id"] for r in q_rows])
-    qmat = np.array([r["embedding"] for r in q_rows], dtype=np.float64)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        qmat /= np.linalg.norm(qmat, axis=1, keepdims=True)
+    qmat = _unit(np.array([r["embedding"] for r in q_rows],
+                          dtype=np.float64))
     b_qids = spark.sparkContext.broadcast(q_ids)
     b_qmat = spark.sparkContext.broadcast(qmat)
 
@@ -1015,14 +960,7 @@ def pq_topk(emb: DataFrame, query_pred, k: int = 5,
     pairs = (cand.join(raw, "vec_id")
              .join(F.broadcast(q_df), "query_id")
              .filter((F.col("c_norm") > 0) & ~F.isnan("c_norm")))
-    cos = cosine_expr(F.col("q_emb"), F.col("embedding"))
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id"))
-    return (pairs.select("query_id", "vec_id", cos.alias("cosine"))
-            .filter(F.col("cosine").isNotNull() & ~F.isnan("cosine"))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .withColumn("cosine", F.round("cosine", 6)))
+    return _rescore_topk(pairs, k)
 
 
 N_PLANES = 8
@@ -1087,13 +1025,5 @@ def lsh_topk(emb: DataFrame, query_pred, k: int = 5,
         F.col("embedding").alias("q_emb"),
         F.col("bucket"))
     cands = with_b.select("vec_id", "embedding", "bucket")
-    pairs = (cands.join(F.broadcast(queries), "bucket")
-             .filter(F.col("vec_id") != F.col("query_id")))
-    cos = cosine_expr(F.col("q_emb"), F.col("embedding"))
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id"))
-    return (pairs.select("query_id", "vec_id", cos.alias("cosine"))
-            .filter(F.col("cosine").isNotNull() & ~F.isnan("cosine"))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .withColumn("cosine", F.round("cosine", 6)))
+    return _rescore_topk(
+        _join_pairs(cands, F.broadcast(queries), "bucket"), k)

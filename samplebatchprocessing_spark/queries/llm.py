@@ -5360,25 +5360,14 @@ def x126_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_corpus = cands.count()
     n_queries = emb.filter(pred).count()
     floors = {1: 0.02, 2: 0.10, 4: 0.30, 8: 0.45, 16: 1.0}
-    from ..operators.similarity import cosine_expr
     rows, recalls = [], {}
     for np_ in (1, 2, 4, 8, 16):
         probe = similarity.ivf_probe_df(emb, pred, cmat, np_)
-        pairs = (cands.join(F.broadcast(probe), "cell")
-                 .filter(F.col("vec_id") != F.col("query_id"))
+        pairs = (similarity._join_pairs(cands, F.broadcast(probe), "cell")
                  .localCheckpoint(eager=True))
         scanned = pairs.count()
-        w_ = W.partitionBy("query_id").orderBy(
-            F.col("cosine").desc(), F.col("vec_id"))
-        got = {(r["query_id"], r["vec_id"]) for r in
-               pairs.select("query_id", "vec_id",
-                            cosine_expr(F.col("q_emb"),
-                                        F.col("embedding"))
-                            .alias("cosine"))
-               .filter(F.col("cosine").isNotNull()
-                       & ~F.isnan("cosine"))
-               .withColumn("rank", F.row_number().over(w_))
-               .filter(F.col("rank") <= 5).collect()}
+        got = {(r["query_id"], r["vec_id"])
+               for r in similarity._rescore_topk(pairs, 5).collect()}
         recalls[np_] = len(truth & got) / len(truth)
         rows.append((np_, n_queries,
                      recalls[np_] >= floors[np_],

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import itertools
 import os
 import sys
 
@@ -21,6 +22,11 @@ def spark():
     yield s
 
 
+# one counter per session: the status store keeps finished jobs, so a
+# group name reused by a later test would count the earlier test's jobs
+_JOB_GROUPS = itertools.count()
+
+
 @pytest.fixture()
 def spark_jobs(spark):
     """``spark_jobs(fn)`` -> ``(fn(), n)``: runs ``fn`` under a Spark
@@ -28,12 +34,10 @@ def spark_jobs(spark):
     status tracker, as perfbench/trace.py ``Tracer`` counts a span's.
     The job budget of a call is an upper bound on ``n``: job counts on
     a fixed input do not move with host load, wall time does."""
-    import itertools
     sc = spark.sparkContext
-    groups = itertools.count()
 
     def run(fn):
-        group = f"test-jobs-{next(groups)}"
+        group = f"test-jobs-{next(_JOB_GROUPS)}"
         sc.setJobGroup(group, group)
         try:
             out = fn()

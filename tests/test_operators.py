@@ -529,6 +529,14 @@ def test_zero_norm_vectors_dropped_consistently(spark):
     assert exact == fast
     assert 2 not in exact.values(), "zero-norm vector must be dropped"
     assert set(exact.values()) == {1, 3, 4}
+    # the IVF quantizers skip it too: k-means must not raise on its
+    # NaN sample row, and "first" must not take it as a centroid (a
+    # NaN centroid wins every argmax, so queries found nothing)
+    km = similarity.ivf_topk(emb, pred, k=3).collect()
+    first = similarity.ivf_topk(emb, pred, k=3, quantizer="first",
+                                n_cells=3, n_probe=2).collect()
+    assert first, "query 0 must find its probed cells' vectors"
+    assert 2 not in {r["vec_id"] for r in km + first}
 
 
 def test_paragraph_dedup_no_repeated_chunks(spark, sf_smoke):
@@ -1167,6 +1175,51 @@ def test_bnl_topk_rejects_empty_query_set(spark):
         bnl_topk(emb, F.col("vec_id") < 0)
 
 
+def test_similarity_job_budgets(spark, tmp_path, spark_jobs):
+    """Spark jobs per similarity call, each with its ``collect``, on a
+    fixed 4,000-vector corpus, pinned as upper bounds (the most seen
+    in 5 fresh sessions).  ``ivf_index_probe`` runs in perfbench's
+    serving shape: 8 ``local_df`` queries under ``F.lit(True)``, a
+    16-cell index, ``n_probe=4``.  An added action on any of these
+    paths fails here.  A change that cuts jobs lowers its bound."""
+    import numpy as np
+
+    from samplebatchprocessing_spark.exprs import local_df
+    rng = np.random.default_rng(3)
+    schema = "vec_id long, embedding array<float>"
+    path = str(tmp_path / "emb.parquet")
+    local_df(spark, [(i, v.tolist()) for i, v in enumerate(
+        rng.standard_normal((4000, 64)).astype(np.float32))],
+        schema).write.parquet(path)
+    emb = spark.read.parquet(path)
+    idx = str(tmp_path / "idx")
+    cmat = similarity.ivf_index_write(emb, idx, n_cells=16)
+    qs = local_df(spark, [(-(j + 1), v.tolist()) for j, v in enumerate(
+        rng.standard_normal((8, 64)).astype(np.float32))], schema)
+    pred = F.col("vec_id") % 500 == 0
+    S = similarity
+    calls = {
+        "ivf_index_probe": (4, lambda: S.ivf_index_probe(
+            spark, idx, cmat, qs, F.lit(True), k=10, n_probe=4)),
+        "cosine_topk": (3, lambda: S.cosine_topk(emb, pred)),
+        "brute_force_topk_numpy": (3, lambda: S.brute_force_topk_numpy(
+            emb, pred)),
+        "bnl_topk": (7, lambda: S.bnl_topk(emb, pred)),
+        "lsh_topk": (3, lambda: S.lsh_topk(emb, pred)),
+        "ivf_topk": (5, lambda: S.ivf_topk(emb, pred)),
+        "ivf_batch_topk": (4, lambda: S.ivf_batch_topk(emb, pred)),
+        "ivf_index_probe_distributed": (7, lambda: (
+            S.ivf_index_probe_distributed(spark, idx, cmat,
+                                          emb.filter(pred)))),
+    }
+    seen = {}
+    for name, (_, call) in calls.items():
+        rows, seen[name] = spark_jobs(lambda: call().collect())
+        assert rows, name
+    assert all(seen[n] <= b for n, (b, _) in calls.items()), \
+        f"jobs per call: {seen}"
+
+
 def test_postings_append_merges_into_frozen_buckets(spark, tmp_path):
     """X121 writer/appender contract on a hand corpus: after a delta
     append, the merged index serves (a) terms spanning base and
@@ -1480,7 +1533,8 @@ def test_local_df_decimal_binary_roundtrip(spark):
 def test_multiset_diff_and_count_matches_exceptall(spark):
     """r15: the one-action parity compare must equal the exceptAll
     idiom exactly — on multisets (duplicate rows), NULL keys (which
-    exceptAll treats as equal), equal inputs, and empty inputs."""
+    exceptAll treats as equal), equal inputs, empty inputs, and two
+    inputs that share lineage (a self-join of one plan)."""
     from samplebatchprocessing_spark.exprs import multiset_diff_and_count
 
     schema = "k int, v string"
@@ -1491,10 +1545,13 @@ def test_multiset_diff_and_count_matches_exceptall(spark):
         ([(1, "a")], []),
         ([], []),
     ]
-    for rows_a, rows_b in cases:
-        a = spark.createDataFrame(rows_a, schema)
-        b = spark.createDataFrame(rows_b, schema)
+    pairs = [(spark.createDataFrame(rows_a, schema),
+              spark.createDataFrame(rows_b, schema))
+             for rows_a, rows_b in cases]
+    shared = spark.createDataFrame(cases[0][0], schema)
+    pairs.append((shared, shared.filter(F.col("k") == 1)))
+    for a, b in pairs:
         expect = (a.exceptAll(b).count() + b.exceptAll(a).count(),
                   a.count())
-        assert multiset_diff_and_count(a, b) == expect, (rows_a,
-                                                         rows_b)
+        assert multiset_diff_and_count(a, b) == expect, (a.collect(),
+                                                         b.collect())

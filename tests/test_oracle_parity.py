@@ -15,12 +15,19 @@ from samplebatchprocessing_spark.queries import registry
 REG = registry()
 ORACLE_QUERIES = sorted(n for n, (_, sql) in REG.items() if sql is not None)
 NO_ORACLE = sorted(n for n, (_, sql) in REG.items() if sql is None)
+# name -> output schema of the frame test_oracle_parity built, so
+# test_driver_canonicalizable reads it instead of running the builder
+# again (eager rows execute on build).  Schemas only: some frames pin
+# localCheckpoints, so no DataFrame is kept alive.
+_SCHEMAS = {}
 
 
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
 def test_oracle_parity(spark, sf_oracle, name):
     fn, sql = REG[name]
-    report = compare(fn(spark, sf_oracle), sql, sf_oracle)
+    df = fn(spark, sf_oracle)
+    _SCHEMAS[name] = df.schema
+    report = compare(df, sql, sf_oracle)
     assert report["ok"], f"{name}: {report}"
 
 
@@ -41,7 +48,7 @@ def test_driver_canonicalizable(spark, sf_oracle, name):
     be scalar — arrays/maps/structs must be to_json'd."""
     from pyspark.sql import types as T
     fn, _ = REG[name]
-    schema = fn(spark, sf_oracle).schema
+    schema = _SCHEMAS.get(name) or fn(spark, sf_oracle).schema
     bad = [f.name for f in schema.fields
            if isinstance(f.dataType, (T.ArrayType, T.MapType, T.StructType))]
     assert not bad, f"{name}: non-scalar output columns {bad}"
