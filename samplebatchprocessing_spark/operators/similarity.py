@@ -456,7 +456,11 @@ def _kmeans_centroids(vecs, n_cells: int, n_iter: int = 8,
     """Seeded spherical k-means on a driver-side SAMPLE (numpy).
     k-means++ init, then Lloyd iterations with cosine assignment and
     renormalized mean updates; empty cells keep their old centroid.
-    Deterministic for a fixed sample (:func:`_unit_sample`) + seed."""
+    Seeding stops once every sample row is a centroid, so a sample
+    with fewer distinct directions than ``n_cells`` yields fewer
+    centroids (a repeated one would own an empty cell that a probe
+    could pick).  Deterministic for a fixed sample
+    (:func:`_unit_sample`) + seed."""
     import numpy as np
     rng = np.random.default_rng(seed)
     cents = [vecs[int(rng.integers(len(vecs)))]]
@@ -464,13 +468,12 @@ def _kmeans_centroids(vecs, n_cells: int, n_iter: int = 8,
         C = np.array(cents)
         d2 = np.min(((vecs[:, None, :] - C[None]) ** 2).sum(-1), axis=1)
         if d2.sum() == 0:
-            cents.append(vecs[int(rng.integers(len(vecs)))])
-            continue
+            break
         cents.append(vecs[int(rng.choice(len(vecs), p=d2 / d2.sum()))])
     C = np.array(cents)
     for _ in range(n_iter):                    # Lloyd, cosine metric
         assign = (vecs @ C.T).argmax(axis=1)
-        for c in range(n_cells):
+        for c in range(len(C)):
             members = vecs[assign == c]
             if len(members):
                 m = members.mean(axis=0)

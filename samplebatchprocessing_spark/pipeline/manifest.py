@@ -37,6 +37,10 @@ Spark mapping:
   through `run_pipeline`, append their commit-log rows; the daemon
   (`watch_daemon`) runs that drain every poll on the
   `maintenance_daemon` loop (GetJobs.py:21-40)
+- queue state               -> the commit log, one declared on-disk
+  schema (`_LOG_TABLE_SCHEMA`): every read of it and of the quarantine
+  ledger passes its schema, so no read infers one, and a part written
+  before a column reads that column as null
 """
 
 from __future__ import annotations
@@ -47,7 +51,6 @@ from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 MANIFEST_SCHEMA = ("action string, bucket string, in_prefix string, "
                    "out_prefix string, file_name string")
@@ -179,6 +182,9 @@ def run_pipeline(spark: SparkSession, manifest: DataFrame,
 
 LOG_SCHEMA = ("file_name string, in_bytes long, out_bytes long, "
               "out_path string, ok boolean, error string")
+# the commit log on disk: LOG_SCHEMA plus the drain's tags
+_LOG_TABLE_SCHEMA = (LOG_SCHEMA
+                     + ", run_seq double, batch_id long, checkpoint string")
 
 
 def _split_scheme(uri: str) -> tuple[str, str]:
@@ -714,8 +720,8 @@ def watch_prefix(spark: SparkSession, bucket_dir: str,
     attempts accumulate); every spelling of a path is one name.  Task
     retry + idempotent output keys == visibility-timeout redelivery
     (README.md:44-47).  Log rows written before the ``checkpoint``
-    column belong to no name, so the first drain after an upgrade
-    redelivers their files once, harmlessly.
+    column read it as null and belong to no name, so the first drain
+    after an upgrade redelivers their files once, harmlessly.
     """
     _drainer(spark, bucket_dir, in_prefix, out_prefix, transform,
              command, ext, commit, checkpoint, store)()
@@ -784,12 +790,10 @@ def _drainer(spark: SparkSession, bucket_dir: str, in_prefix: str,
     def drain() -> int:
         nonlocal done
         if done is None:
-            # a given schema skips the inference job; parts older than
-            # the ``checkpoint`` column read it as null: no name
-            log = _read_parts(spark, log_dir,
-                              "file_name string, checkpoint string")
+            log = _read_log(spark, log_dir)
             done = set() if log is None else {r[0] for r in log.filter(
-                F.col("checkpoint") == checkpoint).collect()}
+                F.col("checkpoint") == checkpoint)
+                .select("file_name").collect()}
         manifest = build_manifest(spark, bucket_dir, in_prefix, out_prefix)
         # the file index's listing, no job; URI-encoded, unlike names
         listed = {unquote(p.rsplit("/", 1)[-1])
@@ -813,12 +817,13 @@ def _drainer(spark: SparkSession, bucket_dir: str, in_prefix: str,
 
 
 def _read_parts(spark: SparkSession, table_dir: str,
-                schema: str | StructType | None = None
-                ) -> DataFrame | None:
-    """A Spark-written table (commit log, quarantine ledger), or None
-    while it holds no committed part file.  The read passes the part
-    files, not the ``_``-prefixed directory that Spark's file index
-    WARNs about as hidden, while Spark lists them on the driver
+                schema: str) -> DataFrame | None:
+    """A Spark-written table (commit log, quarantine ledger) read in
+    its declared ``schema``, so no read infers one and a column a part
+    lacks reads as null; None while it holds no committed part file.
+    The read passes the part files, not the ``_``-prefixed directory
+    that Spark's file index WARNs about as hidden, while Spark lists
+    them on the driver
     (``spark.sql.sources.parallelPartitionDiscovery.threshold``, 32
     by default); past that it would list them with a job of one task
     per file, so one listing of the directory (and the WARN) is the
@@ -828,7 +833,7 @@ def _read_parts(spark: SparkSession, table_dir: str,
              .globStatus(glob)) or []           # null: no directory
     if not len(found):
         return None
-    reader = spark.read.schema(schema) if schema else spark.read
+    reader = spark.read.schema(schema)
     if len(found) > int(spark.conf.get(
             "spark.sql.sources.parallelPartitionDiscovery.threshold")):
         return reader.parquet(table_dir)
@@ -838,16 +843,8 @@ def _read_parts(spark: SparkSession, table_dir: str,
 def _read_log(spark: SparkSession, log_dir: str) -> DataFrame | None:
     """The on-disk commit log, or None while it holds no part file:
     never written, or its first append was interrupted (kill, crash)
-    before the commit and left only ``_temporary/``.  Rows from part
-    files written before the ``error`` column read it as null (and
-    ``checkpoint``, when the schema came from a newer part)."""
-    full = _read_parts(spark, log_dir)
-    if full is None or "error" in full.columns:
-        return full
-    # the schema came from a part file older than the ``error``
-    # column: read it as null there, and as written in newer parts
-    return _read_parts(spark, log_dir, StructType(full.schema.fields)
-                       .add("error", "string"))
+    before the commit and left only ``_temporary/``."""
+    return _read_parts(spark, log_dir, _LOG_TABLE_SCHEMA)
 
 
 def commit_log(spark: SparkSession, bucket_dir: str,
@@ -856,15 +853,17 @@ def commit_log(spark: SparkSession, bucket_dir: str,
     the NEWEST row per file (a file that failed under an old
     checkpoint and succeeded after a fresh one must not surface both
     its ok=false and ok=true rows).  The on-disk log keeps history.
-    ``log_dir`` overrides the default location (same seam as
-    :func:`quarantine_ledger`: an object-store bucket keeps its
-    Spark-written control tables on a Spark-readable filesystem)."""
+    Rows older than the ``run_seq``/``batch_id`` tags read them as
+    null and lose to any tagged row; among one file's untagged rows an
+    ok row wins, so a log written wholly before the tags dedupes to
+    one row per file too.  ``log_dir`` overrides the default location
+    (same seam as :func:`quarantine_ledger`: an object-store bucket
+    keeps its Spark-written control tables on a Spark-readable
+    filesystem)."""
     full = _read_log(spark,
                      log_dir or os.path.join(bucket_dir, "_commit_log"))
     if full is None:                    # nothing ever committed
         return spark.createDataFrame([], LOG_SCHEMA)
-    if "run_seq" not in full.columns:   # pre-tagging log on disk
-        return full
     w = (W.partitionBy("file_name")
          .orderBy(F.col("run_seq").desc(), F.col("batch_id").desc(),
                   F.col("ok").desc()))
@@ -888,7 +887,7 @@ def quarantine_ledger(spark: SparkSession, bucket_dir: str,
     has no Hadoop object-store connector, so tests pass a local
     path)."""
     ledger = _read_parts(spark, ledger_dir or os.path.join(
-        bucket_dir, "_quarantine_ledger"))
+        bucket_dir, "_quarantine_ledger"), LEDGER_SCHEMA)
     if ledger is None:
         return spark.createDataFrame([], LEDGER_SCHEMA)
     return ledger
@@ -941,12 +940,9 @@ def quarantine_sweep(spark: SparkSession, bucket_dir: str,
     ledger row (a previous sweep died between move and append) gets
     its row backfilled from the commit-log stats.
 
-    A legacy pre-tagging log (no run_seq/batch_id columns — the same
-    on-disk shape :func:`commit_log` guards for) falls back to
-    "newest" = EVER SUCCEEDED: with no ordering columns the sweep
-    cannot know which row is last, so only files with zero ok rows
-    qualify — strictly conservative (never quarantines a file a
-    tagged log would keep).
+    Rows older than the ``run_seq``/``batch_id`` tags order before
+    every tagged row, so among them "newest" means EVER SUCCEEDED
+    (strictly conservative).
 
     Returns the cumulative ledger (LEDGER_SCHEMA).  Idempotent: a
     swept-and-ledgered file's input object is gone and its ledger row
@@ -964,10 +960,8 @@ def quarantine_sweep(spark: SparkSession, bucket_dir: str,
     full = _read_log(spark, log_dir)
     if full is None:
         return quarantine_ledger(spark, bucket_dir, ledger_dir)
-    if "run_seq" in full.columns:
-        newest_ok = F.max(F.struct("run_seq", "batch_id", "ok"))["ok"]
-    else:                               # legacy pre-tagging log
-        newest_ok = F.max(F.col("ok"))  # ever succeeded -> keep
+    # null tags order first: an untagged row loses to a tagged one
+    newest_ok = F.max(F.struct("run_seq", "batch_id", "ok"))["ok"]
     stats = (full.groupBy("file_name")
              .agg(F.sum(F.when(~F.col("ok"), 1).otherwise(0))
                   .alias("n_failures"), newest_ok.alias("_ok"))

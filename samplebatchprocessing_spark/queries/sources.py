@@ -2,11 +2,12 @@
 through CSV/JSON/parquet sinks, partitioned writes, and the
 reference-semantics manifest pipeline.
 
-Roundtrip queries materialize under /tmp/sbp_work/<name>/ (unique per
-scale factor), then aggregate the re-read data; the oracle aggregates
-the original views — equality proves the sink+source preserved
-values.  Double columns survive text roundtrips because Spark writes
-shortest-repr doubles (guaranteed re-parse identity).
+Roundtrip queries materialize under ``sbp_work_<uid>/<name>_<sf hash>/``
+in the per-user 0700 tempdir (``session.private_tmpdir``), then
+aggregate the re-read data; the oracle aggregates the original views
+— equality proves the sink+source preserved values.  Double columns
+survive text roundtrips because Spark writes shortest-repr doubles
+(guaranteed re-parse identity).
 """
 
 from __future__ import annotations
@@ -20,13 +21,12 @@ from pyspark.sql import types as T
 
 from ..catalog import load_table
 from ..exprs import bounded_part, sql_dsum, dsum
-
-_WORK = "/tmp/sbp_work"
+from ..session import private_tmpdir
 
 
 def _work_dir(sf_dir: str, name: str) -> str:
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    return os.path.join(_WORK, f"{name}_{tag}")
+    return os.path.join(private_tmpdir("sbp_work"), f"{name}_{tag}")
 
 
 def _copy_if_changed(src: str, dst: str) -> None:
@@ -343,8 +343,8 @@ def p20_poison_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob
     import shutil
 
-    from ..pipeline.manifest import (commit_log, quarantine_sweep,
-                                     watch_prefix)
+    from ..pipeline.manifest import (_read_log, commit_log,
+                                     quarantine_sweep, watch_prefix)
 
     bucket = _work_dir(sf_dir, "p20_poison")
     if os.path.exists(bucket):          # deterministic re-run
@@ -366,17 +366,14 @@ def p20_poison_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
                      checkpoint=os.path.join(bucket, f"_ckpt{attempt}"))
     ledger = quarantine_sweep(spark, bucket, max_attempts=3)
     n_ledger = ledger.count()
-    fails_before = (spark.read.parquet(
-        os.path.join(bucket, "_commit_log"))
-        .filter(~F.col("ok")).count())
+    log_dir = os.path.join(bucket, "_commit_log")
+    fails_before = _read_log(spark, log_dir).filter(~F.col("ok")).count()
     watch_prefix(spark, bucket, transform=guard,
                  checkpoint=os.path.join(bucket, "_ckpt4"))
-    fails_after = (spark.read.parquet(
-        os.path.join(bucket, "_commit_log"))
-        .filter(~F.col("ok")).count())
+    fails_after = _read_log(spark, log_dir).filter(~F.col("ok")).count()
     n_ledger2 = quarantine_sweep(spark, bucket, max_attempts=3).count()
 
-    history = spark.read.parquet(os.path.join(bucket, "_commit_log"))
+    history = _read_log(spark, log_dir)
     n_fail = (history.groupBy("file_name")
               .agg(F.sum(F.when(~F.col("ok"), 1).otherwise(0))
                    .alias("n_failures")))
@@ -440,8 +437,9 @@ def p21_object_store_quarantine(spark: SparkSession,
 
     from ..exprs import local_df
     from ..pipeline.manifest import (MANIFEST_SCHEMA,
-                                     LocalObjectStoreClient, commit_log,
-                                     quarantine_sweep, run_pipeline)
+                                     LocalObjectStoreClient, _read_log,
+                                     commit_log, quarantine_sweep,
+                                     run_pipeline)
     from ..session import ship_package
     ship_package(spark)   # store class unpickles in the Python worker
 
@@ -493,16 +491,14 @@ def p21_object_store_quarantine(spark: SparkSession,
 
     # 4th delivery over what the STORE says is still in input/
     alive = sorted(k.rsplit("/", 1)[-1] for k in in_keys)
-    fails_before = (spark.read.parquet(log_dir)
-                    .filter(~F.col("ok")).count())
+    fails_before = _read_log(spark, log_dir).filter(~F.col("ok")).count()
     deliver(jobs.filter(F.col("file_name").isin(alive)), 4.0)
-    fails_after = (spark.read.parquet(log_dir)
-                   .filter(~F.col("ok")).count())
+    fails_after = _read_log(spark, log_dir).filter(~F.col("ok")).count()
     n_ledger2 = quarantine_sweep(spark, bucket, store=store,
                                  log_dir=log_dir, ledger_dir=ledger_dir,
                                  max_attempts=3).count()
 
-    history = spark.read.parquet(log_dir)
+    history = _read_log(spark, log_dir)
     n_fail = (history.groupBy("file_name")
               .agg(F.sum(F.when(~F.col("ok"), 1).otherwise(0))
                    .alias("n_failures")))

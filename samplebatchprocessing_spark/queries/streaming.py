@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..exprs import DEC, dsum, local_df, sql_dsum
-from ..streaming.jobs import events_stream, run_available_now
+from ..streaming.jobs import _stage_root, events_stream, run_available_now
 
 _HOUR_US = 3600 * 1_000_000
 _HALF_US = 1800 * 1_000_000
@@ -298,8 +298,8 @@ def s8_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    sink = f"/tmp/sbp_stream/s8_sink_{tag}"
-    ckpt = f"/tmp/sbp_stream/s8_ckpt_{tag}"
+    sink = os.path.join(_stage_root(), f"s8_sink_{tag}")
+    ckpt = os.path.join(_stage_root(), f"s8_ckpt_{tag}")
     shutil.rmtree(sink, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
 
@@ -709,8 +709,8 @@ def s21_stream_incremental_mv(spark: SparkSession,
 
     from ..streaming.jobs import documents_stream
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    sink = f"/tmp/sbp_stream/s21_mv_{tag}"
-    ckpt = f"/tmp/sbp_stream/s21_ckpt_{tag}"
+    sink = os.path.join(_stage_root(), f"s21_mv_{tag}")
+    ckpt = os.path.join(_stage_root(), f"s21_ckpt_{tag}")
     shutil.rmtree(sink, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
 
@@ -931,8 +931,8 @@ def s24_stream_postings_merge(spark: SparkSession,
     text.postings_index_write(doc.filter(~is_delta), idx)
 
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    delta_dir = f"/tmp/sbp_stream/s24_delta_{tag}"
-    ckpt = f"/tmp/sbp_stream/s24_ckpt_{tag}"
+    delta_dir = os.path.join(_stage_root(), f"s24_delta_{tag}")
+    ckpt = os.path.join(_stage_root(), f"s24_ckpt_{tag}")
     shutil.rmtree(delta_dir, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
 
@@ -1109,8 +1109,8 @@ def s26_stream_lsh_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup.lsh_index_write(doc.filter(~is_batch), idx)
 
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    out_dir = f"/tmp/sbp_stream/s26_cand_{tag}"
-    ckpt = f"/tmp/sbp_stream/s26_ckpt_{tag}"
+    out_dir = os.path.join(_stage_root(), f"s26_cand_{tag}")
+    ckpt = os.path.join(_stage_root(), f"s26_ckpt_{tag}")
     shutil.rmtree(out_dir, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
 
@@ -1204,8 +1204,8 @@ def s27_stream_vocab_encode(spark: SparkSession,
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
 
     def run_phase(phase: int, residue: int) -> DataFrame:
-        out_dir = f"/tmp/sbp_stream/s27_enc{phase}_{tag}"
-        ckpt = f"/tmp/sbp_stream/s27_ckpt{phase}_{tag}"
+        out_dir = os.path.join(_stage_root(), f"s27_enc{phase}_{tag}")
+        ckpt = os.path.join(_stage_root(), f"s27_ckpt{phase}_{tag}")
         shutil.rmtree(out_dir, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
         sdf = (documents_stream(spark, sf_dir, tag=f"vocabenc{phase}")

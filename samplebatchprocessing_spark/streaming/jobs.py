@@ -21,7 +21,14 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_STAGE = "/tmp/sbp_stream"
+from ..session import private_tmpdir
+
+
+def _stage_root() -> str:
+    """Where streaming scratch lives (staged sources, sinks,
+    checkpoints): ``sbp_stream_<uid>`` in the per-user 0700 tempdir,
+    resolved per call."""
+    return private_tmpdir("sbp_stream")
 
 
 def stage_table_dir(spark: SparkSession, sf_dir: str, table: str,
@@ -43,22 +50,17 @@ def stage_table_dir(spark: SparkSession, sf_dir: str, table: str,
     vh = hashlib.md5(f"{sf_dir}|{copies}|{tag}".encode()).hexdigest()[:8]
     sh = hashlib.md5(f"{st.st_mtime_ns}|{st.st_size}"
                      .encode()).hexdigest()[:8]
-    d = os.path.join(_STAGE, f"{table}_{vh}_{sh}")
+    root = _stage_root()
+    d = os.path.join(root, f"{table}_{vh}_{sh}")
     marker = os.path.join(d, "_STAGED")
     if not os.path.exists(marker):
         # GC superseded generations of THIS variant (ADVICE r4: a
         # fixture regen used to leave the previous generation's full
-        # parquet copy behind, unbounded across rounds), plus any
-        # single-hash dirs from the pre-r5 naming scheme.
-        if os.path.isdir(_STAGE):
-            for sib in os.listdir(_STAGE):
-                stale_variant = (sib.startswith(f"{table}_{vh}_")
-                                 and sib != f"{table}_{vh}_{sh}")
-                legacy = (sib.startswith(f"{table}_")
-                          and sib.count("_") == table.count("_") + 1)
-                if stale_variant or legacy:
-                    shutil.rmtree(os.path.join(_STAGE, sib),
-                                  ignore_errors=True)
+        # parquet copy behind, unbounded across rounds).
+        for sib in os.listdir(root):
+            if (sib.startswith(f"{table}_{vh}_")
+                    and sib != f"{table}_{vh}_{sh}"):
+                shutil.rmtree(os.path.join(root, sib), ignore_errors=True)
         shutil.rmtree(d, ignore_errors=True)
         os.makedirs(d)
         for i in range(copies):

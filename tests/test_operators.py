@@ -536,6 +536,9 @@ def test_zero_norm_vectors_dropped_consistently(spark):
     first = similarity.ivf_topk(emb, pred, k=3, quantizer="first",
                                 n_cells=3, n_probe=2).collect()
     assert first, "query 0 must find its probed cells' vectors"
+    # 4 directions for 16 cells: k-means must not pad with repeated
+    # centroids whose empty cells a probe could pick
+    assert km, "k-means: query 0 must find its probed cells' vectors"
     assert 2 not in {r["vec_id"] for r in km + first}
 
 
@@ -1211,6 +1214,36 @@ def test_similarity_job_budgets(spark, tmp_path, spark_jobs):
         "ivf_index_probe_distributed": (7, lambda: (
             S.ivf_index_probe_distributed(spark, idx, cmat,
                                           emb.filter(pred)))),
+    }
+    seen = {}
+    for name, (_, call) in calls.items():
+        rows, seen[name] = spark_jobs(lambda: call().collect())
+        assert rows, name
+    assert all(seen[n] <= b for n, (b, _) in calls.items()), \
+        f"jobs per call: {seen}"
+
+
+def test_curation_job_budgets(spark, sf_smoke, tmp_path, spark_jobs):
+    """Spark jobs per batch curation call on ``documents``, each with
+    its ``collect``, pinned as upper bounds (the most seen in 5 fresh
+    sessions): the calls of perfbench's curation job.
+    ``dedup_clusters`` runs on the LSH pairs read back from parquet,
+    as there.  An added action on any of these paths fails here.  A
+    change that cuts jobs lowers its bound."""
+    from samplebatchprocessing_spark.operators import curation, text
+    doc = load_table(spark, sf_smoke, "documents")
+    pairs_dir = str(tmp_path / "pairs")
+    dedup.ngram_jaccard_pairs(doc, method="lsh").write.parquet(pairs_dir)
+    pairs = spark.read.parquet(pairs_dir)
+    calls = {
+        "exact_dedup": (2, lambda: dedup.exact_dedup(doc)),
+        "ngram_jaccard_pairs": (6, lambda: dedup.ngram_jaccard_pairs(
+            doc, method="lsh")),
+        "dedup_clusters": (26, lambda: dedup.dedup_clusters(pairs)),
+        "gopher_row_flags": (1, lambda: curation.gopher_row_flags(doc)),
+        "gopher_rules": (2, lambda: curation.gopher_rules(doc)),
+        "c4_rules": (2, lambda: curation.c4_rules(doc)),
+        "tfidf": (6, lambda: text.tfidf(doc)),
     }
     seen = {}
     for name, (_, call) in calls.items():

@@ -98,7 +98,8 @@ def test_failed_file_logs_its_error(spark, bucket, capsys):
 def test_commit_log_reads_pre_error_parts_as_null(spark, tmp_path):
     """A commit log whose part files predate the ``error`` column
     reads it as null there and as written in newer parts, whichever
-    part file the schema is read from."""
+    part file sorts first; a row older than the ``run_seq``/``batch_id``
+    tags loses to a tagged row of its file in either part order."""
     from samplebatchprocessing_spark.pipeline.manifest import (
         LOG_SCHEMA, commit_log)
 
@@ -117,6 +118,26 @@ def test_commit_log_reads_pre_error_parts_as_null(spark, tmp_path):
     assert {r["file_name"]: r["error"]
             for r in commit_log(spark, bucket).collect()} == {
         "old.bin": None, "new.bin": "ValueError: bad"}
+
+    # a part written before the run_seq/batch_id tags and a tagged part
+    # of one file: the tagged row is the newest, whichever part's name
+    # sorts first
+    parts = {"untagged": spark.createDataFrame(
+                 [("same.bin", 1, 1, "out", True, None)], LOG_SCHEMA),
+             "tagged": spark.createDataFrame(
+                 [("same.bin", 1, 0, "", False, "ValueError: new", 1.0, 0)],
+                 LOG_SCHEMA + tags)}
+    for order in (("untagged", "tagged"), ("tagged", "untagged")):
+        b = str(tmp_path / "_".join(order))
+        for i, kind in enumerate(order):
+            staged = os.path.join(b, kind)
+            parts[kind].coalesce(1).write.parquet(staged)
+            os.renames(glob.glob(os.path.join(staged, "part-*"))[0],
+                       os.path.join(b, "_commit_log",
+                                    f"part-{i:05d}-{kind}.parquet"))
+        assert [(r["file_name"], r["error"])
+                for r in commit_log(spark, b).collect()] == [
+            ("same.bin", "ValueError: new")], order
 
 
 def test_pipeline_idempotent_rerun(spark, bucket):
@@ -430,19 +451,45 @@ def test_watch_daemon_drain_error_ends_the_loop(spark, tmp_path):
 def test_pipeline_job_budgets(spark, bucket, spark_jobs):
     """Spark jobs per call on the 4-file bucket, pinned as upper
     bounds (measured the same in 5 fresh sessions): a batch run, a
-    backlog drain and an idle re-drain, each with its ``collect``.
-    An added action on any of these paths fails here.  A change that
-    cuts jobs lowers its bound."""
-    from samplebatchprocessing_spark.pipeline.manifest import watch_prefix
+    backlog drain, an idle re-drain, a ``commit_log`` read and a
+    quarantine sweep over a log and a ledger that both exist, each
+    with its ``collect``.  Building ``commit_log`` runs no job: every
+    log and ledger read passes a declared schema.  An added action on
+    any of these paths fails here.  A change that cuts jobs lowers its
+    bound."""
+    from samplebatchprocessing_spark.pipeline.manifest import (
+        LEDGER_SCHEMA, commit_log, quarantine_sweep, watch_prefix)
     rows, n = spark_jobs(
         lambda: run_pipeline(spark, build_manifest(spark, bucket)).collect())
     assert len(rows) == 4 and n <= 1, n
     shutil.rmtree(os.path.join(bucket, "output"))
 
     rows, n = spark_jobs(lambda: watch_prefix(spark, bucket).collect())
-    assert len(rows) == 4 and n <= 4, n
+    assert len(rows) == 4 and n <= 3, n
     rows, n = spark_jobs(lambda: watch_prefix(spark, bucket).collect())
-    assert len(rows) == 4 and n <= 4, n
+    assert len(rows) == 4 and n <= 3, n
+    _, n = spark_jobs(lambda: commit_log(spark, bucket))
+    assert n == 0, n
+    rows, n = spark_jobs(lambda: commit_log(spark, bucket).collect())
+    assert len(rows) == 4 and n <= 2, n
+
+    with open(os.path.join(bucket, "input", "poison.bin"), "wb") as f:
+        f.write(b"POISON")
+
+    def guard(raw: bytes) -> bytes:
+        if raw[:6] == b"POISON":
+            raise ValueError("poison input")
+        return raw
+    for ckpt in ("_c1", "_c2"):
+        watch_prefix(spark, bucket, transform=guard,
+                     checkpoint=os.path.join(bucket, ckpt))
+    spark.createDataFrame([("gone.bin", 2, "quarantine/gone.bin")],
+                          LEDGER_SCHEMA).write.parquet(
+        os.path.join(bucket, "_quarantine_ledger"))
+    rows, n = spark_jobs(lambda: quarantine_sweep(
+        spark, bucket, max_attempts=2).collect())
+    assert sorted(r["file_name"] for r in rows) == [
+        "gone.bin", "poison.bin"] and n <= 5, n
 
 
 def test_watch_daemon_two_drops_and_stop(spark, bucket, sf_smoke):

@@ -59,11 +59,13 @@ def test_engine_facade(spark, sf_smoke, tmp_path):
     assert len(log) == 2 and all(r["ok"] for r in log)
 
 
-def test_ship_package_zip_in_private_tempdir(spark, tmp_path, monkeypatch):
+def test_ship_package_zip_in_private_tempdir(spark, sf_smoke, tmp_path,
+                                            monkeypatch):
     """The shipped package zip goes to a per-user 0700 directory under
     the tempdir, never a fixed shared /tmp path; a directory another
-    user could write to is refused.  The object-store lock files use
-    the same helper."""
+    user could write to is refused.  The object-store lock files, the
+    registry rows' work dirs and the staged stream sources use the
+    same helper, resolved at call time."""
     import os
     import stat
     import tempfile
@@ -90,3 +92,30 @@ def test_ship_package_zip_in_private_tempdir(spark, tmp_path, monkeypatch):
     lock = LocalObjectStoreClient(str(tmp_path / "store"))._lock_path("k")
     assert os.path.dirname(lock) == str(
         tmp_path / f"sbp_object_locks_{os.getuid()}")
+
+    from samplebatchprocessing_spark.queries.sources import _work_dir
+    from samplebatchprocessing_spark.streaming.jobs import stage_table_dir
+    assert os.path.dirname(_work_dir(sf_smoke, "p10_watch")) == str(
+        tmp_path / f"sbp_work_{os.getuid()}")
+    staged = stage_table_dir(spark, sf_smoke, "region")
+    assert os.path.dirname(staged) == str(
+        tmp_path / f"sbp_stream_{os.getuid()}")
+    assert os.path.isfile(os.path.join(staged, "region_0.parquet"))
+
+
+def test_no_fixed_tmp_path_in_package():
+    """No string constant in the package starts with ``/tmp``: a fixed
+    path there is shared by every user and every concurrent run, so
+    scratch goes through ``session.private_tmpdir``."""
+    import ast
+    import pathlib
+
+    import samplebatchprocessing_spark
+    root = pathlib.Path(samplebatchprocessing_spark.__file__).parent
+    found = [f"{path.relative_to(root)}:{node.lineno}"
+             for path in sorted(root.rglob("*.py"))
+             for node in ast.walk(ast.parse(path.read_text()))
+             if isinstance(node, ast.Constant)
+             and isinstance(node.value, str)
+             and node.value.startswith("/tmp")]
+    assert not found, found
