@@ -86,6 +86,37 @@ def cmd_get(args: argparse.Namespace) -> int:
     return 1 if failed else 0
 
 
+def _run_in_foreground(q, unit: str, banner: str, on_tick) -> None:
+    """Hold the main thread on daemon ``q`` (a ``maintenance_daemon``
+    handle) until SIGINT/SIGTERM or until the daemon ends: install
+    the handlers, wait while it is active, stop it, restore the
+    handlers.  A tick that raised ends the daemon, and
+    ``awaitTermination`` re-raises it here, so a failed daemon exits
+    the process instead of leaving it idle.  ``on_tick`` runs after
+    every wait and once more at the end."""
+    stop = threading.Event()
+
+    def _on_signal(signum, _frame):
+        print(f"signal {signum}: stopping after current {unit}",
+              file=sys.stderr, flush=True)
+        stop.set()
+
+    prev = {s: signal.signal(s, _on_signal)
+            for s in (signal.SIGINT, signal.SIGTERM)}
+    print(banner, flush=True)
+    try:
+        while q.isActive and not stop.is_set():
+            # returns after the timeout; re-check the stop flag —
+            # this loop is the daemon's "long poll" heartbeat
+            q.awaitTermination(0.5)
+            on_tick()
+        q.stop()                           # graceful: GetJobs.py:64
+    finally:
+        on_tick()
+        for s, h in prev.items():
+            signal.signal(s, h)
+
+
 def cmd_watch(args: argparse.Namespace) -> int:
     """GetJobs.py:21-23's ``while (True)`` long-poll consumer.
 
@@ -103,28 +134,10 @@ def cmd_watch(args: argparse.Namespace) -> int:
                      in_prefix=args.in_prefix, out_prefix=args.out_prefix,
                      command=args.command, ext=args.ext,
                      commit=args.commit, poll_seconds=args.poll)
-    stop = threading.Event()
-
-    def _on_signal(signum, _frame):
-        print(f"signal {signum}: stopping after current drain",
-              file=sys.stderr, flush=True)
-        stop.set()
-
-    prev = {s: signal.signal(s, _on_signal)
-            for s in (signal.SIGINT, signal.SIGTERM)}
-    print(f"watching {os.path.join(args.bucket_dir, args.in_prefix)} "
-          f"every {args.poll}s (SIGINT to stop)", flush=True)
-    try:
-        while q.isActive and not stop.is_set():
-            # returns after the timeout; re-check the stop flag —
-            # this loop is the daemon's "long poll" heartbeat
-            q.awaitTermination(0.5)
-        if q.isActive:
-            q.stop()                       # graceful: GetJobs.py:64
-            q.awaitTermination()
-    finally:
-        for s, h in prev.items():
-            signal.signal(s, h)
+    _run_in_foreground(
+        q, "drain",
+        f"watching {os.path.join(args.bucket_dir, args.in_prefix)} "
+        f"every {args.poll}s (SIGINT to stop)", lambda: None)
     rows = commit_log(spark, args.bucket_dir).collect()
     n_ok = sum(1 for r in rows if r["ok"])
     print(f"stopped; commit log: {n_ok}/{len(rows)} files ok", flush=True)
@@ -138,28 +151,27 @@ def _store_from_uri(index_root: str):
     - ``mock:///abs/path/to/index-root`` — the file-backed
       :class:`LocalObjectStoreClient`.  Any bucket/root split along
       the same absolute path is behaviorally equivalent for this
-      client (keys resolve to the same backing files), so the
-      canonical split is deterministic: the client roots at the
-      uri's PARENT directory and the final path component is the
-      index-root key.  Spark reads the double's backing files.
+      client (keys resolve to the same backing files), so the split
+      is the one every POSIX root publishes through
+      (``publish._local``): the client roots at the uri's PARENT
+      directory and the final path component is the index-root key.
+      Spark reads the double's backing files.
     - ``s3://bucket/prefix`` — the boto3
       :class:`S3ObjectStoreClient` (import-guarded; needs
       credentials + hadoop-aws jars at runtime, FIXTURES.md ask #3);
       Spark reads ``s3a://bucket/<key>`` uris."""
-    from .pipeline.manifest import (LocalObjectStoreClient,
-                                    S3ObjectStoreClient, _split_scheme)
+    from .operators.publish import _local
+    from .pipeline.manifest import S3ObjectStoreClient, _split_scheme
     scheme, rest = _split_scheme(index_root)
     if scheme == "":
         return None
     if scheme == "mock":
-        path = ("/" + rest.lstrip("/")).rstrip("/")
-        parent, key = os.path.dirname(path), os.path.basename(path)
-        if not key or not os.path.isdir(parent):
+        local = _local("/" + rest.lstrip("/"))
+        if not local.root or not os.path.isdir(local.store.root):
             raise ValueError(
                 f"mock uri {index_root!r}: parent directory "
-                f"{parent!r} must exist (the bucket double)")
-        store = LocalObjectStoreClient(parent)
-        return store, key, store.fs_path
+                f"{local.store.root!r} must exist (the bucket double)")
+        return local.store, local.root, local.store.fs_path
     if scheme == "s3":
         bucket, _, root = rest.partition("/")
         if not bucket or not root:
@@ -193,20 +205,20 @@ def cmd_maintain(args: argparse.Namespace) -> int:
         return spark.read.parquet(args.fresh_parquet)
 
     # index_root may be an OBJECT-STORE uri (r13): the index kinds
-    # then sweep that bucket's key prefix (store=/spark_uri=), with
-    # --cas electing the multi-maintainer conditional-write pointer
-    # mode; a plain path sweeps the POSIX root.
-    root, plane = args.index_root, {}
+    # then sweep that bucket's key prefix (store=/spark_uri=); a
+    # plain path sweeps the POSIX root.  --cas elects the
+    # multi-maintainer conditional-write pointer mode on both.
+    root, plane = args.index_root, {"cas": args.cas}
     store_parts = _store_from_uri(args.index_root)
     if store_parts is not None:
         if args.kind in ("vocab", "nb"):
             print(f"maintain {args.kind}: trained-artifact roots are "
-                  f"POSIX paths (the vocab/NB artifacts publish "
-                  f"through the filesystem lifecycle); store uris "
-                  f"cover the index kinds", file=sys.stderr)
+                  f"POSIX paths (the vocab/NB artifact writers open "
+                  f"local files); store uris cover the index kinds",
+                  file=sys.stderr)
             return 2
         store, root, spark_uri = store_parts
-        plane = {"store": store, "cas": args.cas, "spark_uri": spark_uri}
+        plane.update(store=store, spark_uri=spark_uri)
     sweeps = {
         "lsh": lambda: maintenance.lsh_maintenance_sweep(
             spark, root, max_files_per_bucket=args.threshold, **plane),
@@ -246,31 +258,17 @@ def cmd_maintain(args: argparse.Namespace) -> int:
 
     d = maintenance.maintenance_daemon([sweep],
                                        poll_seconds=args.poll)
-    stop = threading.Event()
+    printed = 0
 
-    def _on_signal(signum, _frame):
-        print(f"signal {signum}: stopping after current sweep",
-              file=sys.stderr, flush=True)
-        stop.set()
+    def _print_new() -> None:              # stream reports as they land
+        nonlocal printed
+        for r in d.reports[printed:]:
+            _print(r)
+            printed += 1
 
-    prev = {s: signal.signal(s, _on_signal)
-            for s in (signal.SIGINT, signal.SIGTERM)}
-    print(f"maintaining {args.kind} index {args.index_root} "
-          f"every {args.poll}s (SIGINT to stop)", flush=True)
-    seen = 0
-    try:
-        while not stop.is_set():
-            stop.wait(0.5)
-            while seen < len(d.reports):   # stream reports as they land
-                _print(d.reports[seen])
-                seen += 1
-        d.stop()                           # graceful: finish in-flight
-        while seen < len(d.reports):
-            _print(d.reports[seen])
-            seen += 1
-    finally:
-        for s, h in prev.items():
-            signal.signal(s, h)
+    _run_in_foreground(d, "sweep",
+                       f"maintaining {args.kind} index {args.index_root} "
+                       f"every {args.poll}s (SIGINT to stop)", _print_new)
     return 0
 
 
@@ -346,9 +344,10 @@ def main(argv: list[str] | None = None) -> int:
                     help="nb retrain bound: class-prior shift per "
                     "mille")
     pm.add_argument("--cas", action="store_true",
-                    help="object-store roots only: publish/prune the "
-                    "pointer via conditional writes (If-Match), so "
-                    "multiple concurrent maintainers lose no updates")
+                    help="index kinds (lsh/postings/ivf), on a plain "
+                    "path or a store uri: publish/prune the pointer "
+                    "via conditional writes (If-Match), so multiple "
+                    "concurrent maintainers lose no updates")
     pm.set_defaults(fn=cmd_maintain)
 
     args = p.parse_args(argv)

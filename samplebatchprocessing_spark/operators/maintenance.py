@@ -17,12 +17,11 @@ wires SIGINT to ``stop()`` the same way in ``cmd_maintain`` and
 
 Every index sweep (LSH, postings, IVF) runs one chain,
 :func:`_sweep`; the kind supplies only its census, due-predicate
-and rewrite.  The same chain serves both storage planes: with
-``store=None`` the root is a POSIX directory published through the
-module-level :mod:`publish` functions; with a ``store`` it is a key
-prefix in that bucket published through
-:class:`publish.StorePublisher`, and Spark reads the layout parquet
-at ``spark_uri(key)``.  The chain:
+and rewrite.  Every root publishes through one
+:class:`publish.StorePublisher`: a key prefix in ``store``, or with
+``store=None`` a POSIX directory over a ``LocalObjectStoreClient``
+at its parent; Spark reads the layout parquet at
+``spark_uri(key)``.  The chain:
 1. CENSUS the live layout (``resolve`` — one consistent version)
    with an o(index-metadata) probe;
 2. apply the PURE integer due-predicate (unit-testable apart from
@@ -44,9 +43,6 @@ next sweep retries into a fresh directory.
 
 from __future__ import annotations
 
-import glob
-import os
-
 from . import publish
 from .dedup import lsh_index_compact
 from .similarity import (ivf_cell_census, ivf_centroids_write,
@@ -60,24 +56,18 @@ REPORT_SCHEMA = ("index_root string, kind string, due boolean, "
 
 
 def bucket_file_census(layout_dir: str) -> tuple[int, int, int]:
-    """(max_files_in_one_bucket, n_nonempty_buckets, total_files)
-    over a bucket-partitioned layout (LSH band index / postings
-    index) — the small-file decay measurement.  Driver-side glob of
-    directory entries: o(file count) metadata, never data."""
-    counts = [len(glob.glob(os.path.join(b, "*.parquet")))
-              for b in glob.glob(os.path.join(layout_dir, "bucket=*"))]
-    counts = [c for c in counts if c > 0]
-    if not counts:
-        return 0, 0, 0
-    return max(counts), len(counts), sum(counts)
+    """:func:`store_bucket_census` of a POSIX layout directory."""
+    pub = publish._local(layout_dir)
+    return store_bucket_census(pub.store, pub.root)
 
 
 def store_bucket_census(store, layout_key: str) -> tuple[int, int, int]:
-    """:func:`bucket_file_census` over an object-store layout prefix
-    (r12): page the layout's keys (memory bounded by the page size,
-    never the key count) and count ``*.parquet`` objects per
-    ``bucket=N`` key segment.  Same return shape: (max files in one
-    bucket, nonempty buckets, total files)."""
+    """(max_files_in_one_bucket, n_nonempty_buckets, total_files)
+    over a bucket-partitioned layout (LSH band index / postings
+    index) — the small-file decay measurement: page the layout's
+    keys (memory bounded by the page size, never the key count) and
+    count ``*.parquet`` objects per ``bucket=N`` key segment.
+    o(file count) metadata, never data."""
     counts: dict[str, int] = {}
     prefix = layout_key.rstrip("/") + "/"
     for page in store.list_pages(prefix):
@@ -108,59 +98,35 @@ def compact_is_due(max_files: int, threshold: int = 4) -> bool:
     return max_files >= threshold
 
 
-def _require_versioned(pub, kind: str) -> int:
+def _require_versioned(pub, kind: str, index_root: str) -> int:
     """The live version of ``pub``'s root; raises for an unversioned
     root, which has no pointer to swap."""
     version = pub.current_version()
     if version is None:
         raise ValueError(
             f"{kind} sweep needs a VERSIONED index root (no "
-            f"{publish.POINTER} under {pub.root!r}): build into a "
+            f"{publish.POINTER} under {index_root!r}): build into a "
             f"fresh new_layout_dir, then publish it — an unversioned "
             f"root has nowhere to swap to")
     return version
 
 
-class _PosixPublisher:
-    """The module-level :mod:`publish` functions bound to one POSIX
-    root, under :class:`publish.StorePublisher`'s method names, so one
-    chain drives either storage plane."""
-
-    def __init__(self, root: str) -> None:
-        self.root = root
-
-    def current_version(self) -> int | None:
-        return publish.current_version(self.root)
-
-    def resolve(self) -> str:
-        return publish.resolve(self.root)
-
-    def new_layout_dir(self) -> str:
-        return publish.new_layout_dir(self.root)
-
-    def publish(self, layout_dir: str) -> int:
-        return publish.publish(self.root, layout_dir)
-
-    def prune(self, keep: int = 2) -> list[str]:
-        return publish.prune(self.root, keep=keep)
-
-
 def _plane(index_root: str, store, cas: bool, spark_uri):
-    """(publisher, layout -> Spark path, layout -> ``bucket=N`` file
-    census) for ``index_root``: a POSIX directory when ``store`` is
-    None, else a key prefix in ``store`` whose parquet Spark reads at
-    ``spark_uri(key)`` — the file-backed double's ``fs_path`` by
-    default, a ``lambda k: f"s3a://{bucket}/{k}"`` on a real
-    deployment."""
+    """(publisher, layout key -> Spark path, layout key -> ``bucket=N``
+    file census) for ``index_root``: a key prefix in ``store`` whose
+    parquet Spark reads at ``spark_uri(key)`` — the file-backed
+    client's ``fs_path`` by default, a ``lambda k:
+    f"s3a://{bucket}/{k}"`` on a real deployment.  ``store=None``
+    is a POSIX directory, split as :func:`publish._local` does."""
     if store is None:
-        return (_PosixPublisher(index_root), lambda path: path,
-                bucket_file_census)
+        local = publish._local(index_root)
+        store, index_root = local.store, local.root
     return (publish.StorePublisher(store, index_root, cas=cas),
             spark_uri or store.fs_path,
             lambda key: store_bucket_census(store, key))
 
 
-def _sweep(kind: str, pub, census, due, rewrite,
+def _sweep(kind: str, index_root: str, pub, census, due, rewrite,
            keep_versions: int) -> dict:
     """The one maintenance chain: census the live layout, decide with
     the pure ``due`` predicate, rewrite into a fresh layout, publish,
@@ -168,7 +134,7 @@ def _sweep(kind: str, pub, census, due, rewrite,
     total)``; ``rewrite(live, out)`` writes layout ``out``.  The
     report's ``files_*`` are total files for the bucket kinds and the
     max-cell row count for IVF (the skew its predicate acts on)."""
-    before = _require_versioned(pub, kind)
+    before = _require_versioned(pub, kind, index_root)
     live = pub.resolve()
     stats = census(live)
     acted = due(*stats)
@@ -179,7 +145,7 @@ def _sweep(kind: str, pub, census, due, rewrite,
         pub.prune(keep=keep_versions)
     after = census(pub.resolve())
     i = 0 if kind == "ivf" else 2
-    return {"index_root": pub.root, "kind": kind, "due": acted,
+    return {"index_root": index_root, "kind": kind, "due": acted,
             "acted": acted, "version_before": before,
             "version_after": pub.current_version(),
             "files_before": stats[i], "files_after": after[i]}
@@ -194,11 +160,12 @@ def lsh_maintenance_sweep(spark, index_root: str,
     layout iff :func:`compact_is_due`, publish, prune.  Returns the
     report row (REPORT_SCHEMA keys); ``acted=False`` sweeps cost one
     listing and nothing else.  With ``store`` the root is a key
-    prefix in that bucket (``cas`` elects the multi-maintainer
-    pointer mode of :class:`publish.StorePublisher`)."""
+    prefix in that bucket; ``cas`` elects the multi-maintainer
+    pointer mode of :class:`publish.StorePublisher` on either
+    plane."""
     pub, uri, census = _plane(index_root, store, cas, spark_uri)
     return _sweep(
-        "lsh", pub, census,
+        "lsh", index_root, pub, census,
         lambda mx, _n, _t: compact_is_due(mx, max_files_per_bucket),
         lambda live, out: lsh_index_compact(spark, [uri(live)],
                                             uri(out)),
@@ -215,7 +182,7 @@ def postings_maintenance_sweep(spark, index_root: str,
     compaction as the rewrite."""
     pub, uri, census = _plane(index_root, store, cas, spark_uri)
     return _sweep(
-        "postings", pub, census,
+        "postings", index_root, pub, census,
         lambda mx, _n, _t: compact_is_due(mx, max_files_per_bucket),
         lambda live, out: postings_index_compact(spark, [uri(live)],
                                                  uri(out)),
@@ -243,7 +210,8 @@ def ivf_maintenance_sweep(spark, index_root: str, n_cells: int = 16,
         ivf_centroids_write(uri(out), cmat)
 
     return _sweep(
-        "ivf", pub, lambda layout: ivf_cell_census(spark, uri(layout)),
+        "ivf", index_root, pub,
+        lambda layout: ivf_cell_census(spark, uri(layout)),
         lambda mx, _n, total: recluster_is_due(mx, n_cells, total,
                                                skew_threshold),
         rewrite, keep_versions)
@@ -317,7 +285,8 @@ def vocab_maintenance_sweep(spark, root: str, fresh_df,
     from . import artifacts
     from .text import bpe_train_merges, encode_fertility_x1000
 
-    before = _require_versioned(_PosixPublisher(root), "vocab")
+    pub = publish._local(root)
+    before = _require_versioned(pub, "vocab", root)
     meta = artifacts.bpe_vocab_meta(root)
     if "fertility_x1000" not in meta:
         raise ValueError(
@@ -335,13 +304,14 @@ def vocab_maintenance_sweep(spark, root: str, fresh_df,
         rules = tuple((l, r, m) for _, l, r, m, _ in m2)
         new_fert = encode_fertility_x1000(fresh_df, rules,
                                           text_col=text_col)
-        out = publish.new_layout_dir(root)
-        artifacts.bpe_vocab_write(m2, out, fertility_x1000=new_fert)
-        publish.publish(root, out)
-        publish.prune(root, keep=keep_versions)
+        out = pub.new_layout_dir()
+        artifacts.bpe_vocab_write(m2, pub.store.fs_path(out),
+                                  fertility_x1000=new_fert)
+        pub.publish(out)
+        pub.prune(keep=keep_versions)
     return {"index_root": root, "kind": "vocab", "due": due,
             "acted": due, "version_before": before,
-            "version_after": publish.current_version(root),
+            "version_after": pub.current_version(),
             "fertility_trained_x1000": trained,
             "fertility_fresh_x1000": fresh}
 
@@ -377,7 +347,8 @@ def nb_maintenance_sweep(spark, root: str, fresh_doc,
     from . import artifacts
     from .text import tokenize
 
-    before = _require_versioned(_PosixPublisher(root), "nb")
+    pub = publish._local(root)
+    before = _require_versioned(pub, "nb", root)
     cnt, np_, nn = artifacts.nb_model_read(spark, root)
 
     toks = fresh_doc.select(
@@ -433,13 +404,14 @@ def nb_maintenance_sweep(spark, root: str, fresh_doc,
                           (F.coalesce("nc_b", F.lit(0))
                            + F.coalesce("nc_d", F.lit(0)))
                           .alias("nc")))
-        out = publish.new_layout_dir(root)
-        artifacts.nb_model_write(merged, np_ + np_f, nn + nn_f, out)
-        publish.publish(root, out)
-        publish.prune(root, keep=keep_versions)
+        out = pub.new_layout_dir()
+        artifacts.nb_model_write(merged, np_ + np_f, nn + nn_f,
+                                 pub.store.fs_path(out))
+        pub.publish(out)
+        pub.prune(keep=keep_versions)
     return {"index_root": root, "kind": "nb", "due": due,
             "acted": due, "version_before": before,
-            "version_after": publish.current_version(root),
+            "version_after": pub.current_version(),
             "oov_x1000": oov_x1000,
             "fresh_prior_x1000": fresh_prior_x1000,
             "model_prior_x1000": model_prior_x1000}

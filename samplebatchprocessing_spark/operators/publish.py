@@ -12,10 +12,10 @@ swap".  This module makes the swap executable, once, for all three:
   subdirectories plus a pointer file ``_current.json`` naming the
   live one.  The pointer is the ONLY mutable object; layouts are
   immutable once published.
-- ``publish(root, layout)`` atomically repoints (POSIX temp +
-  ``os.replace`` — the same all-or-nothing visibility discipline as
-  ``LocalObjectStoreClient.put``; on S3 the pointer is one PUT,
-  which is atomic by contract).  Versions are monotone.
+- ``publish(root, layout)`` atomically repoints the pointer with
+  ONE object PUT (temp + ``os.replace`` on a POSIX root, as
+  ``LocalObjectStoreClient.put`` does it; one PUT on S3, atomic by
+  contract).  Versions are monotone.
 - ``resolve(root)`` returns the live layout directory.  A root with
   NO pointer resolves to itself, so every pre-r11 unversioned index
   keeps working and probes can take either form.
@@ -35,50 +35,34 @@ explicitly via :func:`prune` (keep >= 2 so probes that resolved just
 before a publish finish their scan before their layout is deleted —
 the vacuum-horizon discipline of m10).
 
-Two data planes, one contract (r12, VERDICT r11 #3):
-
-- the module-level functions operate on POSIX roots (temp +
-  ``os.replace`` pointer swap);
-- :class:`StorePublisher` operates the SAME lifecycle over an
-  ``ObjectStoreClient`` bucket — the reference's actual deployment
-  surface (``README.md:114`` input/output prefixes; ``role.json``
-  grants S3 object verbs).  The pointer becomes ONE PUT, atomic by
-  the same contract the P8 direct-PUT commit leans on; a "layout
-  directory" becomes a key PREFIX; prune becomes a paged list +
-  deletes.  Readers keep the identical guarantee: resolve returns
-  one consistent version, and a publish never touches the keys a
-  just-resolved reader is scanning.
+One lifecycle on every storage plane: :class:`StorePublisher` runs
+it over an ``ObjectStoreClient``, and the module-level functions run
+a POSIX root ``/a/b/idx`` as ``StorePublisher(LocalObjectStoreClient
+("/a/b"), "idx")``, mapping keys back to paths with ``fs_path``.
 """
 
 from __future__ import annotations
 
 import json
 import os
-from typing import TYPE_CHECKING
 
-if TYPE_CHECKING:  # import cycle: manifest imports nothing from here
-    from ..pipeline.manifest import ObjectStoreClient
+from ..pipeline.manifest import (LocalObjectStoreClient,
+                                 ObjectStoreClient, PreconditionFailed)
 
 POINTER = "_current.json"
 
 
-def _pointer_path(index_root: str) -> str:
-    return os.path.join(index_root, POINTER)
-
-
-def _read_pointer(index_root: str) -> dict | None:
-    path = _pointer_path(index_root)
-    if not os.path.exists(path):
-        return None
-    with open(path) as f:
-        return json.load(f)
+def _local(index_root: str) -> "StorePublisher":
+    """The publisher of a POSIX root: a client at its parent
+    directory, the last path component as the root key."""
+    parent, key = os.path.split(index_root.rstrip("/"))
+    return StorePublisher(LocalObjectStoreClient(parent), key)
 
 
 def current_version(index_root: str) -> int | None:
     """Version number the pointer currently names, or None for an
     unversioned root (no pointer file)."""
-    meta = _read_pointer(index_root)
-    return None if meta is None else int(meta["version"])
+    return _local(index_root).current_version()
 
 
 def resolve(index_root: str) -> str:
@@ -88,126 +72,75 @@ def resolve(index_root: str) -> str:
     Without one: ``index_root`` itself — an unversioned index IS its
     own layout, so every reader can resolve unconditionally and
     pre-pointer indexes keep serving unchanged."""
-    meta = _read_pointer(index_root)
-    if meta is None:
-        return index_root
-    return os.path.join(index_root, meta["dir"])
+    pub = _local(index_root)
+    key = pub.resolve()
+    return index_root if key == pub.root else pub.store.fs_path(key)
 
 
 def new_layout_dir(index_root: str, prefix: str = "layout-v") -> str:
     """A FRESH layout directory path for a writer (not created, not
     published): ``<root>/<prefix><n>`` for the smallest n greater
-    than both the published version and every name already on disk —
-    a crashed writer's orphan directory is never reused, so a
-    half-written layout can never be mistaken for a complete one."""
-    meta = _read_pointer(index_root)
-    n = 0 if meta is None else int(meta["version"])
-    while True:
-        n += 1
-        cand = os.path.join(index_root, f"{prefix}{n:05d}")
-        if not os.path.exists(cand):
-            return cand
+    than both the published version and every layout holding a file
+    — a crashed writer's orphan is never reused, so a half-written
+    layout can never be mistaken for a complete one."""
+    pub = _local(index_root)
+    return pub.store.fs_path(pub.new_layout_dir(prefix))
 
 
 def publish(index_root: str, layout_dir: str) -> int:
     """Atomically repoint ``index_root`` at ``layout_dir``; returns
     the new version number.
 
-    ``layout_dir`` must be an existing DIRECT subdirectory of
-    ``index_root`` (the pointer stores the relative name, so the
-    root relocates as one unit) and must not be the currently-live
-    layout (republishing the live dir is a no-op bug upstream, and
-    pruning history could then delete the live layout).  The pointer
-    write is temp + ``os.replace``: a reader sees the old pointer or
-    the new one, never a torn file."""
-    root_real = os.path.realpath(index_root)
+    ``layout_dir`` must be a DIRECT subdirectory of ``index_root``
+    (compared as real paths; the pointer stores the relative name,
+    so the root relocates as one unit) holding at least one file, and
+    must not be the currently-live layout (republishing the live dir
+    is a no-op bug upstream, and pruning history could then delete
+    the live layout)."""
     layout_real = os.path.realpath(layout_dir)
-    if os.path.dirname(layout_real) != root_real:
+    if os.path.dirname(layout_real) != os.path.realpath(index_root):
         raise ValueError(
             f"layout {layout_dir!r} is not a direct subdirectory of "
             f"index root {index_root!r} — layouts live inside their "
             f"root so the pointer's relative name stays valid")
-    if not os.path.isdir(layout_real):
-        raise ValueError(f"layout {layout_dir!r} does not exist — "
-                         f"write the layout fully, then publish")
-    rel = os.path.basename(layout_real)
-    if rel == POINTER:
-        raise ValueError(f"{POINTER} is the pointer, not a layout")
-    meta = _read_pointer(index_root)
-    if meta is not None and meta["dir"] == rel:
-        raise ValueError(
-            f"layout {rel!r} is already the live version "
-            f"{meta['version']} — a maintenance pass publishes a "
-            f"FRESH directory, never re-publishes the live one")
-    version = 1 if meta is None else int(meta["version"]) + 1
-    history = ([] if meta is None else meta.get("history", [])) + [
-        {"version": version, "dir": rel}]
-    new_meta = {"version": version, "dir": rel, "history": history}
-    tmp = _pointer_path(index_root) + ".inprogress"
-    with open(tmp, "w") as f:
-        json.dump(new_meta, f)
-    os.replace(tmp, _pointer_path(index_root))
-    return version
+    pub = _local(index_root)
+    return pub.publish(f"{pub.root}/{os.path.basename(layout_real)}")
 
 
 def prune(index_root: str, keep: int = 2) -> list[str]:
     """Delete layout directories of versions older than the newest
-    ``keep`` published ones; returns the deleted directory paths.
-    ``keep >= 2`` is the safe floor for concurrent readers: a probe
-    that resolved the pointer just before a publish is still scanning
-    version N-1 while N is live (the m10 vacuum-horizon argument).
-    Orphaned never-published directories are NOT touched — they may
-    be a maintenance pass mid-write."""
-    if keep < 1:
-        raise ValueError(f"keep must be >= 1, got {keep}")
-    meta = _read_pointer(index_root)
-    if meta is None:
-        return []
-    import shutil
-    history = meta.get("history", [])
-    retire, remain = history[:-keep], history[-keep:]
-    live = meta["dir"]
-    deleted = []
-    for h in retire:
-        if h["dir"] == live or h["dir"] in {r["dir"] for r in remain}:
-            continue
-        path = os.path.join(index_root, h["dir"])
-        if os.path.isdir(path):
-            shutil.rmtree(path)
-            deleted.append(path)
-    new_meta = dict(meta, history=remain)
-    tmp = _pointer_path(index_root) + ".inprogress"
-    with open(tmp, "w") as f:
-        json.dump(new_meta, f)
-    os.replace(tmp, _pointer_path(index_root))
-    return deleted
+    ``keep`` published ones; returns the deleted directory paths
+    (:meth:`StorePublisher.prune`)."""
+    pub = _local(index_root)
+    return [pub.store.fs_path(k) for k in pub.prune(keep)]
 
 
 class StorePublisher:
-    """The versioned-pointer lifecycle over an object-store bucket.
-
-    Same contract as the module-level POSIX functions, re-expressed
-    in the 5-verb ``ObjectStoreClient`` vocabulary (the p20/p21
-    quarantine discipline, ``pipeline/manifest.py``):
+    """The versioned-pointer lifecycle over an object-store bucket —
+    the one implementation: a POSIX root runs through it too, over a
+    :class:`LocalObjectStoreClient` at the root's parent directory
+    (the module-level functions).  In the ``ObjectStoreClient``
+    vocabulary (the p20/p21 quarantine discipline,
+    ``pipeline/manifest.py``):
 
     - ``root`` is a KEY PREFIX (e.g. ``indexes/lsh``); a layout is
       the prefix ``<root>/<name>`` and "exists" iff at least one
       object lives under ``<name>/`` — a flat key namespace has no
       empty directories, so a writer that crashed before its first
-      object left nothing to confuse (the POSIX orphan-dir check
-      degenerates away).
+      object left nothing to confuse.  On a POSIX root the same rule
+      holds: an empty layout directory does not exist.
     - the pointer ``<root>/_current.json`` is ONE object; publish is
-      ONE ``put`` — atomic by the S3 PUT contract, so no temp +
-      rename dance is needed (publish.py module docstring argued
-      this since r11; this class executes it).
-    - ``prune`` pages over each retired layout prefix
-      (``list_pages`` — driver memory bounded by page size, never by
-      layout key count) and deletes; DELETE is idempotent, so a
-      crashed prune re-run converges.
+      ONE ``put`` — atomic by the S3 PUT contract, and by a
+      per-writer temp + ``os.replace`` on the file-backed client, so
+      concurrent writers and readers never see a torn pointer.
+    - ``prune`` retires each layout with ``delete_prefix`` (paged —
+      driver memory bounded by page size, never by layout key
+      count); DELETE is idempotent, so a crashed prune re-run
+      converges.
 
     Physical layout DATA still moves through Spark (parquet over the
     scheme's Hadoop connector in a real deployment; the file-backed
-    double's ``fs_path`` in this sandbox) — this class owns only the
+    client's ``fs_path`` on a POSIX root) — this class owns only the
     control plane: naming, pointing, retiring.
 
     CONCURRENCY, two modes (ADVICE r12):
@@ -240,7 +173,7 @@ class StorePublisher:
       side-effects are safe: deletes are idempotent and validation
       reruns from the fresh pointer."""
 
-    def __init__(self, store: "ObjectStoreClient", root: str,
+    def __init__(self, store: ObjectStoreClient, root: str,
                  cas: bool = False, cas_retries: int = 16) -> None:
         self.store = store
         self.root = root.rstrip("/")
@@ -279,7 +212,6 @@ class StorePublisher:
     def _cas_loop(self, attempt):
         """Run ``attempt`` once (plain mode) or until its conditional
         pointer PUT wins (cas mode, bounded)."""
-        from ..pipeline.manifest import PreconditionFailed
         tries = self.cas_retries if self.cas else 1
         last: Exception | None = None
         for _ in range(tries):
@@ -327,9 +259,9 @@ class StorePublisher:
     def publish(self, layout_key: str) -> int:
         """Atomically repoint the root at ``layout_key`` (one PUT —
         conditional in cas mode, retried until it wins); returns the
-        new version.  Same preconditions as the POSIX
-        :func:`publish`: a direct child of the root, fully written
-        (>= 1 object), and not the currently-live layout."""
+        new version.  Preconditions: a direct child of the root,
+        fully written (>= 1 object), and not the currently-live
+        layout."""
         key = layout_key.rstrip("/")
         head, _, rel = key.rpartition("/")
         if head != self.root or not rel:
@@ -342,8 +274,8 @@ class StorePublisher:
             raise ValueError(f"{POINTER} is the pointer, not a layout")
         if not self._layout_objects(rel):
             raise ValueError(
-                f"layout {layout_key!r} has no objects — write the "
-                f"layout fully, then publish")
+                f"layout {layout_key!r} has no objects, so it does "
+                f"not exist — write the layout fully, then publish")
 
         def attempt() -> int:
             meta, etag = self._read_pointer_v()
@@ -373,8 +305,10 @@ class StorePublisher:
         In cas mode the returned list is best-effort under
         contention: a layout whose objects fell in an attempt that
         then lost its pointer race is not re-reported by the winning
-        retry (its prefix lists empty, so ``found`` stays False) —
-        the deletions themselves are idempotent and complete."""
+        retry (its prefix lists empty, so ``delete_prefix`` finds
+        none) — the deletions themselves are idempotent and complete.  On a
+        POSIX root the retired directories go too
+        (``LocalObjectStoreClient.delete_prefix``)."""
         if keep < 1:
             raise ValueError(f"keep must be >= 1, got {keep}")
 
@@ -390,13 +324,7 @@ class StorePublisher:
             for h in retire:
                 if h["dir"] == live or h["dir"] in keep_names:
                     continue
-                prefix = f"{self.root}/{h['dir']}/"
-                found = False
-                for page in self.store.list_pages(prefix):
-                    for k in page:
-                        self.store.delete(k)
-                        found = True
-                if found:
+                if self.store.delete_prefix(f"{self.root}/{h['dir']}/"):
                     retired.append(f"{self.root}/{h['dir']}")
             # cas retry is safe here: deletes are idempotent, the
             # horizon recomputes from the FRESH pointer (so a version

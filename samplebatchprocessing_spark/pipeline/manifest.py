@@ -225,6 +225,9 @@ class ObjectStoreClient:
     - ``copy(src, dst)``: server-side copy — itself a single PUT of
       the destination object.
     - ``delete(key)``: remove the object.
+    - ``delete_prefix(prefix)``: remove every object under a prefix
+      (paged deletes; the versioned-pointer prune retires a layout
+      with it).
     - ``list(prefix)``: every key under ``prefix`` (flat key
       namespace — no directory notion, exactly S3's ListObjectsV2).
 
@@ -279,6 +282,18 @@ class ObjectStoreClient:
 
     def list(self, prefix: str) -> list[str]:
         raise NotImplementedError
+
+    def delete_prefix(self, prefix: str) -> bool:
+        """Delete every object under ``prefix``, page by page (driver
+        memory bounded by the page size); True iff any object was
+        there.  Idempotent like ``delete``, so a crashed caller's
+        re-run converges."""
+        found = False
+        for page in self.list_pages(prefix):
+            for key in page:
+                self.delete(key)
+                found = True
+        return found
 
     def list_pages(self, prefix: str,
                    page_size: int = 1000) -> "Iterator[list[str]]":
@@ -353,6 +368,20 @@ class LocalObjectStoreClient(ObjectStoreClient):
         import contextlib
         with contextlib.suppress(FileNotFoundError):
             os.remove(self._p(key))
+
+    def delete_prefix(self, prefix: str) -> bool:
+        # a key prefix has no directories, a POSIX tree does: drop
+        # the ones under the prefix left empty, deepest first.  A
+        # directory still holding a file (a crashed put's temp) stays
+        import contextlib
+        found = super().delete_prefix(prefix)
+        top = os.path.join(self.root, os.path.dirname(prefix))
+        for dirpath, _dirs, _files in os.walk(top, topdown=False):
+            key = os.path.relpath(dirpath, self.root) + "/"
+            if key.startswith(prefix):
+                with contextlib.suppress(OSError):
+                    os.rmdir(dirpath)
+        return found
 
     # only THIS client's own in-flight temp objects are invisible —
     # a legitimately-named key ending in ".inprogress" lists fine

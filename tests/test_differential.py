@@ -1433,6 +1433,13 @@ def test_differential_publish_lifecycle_invariants(seed, tmp_path):
     root = str(tmp_path / "root")
     os.makedirs(root)
     published = []          # dirs in publish order
+
+    def _write_layout(d):
+        # one file, as a real writer leaves: a layout exists iff it
+        # holds a file
+        os.makedirs(d)
+        open(os.path.join(d, "part-0.parquet"), "wb").close()
+
     orphans = []
     last_version = 0
 
@@ -1452,7 +1459,7 @@ def test_differential_publish_lifecycle_invariants(seed, tmp_path):
         if op == "publish":
             d = P.new_layout_dir(root)
             assert d not in published and d not in orphans
-            os.makedirs(d)
+            _write_layout(d)
             v = P.publish(root, d)
             last_version += 1
             assert v == last_version, f"seed={seed}: version skew"
@@ -1460,7 +1467,7 @@ def test_differential_publish_lifecycle_invariants(seed, tmp_path):
         elif op == "crash":
             d = P.new_layout_dir(root)
             assert d not in published and d not in orphans
-            os.makedirs(d)          # written, never published
+            _write_layout(d)        # written, never published
             orphans.append(d)
         elif published:
             keep = rng.randint(1, 3)

@@ -905,19 +905,17 @@ def test_ewma_fixedpoint_constructed(spark):
     }
 
 
-def test_ivf_persisted_probe_equals_inflight(spark, sf_smoke):
+def test_ivf_persisted_probe_equals_inflight(spark, sf_smoke, tmp_path):
     """X109 differential: probing the PERSISTED cell-partitioned
     index must return exactly the rows the in-flight ivf_topk
     computes with the same parameters — the centroid sample draw is
     layout-independent (xxhash64 order) and seeded, so build-time and
     query-time quantizers are identical and persistence must be a
     pure plan change, never a result change."""
-    import hashlib
     from samplebatchprocessing_spark.operators import similarity
     emb = load_table(spark, sf_smoke, "embeddings")
     pred = F.col("vec_id") % 50 == 0
-    idx = ("/tmp/sbp_work/x109_diff_"
-           + hashlib.md5(sf_smoke.encode()).hexdigest()[:8])
+    idx = str(tmp_path / "x109_diff")
     cmat = similarity.ivf_index_write(emb, idx, n_cells=16)
     persisted = {(r["query_id"], r["vec_id"], r["rank"], r["cosine"])
                  for r in similarity.ivf_index_probe(
@@ -1178,15 +1176,18 @@ def test_bnl_topk_rejects_empty_query_set(spark):
         bnl_topk(emb, F.col("vec_id") < 0)
 
 
-def test_similarity_job_budgets(spark, tmp_path, spark_jobs):
+def test_similarity_job_budgets(spark, sf_smoke, tmp_path, spark_jobs):
     """Spark jobs per similarity call, each with its ``collect``, on a
     fixed 4,000-vector corpus, pinned as upper bounds (the most seen
     in 5 fresh sessions).  ``ivf_index_probe`` runs in perfbench's
     serving shape: 8 ``local_df`` queries under ``F.lit(True)``, a
-    16-cell index, ``n_probe=4``.  An added action on any of these
-    paths fails here.  A change that cuts jobs lowers its bound."""
+    16-cell index, ``n_probe=4``; so do the 250-vector delta append
+    under the frozen centroids and the serving set-up's
+    ``Engine.attach``.  An added action on any of these paths fails
+    here.  A change that cuts jobs lowers its bound."""
     import numpy as np
 
+    from samplebatchprocessing_spark.engine import Engine
     from samplebatchprocessing_spark.exprs import local_df
     rng = np.random.default_rng(3)
     schema = "vec_id long, embedding array<float>"
@@ -1219,6 +1220,20 @@ def test_similarity_job_budgets(spark, tmp_path, spark_jobs):
     for name, (_, call) in calls.items():
         rows, seen[name] = spark_jobs(lambda: call().collect())
         assert rows, name
+    delta_path = str(tmp_path / "delta.parquet")
+    local_df(spark, [(4000 + i, v.tolist()) for i, v in enumerate(
+        rng.standard_normal((250, 64)).astype(np.float32))],
+        schema).write.parquet(delta_path)
+    delta = spark.read.parquet(delta_path)
+    writes = {
+        "ivf_append": (1, lambda: (
+            S.ivf_assign(delta, cmat).write.mode("append")
+            .partitionBy("cell").parquet(idx))),
+        "Engine.attach": (10, lambda: Engine(spark).attach(sf_smoke)),
+    }
+    for name, (_, call) in writes.items():
+        _, seen[name] = spark_jobs(call)
+    calls.update(writes)
     assert all(seen[n] <= b for n, (b, _) in calls.items()), \
         f"jobs per call: {seen}"
 

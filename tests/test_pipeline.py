@@ -15,18 +15,14 @@ from pyspark.sql import functions as F
 from samplebatchprocessing_spark.pipeline.manifest import (
     build_manifest, run_pipeline)
 
-BUCKET = "/tmp/sbp_test_bucket"
-
-
 @pytest.fixture()
-def bucket(sf_smoke):
-    shutil.rmtree(BUCKET, ignore_errors=True)
-    in_dir = os.path.join(BUCKET, "input")
+def bucket(sf_smoke, tmp_path):
+    root = str(tmp_path / "bucket")
+    in_dir = os.path.join(root, "input")
     os.makedirs(in_dir)
     for src in sorted(glob.glob(f"{sf_smoke}/*.parquet"))[:4]:
         shutil.copy(src, in_dir)
-    yield BUCKET
-    shutil.rmtree(BUCKET, ignore_errors=True)
+    return root
 
 
 def test_identity_pipeline_byte_exact(spark, bucket):

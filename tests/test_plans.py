@@ -53,16 +53,13 @@ def test_small_dim_join_is_broadcast_not_shuffle(spark, sf_smoke):
     assert "SortMergeJoin" not in plan
 
 
-def test_partition_pruning_on_hive_layout(spark, sf_smoke):
+def test_partition_pruning_on_hive_layout(spark, sf_smoke, tmp_path):
     """P7: a filter on the partition column must prune directories at
     planning time (PartitionFilters), not scan-and-filter."""
-    import hashlib
-    import os
-    out = f"/tmp/sbp_work/p7_part_{hashlib.md5(sf_smoke.encode()).hexdigest()[:8]}"
+    out = str(tmp_path / "p7_part")
     li = load_table(spark, sf_smoke, "lineitem")
-    if not os.path.exists(out):
-        (li.write.mode("overwrite")
-         .partitionBy("l_returnflag", "l_linestatus").parquet(out))
+    (li.write.mode("overwrite")
+     .partitionBy("l_returnflag", "l_linestatus").parquet(out))
     back = spark.read.parquet(out).filter(F.col("l_returnflag") == "R")
     plan = plan_str(back)
     assert "PartitionFilters" in plan and "l_returnflag" in plan
@@ -856,18 +853,17 @@ def test_rfm_codes_broadcast_boundaries_no_window(spark, sf_smoke):
     assert_single_partition_only_under_scalar_agg(df)
 
 
-def test_ivf_index_probe_prunes_cell_partitions(spark, sf_smoke):
+def test_ivf_index_probe_prunes_cell_partitions(spark, sf_smoke,
+                                                tmp_path):
     """X109: probing a PERSISTED cell-partitioned IVF index must
     prune at planning time — the probe-cell filter lands in the index
     scan's PartitionFilters, and the probe physically reads fewer
     index files than exist (the whole point of persisting the
     assignment: each query batch reads ~n_probe/n_cells of the
     bytes)."""
-    import hashlib
     from samplebatchprocessing_spark.operators import similarity
     emb = load_table(spark, sf_smoke, "embeddings")
-    idx = ("/tmp/sbp_work/x109_plan_"
-           + hashlib.md5(sf_smoke.encode()).hexdigest()[:8])
+    idx = str(tmp_path / "x109_plan")
     cmat = similarity.ivf_index_write(emb, idx, n_cells=16)
     probe = similarity.ivf_index_probe(
         spark, idx, cmat, emb, F.col("vec_id") % 250 == 0,
@@ -921,17 +917,16 @@ def test_dq_audit_ri_scan_is_key_only(spark, sf_smoke):
     assert li_schemas == ["ReadSchema: struct<l_orderkey:bigint>"]
 
 
-def test_postings_probe_prunes_bucket_partitions(spark, sf_smoke):
+def test_postings_probe_prunes_bucket_partitions(spark, sf_smoke,
+                                                  tmp_path):
     """X117: serving a conjunctive query from the PERSISTED postings
     index must prune at planning time — the query terms' bucket ids
     land in the index scan's PartitionFilters, and the probe
     physically reads fewer bucket files than exist (queries price by
     the df of their terms, not the corpus)."""
-    import hashlib
     from samplebatchprocessing_spark.operators import text as T
     doc = load_table(spark, sf_smoke, "documents")
-    idx = ("/tmp/sbp_work/x117_plan_"
-           + hashlib.md5(sf_smoke.encode()).hexdigest()[:8])
+    idx = str(tmp_path / "x117_plan")
     T.postings_index_write(doc, idx)
     probe = T.postings_probe_and(spark, idx, ["dup", "query"])
     plan = plan_str(probe)
@@ -1002,18 +997,16 @@ def test_sequence_census_and_incremental_pack_no_global_window(
 
 
 def test_ivf_distributed_probe_prunes_and_never_collects_queries(
-        spark, sf_smoke):
+        spark, sf_smoke, tmp_path):
     """l7_topk_ivf_dist (r9, VERDICT r8 #3): the distributed-query
     probe against the PERSISTED index keeps the x109 pruning property
     — the probed-cell filter lands in the index scan's
     PartitionFilters with n_probe < n_cells — while the query side
     shows the distributed shape (FlatMapGroupsInPandas/mapInPandas
     probe, no LocalTableScan of collected query vectors)."""
-    import hashlib
     from samplebatchprocessing_spark.operators import similarity
     emb = load_table(spark, sf_smoke, "embeddings")
-    idx = ("/tmp/sbp_work/l7d_plan_"
-           + hashlib.md5(sf_smoke.encode()).hexdigest()[:8])
+    idx = str(tmp_path / "l7d_plan")
     cmat = similarity.ivf_index_write(emb, idx, n_cells=16)
     probe = similarity.ivf_index_probe_distributed(
         spark, idx, cmat, emb.filter(F.col("vec_id") % 250 == 0),
@@ -1040,17 +1033,16 @@ def test_cogrouped_pandas_is_two_shuffles_no_join(spark, sf_smoke):
         assert bad not in plan
 
 
-def test_lsh_index_probe_prunes_bucket_partitions(spark, sf_smoke):
+def test_lsh_index_probe_prunes_bucket_partitions(spark, sf_smoke,
+                                                   tmp_path):
     """X132: probing the persisted LSH band index with a SMALL batch
     must prune at planning time — the batch's band-key buckets land
     in the index scan's PartitionFilters and the probe physically
     reads fewer bucket files than exist (the crawl-shard-vs-corpus
     serving shape)."""
-    import hashlib
     from samplebatchprocessing_spark.operators import dedup as D
     doc = load_table(spark, sf_smoke, "documents")
-    idx = ("/tmp/sbp_work/x132_plan_"
-           + hashlib.md5(sf_smoke.encode()).hexdigest()[:8])
+    idx = str(tmp_path / "x132_plan")
     D.lsh_index_write(doc.filter(F.col("doc_id") >= 10), idx)
     small = doc.filter(F.col("doc_id") < 2)      # 2-doc probe shard
     probe = D.lsh_index_probe(spark, idx, small)

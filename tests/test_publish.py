@@ -24,10 +24,18 @@ from samplebatchprocessing_spark.operators import similarity as S
 from samplebatchprocessing_spark.operators import text as T
 
 
+def _write_layout(path: str) -> None:
+    """A hand-made layout holding one file, as a real Spark writer
+    leaves it: a layout exists iff it holds at least one file."""
+    os.makedirs(path)
+    with open(os.path.join(path, "part-0.parquet"), "wb") as f:
+        f.write(b"data")
+
+
 def test_pointer_roundtrip_and_guards(tmp_path):
     root = str(tmp_path / "idx")
     v1 = os.path.join(root, "layout-v00001")
-    os.makedirs(v1)
+    _write_layout(v1)
 
     # unversioned root resolves to itself (pre-r11 back-compat)
     assert publish.resolve(root) == root
@@ -40,7 +48,7 @@ def test_pointer_roundtrip_and_guards(tmp_path):
     # fresh dir allocation: monotone, skips whatever exists on disk
     v2 = publish.new_layout_dir(root)
     assert os.path.basename(v2) == "layout-v00002"
-    os.makedirs(v2)
+    _write_layout(v2)
     assert publish.publish(root, v2) == 2
     assert publish.resolve(root) == v2
 
@@ -65,11 +73,11 @@ def test_crash_before_publish_leaves_old_version_live(tmp_path):
     and never reused for a version name."""
     root = str(tmp_path / "idx")
     v1 = os.path.join(root, "layout-v00001")
-    os.makedirs(v1)
+    _write_layout(v1)
     publish.publish(root, v1)
 
     orphan = publish.new_layout_dir(root)
-    os.makedirs(orphan)          # "crashed" writer: wrote, no publish
+    _write_layout(orphan)        # "crashed" writer: wrote, no publish
     assert publish.resolve(root) == v1
     assert publish.current_version(root) == 1
     # the NEXT writer gets a fresh name past the orphan
@@ -89,11 +97,11 @@ def test_prune_keeps_horizon_and_skips_orphans(tmp_path):
     dirs = []
     for i in range(1, 5):
         d = os.path.join(root, f"layout-v{i:05d}")
-        os.makedirs(d)
+        _write_layout(d)
         dirs.append(d)
         publish.publish(root, d)
     orphan = os.path.join(root, "layout-v00099")
-    os.makedirs(orphan)
+    _write_layout(orphan)
 
     with pytest.raises(ValueError, match="keep"):
         publish.prune(root, keep=0)
@@ -393,6 +401,32 @@ def test_cli_maintain_once_and_daemon(spark, tmp_path, capsys):
                  "--threshold", "2"]) == 0
     assert "due=False" in capsys.readouterr().out
     assert publish.current_version(root) == 2
+
+
+def test_cli_maintain_daemon_exits_on_failed_sweep(tmp_path):
+    """A daemon-mode ``maintain`` whose sweep raises (here: an
+    unversioned root) exits non-zero with the error on stderr instead
+    of idling until SIGINT with a dead sweep thread."""
+    import subprocess
+    import sys
+
+    bare = str(tmp_path / "bare")
+    os.makedirs(bare)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_CPUS="4")
+    proc = subprocess.Popen(
+        [sys.executable, "-m", "samplebatchprocessing_spark", "maintain",
+         "lsh", bare, "--poll", "0.2"],
+        cwd=repo, stdout=subprocess.DEVNULL, stderr=subprocess.PIPE,
+        text=True, env=env)
+    try:
+        _, err = proc.communicate(timeout=120)
+    finally:
+        if proc.poll() is None:
+            proc.kill()
+            proc.communicate()
+    assert proc.returncode != 0
+    assert "VERSIONED" in err
 
 
 def test_stream_probe_across_midstream_publish(spark, sf_smoke,
@@ -1091,6 +1125,59 @@ def test_concurrent_publishers_never_tear_the_pointer(tmp_path):
                      if s["v"] is not None]
         assert published, "neither writer published"
         assert final.current_version() == max(published)
+
+
+def test_threaded_posix_publishers_never_tear_the_pointer(tmp_path):
+    """Two threads each publish 200 fresh layouts to ONE POSIX root
+    while a third resolves it in a loop.  Each pointer write is one
+    atomic PUT through its own temp file, so no thread may raise (a
+    temp path shared by all writers let readers load half-written
+    JSON and writers rename each other's temp away), and the final
+    pointer is complete JSON whose history versions strictly
+    increase.  The writers race last-writer-wins: a version may be
+    lost, never torn.  Unlike the step fuzz above, the calls here
+    really overlap."""
+    import threading
+
+    root = str(tmp_path / "idx")
+    os.makedirs(root)
+    errors: list[BaseException] = []
+    writers_done = threading.Event()
+
+    def writer(tag: str) -> None:
+        try:
+            for i in range(200):
+                d = os.path.join(root, f"layout-{tag}{i:04d}")
+                _write_layout(d)
+                publish.publish(root, d)
+        except BaseException as e:  # noqa: BLE001 — surface below
+            errors.append(e)
+
+    def reader() -> None:
+        try:
+            while not writers_done.is_set():
+                publish.resolve(root)
+        except BaseException as e:  # noqa: BLE001 — surface below
+            errors.append(e)
+
+    writers = [threading.Thread(target=writer, args=(t,))
+               for t in ("a", "b")]
+    probe = threading.Thread(target=reader)
+    probe.start()
+    for t in writers:
+        t.start()
+    for t in writers:
+        t.join()
+    writers_done.set()
+    probe.join()
+
+    assert not errors, errors[:3]
+    with open(os.path.join(root, publish.POINTER)) as f:
+        meta = json.load(f)
+    versions = [h["version"] for h in meta["history"]]
+    assert versions == sorted(set(versions)) and versions
+    assert versions[-1] == meta["version"]
+    assert os.listdir(publish.resolve(root))
 
 
 def test_publish_inside_prune_window_is_lost_not_torn(tmp_path):

@@ -12,9 +12,6 @@ from pyspark.sql import functions as F
 from samplebatchprocessing_spark.catalog import normalize_events_ts
 from samplebatchprocessing_spark.streaming.jobs import events_stream
 
-BASE = "/tmp/sbp_stream_test"
-
-
 def _run_to_sink(spark, src_dir, sink, ckpt):
     raw_schema = spark.read.parquet(
         os.path.join(src_dir, os.listdir(src_dir)[0])).schema
@@ -32,11 +29,10 @@ def _run_to_sink(spark, src_dir, sink, ckpt):
     q.awaitTermination()
 
 
-def test_checkpoint_restart_no_dupes_no_loss(spark, sf_smoke):
-    shutil.rmtree(BASE, ignore_errors=True)
-    src = os.path.join(BASE, "src")
-    sink = os.path.join(BASE, "sink")
-    ckpt = os.path.join(BASE, "ckpt")
+def test_checkpoint_restart_no_dupes_no_loss(spark, sf_smoke, tmp_path):
+    src = str(tmp_path / "src")
+    sink = str(tmp_path / "sink")
+    ckpt = str(tmp_path / "ckpt")
     os.makedirs(src)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
@@ -61,19 +57,17 @@ def test_checkpoint_restart_no_dupes_no_loss(spark, sf_smoke):
     # re-running with nothing new is a no-op (idempotent commit log)
     _run_to_sink(spark, src, sink, ckpt)
     assert spark.read.parquet(f"{sink}/batch=*").count() == 2000
-    shutil.rmtree(BASE, ignore_errors=True)
 
 
-def test_stateful_sessions_carry_state_across_batches(spark, sf_smoke):
+def test_stateful_sessions_carry_state_across_batches(spark, sf_smoke,
+                                                      tmp_path):
     """S9: applyInPandasWithState must produce the same FINAL state
     whether events arrive in one micro-batch or split across two
     (state carried between invocations)."""
     from samplebatchprocessing_spark.streaming.jobs import (
         run_available_now, stateful_user_sessions)
 
-    base = "/tmp/sbp_stream_test_s9"
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(base)
+    base = str(tmp_path)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
@@ -116,7 +110,6 @@ def test_stateful_sessions_carry_state_across_batches(spark, sf_smoke):
         f = final[uid]
         assert (f["n_events"], f["n_sessions"], f["max_gap_us"]) == \
             (r["n_events"], r["n_sessions"], r["max_gap_us"]), uid
-    shutil.rmtree(base, ignore_errors=True)
 
 
 def test_stage_table_dir_gc_stale_generations(spark, sf_smoke, tmp_path):
