@@ -63,7 +63,7 @@ def cmd_send(args: argparse.Namespace) -> int:
                               args.in_prefix, args.out_prefix)
     out = os.path.join(args.bucket_dir, "manifest.parquet")
     manifest.write.mode("overwrite").parquet(out)
-    n_jobs = spark.read.parquet(out).count()
+    n_jobs = len(manifest.inputFiles())
     print(f"staged {n_staged} files -> {in_dir}; "
           f"manifest {out} ({n_jobs} jobs)")
     return 0
@@ -75,7 +75,7 @@ def cmd_get(args: argparse.Namespace) -> int:
     manifest = spark.read.parquet(
         os.path.join(args.bucket_dir, "manifest.parquet"))
     log = run_pipeline(spark, manifest, command=args.command,
-                       ext=args.ext, commit=args.commit)
+                       ext=args.ext)
     rows = log.collect()
     failed = [r for r in rows if not r["ok"]]
     for r in rows:
@@ -133,7 +133,7 @@ def cmd_watch(args: argparse.Namespace) -> int:
     q = watch_daemon(spark, args.bucket_dir,
                      in_prefix=args.in_prefix, out_prefix=args.out_prefix,
                      command=args.command, ext=args.ext,
-                     commit=args.commit, poll_seconds=args.poll)
+                     poll_seconds=args.poll)
     _run_in_foreground(
         q, "drain",
         f"watching {os.path.join(args.bucket_dir, args.in_prefix)} "
@@ -291,8 +291,6 @@ def main(argv: list[str] | None = None) -> int:
     pg.add_argument("--command", default="cp",
                     help="external transform run as [command, in, out] "
                     "(default cp, per the reference deployment)")
-    pg.add_argument("--commit", default="replace",
-                    choices=("replace", "tempkey"))
     pg.set_defaults(fn=cmd_get)
 
     pw = sub.add_parser("watch", help="daemon: continuously process new "
@@ -304,8 +302,6 @@ def main(argv: list[str] | None = None) -> int:
     pw.add_argument("--command", default="cp",
                     help="external transform run as [command, in, out] "
                     "(default cp, per the reference deployment)")
-    pw.add_argument("--commit", default="replace",
-                    choices=("replace", "tempkey"))
     pw.add_argument("--poll", type=float, default=5.0,
                     help="drain poll interval in seconds "
                     "(the reference's 20 s long-poll wait)")

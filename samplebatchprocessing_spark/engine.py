@@ -65,8 +65,7 @@ class Engine:
                        out_prefix: str = "output/",
                        transform: Callable[[bytes], bytes] | None = None,
                        command: str | None = None,
-                       ext: str = ".out",
-                       commit: str = "replace") -> DataFrame:
+                       ext: str = ".out") -> DataFrame:
         """SendJobs+GetJobs in one call: manifest every file under
         ``bucket_dir/in_prefix``, apply ``transform`` (a Python
         ``bytes -> bytes``) or ``command`` (the reference's external
@@ -78,4 +77,4 @@ class Engine:
                                   in_prefix, out_prefix)
         return run_pipeline(self.spark, manifest,
                             transform=transform, command=command,
-                            ext=ext, commit=commit)
+                            ext=ext)

@@ -116,16 +116,13 @@ def _command_transform(command: str) -> Callable[[bytes], bytes]:
 
 
 def _resolve_transform(transform: Callable[[bytes], bytes] | None,
-                       command: str | None,
-                       commit: str) -> Callable[[bytes], bytes]:
+                       command: str | None) -> Callable[[bytes], bytes]:
     """Argument set-up shared by run_pipeline and the watch drain: check
-    that ``transform`` and ``command`` are not both given and that
-    ``commit`` is a known strategy, then return the per-file
-    ``bytes -> bytes`` transform (identity when neither is given)."""
+    that ``transform`` and ``command`` are not both given, then return
+    the per-file ``bytes -> bytes`` transform (identity when neither is
+    given)."""
     if transform is not None and command is not None:
         raise ValueError("pass either transform= or command=, not both")
-    if commit not in ("replace", "tempkey"):
-        raise ValueError(f"unknown commit strategy {commit!r}")
     if command is not None:
         return _command_transform(command)
     return transform or (lambda b: b)   # user-data.sh:4: cp = identity
@@ -135,7 +132,6 @@ def run_pipeline(spark: SparkSession, manifest: DataFrame,
                  transform: Callable[[bytes], bytes] | None = None,
                  command: str | None = None,
                  ext: str = ".out",
-                 commit: str = "replace",
                  store: ObjectStoreClient | None = None) -> DataFrame:
     """GetJobs equivalent: dispatch manifest rows, transform each
     file's bytes, write results under the deterministic output key.
@@ -149,16 +145,13 @@ def run_pipeline(spark: SparkSession, manifest: DataFrame,
     migrating user brings their shell tool unchanged.  ``transform``
     and ``command`` are mutually exclusive; neither means identity.
 
-    ``commit`` picks the per-file commit strategy, the same on every
-    bucket scheme (bare and ``file://`` buckets go through
-    :class:`LocalObjectStoreClient`, whose PUT is temp + ``os.replace``):
-    - ``"replace"`` (default): one PUT of the final key — the atomic
-      visibility switch.
-    - ``"tempkey"``: PUT the temp key, COPY to the final key, delete
-      the temp key — the strategy for object stores (s3a has no atomic
-      rename; copy-to-final-key is what rename compiles to there, and
-      a reader never observes a partial final object because the copy
-      is a single PUT).  See SCALE.md "Object-store commit".
+    Each file commits as ONE ``put`` of its final key on the bucket's
+    storage plane (GetJobs.py:57-60's single key PUT), the same on
+    every scheme: the PUT is atomic (S3 PutObject; for bare and
+    ``file://`` buckets :class:`LocalObjectStoreClient`'s per-writer
+    temp + ``os.replace``), so a reader sees the old object or the new
+    one, never a partial, and no temp key is ever listable.  See
+    SCALE.md "Object-store commit".
 
     The worker reads each job's input itself, so the work split is
     the manifest's partitioning (for :func:`build_manifest`,
@@ -173,8 +166,8 @@ def run_pipeline(spark: SparkSession, manifest: DataFrame,
     Executors write the outputs directly (GetJobs.py:57-60);
     rerunning overwrites the same keys.
     """
-    proc = _file_processor(_resolve_transform(transform, command, commit),
-                           ext, commit, store=store)
+    proc = _file_processor(_resolve_transform(transform, command), ext,
+                           store=store)
     return (manifest.filter(F.col("action") == "process")  # GetJobs.py:30
             .select("bucket", "in_prefix", "out_prefix", "file_name")
             .mapInPandas(proc, LOG_SCHEMA))
@@ -214,8 +207,8 @@ class ObjectStoreClient:
 
     - ``put(key, data)``: store ``data`` under ``key`` as ONE atomic
       object — a reader sees the old object or the new one, never a
-      partial (S3 PUT semantics; this is what makes the direct-PUT
-      commit safe where POSIX needs write-then-rename).
+      partial (S3 PUT semantics).  The pipeline's per-file commit is
+      this one verb on the final key: no temp key, copy or delete.
     - ``get(key)``: the object's bytes, ``FileNotFoundError`` if the
       key does not exist (S3 GET / NoSuchKey; the reference's
       download verb, ``GetJobs.py:31``
@@ -223,13 +216,17 @@ class ObjectStoreClient:
       pointer publish (``operators.publish.StorePublisher`` reads
       ``_current.json`` through this).
     - ``copy(src, dst)``: server-side copy — itself a single PUT of
-      the destination object.
+      the destination object (``quarantine_sweep`` moves a poison
+      file with copy + delete).
     - ``delete(key)``: remove the object.
     - ``delete_prefix(prefix)``: remove every object under a prefix
       (paged deletes; the versioned-pointer prune retires a layout
       with it).
-    - ``list(prefix)``: every key under ``prefix`` (flat key
-      namespace — no directory notion, exactly S3's ListObjectsV2).
+    - ``list_pages(prefix, page_size)``: the keys under ``prefix``
+      (flat key namespace — no directory notion, exactly S3's
+      ListObjectsV2), page by page; the one listing verb each
+      implementation writes; ``list(prefix)`` is every key it
+      yields, sorted.
 
     Implementations must be PICKLABLE: the commit runs inside the
     executor's Python worker, so the client ships through the task
@@ -280,8 +277,20 @@ class ObjectStoreClient:
     def delete(self, key: str) -> None:
         raise NotImplementedError
 
-    def list(self, prefix: str) -> list[str]:
+    def list_pages(self, prefix: str,
+                   page_size: int = 1000) -> Iterator[list[str]]:
+        """The one listing primitive every client implements: the keys
+        under ``prefix`` (flat STRING prefix, ListObjectsV2 semantics)
+        in pages of at most ``page_size``, each yielded as soon as it
+        fills.  Real ListObjectsV2 returns at most 1000 keys per call
+        with a continuation token, so a consumer that pages prices
+        driver memory by the page size, never by the bucket size, and
+        one that needs membership stops after the first page."""
         raise NotImplementedError
+
+    def list(self, prefix: str) -> list[str]:
+        """Every key under ``prefix``, sorted."""
+        return sorted(k for page in self.list_pages(prefix) for k in page)
 
     def delete_prefix(self, prefix: str) -> bool:
         """Delete every object under ``prefix``, page by page (driver
@@ -294,22 +303,6 @@ class ObjectStoreClient:
                 self.delete(key)
                 found = True
         return found
-
-    def list_pages(self, prefix: str,
-                   page_size: int = 1000) -> "Iterator[list[str]]":
-        """Paged form of ``list`` (VERDICT r10 #7): real ListObjectsV2
-        returns at most 1000 keys per call with a continuation token,
-        so any consumer that materializes ``list(prefix)`` whole is
-        pricing driver memory by BUCKET size.  Default implementation
-        pages over ``list`` (correct for the file-backed double); a
-        real S3 client overrides this with the paginator so pages
-        stream.  Consumers that only need membership should prefer a
-        point lookup — ``list`` with the FULL key as the prefix — as
-        :func:`quarantine_sweep` does, bounding memory by the poison
-        count instead."""
-        keys = self.list(prefix)
-        for i in range(0, len(keys), page_size):
-            yield keys[i:i + page_size]
 
 
 class LocalObjectStoreClient(ObjectStoreClient):
@@ -389,23 +382,36 @@ class LocalObjectStoreClient(ObjectStoreClient):
     # "<key>.<8hex>.inprogress")
     _TMP_RE = re.compile(r"\.[0-9a-f]{8}\.inprogress$")
 
-    def list(self, prefix: str) -> list[str]:
+    def list_pages(self, prefix: str,
+                   page_size: int = 1000) -> Iterator[list[str]]:
         # S3 ListObjectsV2 matches by STRING prefix over the flat key
         # namespace — 'b/inp' matches 'b/input/x' (ADVICE r10), so
         # never treat the prefix as a directory: walk the directory
         # holding the prefix's last component (every key with that
-        # string prefix lives under it) and filter
-        out = []
+        # string prefix lives under it) and filter.  The walk is lazy
+        # and prunes the top's entries to the last component, so the
+        # first page opens only the directories on the way to its
+        # keys.  Pages come in walk order (a directory's files sorted,
+        # then its subdirectories sorted); ``list`` sorts
         top = os.path.join(self.root, os.path.dirname(prefix))
-        for dirpath, _dirs, files in os.walk(top):
-            for name in files:
+        head = os.path.basename(prefix)
+        page: list[str] = []
+        for dirpath, dirs, files in os.walk(top):
+            if dirpath == top:
+                dirs[:] = [d for d in dirs if d.startswith(head)]
+            dirs.sort()
+            for name in sorted(files):
                 if self._TMP_RE.search(name):  # crashed put: invisible
                     continue
                 key = os.path.relpath(os.path.join(dirpath, name),
                                       self.root)
                 if key.startswith(prefix):
-                    out.append(key)
-        return sorted(out)
+                    page.append(key)
+                    if len(page) == page_size:
+                        yield page
+                        page = []
+        if page:
+            yield page
 
     # -- conditional writes (r13) ------------------------------------
     # ETag = md5 of the content, exactly S3's single-part-PUT ETag.
@@ -507,16 +513,17 @@ class S3ObjectStoreClient(ObjectStoreClient):
     public boto3 S3 API (VERDICT r12 #4), verb-for-verb:
 
     - ``put``   = PutObject — S3's PUT is atomic per object, which is
-      the exact property the tempkey commit and the versioned-pointer
-      publish (``operators.publish.StorePublisher``) are built on.
+      the exact property the pipeline's one-PUT commit and the
+      versioned-pointer publish (``operators.publish.StorePublisher``)
+      are built on.
     - ``get``   = GetObject; NoSuchKey maps to ``FileNotFoundError``,
       the contract's missing-key signal.
     - ``copy``  = CopyObject (server-side; no byte round-trip).
     - ``delete``= DeleteObject — idempotent by S3 semantics, as the
       re-entrant quarantine sweep requires.
-    - ``list``  / ``list_pages`` = ListObjectsV2 via the SDK
-      paginator, so pages stream at the wire's 1000-key granularity
-      and driver memory is bounded by page size, not bucket size.
+    - ``list_pages`` = ListObjectsV2 via the SDK paginator, so pages
+      stream at the wire's 1000-key granularity and driver memory is
+      bounded by page size, not bucket size (``list`` sorts them).
 
     PICKLABLE BY CONSTRUCTION: state is (bucket, factory); the live
     SDK client is created lazily per process and dropped from
@@ -623,7 +630,7 @@ class S3ObjectStoreClient(ObjectStoreClient):
         self._c().delete_object(Bucket=self.bucket, Key=key)
 
     def list_pages(self, prefix: str,
-                   page_size: int = 1000) -> "Iterator[list[str]]":
+                   page_size: int = 1000) -> Iterator[list[str]]:
         paginator = self._c().get_paginator("list_objects_v2")
         for page in paginator.paginate(
                 Bucket=self.bucket, Prefix=prefix,
@@ -631,10 +638,6 @@ class S3ObjectStoreClient(ObjectStoreClient):
             keys = [o["Key"] for o in page.get("Contents", [])]
             if keys:
                 yield keys
-
-    def list(self, prefix: str) -> list[str]:
-        return sorted(k for page in self.list_pages(prefix)
-                      for k in page)
 
 
 def _fs_local_path(uri: str) -> str:
@@ -652,7 +655,7 @@ def _fs_local_path(uri: str) -> str:
         return "/" + rest.lstrip("/")
     raise NotImplementedError(
         f"scheme {scheme!r}: worker-side commit needs an "
-        f"ObjectStoreClient (tempkey commit = single-PUT copy; see "
+        f"ObjectStoreClient (its atomic put is the commit; see "
         f"SCALE.md 'Object-store commit')")
 
 
@@ -672,18 +675,14 @@ def _bucket_plane(bucket: str, store: ObjectStoreClient | None
     return local, "", local.fs_path
 
 
-def _file_processor(transform: Callable[[bytes], bytes],
-                    ext: str, commit: str,
+def _file_processor(transform: Callable[[bytes], bytes], ext: str,
                     store: ObjectStoreClient | None = None):
     """Arrow-batched per-file worker over job rows ``(bucket,
     in_prefix, out_prefix, file_name)`` (GetJobs.py:48-60): ``get`` the
     input from the bucket's one storage plane (:func:`_bucket_plane`;
-    ``store`` ships via the task closure), transform it, commit to the
-    deterministic key, emit one log row per file.  ``replace`` is one
-    put of the final key; ``tempkey`` puts a temp key, copies it to
-    the final key (a single PUT, so a reader never observes a partial
-    final object) and deletes the temp — the SCALE.md object-store
-    recipe.  A failed read fails the job like a failed transform; a
+    ``store`` ships via the task closure), transform it, commit it as
+    one atomic ``put`` of the deterministic key, emit one log row per
+    file.  A failed read fails the job like a failed transform; a
     failed job's row carries its ``error``.  An object-store scheme
     with no ``store`` raises (never a local directory named
     ``s3a:``)."""
@@ -702,13 +701,7 @@ def _file_processor(transform: Callable[[bytes], bytes],
                 try:
                     raw = bucket.get(in_key)
                     result = transform(raw)
-                    if commit == "replace":
-                        bucket.put(key, result)
-                    else:                           # tempkey
-                        tmp_key = key + ".inprogress"
-                        bucket.put(tmp_key, result)
-                        bucket.copy(tmp_key, key)
-                        bucket.delete(tmp_key)
+                    bucket.put(key, result)
                 except Exception as e:
                     # returncode gate (GetJobs.py:54-56): no upload,
                     # no delete -> Spark task retry redelivers; the
@@ -730,7 +723,6 @@ def watch_prefix(spark: SparkSession, bucket_dir: str,
                  transform: Callable[[bytes], bytes] | None = None,
                  command: str | None = None,
                  ext: str = ".out",
-                 commit: str = "replace",
                  checkpoint: str | None = None,
                  store: ObjectStoreClient | None = None) -> DataFrame:
     """The reference's LONG-POLL CONSUMER (GetJobs.py:21-40) as one
@@ -753,7 +745,7 @@ def watch_prefix(spark: SparkSession, bucket_dir: str,
     after an upgrade redelivers their files once, harmlessly.
     """
     _drainer(spark, bucket_dir, in_prefix, out_prefix, transform,
-             command, ext, commit, checkpoint, store)()
+             command, ext, checkpoint, store)()
     return commit_log(spark, bucket_dir)
 
 
@@ -763,7 +755,6 @@ def watch_daemon(spark: SparkSession, bucket_dir: str,
                  transform: Callable[[bytes], bytes] | None = None,
                  command: str | None = None,
                  ext: str = ".out",
-                 commit: str = "replace",
                  checkpoint: str | None = None,
                  poll_seconds: float = 5.0,
                  store: ObjectStoreClient | None = None):
@@ -780,14 +771,13 @@ def watch_daemon(spark: SparkSession, bucket_dir: str,
     from ..operators.maintenance import maintenance_daemon
     return maintenance_daemon([_drainer(
         spark, bucket_dir, in_prefix, out_prefix, transform, command,
-        ext, commit, checkpoint, store)], poll_seconds)
+        ext, checkpoint, store)], poll_seconds)
 
 
 def _drainer(spark: SparkSession, bucket_dir: str, in_prefix: str,
              out_prefix: str, transform: Callable[[bytes], bytes] | None,
-             command: str | None, ext: str, commit: str,
-             checkpoint: str | None, store: ObjectStoreClient | None
-             ) -> Callable[[], int]:
+             command: str | None, ext: str, checkpoint: str | None,
+             store: ObjectStoreClient | None) -> Callable[[], int]:
     """The one drain of watch_prefix and watch_daemon, as a zero-arg
     callable that returns the count run.  Each call lists the prefix,
     drops the files logged under the checkpoint, runs the rest through
@@ -800,7 +790,7 @@ def _drainer(spark: SparkSession, bucket_dir: str, in_prefix: str,
     import posixpath
     import time
     from urllib.parse import unquote
-    transform = _resolve_transform(transform, command, commit)
+    transform = _resolve_transform(transform, command)
 
     def norm(path: str) -> str:
         if _split_scheme(path)[0] in ("", "file"):
@@ -834,8 +824,7 @@ def _drainer(spark: SparkSession, bucket_dir: str, in_prefix: str,
             # reuses its listing (no second one, no backlog-wide glob)
             manifest = _manifest(spark, bucket_dir, in_prefix, out_prefix,
                                  new)
-        (run_pipeline(spark, manifest, transform, ext=ext, commit=commit,
-                      store=store)
+        (run_pipeline(spark, manifest, transform, ext=ext, store=store)
          .withColumn("run_seq", F.lit(run_seq))
          .withColumn("batch_id", F.lit(next(batch_ids)))
          .withColumn("checkpoint", F.lit(checkpoint))

@@ -418,7 +418,7 @@ def p21_object_store_quarantine(spark: SparkSession,
     Scenario: stage the fixture files plus one poison object INTO
     the store with ``put`` before any Spark job (SendJobs.py:26-28);
     deliver one job row per object three times through
-    :func:`run_pipeline` (tempkey commit, returncode gate — the
+    :func:`run_pipeline` (one-PUT commit, returncode gate — the
     worker GETs each input object by its job row, the poison object
     fails each delivery, and each run's log rows append
     run_seq-tagged exactly like a watch drain); sweep through the
@@ -471,7 +471,7 @@ def p21_object_store_quarantine(spark: SparkSession,
 
     def deliver(frame: DataFrame, run_seq: float) -> None:
         (run_pipeline(spark, frame, transform=guard, ext=".out",
-                      commit="tempkey", store=store)
+                      store=store)
          .withColumn("run_seq", F.lit(run_seq))
          .withColumn("batch_id", F.lit(0))
          .write.mode("append").parquet(log_dir))

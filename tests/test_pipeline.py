@@ -214,20 +214,6 @@ def test_pipeline_transform_and_command_exclusive(spark, bucket):
                      transform=lambda b: b, command="cp")
 
 
-def test_pipeline_tempkey_commit(spark, bucket):
-    """Object-store commit strategy: temp key + copy + delete — final
-    bytes identical, no temp keys left behind."""
-    log = run_pipeline(spark, build_manifest(spark, bucket),
-                       commit="tempkey")
-    assert all(r["ok"] for r in log.collect())
-    assert not glob.glob(os.path.join(bucket, "output", "*.inprogress"))
-    for src in glob.glob(os.path.join(bucket, "input", "*")):
-        out = os.path.join(bucket, "output",
-                           os.path.basename(src) + ".out")
-        assert (hashlib.md5(open(src, "rb").read()).hexdigest()
-                == hashlib.md5(open(out, "rb").read()).hexdigest())
-
-
 def test_cli_send_get_end_to_end(spark, bucket, sf_smoke, capsys):
     """`python -m samplebatchprocessing_spark send|get` reproduces the
     reference's CLI flow (SendJobs.py:38-48, GetJobs.py:67-76) with
@@ -299,17 +285,17 @@ def test_watch_prefix_retry_dedupes_log(spark, bucket):
 
 
 
-def test_watch_prefix_rejects_unknown_commit(spark, bucket):
-    """The watch path validates ``commit`` exactly like run_pipeline:
-    an unknown strategy raises before any stream starts, instead of
-    silently running the tempkey branch."""
-    from samplebatchprocessing_spark.pipeline.manifest import watch_prefix
-    active = len(spark.streams.active)
-    with pytest.raises(ValueError, match="unknown commit strategy"):
-        watch_prefix(spark, bucket, commit="bogus")
-    assert len(spark.streams.active) == active
-    assert not os.path.exists(os.path.join(bucket, "_checkpoint"))
-    assert not os.path.exists(os.path.join(bucket, "output"))
+def test_watch_prefix_rejects_transform_and_command(spark, bucket):
+    """The watch path validates its arguments exactly like
+    run_pipeline: ``transform=`` with ``command=`` raises before any
+    work — the drain and the daemon alike — so nothing is written."""
+    from samplebatchprocessing_spark.pipeline.manifest import (
+        watch_daemon, watch_prefix)
+    for watch in (watch_prefix, watch_daemon):
+        with pytest.raises(ValueError, match="not both"):
+            watch(spark, bucket, transform=lambda b: b, command="cp")
+    for d in ("_checkpoint", "_commit_log", "output"):
+        assert not os.path.exists(os.path.join(bucket, d))
 
 
 def test_failed_file_is_not_redelivered_under_its_checkpoint(spark,
@@ -610,28 +596,25 @@ def test_pipeline_file_scheme_uri_end_to_end(spark, bucket):
     pipeline runs against a scheme-prefixed (file://) bucket URI —
     Spark's binaryFile source resolves the URI through the Hadoop
     filesystem layer while the worker-side per-file commit maps it
-    through the scheme shim; tempkey commit (the s3a strategy) is
-    exercised over the URI form too."""
+    through the scheme shim, and its one-PUT commit leaves no temp
+    object behind."""
     uri = f"file://{bucket}"
     manifest = build_manifest(spark, uri)
     assert manifest.count() == 4
-    for commit in ("replace", "tempkey"):
-        log = run_pipeline(spark, manifest, commit=commit).collect()
-        assert len(log) == 4 and all(r["ok"] for r in log)
-        for r in log:
-            src = os.path.join(bucket, "input", r["file_name"])
-            out = r["out_path"]
-            assert not out.startswith("file:")   # shim resolved to POSIX
-            with open(src, "rb") as f_in, open(out, "rb") as f_out:
-                assert (hashlib.md5(f_in.read()).hexdigest()
-                        == hashlib.md5(f_out.read()).hexdigest())
-        assert not glob.glob(os.path.join(bucket, "output",
-                                          "*.inprogress"))
+    log = run_pipeline(spark, manifest).collect()
+    assert len(log) == 4 and all(r["ok"] for r in log)
+    for r in log:
+        src = os.path.join(bucket, "input", r["file_name"])
+        out = r["out_path"]
+        assert not out.startswith("file:")   # shim resolved to POSIX
+        with open(src, "rb") as f_in, open(out, "rb") as f_out:
+            assert (hashlib.md5(f_in.read()).hexdigest()
+                    == hashlib.md5(f_out.read()).hexdigest())
+    assert not glob.glob(os.path.join(bucket, "output", "*.inprogress"))
 
 
-@pytest.mark.parametrize("commit", ["replace", "tempkey"])
-def test_posix_commit_never_rewrites_live_output(spark, bucket, commit):
-    """Both commits swap the final key to a new file; neither rewrites
+def test_posix_commit_never_rewrites_live_output(spark, bucket):
+    """The commit swaps the final key to a new file; it never rewrites
     the live output in place.  A reader holding the old output (here a
     hard link, as an open handle would) keeps reading the old bytes,
     and the final key holds the new ones (SCALE.md 'Object-store
@@ -643,8 +626,7 @@ def test_posix_commit_never_rewrites_live_output(spark, bucket, commit):
         f.write(b"old bytes")
     reader = os.path.join(bucket, "reader_handle")
     os.link(live, reader)
-    log = run_pipeline(spark, build_manifest(spark, bucket),
-                       commit=commit).collect()
+    log = run_pipeline(spark, build_manifest(spark, bucket)).collect()
     assert len(log) == 4 and all(r["ok"] for r in log)
     with open(os.path.join(bucket, "input", name), "rb") as src, \
             open(live, "rb") as out:
@@ -666,7 +648,7 @@ def test_pipeline_object_store_scheme_raises_not_silent():
 
 def _recording_store(root: str):
     """File-backed ObjectStoreClient double (VERDICT r7 #4): objects
-    live under <root>/objects/<key>; every get/put/copy/delete appends
+    live under <root>/objects/<key>; every get/put/delete appends
     a time-ordered journal entry, so the test can assert the exact
     call sequence the reference's S3 flow would receive
     (GetJobs.py:48-53 download, :57-60 upload, :37-40
@@ -704,15 +686,6 @@ def _recording_store(root: str):
                 f.write(data)
             self._journal(f"PUT {key}")
 
-        def copy(self, src: str, dst: str) -> None:
-            with open(self._obj(src), "rb") as f:
-                data = f.read()
-            p = self._obj(dst)
-            os.makedirs(os.path.dirname(p), exist_ok=True)
-            with open(p, "wb") as f:
-                f.write(data)
-            self._journal(f"COPY {src} -> {dst}")
-
         def delete(self, key: str) -> None:
             os.remove(self._obj(key))
             self._journal(f"DELETE {key}")
@@ -726,7 +699,7 @@ def _store_ops(root: str) -> list[str]:
             for p in sorted(glob.glob(os.path.join(d, "*")))]
 
 
-def _object_store_log(spark, store, commit, transform=None):
+def _object_store_log(spark, store, transform=None):
     """Stage three input objects with ``put``, clear the journal, then
     send their job rows for an object-store bucket URI through
     :func:`run_pipeline` — the same dispatch the streaming watcher
@@ -743,55 +716,34 @@ def _object_store_log(spark, store, commit, transform=None):
                  "output/", f"f{i}.bin") for i in range(3)],
         MANIFEST_SCHEMA)
     return run_pipeline(spark, manifest, transform or (lambda b: b),
-                        commit=commit, store=store).collect()
+                        store=store).collect()
 
 
 def _file_ops(root: str, i: int) -> list[str]:
     return [o for o in _store_ops(root) if f"/f{i}.bin" in o]
 
 
-def test_object_store_tempkey_commit_contract(spark, tmp_path):
-    """VERDICT r7 #4: the tempkey commit against an object-store
-    scheme is GET input -> PUT temp key -> server-side COPY to the
-    final key (a single PUT, so a reader never observes a partial
-    final object) -> DELETE temp — per file, in that order, with no
-    POSIX path ever touched for the s3a bucket."""
+def test_object_store_replace_commit_is_single_put(spark, tmp_path):
+    """On an object store the PUT itself is the atomic visibility
+    switch, so the commit is the input's GET plus ONE direct put of
+    the final key — no temp object, no copy, no delete — per file,
+    with no POSIX path ever touched for the s3a bucket."""
     store = _recording_store(str(tmp_path))
-    log = _object_store_log(spark, store, "tempkey",
-                            transform=lambda b: b + b"!")
+    log = _object_store_log(spark, store, transform=lambda b: b + b"!")
     assert len(log) == 3 and all(r["ok"] for r in log)
+    assert len(_store_ops(str(tmp_path))) == 6
     for i, r in enumerate(sorted(log, key=lambda r: r["file_name"])):
         key = f"contract-bucket/data/output/f{i}.bin.out"
         assert r["out_path"] == f"s3a://{key}"
         with open(os.path.join(str(tmp_path), "objects", key),
                   "rb") as f:
             assert f.read() == bytes([i]) * (i + 1) + b"!"
-        tmp_key = key + ".inprogress"
-        assert not os.path.exists(
-            os.path.join(str(tmp_path), "objects", tmp_key))
         assert r["in_bytes"] == i + 1
         assert _file_ops(str(tmp_path), i) == [
             f"GET contract-bucket/data/input/f{i}.bin",
-            f"PUT {tmp_key}",
-            f"COPY {tmp_key} -> {key}",
-            f"DELETE {tmp_key}"]
+            f"PUT {key}"]
     # the fake bucket never materialized as a local directory
     assert not os.path.exists("s3a:")
-
-
-def test_object_store_replace_commit_is_single_put(spark, tmp_path):
-    """On an object store the PUT itself is the atomic visibility
-    switch, so the 'replace' strategy degenerates to the input's GET
-    plus ONE direct put of the final key — no temp object, no copy,
-    no delete."""
-    store = _recording_store(str(tmp_path))
-    log = _object_store_log(spark, store, "replace")
-    assert len(log) == 3 and all(r["ok"] for r in log)
-    assert len(_store_ops(str(tmp_path))) == 6
-    for i in range(3):
-        assert _file_ops(str(tmp_path), i) == [
-            f"GET contract-bucket/data/input/f{i}.bin",
-            f"PUT contract-bucket/data/output/f{i}.bin.out"]
 
 
 def test_object_store_failed_transform_commits_nothing(spark, tmp_path):
@@ -806,7 +758,7 @@ def test_object_store_failed_transform_commits_nothing(spark, tmp_path):
         return b
 
     store = _recording_store(str(tmp_path))
-    log = _object_store_log(spark, store, "tempkey", transform=_boom)
+    log = _object_store_log(spark, store, transform=_boom)
     by_name = {r["file_name"]: r for r in log}
     assert not by_name["f1.bin"]["ok"]
     assert by_name["f0.bin"]["ok"] and by_name["f2.bin"]["ok"]
@@ -1225,3 +1177,30 @@ def test_object_store_list_pages(tmp_path):
     pages = list(store.list_pages("b/", page_size=3))
     assert [len(p) for p in pages] == [3, 3, 1]
     assert [k for p in pages for k in p] == store.list("b/")
+
+
+def test_object_store_first_page_opens_o1_directories(tmp_path,
+                                                       monkeypatch):
+    """A membership lookup — the first ``page_size=1`` page, as
+    ``StorePublisher`` checks that a layout holds a file — opens only
+    the directories on the way to its first key, not every bucket of
+    the layout: the walk is lazy and a page is yielded as it fills."""
+    from samplebatchprocessing_spark.pipeline.manifest import (
+        LocalObjectStoreClient)
+
+    store = LocalObjectStoreClient(str(tmp_path))
+    for b in range(64):
+        for f in range(3):
+            store.put(f"idx/v1/bucket={b}/part-{f}.parquet", b"x")
+    opened = []
+    scandir = os.scandir
+
+    def recording_scandir(*args):
+        opened.append(args)
+        return scandir(*args)
+
+    monkeypatch.setattr(os, "scandir", recording_scandir)
+    pages = store.list_pages("idx/v1/", page_size=1)
+    assert next(pages) == ["idx/v1/bucket=0/part-0.parquet"]
+    pages.close()
+    assert len(opened) <= 2, f"{len(opened)} directories opened"
