@@ -723,27 +723,41 @@ def _file_ops(root: str, i: int) -> list[str]:
     return [o for o in _store_ops(root) if f"/f{i}.bin" in o]
 
 
-def test_object_store_replace_commit_is_single_put(spark, tmp_path):
-    """On an object store the PUT itself is the atomic visibility
-    switch, so the commit is the input's GET plus ONE direct put of
-    the final key — no temp object, no copy, no delete — per file,
-    with no POSIX path ever touched for the s3a bucket."""
+def test_object_store_tempkey_commit_contract(spark, tmp_path):
+    """The commit against an object-store scheme writes the
+    transformed bytes to the final key and to no temp key: the row
+    names ``s3a://<key>``, counts the input's bytes, no
+    ``<key>.inprogress`` object exists afterwards, and no POSIX path
+    is ever touched for the s3a bucket."""
     store = _recording_store(str(tmp_path))
     log = _object_store_log(spark, store, transform=lambda b: b + b"!")
     assert len(log) == 3 and all(r["ok"] for r in log)
-    assert len(_store_ops(str(tmp_path))) == 6
     for i, r in enumerate(sorted(log, key=lambda r: r["file_name"])):
         key = f"contract-bucket/data/output/f{i}.bin.out"
         assert r["out_path"] == f"s3a://{key}"
         with open(os.path.join(str(tmp_path), "objects", key),
                   "rb") as f:
             assert f.read() == bytes([i]) * (i + 1) + b"!"
+        tmp_key = key + ".inprogress"
+        assert not os.path.exists(
+            os.path.join(str(tmp_path), "objects", tmp_key))
         assert r["in_bytes"] == i + 1
-        assert _file_ops(str(tmp_path), i) == [
-            f"GET contract-bucket/data/input/f{i}.bin",
-            f"PUT {key}"]
     # the fake bucket never materialized as a local directory
     assert not os.path.exists("s3a:")
+
+
+def test_object_store_replace_commit_is_single_put(spark, tmp_path):
+    """On an object store the PUT itself is the atomic visibility
+    switch, so the commit is the input's GET plus ONE direct put of
+    the final key — no temp object, no copy, no delete."""
+    store = _recording_store(str(tmp_path))
+    log = _object_store_log(spark, store)
+    assert len(log) == 3 and all(r["ok"] for r in log)
+    assert len(_store_ops(str(tmp_path))) == 6
+    for i in range(3):
+        assert _file_ops(str(tmp_path), i) == [
+            f"GET contract-bucket/data/input/f{i}.bin",
+            f"PUT contract-bucket/data/output/f{i}.bin.out"]
 
 
 def test_object_store_failed_transform_commits_nothing(spark, tmp_path):
