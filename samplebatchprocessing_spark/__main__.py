@@ -153,34 +153,30 @@ def _store_from_uri(index_root: str):
       the same absolute path is behaviorally equivalent for this
       client (keys resolve to the same backing files), so the split
       is the one every POSIX root publishes through
-      (``publish._local``): the client roots at the uri's PARENT
+      (``publish._publisher``): the client roots at the uri's PARENT
       directory and the final path component is the index-root key.
       Spark reads the double's backing files.
     - ``s3://bucket/prefix`` — the boto3
       :class:`S3ObjectStoreClient` (import-guarded; needs
       credentials + hadoop-aws jars at runtime, FIXTURES.md ask #3);
       Spark reads ``s3a://bucket/<key>`` uris."""
-    from .operators.publish import _local
-    from .pipeline.manifest import S3ObjectStoreClient, _split_scheme
+    from .operators.publish import _path_of, _publisher
+    from .pipeline.manifest import _split_scheme
     scheme, rest = _split_scheme(index_root)
     if scheme == "":
         return None
     if scheme == "mock":
-        local = _local("/" + rest.lstrip("/"))
-        if not local.root or not os.path.isdir(local.store.root):
+        pub = _publisher("/" + rest.lstrip("/"))
+        if not pub.root or not os.path.isdir(pub.store.root):
             raise ValueError(
                 f"mock uri {index_root!r}: parent directory "
-                f"{local.store.root!r} must exist (the bucket double)")
-        return local.store, local.root, local.store.fs_path
-    if scheme == "s3":
-        bucket, _, root = rest.partition("/")
-        if not bucket or not root:
-            raise ValueError(
-                f"s3 uri {index_root!r}: expected s3://bucket/prefix")
-        return (S3ObjectStoreClient(bucket), root,
-                lambda key: f"s3a://{bucket}/{key}")
-    raise ValueError(f"unsupported index-root scheme {scheme!r} "
-                     f"(supported: plain path, mock://, s3://)")
+                f"{pub.store.root!r} must exist (the bucket double)")
+    elif scheme == "s3":
+        pub = _publisher("s3a://" + rest)   # the s3a data plane's client
+    else:
+        raise ValueError(f"unsupported index-root scheme {scheme!r} "
+                         f"(supported: plain path, mock://, s3://)")
+    return pub.store, pub.root, _path_of(pub.store)
 
 
 def cmd_maintain(args: argparse.Namespace) -> int:
@@ -212,10 +208,9 @@ def cmd_maintain(args: argparse.Namespace) -> int:
     store_parts = _store_from_uri(args.index_root)
     if store_parts is not None:
         if args.kind in ("vocab", "nb"):
-            print(f"maintain {args.kind}: trained-artifact roots are "
-                  f"POSIX paths (the vocab/NB artifact writers open "
-                  f"local files); store uris cover the index kinds",
-                  file=sys.stderr)
+            print(f"maintain {args.kind}: the vocab and NB retrain "
+                  f"sweeps take POSIX roots; store uris cover the "
+                  f"index kinds", file=sys.stderr)
             return 2
         store, root, spark_uri = store_parts
         plane.update(store=store, spark_uri=spark_uri)

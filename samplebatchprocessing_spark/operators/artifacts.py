@@ -24,11 +24,14 @@ Artifact sizing drives the storage choice:
   write, partition-parallel read) with the two prior counts in a
   JSON sidecar.  Scoring broadcast-joins the table (the x115 plan
   gate), so reading it back distributed keeps the 100 TB path.
+
+As for the indexes, Spark moves the parquet, and the layout path's
+client (``publish._publisher``) moves the pointer and each JSON
+sidecar as one atomic ``put`` — a crash leaves no torn sidecar.
 """
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -58,56 +61,48 @@ def bpe_vocab_write(merges, layout_dir: str,
     layout gives the retrain due-predicate its baseline: drift is
     fresh-data fertility minus THIS number, with no re-encode of the
     training corpus at sweep time."""
-    os.makedirs(layout_dir, exist_ok=True)
     doc = {"format": "bpe_vocab", "n_merges": len(merges),
            "merges": [[l, r, m] for _, l, r, m, _ in merges],
            "rounds": [[int(k), l, r, m, int(c)]
                       for k, l, r, m, c in merges]}
     if fertility_x1000 is not None:
         doc["fertility_x1000"] = int(fertility_x1000)
-    with open(os.path.join(layout_dir, _VOCAB_FILE), "w") as f:
-        json.dump(doc, f)
+    publish._put_json(layout_dir, _VOCAB_FILE, doc)
+
+
+def _live_doc(root: str, name: str, fmt: str) -> tuple[str, dict]:
+    """(live layout, sidecar ``name`` of format ``fmt``) under
+    ``root`` — resolves the m13 pointer (or the bare dir of an
+    unversioned layout).  A missing sidecar is a wrong-root bug, not
+    a race: crashed writers' layouts are never published."""
+    layout = publish.resolve(root)
+    doc = publish._get_json(layout, name)
+    if doc is None:
+        raise FileNotFoundError(
+            f"{layout!r} holds no {name} — not a published {fmt} "
+            f"layout (crashed writer layouts are never published, so "
+            f"this is a wrong-root bug, not a race)")
+    if doc.get("format") != fmt:
+        raise ValueError(f"{name} under {layout!r} is not a {fmt} "
+                         f"artifact: format={doc.get('format')!r}")
+    return layout, doc
 
 
 def bpe_vocab_read(root: str) -> tuple[Merge, ...]:
-    """The LIVE merge table under ``root`` — resolves the m13 pointer
-    (or the bare dir for an unversioned layout), so a reader always
-    gets one consistent trained vocabulary, in training order, ready
-    for ``text.bpe_encode_stats``.  O(n_merges) driver-side bytes —
-    the vocab is a plan constant, not a relation."""
-    layout = publish.resolve(root)
-    path = os.path.join(layout, _VOCAB_FILE)
-    if not os.path.exists(path):
-        raise FileNotFoundError(
-            f"{layout!r} holds no {_VOCAB_FILE} — not a published BPE "
-            f"vocab layout (crashed writer layouts are never "
-            f"published, so this is a wrong-root bug, not a race)")
-    with open(path) as f:
-        doc = json.load(f)
-    if doc.get("format") != "bpe_vocab":
-        raise ValueError(f"{path!r} is not a bpe_vocab artifact: "
-                         f"format={doc.get('format')!r}")
-    return tuple((l, r, m) for l, r, m in doc["merges"])
+    """The LIVE merge table under ``root`` (:func:`bpe_vocab_meta`'s
+    merges), so a reader always gets one consistent trained
+    vocabulary, in training order, ready for
+    ``text.bpe_encode_stats``.  O(n_merges) driver-side bytes — the
+    vocab is a plan constant, not a relation."""
+    return tuple((l, r, m) for l, r, m in bpe_vocab_meta(root)["merges"])
 
 
 def bpe_vocab_meta(root: str) -> dict:
     """The LIVE vocab layout's full metadata document (format,
     n_merges, merges, and — when the writer stamped one — the
     at-training ``fertility_x1000`` baseline the retrain
-    due-predicate compares against).  Same pointer resolution and
-    guards as :func:`bpe_vocab_read`."""
-    layout = publish.resolve(root)
-    path = os.path.join(layout, _VOCAB_FILE)
-    if not os.path.exists(path):
-        raise FileNotFoundError(
-            f"{layout!r} holds no {_VOCAB_FILE} — not a published BPE "
-            f"vocab layout")
-    with open(path) as f:
-        doc = json.load(f)
-    if doc.get("format") != "bpe_vocab":
-        raise ValueError(f"{path!r} is not a bpe_vocab artifact: "
-                         f"format={doc.get('format')!r}")
-    return doc
+    due-predicate compares against)."""
+    return _live_doc(root, _VOCAB_FILE, "bpe_vocab")[1]
 
 
 def nb_model_write(cnt: DataFrame, np_: int, nn: int,
@@ -117,13 +112,13 @@ def nb_model_write(cnt: DataFrame, np_: int, nn: int,
     vocabulary-sized) plus the class-prior counts in a sidecar.  The
     priors are part of the model: x115's score is LLR + prior, and a
     published model must carry everything scoring needs."""
-    os.makedirs(layout_dir, exist_ok=True)
+    publish._publisher(layout_dir)  # a bad scheme raises before the write
     (cnt.select("tok", "pc", "nc")
         .write.mode("overwrite")
         .parquet(os.path.join(layout_dir, _NB_COUNTS)))
-    with open(os.path.join(layout_dir, _NB_META), "w") as f:
-        json.dump({"format": "nb_model", "np": int(np_),
-                   "nn": int(nn)}, f)
+    publish._put_json(layout_dir, _NB_META,
+                      {"format": "nb_model", "np": int(np_),
+                       "nn": int(nn)})
 
 
 def nb_model_read(spark: SparkSession,
@@ -132,16 +127,6 @@ def nb_model_read(spark: SparkSession,
     (count DataFrame, positive prior count, negative prior count).
     The counts come back as a lazy parquet relation — scoring
     broadcast-joins it, so nothing here collects."""
-    layout = publish.resolve(root)
-    meta_path = os.path.join(layout, _NB_META)
-    if not os.path.exists(meta_path):
-        raise FileNotFoundError(
-            f"{layout!r} holds no {_NB_META} — not a published NB "
-            f"model layout")
-    with open(meta_path) as f:
-        meta = json.load(f)
-    if meta.get("format") != "nb_model":
-        raise ValueError(f"{meta_path!r} is not an nb_model artifact: "
-                         f"format={meta.get('format')!r}")
+    layout, meta = _live_doc(root, _NB_META, "nb_model")
     cnt = spark.read.parquet(os.path.join(layout, _NB_COUNTS))
     return cnt, int(meta["np"]), int(meta["nn"])

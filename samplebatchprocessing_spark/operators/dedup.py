@@ -18,7 +18,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..exprs import spread
-from .publish import resolve as _resolve_layout
+from .publish import (_compact_layers, _get_json, _publisher, _put_json,
+                      resolve as _resolve_layout)
 from .text import token_set, tokenize
 
 # Deterministic MinHash parameters (seed vector fixed by design,
@@ -685,17 +686,7 @@ def lsh_band_relation(df: DataFrame, text_col: str = "text",
                          F.lit(n_buckets)).cast("int"))
 
 
-def _lsh_meta_write(index_dir: str, n_bands: int,
-                    n_buckets: int) -> None:
-    """Stamp the index's FROZEN parameters next to its data (r10):
-    a ``_``-prefixed sidecar Spark's parquet reader ignores, like
-    ``_SUCCESS``.  Written AFTER the parquet sink (an overwrite
-    clears the directory first)."""
-    import json
-    import os
-    with open(os.path.join(index_dir, "_lsh_meta.json"), "w") as f:
-        json.dump({"n_hashes": N_HASHES, "n_bands": n_bands,
-                   "n_buckets": n_buckets}, f)
+_LSH_META = "_lsh_meta.json"
 
 
 def _lsh_meta_check(index_dir: str, n_bands: int,
@@ -707,13 +698,9 @@ def _lsh_meta_check(index_dir: str, n_bands: int,
     without an error anywhere near the cause.  A legacy index with
     no sidecar passes unchecked (backward compatible; its parity
     booleans still catch drift end-to-end)."""
-    import json
-    import os
-    path = os.path.join(index_dir, "_lsh_meta.json")
-    if not os.path.exists(path):
+    meta = _get_json(index_dir, _LSH_META)
+    if meta is None:
         return
-    with open(path) as f:
-        meta = json.load(f)
     want = {"n_hashes": N_HASHES, "n_bands": n_bands,
             "n_buckets": n_buckets}
     if meta != want:
@@ -742,11 +729,16 @@ def lsh_index_write(df: DataFrame, index_dir: str,
     scan + one bucket shuffle of the fixed-width band relation —
     n_bands x 12 bytes per doc, never text); every later crawl-shard
     ingest probes this index instead of re-tokenizing the corpus."""
+    _publisher(index_dir)   # an unsupported scheme raises before the write
     (lsh_band_relation(df, text_col, id_col, n_bands, n_buckets)
      .repartition("bucket")
      .sortWithinPartitions("band_idx", "band_hash")
      .write.mode("overwrite").partitionBy("bucket").parquet(index_dir))
-    _lsh_meta_write(index_dir, n_bands, n_buckets)
+    # stamp the FROZEN parameters (r10) in a `_` sidecar Spark's
+    # reader skips, AFTER the sink (an overwrite clears the directory)
+    _put_json(index_dir, _LSH_META, {"n_hashes": N_HASHES,
+                                     "n_bands": n_bands,
+                                     "n_buckets": n_buckets})
 
 
 def lsh_index_append(df: DataFrame, index_dir: str,
@@ -816,62 +808,31 @@ def lsh_index_compact(spark, layers: list[str], out_dir: str) -> None:
     row-group min/max skipping on (band_idx, band_hash) decays.
     This maintenance pass folds the layers back into the canonical
     one-file-per-bucket, (band_idx, band_hash)-sorted layout the
-    one-shot build produces.
-
-    Frozen-bucket discipline: repartitions on the EXISTING bucket
-    column (no re-hash — bucket assignment is frozen at build time
-    by the shared :func:`lsh_band_relation` builder), so compaction
-    never moves a band row across buckets and composes with
-    in-flight probes on the old layout.  Scale (100 TB): one
-    bucket-keyed shuffle of the index RELATION (ids + fixed-width
-    band hashes, never document text), amortized over a cadence;
-    probes between compactions stay correct on the layered form,
-    merely reading more, smaller files."""
-    import json
-    import os
-    if not layers:
-        raise ValueError("layers must be non-empty")
-    # read-then-overwrite of a path being read corrupts or fails
-    # mid-job — out_dir must be a FRESH directory, published to
-    # readers via the pointer swap (ADVICE r10; see publish.publish)
-    out_real = os.path.realpath(out_dir)
-    for layer in layers:
-        if os.path.realpath(layer) == out_real:
-            raise ValueError(
-                f"out_dir {out_dir!r} is one of the input layers — "
-                f"compaction writes a fresh layout and publishes it "
-                f"atomically; it never rewrites a layer in place")
-    cols = ["did", "band_idx", "band_hash", "bucket"]
-    rel, metas, bare = None, [], []
-    for layer in layers:
-        part = spark.read.parquet(layer).select(cols)
-        rel = part if rel is None else rel.unionByName(part)
-        mp = os.path.join(layer, "_lsh_meta.json")
-        if os.path.exists(mp):
-            with open(mp) as f:
-                metas.append(json.load(f))
-        else:
-            bare.append(layer)
+    one-shot build produces (:func:`publish._compact_layers`, with
+    the frozen-parameter sidecar carried all-or-none).  Probes
+    between compactions stay correct on the layered form, merely
+    reading more, smaller files."""
+    metas = [_get_json(layer, _LSH_META) for layer in layers]
+    stamped = [m for m in metas if m is not None]
+    bare = [layer for layer, m in zip(layers, metas) if m is None]
     # all-or-none sidecars (ADVICE r10): a sidecar-less layer mixed
     # with sidecar-bearing ones CANNOT be verified parameter-
     # compatible — folding it in could silently merge two different
     # hash families.  All-bare (a pure legacy index) stays allowed,
     # matching _lsh_meta_check's backward compatibility.
-    if metas and bare:
+    if stamped and bare:
         raise ValueError(
-            f"layers {bare} have no _lsh_meta.json sidecar while "
+            f"layers {bare} have no {_LSH_META} sidecar while "
             f"other layers do — their frozen LSH parameters cannot "
             f"be verified; stamp them (or compact them separately)")
-    if any(m != metas[0] for m in metas[1:]):
+    if any(m != stamped[0] for m in stamped[1:]):
         raise ValueError(f"layers disagree on frozen LSH parameters: "
-                         f"{metas}")
-    (rel.repartition("bucket")
-        .sortWithinPartitions("band_idx", "band_hash")
-        .write.mode("overwrite").partitionBy("bucket")
-        .parquet(out_dir))
-    if metas:   # carry the frozen parameters onto the new layout
-        with open(os.path.join(out_dir, "_lsh_meta.json"), "w") as f:
-            json.dump(metas[0], f)
+                         f"{stamped}")
+    _compact_layers(spark, layers, out_dir,
+                    ["did", "band_idx", "band_hash", "bucket"],
+                    ["band_idx", "band_hash"])
+    if stamped:   # carry the frozen parameters onto the new layout
+        _put_json(out_dir, _LSH_META, stamped[0])
 
 
 def simhash(df: DataFrame, text_col: str = "text",

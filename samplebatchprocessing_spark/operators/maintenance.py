@@ -19,9 +19,9 @@ Every index sweep (LSH, postings, IVF) runs one chain,
 :func:`_sweep`; the kind supplies only its census, due-predicate
 and rewrite.  Every root publishes through one
 :class:`publish.StorePublisher`: a key prefix in ``store``, or with
-``store=None`` a POSIX directory over a ``LocalObjectStoreClient``
-at its parent; Spark reads the layout parquet at
-``spark_uri(key)``.  The chain:
+``store=None`` the client its path maps to (``publish._publisher``);
+Spark reads the layout parquet at ``spark_uri(key)``, and the
+rewrites carry each layout's sidecars through that path.  The chain:
 1. CENSUS the live layout (``resolve`` — one consistent version)
    with an o(index-metadata) probe;
 2. apply the PURE integer due-predicate (unit-testable apart from
@@ -56,8 +56,8 @@ REPORT_SCHEMA = ("index_root string, kind string, due boolean, "
 
 
 def bucket_file_census(layout_dir: str) -> tuple[int, int, int]:
-    """:func:`store_bucket_census` of a POSIX layout directory."""
-    pub = publish._local(layout_dir)
+    """:func:`store_bucket_census` of a layout path."""
+    pub = publish._publisher(layout_dir)
     return store_bucket_census(pub.store, pub.root)
 
 
@@ -117,12 +117,12 @@ def _plane(index_root: str, store, cas: bool, spark_uri):
     parquet Spark reads at ``spark_uri(key)`` — the file-backed
     client's ``fs_path`` by default, a ``lambda k:
     f"s3a://{bucket}/{k}"`` on a real deployment.  ``store=None``
-    is a POSIX directory, split as :func:`publish._local` does."""
+    is the path's own client (:func:`publish._publisher`)."""
     if store is None:
-        local = publish._local(index_root)
-        store, index_root = local.store, local.root
+        pub = publish._publisher(index_root)
+        store, index_root = pub.store, pub.root
     return (publish.StorePublisher(store, index_root, cas=cas),
-            spark_uri or store.fs_path,
+            spark_uri or publish._path_of(store),
             lambda key: store_bucket_census(store, key))
 
 
@@ -285,7 +285,7 @@ def vocab_maintenance_sweep(spark, root: str, fresh_df,
     from . import artifacts
     from .text import bpe_train_merges, encode_fertility_x1000
 
-    pub = publish._local(root)
+    pub = publish._publisher(root)
     before = _require_versioned(pub, "vocab", root)
     meta = artifacts.bpe_vocab_meta(root)
     if "fertility_x1000" not in meta:
@@ -347,7 +347,7 @@ def nb_maintenance_sweep(spark, root: str, fresh_doc,
     from . import artifacts
     from .text import tokenize
 
-    pub = publish._local(root)
+    pub = publish._publisher(root)
     before = _require_versioned(pub, "nb", root)
     cnt, np_, nn = artifacts.nb_model_read(spark, root)
 

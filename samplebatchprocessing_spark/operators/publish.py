@@ -1,12 +1,7 @@
 """Atomic versioned-pointer PUBLISH for persisted index layouts
-(r11, VERDICT r10 #2).
-
-Three maintenance passes rewrite an index into a fresh directory —
-LSH band compaction (``dedup.lsh_index_compact``), postings
-compaction (``text.postings_index_compact``), IVF re-centroiding
-(``similarity.ivf_index_recluster``) — and each docstring promised
-"probes keep serving the old layout until the atomic directory
-swap".  This module makes the swap executable, once, for all three:
+(r11): LSH and postings compaction (:func:`_compact_layers`) and IVF
+re-centroiding (``similarity.ivf_index_recluster``) each write a
+fresh layout, and this module's pointer swap makes it live.
 
 - An index ROOT is a directory holding one or more LAYOUT
   subdirectories plus a pointer file ``_current.json`` naming the
@@ -37,32 +32,117 @@ the vacuum-horizon discipline of m10).
 
 One lifecycle on every storage plane: :class:`StorePublisher` runs
 it over an ``ObjectStoreClient``, and the module-level functions run
-a POSIX root ``/a/b/idx`` as ``StorePublisher(LocalObjectStoreClient
-("/a/b"), "idx")``, mapping keys back to paths with ``fs_path``.
+the client that :func:`_publisher` maps a root path to.  Spark moves
+a layout's parquet; that one client moves its pointer and its JSON
+sidecars (:func:`_put_json`, :func:`_get_json`).
 """
 
 from __future__ import annotations
 
 import json
 import os
+from functools import reduce
 
 from ..pipeline.manifest import (LocalObjectStoreClient,
-                                 ObjectStoreClient, PreconditionFailed)
+                                 ObjectStoreClient, PreconditionFailed,
+                                 S3ObjectStoreClient, _fs_local_path,
+                                 _split_scheme)
 
 POINTER = "_current.json"
 
 
-def _local(index_root: str) -> "StorePublisher":
-    """The publisher of a POSIX root: a client at its parent
-    directory, the last path component as the root key."""
-    parent, key = os.path.split(index_root.rstrip("/"))
+def _publisher(path: str) -> "StorePublisher":
+    """The publisher of a layout or root path — the one path-to-client
+    mapping of the index and artifact code:
+
+    - a bare or ``file://`` path: a :class:`LocalObjectStoreClient` at
+      its parent directory, the last path component as the key;
+    - ``s3a://bucket/key``: an :class:`S3ObjectStoreClient` for
+      ``bucket``, ``key`` as the key;
+    - any other scheme raises ``ValueError``, before the caller's
+      Spark write."""
+    scheme, rest = _split_scheme(path)
+    if scheme == "s3a":
+        bucket, _, key = rest.partition("/")
+        if not bucket or not key.strip("/"):
+            raise ValueError(f"{path!r}: expected s3a://bucket/key")
+        return StorePublisher(S3ObjectStoreClient(bucket), key)
+    if scheme not in ("", "file"):
+        raise ValueError(
+            f"{path!r}: unsupported scheme {scheme!r} for an index or "
+            f"artifact path (supported: plain path, file://, s3a://)")
+    parent, key = os.path.split(_fs_local_path(path).rstrip("/"))
     return StorePublisher(LocalObjectStoreClient(parent), key)
+
+
+def _path_of(store: ObjectStoreClient):
+    """The key -> path rule of ``store``'s data plane, as
+    ``manifest._bucket_plane`` reports pipeline keys: ``fs_path`` on
+    the file-backed client, ``s3a://bucket/key`` on S3 (the inverse of
+    :func:`_publisher`)."""
+    if isinstance(store, S3ObjectStoreClient):
+        return lambda key: f"s3a://{store.bucket}/{key}"
+    return store.fs_path
+
+
+def _put_json(layout: str, name: str, doc) -> None:
+    """Write sidecar ``name`` of ``layout`` as ONE atomic ``put`` of
+    its JSON bytes — a crash never leaves a torn sidecar."""
+    pub = _publisher(layout)
+    pub.store.put(f"{pub.root}/{name}", json.dumps(doc).encode())
+
+
+def _get_json(layout: str, name: str):
+    """Sidecar ``name`` of ``layout``, parsed; None when it has none."""
+    pub = _publisher(layout)
+    try:
+        return json.loads(pub.store.get(f"{pub.root}/{name}"))
+    except FileNotFoundError:
+        return None
+
+
+def _location(path: str) -> str:
+    """One spelling per layout location: a local layout's real path
+    (bare, ``file://``, symlinked or dotted alike), else its URI."""
+    pub = _publisher(path)
+    loc = _path_of(pub.store)(pub.root)
+    return loc if "://" in loc else os.path.realpath(loc)
+
+
+def _compact_layers(spark, layers: list[str], out_dir: str,
+                    cols: list[str], sort_cols: list[str]) -> None:
+    """The one compaction body of the bucket-partitioned indexes (LSH
+    bands, postings): union ``cols`` of every layer, repartition on
+    the EXISTING ``bucket`` column (no re-hash: bucket assignment is
+    frozen at build time, so no row moves across buckets and
+    in-flight probes of the old layout stay correct), sort within
+    each bucket by ``sort_cols`` and overwrite ``out_dir``
+    partitioned by bucket.  Scale (100 TB): one bucket-keyed shuffle
+    of the index RELATION, never document text."""
+    if not layers:
+        raise ValueError("layers must be non-empty")
+    # read-then-overwrite of a path being read corrupts or fails
+    # mid-job — out_dir must be a FRESH layout, published to readers
+    # via the pointer swap (ADVICE r10)
+    out = _location(out_dir)
+    if any(_location(layer) == out for layer in layers):
+        raise ValueError(
+            f"out_dir {out_dir!r} is one of the input layers — "
+            f"compaction writes a fresh layout and publishes it "
+            f"atomically; it never rewrites a layer in place")
+    rel = reduce(lambda a, b: a.unionByName(b),
+                 (spark.read.parquet(layer).select(cols)
+                  for layer in layers))
+    (rel.repartition("bucket")
+        .sortWithinPartitions(*sort_cols)
+        .write.mode("overwrite").partitionBy("bucket")
+        .parquet(out_dir))
 
 
 def current_version(index_root: str) -> int | None:
     """Version number the pointer currently names, or None for an
     unversioned root (no pointer file)."""
-    return _local(index_root).current_version()
+    return _publisher(index_root).current_version()
 
 
 def resolve(index_root: str) -> str:
@@ -72,9 +152,9 @@ def resolve(index_root: str) -> str:
     Without one: ``index_root`` itself — an unversioned index IS its
     own layout, so every reader can resolve unconditionally and
     pre-pointer indexes keep serving unchanged."""
-    pub = _local(index_root)
+    pub = _publisher(index_root)
     key = pub.resolve()
-    return index_root if key == pub.root else pub.store.fs_path(key)
+    return index_root if key == pub.root else _path_of(pub.store)(key)
 
 
 def new_layout_dir(index_root: str, prefix: str = "layout-v") -> str:
@@ -83,8 +163,8 @@ def new_layout_dir(index_root: str, prefix: str = "layout-v") -> str:
     than both the published version and every layout holding a file
     — a crashed writer's orphan is never reused, so a half-written
     layout can never be mistaken for a complete one."""
-    pub = _local(index_root)
-    return pub.store.fs_path(pub.new_layout_dir(prefix))
+    pub = _publisher(index_root)
+    return _path_of(pub.store)(pub.new_layout_dir(prefix))
 
 
 def publish(index_root: str, layout_dir: str) -> int:
@@ -103,7 +183,7 @@ def publish(index_root: str, layout_dir: str) -> int:
             f"layout {layout_dir!r} is not a direct subdirectory of "
             f"index root {index_root!r} — layouts live inside their "
             f"root so the pointer's relative name stays valid")
-    pub = _local(index_root)
+    pub = _publisher(index_root)
     return pub.publish(f"{pub.root}/{os.path.basename(layout_real)}")
 
 
@@ -111,8 +191,8 @@ def prune(index_root: str, keep: int = 2) -> list[str]:
     """Delete layout directories of versions older than the newest
     ``keep`` published ones; returns the deleted directory paths
     (:meth:`StorePublisher.prune`)."""
-    pub = _local(index_root)
-    return [pub.store.fs_path(k) for k in pub.prune(keep)]
+    pub = _publisher(index_root)
+    return [_path_of(pub.store)(k) for k in pub.prune(keep)]
 
 
 class StorePublisher:
@@ -141,7 +221,9 @@ class StorePublisher:
     Physical layout DATA still moves through Spark (parquet over the
     scheme's Hadoop connector in a real deployment; the file-backed
     client's ``fs_path`` on a POSIX root) — this class owns only the
-    control plane: naming, pointing, retiring.
+    control plane: naming, pointing, retiring.  Its ``store`` also
+    moves each layout's JSON sidecars (:func:`_put_json`), so one
+    pointer swap versions a layout's data and sidecars together.
 
     CONCURRENCY, two modes (ADVICE r12):
 

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from ..session import ship_package
-from .publish import resolve as _resolve_layout
+from .publish import _get_json, _put_json, resolve as _resolve_layout
 
 def _seq_sum(arr):
     """Sequential left fold of an array<double> — order-FIXED double
@@ -580,31 +580,27 @@ def ivf_index_recluster(spark, index_dir: str, out_dir: str,
     frozen-quantizer delta appends the centroids no longer describe
     the corpus (a drifted crawl's vectors crowd a few stale cells,
     so probes read ever-bigger partitions for the same recall).
-    Retrain the coarse quantizer on the CURRENT index contents (the
-    same deterministic xxhash64-ordered sample and fixed seeds as
-    the one-shot build), reassign every vector in one Arrow pass,
-    and rewrite ``out_dir`` in the canonical cell-partitioned
-    layout; returns the new centroid matrix for the caller to
-    publish alongside the swapped index (or persisted into the new
-    layout via ``ivf_centroids_write`` so one pointer swap covers
-    both — see ``maintenance.ivf_maintenance_sweep``).
+    Rebuild ``out_dir`` from the CURRENT index contents with
+    :func:`ivf_index_write` (the one-shot build's deterministic
+    sample and fixed seeds); returns the new centroid matrix, which
+    the caller stamps into the new layout (``ivf_centroids_write``)
+    so one pointer swap covers both (``maintenance.
+    ivf_maintenance_sweep``).
 
     Identity contract: the index stores exactly the (vec_id,
     embedding) relation the builds wrote, so reclustering a layered
-    index == ``ivf_index_write`` over the same corpus — same sample,
-    same seeds, same centroids, same assignment (both parity
+    index == ``ivf_index_write`` over the same corpus (both parity
     booleans declared by the x133 registry row).  Scale (100 TB):
     one corpus-sized Arrow assignment pass + one cell-partitioned
     write, amortized over the recluster cadence (the ANN analog of
     l17/x123 compaction); probes keep serving the old layout until
-    the atomic pointer swap (``publish.publish`` — r11, executable
-    form of the swap this docstring used to leave to the caller)."""
-    index_dir = _resolve_layout(index_dir)
-    emb = spark.read.parquet(index_dir).select("vec_id", "embedding")
-    cmat = ivf_centroids(emb, n_cells, "kmeans", sample_cap)
-    (ivf_assign(emb, cmat).write.mode("overwrite")
-     .partitionBy("cell").parquet(out_dir))
-    return cmat
+    the atomic pointer swap (``publish.publish``)."""
+    emb = (spark.read.parquet(_resolve_layout(index_dir))
+           .select("vec_id", "embedding"))
+    return ivf_index_write(emb, out_dir, n_cells, sample_cap)
+
+
+_IVF_CENTROIDS = "_ivf_centroids.json"
 
 
 def ivf_centroids_write(index_dir: str, cmat) -> None:
@@ -614,25 +610,24 @@ def ivf_centroids_write(index_dir: str, cmat) -> None:
     IVF index.  With centroids inside the layout directory, one
     pointer swap (``publish.publish``) versions index AND quantizer
     together — a probe can never pair new cells with stale centroids.
-    JSON float serialization is repr-exact, so read(write(cmat)) is
-    bit-identical (test-pinned)."""
-    import json
-    import os
-    with open(os.path.join(index_dir, "_ivf_centroids.json"),
-              "w") as f:
-        json.dump([[float(v) for v in row] for row in cmat], f)
+    One atomic ``put`` through the layout path's client
+    (``publish._put_json``).  JSON float serialization is repr-exact,
+    so read(write(cmat)) is bit-identical (test-pinned)."""
+    _put_json(index_dir, _IVF_CENTROIDS,
+              [[float(v) for v in row] for row in cmat])
 
 
 def ivf_centroids_read(index_dir: str):
     """Centroid matrix (numpy float64) from the layout's sidecar;
     accepts a plain layout directory or a versioned index root."""
-    import json
-    import os
-
     import numpy as np
-    index_dir = _resolve_layout(index_dir)
-    with open(os.path.join(index_dir, "_ivf_centroids.json")) as f:
-        return np.array(json.load(f), dtype=np.float64)
+    layout = _resolve_layout(index_dir)
+    rows = _get_json(layout, _IVF_CENTROIDS)
+    if rows is None:
+        raise FileNotFoundError(
+            f"{layout!r} holds no {_IVF_CENTROIDS} — not an IVF layout "
+            f"with persisted centroids")
+    return np.array(rows, dtype=np.float64)
 
 
 def ivf_cell_census(spark, index_dir: str) -> tuple[int, int, int]:

@@ -14,7 +14,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..exprs import bounded_part
-from .publish import resolve as _resolve_layout
+from .publish import _compact_layers, resolve as _resolve_layout
 
 # Deterministic per-language marker vocabularies for the heuristic
 # language-ID scorer.  Tiny on purpose: broadcastable as literals
@@ -1019,38 +1019,13 @@ def postings_index_compact(spark, layers: list[str],
     maintenance pass that folds delta layers (x121 appended files,
     s24 streamed epoch directories) back into the one-file-per-
     bucket, (tok, doc_id)-sorted serving layout the one-shot build
-    produces.  Reads every layer's postings relation, re-partitions
-    on the EXISTING bucket column (no re-hash: bucket assignment is
-    frozen at build time, so compaction never moves a posting across
-    buckets and composes with in-flight probes on the old layout),
-    and overwrites ``out_dir`` with the canonical layout.
+    produces (:func:`publish._compact_layers`).
 
     Layers must be doc-disjoint per term — the append/stream
     invariant (each doc's postings live in exactly one layer); the
     registry entry's direct-scan oracle and the full-relation parity
-    boolean catch a violation.  Scale (100 TB): compaction is one
-    bucket-keyed shuffle of the index RELATION (ids + tfs, never
-    document text), amortized over a cadence — probes between
-    compactions stay correct on the layered form, merely reading
-    more, smaller files."""
-    import os
-    if not layers:
-        raise ValueError("layers must be non-empty")
-    # same in-place guard as lsh_index_compact (ADVICE r10): the
-    # fresh layout is published to readers via the pointer swap
-    out_real = os.path.realpath(out_dir)
-    for layer in layers:
-        if os.path.realpath(layer) == out_real:
-            raise ValueError(
-                f"out_dir {out_dir!r} is one of the input layers — "
-                f"compaction writes a fresh layout and publishes it "
-                f"atomically; it never rewrites a layer in place")
-    cols = ["tok", "doc_id", "tf", "bucket"]
-    rel = None
-    for layer in layers:
-        part = spark.read.parquet(layer).select(cols)
-        rel = part if rel is None else rel.unionByName(part)
-    (rel.repartition("bucket")
-        .sortWithinPartitions("tok", "doc_id")
-        .write.mode("overwrite").partitionBy("bucket")
-        .parquet(out_dir))
+    boolean catch a violation.  Probes between compactions stay
+    correct on the layered form, merely reading more, smaller
+    files."""
+    _compact_layers(spark, layers, out_dir,
+                    ["tok", "doc_id", "tf", "bucket"], ["tok", "doc_id"])

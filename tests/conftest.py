@@ -76,14 +76,17 @@ def sf_oracle() -> str:
 #    the DRIVER_WINDOW — the driver's own correctness gate executes
 #    the window entries against DuckDB at sf0.01 in the same run, so
 #    the tier keeps window parity and defers the long tail to the
-#    full suite.  The paper's pipeline rows (``_TIER1_ROWS``) are
-#    exempt: their parity gates the default tier wherever the window
-#    ends.
+#    full suite.  The paper's pipeline rows and the vocab/NB retrain
+#    and CAS-publish lifecycle rows (``_TIER1_ROWS``) are exempt:
+#    their parity gates the default tier wherever the window ends.
 _TIER1_ROWS = frozenset({
     "p8_manifest_pipeline",
     "p10_watch_prefix",
     "p20_poison_quarantine",
     "p21_object_store_quarantine",
+    "x137_vocab_retrain_sweep",
+    "x138_model_retrain_sweep",
+    "m14_cas_publish",
 })
 _SLOW_TESTS = frozenset({
     "test_differential.py::test_differential_ivf_probe_under_maintenance[0]",
@@ -133,7 +136,6 @@ _SLOW_TESTS = frozenset({
     "test_oracle_parity.py::test_driver_canonicalizable[x133_ivf_recluster]",
     "test_oracle_parity.py::test_driver_canonicalizable[x134_maintenance_sweep]",
     "test_oracle_parity.py::test_driver_canonicalizable[x135_vocab_publish]",
-    "test_oracle_parity.py::test_driver_canonicalizable[x137_vocab_retrain_sweep]",
     "test_oracle_parity.py::test_oracle_parity[l11_dedup_clusters]",
     "test_oracle_parity.py::test_oracle_parity[l15_fuzzy_dedup_keep]",
     "test_oracle_parity.py::test_oracle_parity[l16_dedup_keep_best]",
@@ -161,7 +163,6 @@ _SLOW_TESTS = frozenset({
     "test_oracle_parity.py::test_oracle_parity[x133_ivf_recluster]",
     "test_oracle_parity.py::test_oracle_parity[x134_maintenance_sweep]",
     "test_oracle_parity.py::test_oracle_parity[x135_vocab_publish]",
-    "test_oracle_parity.py::test_oracle_parity[x137_vocab_retrain_sweep]",
     "test_oracle_parity.py::test_oracle_parity[x20_pretrain_pipeline]",
     "test_oracle_parity.py::test_oracle_parity[x36_dupgraph_triangles]",
     "test_oracle_parity.py::test_oracle_parity[x48_cluster_safe_split]",

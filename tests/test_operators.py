@@ -103,6 +103,8 @@ def test_lsh_index_compact_rejects_in_place_and_mixed_sidecars(
     with pytest.raises(ValueError, match="input layers"):  # variant
         dedup.lsh_index_compact(spark, [a, b],
                                 str(tmp_path / "." / "b"))
+    with pytest.raises(ValueError, match="input layers"):  # file://
+        dedup.lsh_index_compact(spark, [a, b], "file://" + b)
     with pytest.raises(ValueError, match="non-empty"):
         dedup.lsh_index_compact(spark, [], str(tmp_path / "out"))
 

@@ -1447,3 +1447,190 @@ def test_cli_maintain_store_uri_with_cas(spark, tmp_path, capsys):
     # trained-artifact kinds refuse store uris loudly
     assert main(["maintain", "vocab", uri, "--once",
                  "--fresh-parquet", "/tmp/nope.parquet"]) == 2
+
+
+# ---------------------------------------------------------------------------
+# One client for every layout sidecar: a bare, file:// or s3a:// layout
+# path maps to one ObjectStoreClient, which moves the pointer and the
+# JSON sidecars; Spark moves the parquet
+# ---------------------------------------------------------------------------
+
+def test_layout_path_maps_to_one_client():
+    """The path-to-client mapping, with no network: a bare and a
+    file:// spelling map to the same file-backed client and key; an
+    s3a path maps to the S3 client of its bucket, and its keys map
+    back to s3a paths; any other scheme raises, naming it."""
+    from samplebatchprocessing_spark.pipeline.manifest import (
+        LocalObjectStoreClient, S3ObjectStoreClient)
+    s3 = publish._publisher("s3a://b/idx/layout-v00002")
+    assert isinstance(s3.store, S3ObjectStoreClient)
+    assert (s3.store.bucket, s3.root) == ("b", "idx/layout-v00002")
+    assert publish._path_of(s3.store)("idx/layout-v00002/x.parquet") \
+        == "s3a://b/idx/layout-v00002/x.parquet"
+    for path in ("/a/b/idx", "file:///a/b/idx", "file:///a/b/idx/"):
+        pub = publish._publisher(path)
+        assert isinstance(pub.store, LocalObjectStoreClient)
+        assert (pub.store.root, pub.root) == ("/a/b", "idx")
+    for bad in ("gs://b/idx", "hdfs://nn/idx", "s3a://b"):
+        with pytest.raises(ValueError, match=bad.split(":")[0]):
+            publish._publisher(bad)
+
+
+def test_unsupported_scheme_raises_before_any_write(spark, tmp_path,
+                                                    spark_jobs):
+    """A layout path with no client raises ValueError naming its
+    scheme before Spark runs a job, so no parquet is left without
+    its sidecar."""
+    import numpy as np
+
+    from samplebatchprocessing_spark.operators import artifacts as A
+    doc = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+    layer = str(tmp_path / "layer")
+    cnt = spark.createDataFrame([("aa", 3, 1)],
+                                "tok string, pc long, nc long")
+    for call in (lambda: dedup.lsh_index_write(doc, "gs://b/idx"),
+                 lambda: dedup.lsh_index_compact(spark, [layer],
+                                                 "gs://b/idx"),
+                 lambda: T.postings_index_compact(spark, [layer],
+                                                  "gs://b/idx"),
+                 lambda: A.nb_model_write(cnt, 1, 1, "gs://b/nb"),
+                 lambda: S.ivf_centroids_write("gs://b/ivf",
+                                               np.eye(2))):
+        def attempt():
+            with pytest.raises(ValueError, match="'gs'"):
+                call()
+        assert spark_jobs(attempt)[1] == 0
+
+
+def test_file_uri_lsh_layout_carries_its_sidecar(spark, sf_smoke,
+                                                 tmp_path):
+    """A file:// LSH layout is the bare one: its write stamps the
+    sidecar, a mismatched append raises FROZEN through either
+    spelling, compaction carries the sidecar, and the file:// root
+    resolves to its live layout, so a probe with two layouts
+    retained reads one version."""
+    doc = load_table(spark, sf_smoke, "documents").limit(30)
+    batch = doc.limit(30).exceptAll(doc.limit(25))
+    root = str(tmp_path / "root")
+    v1, v2 = (os.path.join(root, f"layout-v0000{i}") for i in (1, 2))
+    os.makedirs(root)
+    dedup.lsh_index_write(doc.limit(25), "file://" + v1)
+    with open(os.path.join(v1, "_lsh_meta.json")) as f:
+        meta = json.load(f)
+    assert meta["n_buckets"] == 32
+    publish.publish(root, v1)
+    assert publish.resolve("file://" + root) == v1
+
+    for spelling in (root, "file://" + root):
+        with pytest.raises(ValueError, match="FROZEN"):
+            dedup.lsh_index_append(batch, spelling, n_buckets=7)
+    dedup.lsh_index_append(batch, "file://" + root)
+
+    dedup.lsh_index_compact(spark, ["file://" + v1], "file://" + v2)
+    with open(os.path.join(v2, "_lsh_meta.json")) as f:
+        assert json.load(f) == meta
+    publish.publish(root, v2)
+    probe = [sorted(map(tuple, dedup.lsh_index_probe(
+        spark, r, batch).collect())) for r in (root, "file://" + root)]
+    assert probe[0] == probe[1] and probe[0]
+
+
+def test_file_uri_ivf_centroid_sidecar_roundtrip(spark, tmp_path):
+    """IVF centroids written through a file:// layout read back
+    bit-exact through either spelling of the layout and of its
+    versioned root."""
+    import numpy as np
+    rng = np.random.default_rng(5)
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in rng.normal(size=4)])
+         for i in range(40)], "vec_id long, embedding array<float>")
+    root = str(tmp_path / "ivf_root")
+    v1 = os.path.join(root, "layout-v00001")
+    os.makedirs(root)
+    cmat = S.ivf_index_write(emb, "file://" + v1, n_cells=4)
+    S.ivf_centroids_write("file://" + v1, cmat)
+    publish.publish(root, v1)
+    for path in (v1, "file://" + v1, root, "file://" + root):
+        got = S.ivf_centroids_read(path)
+        assert got.dtype == np.float64 and (got == cmat).all()
+
+
+def test_sidecar_io_runs_no_spark_job(spark, tmp_path, spark_jobs):
+    """Sidecar reads and writes go through the layout's client, never
+    through a Spark read: zero jobs for a centroid and a vocab
+    round trip."""
+    import numpy as np
+
+    from samplebatchprocessing_spark.operators import artifacts as A
+    ivf = str(tmp_path / "ivf")
+    os.makedirs(ivf)
+    cmat = np.random.default_rng(3).normal(size=(4, 3))
+    got, n = spark_jobs(lambda: (S.ivf_centroids_write(ivf, cmat),
+                                 S.ivf_centroids_read(ivf))[1])
+    assert (got == cmat).all() and n == 0
+    vocab = str(tmp_path / "vocab")
+    merges = [(1, "t", "h", "th", 9), (2, "th", "e", "the", 7)]
+    got, n = spark_jobs(lambda: (A.bpe_vocab_write(merges, vocab),
+                                 A.bpe_vocab_read(vocab))[1])
+    assert got == (("t", "h", "th"), ("th", "e", "the")) and n == 0
+
+
+def _file_uri(store):
+    return lambda key: "file://" + store.fs_path(key)
+
+
+def test_store_lsh_maintenance_sweep_over_file_uri(spark, sf_smoke,
+                                                   tmp_path):
+    """A store sweep whose data plane is a URI (as `maintain lsh
+    s3://...` hands Spark s3a:// paths) carries the frozen-parameter
+    sidecar onto the layout it publishes, so the guard still holds
+    on the live version."""
+    doc = load_table(spark, sf_smoke, "documents").limit(30)
+    base, batch = doc.limit(25), doc.limit(30).exceptAll(doc.limit(25))
+    store = _bucket(tmp_path)
+    pub = publish.StorePublisher(store, "idx/lsh")
+    v1 = pub.new_layout_dir()
+    dedup.lsh_index_write(base, store.fs_path(v1))
+    pub.publish(v1)
+    for _ in range(2):
+        dedup.lsh_index_append(batch, store.fs_path(v1))
+    r = maintenance.lsh_maintenance_sweep(
+        spark, "idx/lsh", max_files_per_bucket=3, store=store,
+        spark_uri=_file_uri(store))
+    assert r["acted"] and r["version_after"] == 2
+    live = store.fs_path(pub.resolve())
+    assert os.path.exists(os.path.join(live, "_lsh_meta.json"))
+    with pytest.raises(ValueError, match="FROZEN"):
+        dedup.lsh_index_append(batch, live, n_buckets=7)
+
+
+def test_store_ivf_maintenance_sweep_over_file_uri(spark, tmp_path):
+    """The IVF store sweep over a URI data plane stamps the new
+    centroids into the layout it publishes: v2 goes live, and its
+    sidecar equals the centroids the recluster returns."""
+    import numpy as np
+    rng = np.random.default_rng(11)
+    base = spark.createDataFrame(
+        [(i, [float(x) for x in rng.normal(size=4)])
+         for i in range(64)], "vec_id long, embedding array<float>")
+    store = _bucket(tmp_path)
+    pub = publish.StorePublisher(store, "idx/ivf")
+    v1 = pub.new_layout_dir()
+    cmat = S.ivf_index_write(base, store.fs_path(v1), n_cells=8)
+    S.ivf_centroids_write(store.fs_path(v1), cmat)
+    pub.publish(v1)
+    drift = spark.createDataFrame(
+        [(1000 + i, [float(x) for x in
+                     np.array([8.0, 0, 0, 0]) + 0.3 * rng.normal(size=4)])
+         for i in range(200)], "vec_id long, embedding array<float>")
+    (S.ivf_assign(drift, cmat).write.mode("append")
+     .partitionBy("cell").parquet(store.fs_path(v1)))
+
+    r = maintenance.ivf_maintenance_sweep(
+        spark, "idx/ivf", n_cells=8, store=store,
+        spark_uri=_file_uri(store))
+    assert r["acted"] and r["version_after"] == 2
+    recl = S.ivf_index_recluster(spark, store.fs_path(v1),
+                                 str(tmp_path / "recl"), n_cells=8)
+    assert (S.ivf_centroids_read(store.fs_path(pub.resolve()))
+            == recl).all()
