@@ -144,50 +144,30 @@ def cmd_watch(args: argparse.Namespace) -> int:
     return 0
 
 
-def _store_from_uri(index_root: str):
-    """(store, root_prefix, spark_uri) for an object-store index
-    root, or None for a plain POSIX path.
-
-    - ``mock:///abs/path/to/index-root`` — the file-backed
-      :class:`LocalObjectStoreClient`.  Any bucket/root split along
-      the same absolute path is behaviorally equivalent for this
-      client (keys resolve to the same backing files), so the split
-      is the one every POSIX root publishes through
-      (``publish._publisher``): the client roots at the uri's PARENT
-      directory and the final path component is the index-root key.
-      Spark reads the double's backing files.
-    - ``s3://bucket/prefix`` — the boto3
-      :class:`S3ObjectStoreClient` (import-guarded; needs
-      credentials + hadoop-aws jars at runtime, FIXTURES.md ask #3);
-      Spark reads ``s3a://bucket/<key>`` uris."""
-    from .operators.publish import _path_of, _publisher
+def _root_path(index_root: str) -> str:
+    """The path a sweep takes for the CLI's ``index_root``:
+    ``s3://bucket/key`` is the s3a data plane's ``s3a://bucket/key``;
+    a bare, ``file://`` or ``s3a://`` path passes through; any other
+    scheme raises ``ValueError`` naming it (``publish._publisher``,
+    which maps the path to its client)."""
+    from .operators.publish import _publisher
     from .pipeline.manifest import _split_scheme
     scheme, rest = _split_scheme(index_root)
-    if scheme == "":
-        return None
-    if scheme == "mock":
-        pub = _publisher("/" + rest.lstrip("/"))
-        if not pub.root or not os.path.isdir(pub.store.root):
-            raise ValueError(
-                f"mock uri {index_root!r}: parent directory "
-                f"{pub.store.root!r} must exist (the bucket double)")
-    elif scheme == "s3":
-        pub = _publisher("s3a://" + rest)   # the s3a data plane's client
-    else:
-        raise ValueError(f"unsupported index-root scheme {scheme!r} "
-                         f"(supported: plain path, mock://, s3://)")
-    return pub.store, pub.root, _path_of(pub.store)
+    path = "s3a://" + rest if scheme == "s3" else index_root
+    _publisher(path)
+    return path
 
 
 def cmd_maintain(args: argparse.Namespace) -> int:
     """The maintenance-daemon CLI (r11, VERDICT r10 #3): run the
     census -> due? -> rewrite -> publish sweep for a versioned index
-    root, either once (``--once`` — cron drives the cadence) or as
-    a continuous loop with the same SIGINT/SIGTERM graceful-stop
-    wiring as ``watch`` (GetJobs.py:63-65,80's signal discipline
-    applied to index upkeep)."""
+    or trained-artifact root, either once (``--once`` — cron drives
+    the cadence) or as a continuous loop with the same SIGINT/SIGTERM
+    graceful-stop wiring as ``watch`` (GetJobs.py:63-65,80's signal
+    discipline applied to index upkeep)."""
     from .operators import maintenance
 
+    root = _root_path(args.index_root)
     spark = _spark()
     if args.kind in ("vocab", "nb") and not args.fresh_parquet:
         print(f"maintain {args.kind}: --fresh-parquet is required "
@@ -200,35 +180,23 @@ def cmd_maintain(args: argparse.Namespace) -> int:
         # is NOW, not as it was at startup
         return spark.read.parquet(args.fresh_parquet)
 
-    # index_root may be an OBJECT-STORE uri (r13): the index kinds
-    # then sweep that bucket's key prefix (store=/spark_uri=); a
-    # plain path sweeps the POSIX root.  --cas elects the
-    # multi-maintainer conditional-write pointer mode on both.
-    root, plane = args.index_root, {"cas": args.cas}
-    store_parts = _store_from_uri(args.index_root)
-    if store_parts is not None:
-        if args.kind in ("vocab", "nb"):
-            print(f"maintain {args.kind}: the vocab and NB retrain "
-                  f"sweeps take POSIX roots; store uris cover the "
-                  f"index kinds", file=sys.stderr)
-            return 2
-        store, root, spark_uri = store_parts
-        plane.update(store=store, spark_uri=spark_uri)
     sweeps = {
         "lsh": lambda: maintenance.lsh_maintenance_sweep(
-            spark, root, max_files_per_bucket=args.threshold, **plane),
+            spark, root, max_files_per_bucket=args.threshold,
+            cas=args.cas),
         "postings": lambda: maintenance.postings_maintenance_sweep(
-            spark, root, max_files_per_bucket=args.threshold, **plane),
+            spark, root, max_files_per_bucket=args.threshold,
+            cas=args.cas),
         "ivf": lambda: maintenance.ivf_maintenance_sweep(
             spark, root, n_cells=args.n_cells,
-            skew_threshold=args.threshold, **plane),
+            skew_threshold=args.threshold, cas=args.cas),
         "vocab": lambda: maintenance.vocab_maintenance_sweep(
             spark, root, _fresh(), n_merges=args.n_merges,
-            max_drift_x1000=args.max_drift),
+            max_drift_x1000=args.max_drift, cas=args.cas),
         "nb": lambda: maintenance.nb_maintenance_sweep(
             spark, root, _fresh(), pos_col=args.pos_col,
             max_oov_x1000=args.max_oov,
-            max_prior_drift_x1000=args.max_prior_drift),
+            max_prior_drift_x1000=args.max_prior_drift, cas=args.cas),
     }
     sweep = sweeps[args.kind]
 
@@ -307,7 +275,8 @@ def main(argv: list[str] | None = None) -> int:
                         "versioned index OR trained-artifact root")
     pm.add_argument("kind",
                     choices=("lsh", "postings", "ivf", "vocab", "nb"))
-    pm.add_argument("index_root")
+    pm.add_argument("index_root", help="the root's path: bare, "
+                    "file://, s3:// or s3a://")
     pm.add_argument("--once", action="store_true",
                     help="run exactly one sweep and exit (cron mode)")
     pm.add_argument("--poll", type=float, default=60.0,
@@ -335,10 +304,9 @@ def main(argv: list[str] | None = None) -> int:
                     help="nb retrain bound: class-prior shift per "
                     "mille")
     pm.add_argument("--cas", action="store_true",
-                    help="index kinds (lsh/postings/ivf), on a plain "
-                    "path or a store uri: publish/prune the pointer "
-                    "via conditional writes (If-Match), so multiple "
-                    "concurrent maintainers lose no updates")
+                    help="publish/prune the pointer via conditional "
+                    "writes (If-Match), so multiple concurrent "
+                    "maintainers lose no updates")
     pm.set_defaults(fn=cmd_maintain)
 
     args = p.parse_args(argv)

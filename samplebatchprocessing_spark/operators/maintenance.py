@@ -15,15 +15,16 @@ its file drain (the one-shot ``watch_prefix``) on it, and the CLI
 wires SIGINT to ``stop()`` the same way in ``cmd_maintain`` and
 ``cmd_watch``.
 
-Every index sweep (LSH, postings, IVF) runs one chain,
-:func:`_sweep`; the kind supplies only its census, due-predicate
-and rewrite.  Every root publishes through one
-:class:`publish.StorePublisher`: a key prefix in ``store``, or with
-``store=None`` the client its path maps to (``publish._publisher``);
-Spark reads the layout parquet at ``spark_uri(key)``, and the
-rewrites carry each layout's sidecars through that path.  The chain:
+Every sweep (LSH, postings, IVF, vocab, NB) takes its root as a
+path — bare, ``file://`` or ``s3a://`` — and runs one chain,
+:func:`_sweep`: ``publish._publisher`` maps the path to its client,
+and the kind supplies only its census, due-predicate, rewrite and
+report fields.  Spark reads and writes each layout at the path
+``publish._path_of`` maps its key to, and the rewrites carry each
+layout's sidecars through that path.  The chain:
 1. CENSUS the live layout (``resolve`` — one consistent version)
-   with an o(index-metadata) probe;
+   with an o(index-metadata) probe, or for a trained artifact a
+   drift measurement of a fresh slice against it;
 2. apply the PURE integer due-predicate (unit-testable apart from
    the operator it steers — the ``orientation_is_skewed``
    discipline);
@@ -32,6 +33,8 @@ rewrites carry each layout's sidecars through that path.  The chain:
    probes keep serving the old version;
 4. PUBLISH the pointer atomically and prune retired layouts beyond
    the read horizon (keep >= 2, the m10 vacuum-horizon rule).
+``cas`` elects the multi-maintainer pointer mode of
+:class:`publish.StorePublisher` on every kind.
 
 Scale (100 TB): the census is bounded driver metadata (file counts /
 one cell-keyed aggregate); the rewrite is the already-priced
@@ -42,6 +45,8 @@ next sweep retries into a fresh directory.
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 from . import publish
 from .dedup import lsh_index_compact
@@ -56,26 +61,20 @@ REPORT_SCHEMA = ("index_root string, kind string, due boolean, "
 
 
 def bucket_file_census(layout_dir: str) -> tuple[int, int, int]:
-    """:func:`store_bucket_census` of a layout path."""
-    pub = publish._publisher(layout_dir)
-    return store_bucket_census(pub.store, pub.root)
-
-
-def store_bucket_census(store, layout_key: str) -> tuple[int, int, int]:
     """(max_files_in_one_bucket, n_nonempty_buckets, total_files)
     over a bucket-partitioned layout (LSH band index / postings
-    index) — the small-file decay measurement: page the layout's
-    keys (memory bounded by the page size, never the key count) and
-    count ``*.parquet`` objects per ``bucket=N`` key segment.
-    o(file count) metadata, never data."""
+    index) — the small-file decay measurement: page the layout's keys
+    through its path's client (memory bounded by the page size, never
+    the key count) and count ``*.parquet`` objects per ``bucket=N``
+    key segment.  o(file count) metadata, never data."""
+    pub = publish._publisher(layout_dir)
     counts: dict[str, int] = {}
-    prefix = layout_key.rstrip("/") + "/"
-    for page in store.list_pages(prefix):
+    prefix = pub.root + "/"
+    for page in pub.store.list_pages(prefix):
         for key in page:
             if not key.endswith(".parquet"):
                 continue
-            rest = key[len(prefix):]
-            seg = rest.split("/", 1)[0]
+            seg = key[len(prefix):].split("/", 1)[0]
             if seg.startswith("bucket="):
                 counts[seg] = counts.get(seg, 0) + 1
     if not counts:
@@ -98,123 +97,107 @@ def compact_is_due(max_files: int, threshold: int = 4) -> bool:
     return max_files >= threshold
 
 
-def _require_versioned(pub, kind: str, index_root: str) -> int:
-    """The live version of ``pub``'s root; raises for an unversioned
-    root, which has no pointer to swap."""
-    version = pub.current_version()
-    if version is None:
+def _sweep(kind: str, root: str, cas: bool, census, due, rewrite,
+           report, keep_versions: int) -> dict:
+    """The one maintenance chain: map ``root`` to its publisher,
+    census the live layout, decide with the pure ``due`` predicate,
+    rewrite into a fresh layout, publish, prune.  The kind's callables
+    see paths, never keys: ``census(live)`` returns the measurement
+    ``due(*stats)`` decides on, ``rewrite(live, out, stats)`` writes
+    layout ``out``, and ``report(stats, live)`` gives the kind's
+    report fields, ``live`` being the layout live after the sweep.
+    Raises for an unversioned root, which has no pointer to swap."""
+    pub = publish._publisher(root)
+    pub.cas = cas
+    path = publish._path_of(pub.store)
+    before = pub.current_version()
+    if before is None:
         raise ValueError(
             f"{kind} sweep needs a VERSIONED index root (no "
-            f"{publish.POINTER} under {index_root!r}): build into a "
+            f"{publish.POINTER} under {root!r}): build into a "
             f"fresh new_layout_dir, then publish it — an unversioned "
             f"root has nowhere to swap to")
-    return version
-
-
-def _plane(index_root: str, store, cas: bool, spark_uri):
-    """(publisher, layout key -> Spark path, layout key -> ``bucket=N``
-    file census) for ``index_root``: a key prefix in ``store`` whose
-    parquet Spark reads at ``spark_uri(key)`` — the file-backed
-    client's ``fs_path`` by default, a ``lambda k:
-    f"s3a://{bucket}/{k}"`` on a real deployment.  ``store=None``
-    is the path's own client (:func:`publish._publisher`)."""
-    if store is None:
-        pub = publish._publisher(index_root)
-        store, index_root = pub.store, pub.root
-    return (publish.StorePublisher(store, index_root, cas=cas),
-            spark_uri or publish._path_of(store),
-            lambda key: store_bucket_census(store, key))
-
-
-def _sweep(kind: str, index_root: str, pub, census, due, rewrite,
-           keep_versions: int) -> dict:
-    """The one maintenance chain: census the live layout, decide with
-    the pure ``due`` predicate, rewrite into a fresh layout, publish,
-    prune, census again.  ``census`` maps a layout to ``(max, n,
-    total)``; ``rewrite(live, out)`` writes layout ``out``.  The
-    report's ``files_*`` are total files for the bucket kinds and the
-    max-cell row count for IVF (the skew its predicate acts on)."""
-    before = _require_versioned(pub, kind, index_root)
-    live = pub.resolve()
+    live = path(pub.resolve())
     stats = census(live)
     acted = due(*stats)
     if acted:
         out = pub.new_layout_dir()
-        rewrite(live, out)
+        rewrite(live, path(out), stats)
         pub.publish(out)
         pub.prune(keep=keep_versions)
-    after = census(pub.resolve())
-    i = 0 if kind == "ivf" else 2
-    return {"index_root": index_root, "kind": kind, "due": acted,
+    return {"index_root": root, "kind": kind, "due": acted,
             "acted": acted, "version_before": before,
             "version_after": pub.current_version(),
-            "files_before": stats[i], "files_after": after[i]}
+            **report(stats, path(pub.resolve()))}
+
+
+def _files(census, i: int):
+    """The report of an index kind: field ``i`` of ``census`` before
+    the sweep and on the layout live after it — total files for the
+    bucket kinds, the max-cell row count for IVF (the skew its
+    predicate acts on)."""
+    return lambda stats, live: {"files_before": stats[i],
+                                "files_after": census(live)[i]}
 
 
 def lsh_maintenance_sweep(spark, index_root: str,
                           max_files_per_bucket: int = 4,
-                          keep_versions: int = 2, *, store=None,
-                          cas: bool = False, spark_uri=None) -> dict:
-    """One maintenance decision for a versioned LSH band index:
-    census the live layout's bucket files, compact into a fresh
-    layout iff :func:`compact_is_due`, publish, prune.  Returns the
-    report row (REPORT_SCHEMA keys); ``acted=False`` sweeps cost one
-    listing and nothing else.  With ``store`` the root is a key
-    prefix in that bucket; ``cas`` elects the multi-maintainer
-    pointer mode of :class:`publish.StorePublisher` on either
-    plane."""
-    pub, uri, census = _plane(index_root, store, cas, spark_uri)
+                          keep_versions: int = 2, *,
+                          cas: bool = False) -> dict:
+    """One maintenance decision for a versioned LSH band index at
+    path ``index_root``: census the live layout's bucket files,
+    compact into a fresh layout iff :func:`compact_is_due`, publish,
+    prune.  Returns the report row (REPORT_SCHEMA keys); an
+    ``acted=False`` sweep costs two listings (the census before and
+    after) and no Spark job.  ``cas`` elects the multi-maintainer
+    pointer mode of :class:`publish.StorePublisher`."""
     return _sweep(
-        "lsh", index_root, pub, census,
+        "lsh", index_root, cas, bucket_file_census,
         lambda mx, _n, _t: compact_is_due(mx, max_files_per_bucket),
-        lambda live, out: lsh_index_compact(spark, [uri(live)],
-                                            uri(out)),
-        keep_versions)
+        lambda live, out, _s: lsh_index_compact(spark, [live], out),
+        _files(bucket_file_census, 2), keep_versions)
 
 
 def postings_maintenance_sweep(spark, index_root: str,
                                max_files_per_bucket: int = 4,
-                               keep_versions: int = 2, *, store=None,
-                               cas: bool = False,
-                               spark_uri=None) -> dict:
+                               keep_versions: int = 2, *,
+                               cas: bool = False) -> dict:
     """:func:`lsh_maintenance_sweep` for the x117/x121/x123 postings
     index — same ``bucket=N`` census, same due-predicate, x123's
     compaction as the rewrite."""
-    pub, uri, census = _plane(index_root, store, cas, spark_uri)
     return _sweep(
-        "postings", index_root, pub, census,
+        "postings", index_root, cas, bucket_file_census,
         lambda mx, _n, _t: compact_is_due(mx, max_files_per_bucket),
-        lambda live, out: postings_index_compact(spark, [uri(live)],
-                                                 uri(out)),
-        keep_versions)
+        lambda live, out, _s: postings_index_compact(spark, [live],
+                                                     out),
+        _files(bucket_file_census, 2), keep_versions)
 
 
 def ivf_maintenance_sweep(spark, index_root: str, n_cells: int = 16,
                           skew_threshold: int = 4,
                           sample_cap: int = 4096,
-                          keep_versions: int = 2, *, store=None,
-                          cas: bool = False, spark_uri=None) -> dict:
-    """One maintenance decision for a versioned IVF ANN index:
-    ``ivf_cell_census`` the live layout (one cell-keyed aggregate),
-    re-centroid into a fresh layout iff ``recluster_is_due``
-    (drifted appends crowding stale cells — the x133 trigger), stamp
-    the new centroids INTO the layout (``ivf_centroids_write``, so
-    the pointer swap versions quantizer and cells together),
-    publish, prune.  ``files_*`` report the max-cell row count here
-    (the skew measure the predicate acts on)."""
-    pub, uri, _ = _plane(index_root, store, cas, spark_uri)
+                          keep_versions: int = 2, *,
+                          cas: bool = False) -> dict:
+    """One maintenance decision for a versioned IVF ANN index at path
+    ``index_root``: ``ivf_cell_census`` the live layout (one
+    cell-keyed aggregate), re-centroid into a fresh layout iff
+    ``recluster_is_due`` (drifted appends crowding stale cells — the
+    x133 trigger), stamp the new centroids INTO the layout
+    (``ivf_centroids_write``, so the pointer swap versions quantizer
+    and cells together), publish, prune.  ``files_*`` report the
+    max-cell row count here (the skew measure the predicate acts
+    on)."""
+    census = partial(ivf_cell_census, spark)
 
-    def rewrite(live: str, out: str) -> None:
-        cmat = ivf_index_recluster(spark, uri(live), uri(out), n_cells,
-                                   sample_cap)
-        ivf_centroids_write(uri(out), cmat)
+    def rewrite(live: str, out: str, _stats) -> None:
+        ivf_centroids_write(out, ivf_index_recluster(
+            spark, live, out, n_cells, sample_cap))
 
     return _sweep(
-        "ivf", index_root, pub,
-        lambda layout: ivf_cell_census(spark, uri(layout)),
+        "ivf", index_root, cas, census,
         lambda mx, _n, total: recluster_is_due(mx, n_cells, total,
                                                skew_threshold),
-        rewrite, keep_versions)
+        rewrite, _files(census, 0), keep_versions)
 
 
 def vocab_retrain_is_due(fresh_x1000: int, trained_x1000: int,
@@ -265,13 +248,16 @@ def vocab_maintenance_sweep(spark, root: str, fresh_df,
                             n_merges: int = 4,
                             max_drift_x1000: int = 150,
                             text_col: str = "text",
-                            keep_versions: int = 2) -> dict:
-    """One retrain decision for a published BPE vocabulary — the
-    x134 sweep shape applied to a TRAINED ARTIFACT (r12, VERDICT r11
-    #4): measure fresh-slice fertility under the LIVE merges (one
-    bounded aggregate — the x89 measurement collapsed to an
-    integer), compare against the stamped at-training baseline,
-    retrain-and-publish iff :func:`vocab_retrain_is_due`.
+                            keep_versions: int = 2, *,
+                            cas: bool = False) -> dict:
+    """One retrain decision for a BPE vocabulary published at path
+    ``root`` — the x134 sweep chain applied to a TRAINED ARTIFACT
+    (r12, VERDICT r11 #4): the census measures fresh-slice fertility
+    under the LIVE merges (one bounded aggregate — the x89
+    measurement collapsed to an integer) beside the stamped
+    at-training baseline, and the sweep retrains and publishes iff
+    :func:`vocab_retrain_is_due`.  ``cas`` as for
+    :func:`lsh_maintenance_sweep`.
 
     The retrain trains on ``fresh_df`` and stamps the NEW vocab with
     its own fresh-corpus fertility, so an immediately-following
@@ -285,35 +271,35 @@ def vocab_maintenance_sweep(spark, root: str, fresh_df,
     from . import artifacts
     from .text import bpe_train_merges, encode_fertility_x1000
 
-    pub = publish._publisher(root)
-    before = _require_versioned(pub, "vocab", root)
-    meta = artifacts.bpe_vocab_meta(root)
-    if "fertility_x1000" not in meta:
-        raise ValueError(
-            f"the live vocab under {root!r} carries no "
-            f"fertility_x1000 stamp — retrain drift has no baseline. "
-            f"Republish it via bpe_vocab_write(..., fertility_x1000="
-            f"encode_fertility_x1000(training_df, merges))")
-    trained = int(meta["fertility_x1000"])
-    merges = tuple((l, r, m) for l, r, m in meta["merges"])
-    fresh = encode_fertility_x1000(fresh_df, merges,
-                                   text_col=text_col)
-    due = vocab_retrain_is_due(fresh, trained, max_drift_x1000)
-    if due:
+    def census(live: str) -> tuple[int, int]:
+        meta = artifacts.bpe_vocab_meta(live)
+        if "fertility_x1000" not in meta:
+            raise ValueError(
+                f"the live vocab under {root!r} carries no "
+                f"fertility_x1000 stamp — retrain drift has no "
+                f"baseline. Republish it via bpe_vocab_write(..., "
+                f"fertility_x1000=encode_fertility_x1000(training_df, "
+                f"merges))")
+        merges = tuple((l, r, m) for l, r, m in meta["merges"])
+        return (int(meta["fertility_x1000"]),
+                encode_fertility_x1000(fresh_df, merges,
+                                       text_col=text_col))
+
+    def rewrite(_live: str, out: str, _stats) -> None:
         m2 = bpe_train_merges(fresh_df, n_merges, text_col=text_col)
         rules = tuple((l, r, m) for _, l, r, m, _ in m2)
-        new_fert = encode_fertility_x1000(fresh_df, rules,
-                                          text_col=text_col)
-        out = pub.new_layout_dir()
-        artifacts.bpe_vocab_write(m2, pub.store.fs_path(out),
-                                  fertility_x1000=new_fert)
-        pub.publish(out)
-        pub.prune(keep=keep_versions)
-    return {"index_root": root, "kind": "vocab", "due": due,
-            "acted": due, "version_before": before,
-            "version_after": pub.current_version(),
-            "fertility_trained_x1000": trained,
-            "fertility_fresh_x1000": fresh}
+        artifacts.bpe_vocab_write(
+            m2, out, fertility_x1000=encode_fertility_x1000(
+                fresh_df, rules, text_col=text_col))
+
+    return _sweep(
+        "vocab", root, cas, census,
+        lambda trained, fresh: vocab_retrain_is_due(fresh, trained,
+                                                    max_drift_x1000),
+        rewrite,
+        lambda s, _live: {"fertility_trained_x1000": s[0],
+                          "fertility_fresh_x1000": s[1]},
+        keep_versions)
 
 
 def nb_maintenance_sweep(spark, root: str, fresh_doc,
@@ -321,14 +307,17 @@ def nb_maintenance_sweep(spark, root: str, fresh_doc,
                          text_col: str = "text",
                          max_oov_x1000: int = 100,
                          max_prior_drift_x1000: int = 250,
-                         keep_versions: int = 2) -> dict:
-    """One retrain decision for a published NB quality model (r12,
-    VERDICT r11 #4): census the fresh labeled slice's OOV token mass
-    and class prior against the LIVE model (two bounded aggregates),
-    and iff :func:`nb_retrain_is_due`, fold the fresh counts into
-    the published counts (x128's exact integer merge — reads ONLY
-    the fresh slice plus the published relation, never the training
-    corpus), sum the priors, publish, prune.
+                         keep_versions: int = 2, *,
+                         cas: bool = False) -> dict:
+    """One retrain decision for an NB quality model published at path
+    ``root`` (r12, VERDICT r11 #4): the census measures the fresh
+    labeled slice's OOV token mass and class prior against the LIVE
+    model (two bounded aggregates), and iff :func:`nb_retrain_is_due`
+    the rewrite folds the fresh counts into the published counts
+    (x128's exact integer merge — reads ONLY the fresh slice plus the
+    published relation, never the training corpus) and sums the
+    priors; then publish, prune.  ``cas`` as for
+    :func:`lsh_maintenance_sweep`.
 
     Hysteresis: after an acted sweep every fresh token is in the
     count table (OOV mass 0) and the fresh slice's counts are part
@@ -347,48 +336,48 @@ def nb_maintenance_sweep(spark, root: str, fresh_doc,
     from . import artifacts
     from .text import tokenize
 
-    pub = publish._publisher(root)
-    before = _require_versioned(pub, "nb", root)
-    cnt, np_, nn = artifacts.nb_model_read(spark, root)
-
     toks = fresh_doc.select(
         F.col(pos_col).alias("is_pos"),
         F.explode(tokenize(F.col(text_col))).alias("tok"))
-    row = (toks.join(cnt.select("tok").distinct()
-                     .withColumn("known", F.lit(True)),
-                     "tok", "left")
-           .agg(F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("known").isNull().cast("long"))
-                .alias("oov")).first())
-    if not row["n"]:
-        raise ValueError("NB drift census needs a non-empty fresh "
-                         "slice — an empty delta has no drift signal")
-    oov_x1000 = int(1000 * row["oov"] // row["n"])
-    pr = (fresh_doc.agg(
-        F.sum(F.col(pos_col).cast("long")).alias("np"),
-        F.sum((~F.col(pos_col)).cast("long")).alias("nn"),
-        F.sum(F.col(pos_col).isNull().cast("long")).alias("nx"),
-        F.count(F.lit(1)).alias("nt")).first())
-    # Labels are REQUIRED to be total (ADVICE r12): F.sum over an
-    # all-NULL boolean census returns NULL — the old code crashed
-    # with an opaque int(None) TypeError before computing any drift
-    # signal — and partially-NULL labels silently shrink the prior
-    # denominator relative to the OOV census's row count, biasing
-    # the drift comparison.  Fail loudly with the defect named.
-    if int(pr["nx"] or 0):
-        raise ValueError(
-            f"NB drift census needs a TOTAL {pos_col!r} label: "
-            f"{int(pr['nx'])} of {int(pr['nt'])} fresh rows are "
-            f"NULL — label the slice (or filter it) before the "
-            f"sweep; a partial label biases the prior drift signal")
-    np_f, nn_f = int(pr["np"]), int(pr["nn"])
-    fresh_prior_x1000 = 1000 * np_f // (np_f + nn_f)
-    model_prior_x1000 = 1000 * np_ // (np_ + nn)
 
-    due = nb_retrain_is_due(oov_x1000, fresh_prior_x1000,
-                            model_prior_x1000, max_oov_x1000,
-                            max_prior_drift_x1000)
-    if due:
+    def census(live: str):
+        cnt, np_, nn = artifacts.nb_model_read(spark, live)
+        row = (toks.join(cnt.select("tok").distinct()
+                         .withColumn("known", F.lit(True)),
+                         "tok", "left")
+               .agg(F.count(F.lit(1)).alias("n"),
+                    F.sum(F.col("known").isNull().cast("long"))
+                    .alias("oov")).first())
+        if not row["n"]:
+            raise ValueError("NB drift census needs a non-empty fresh "
+                             "slice — an empty delta has no drift "
+                             "signal")
+        pr = (fresh_doc.agg(
+            F.sum(F.col(pos_col).cast("long")).alias("np"),
+            F.sum((~F.col(pos_col)).cast("long")).alias("nn"),
+            F.sum(F.col(pos_col).isNull().cast("long")).alias("nx"),
+            F.count(F.lit(1)).alias("nt")).first())
+        # Labels are REQUIRED to be total (ADVICE r12): F.sum over an
+        # all-NULL boolean census returns NULL — the old code crashed
+        # with an opaque int(None) TypeError before computing any
+        # drift signal — and partially-NULL labels silently shrink
+        # the prior denominator relative to the OOV census's row
+        # count, biasing the drift comparison.  Fail loudly with the
+        # defect named.
+        if int(pr["nx"] or 0):
+            raise ValueError(
+                f"NB drift census needs a TOTAL {pos_col!r} label: "
+                f"{int(pr['nx'])} of {int(pr['nt'])} fresh rows are "
+                f"NULL — label the slice (or filter it) before the "
+                f"sweep; a partial label biases the prior drift "
+                f"signal")
+        np_f, nn_f = int(pr["np"]), int(pr["nn"])
+        return (int(1000 * row["oov"] // row["n"]),
+                1000 * np_f // (np_f + nn_f), 1000 * np_ // (np_ + nn),
+                (cnt, np_ + np_f, nn + nn_f))
+
+    def rewrite(_live: str, out: str, stats) -> None:
+        cnt, n_pos, n_neg = stats[3]
         cnt_d = (toks.groupBy("tok")
                  .agg(F.sum(F.col("is_pos").cast("long")).alias("pc"),
                       F.sum((~F.col("is_pos")).cast("long"))
@@ -404,17 +393,16 @@ def nb_maintenance_sweep(spark, root: str, fresh_doc,
                           (F.coalesce("nc_b", F.lit(0))
                            + F.coalesce("nc_d", F.lit(0)))
                           .alias("nc")))
-        out = pub.new_layout_dir()
-        artifacts.nb_model_write(merged, np_ + np_f, nn + nn_f,
-                                 pub.store.fs_path(out))
-        pub.publish(out)
-        pub.prune(keep=keep_versions)
-    return {"index_root": root, "kind": "nb", "due": due,
-            "acted": due, "version_before": before,
-            "version_after": pub.current_version(),
-            "oov_x1000": oov_x1000,
-            "fresh_prior_x1000": fresh_prior_x1000,
-            "model_prior_x1000": model_prior_x1000}
+        artifacts.nb_model_write(merged, n_pos, n_neg, out)
+
+    return _sweep(
+        "nb", root, cas, census,
+        lambda oov, fresh, model, _fold: nb_retrain_is_due(
+            oov, fresh, model, max_oov_x1000, max_prior_drift_x1000),
+        rewrite,
+        lambda s, _live: {"oov_x1000": s[0], "fresh_prior_x1000": s[1],
+                          "model_prior_x1000": s[2]},
+        keep_versions)
 
 
 def maintenance_daemon(sweeps, poll_seconds: float = 5.0):

@@ -172,19 +172,20 @@ def publish(index_root: str, layout_dir: str) -> int:
     the new version number.
 
     ``layout_dir`` must be a DIRECT subdirectory of ``index_root``
-    (compared as real paths; the pointer stores the relative name,
-    so the root relocates as one unit) holding at least one file, and
-    must not be the currently-live layout (republishing the live dir
-    is a no-op bug upstream, and pruning history could then delete
-    the live layout)."""
-    layout_real = os.path.realpath(layout_dir)
-    if os.path.dirname(layout_real) != os.path.realpath(index_root):
+    (compared as mapped locations, :func:`_location`, so a bare and a
+    ``file://`` spelling of one directory match; the pointer stores
+    the relative name, so the root relocates as one unit) holding at
+    least one file, and must not be the currently-live layout
+    (republishing the live dir is a no-op bug upstream, and pruning
+    history could then delete the live layout)."""
+    layout = _location(layout_dir)
+    if os.path.dirname(layout) != _location(index_root):
         raise ValueError(
             f"layout {layout_dir!r} is not a direct subdirectory of "
             f"index root {index_root!r} — layouts live inside their "
             f"root so the pointer's relative name stays valid")
     pub = _publisher(index_root)
-    return pub.publish(f"{pub.root}/{os.path.basename(layout_real)}")
+    return pub.publish(f"{pub.root}/{os.path.basename(layout)}")
 
 
 def prune(index_root: str, keep: int = 2) -> list[str]:

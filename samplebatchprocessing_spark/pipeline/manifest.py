@@ -432,7 +432,7 @@ class LocalObjectStoreClient(ObjectStoreClient):
     def _lock_path(self, key: str) -> str:
         # keyed by the BACKING OBJECT's realpath, not (root, key):
         # two clients rooted differently over the same tree (the
-        # __main__._store_from_uri re-rooting) — or through a symlink
+        # ``publish._publisher`` re-rooting) — or through a symlink
         # alias of it (macOS /tmp -> /private/tmp) — serialize on the
         # same lock file when they target the same object.  The dir is
         # PER-UID (a fixed world-shared /tmp name would hand a second

@@ -134,8 +134,6 @@ _SLOW_TESTS = frozenset({
     "test_oracle_parity.py::test_driver_canonicalizable[x126_ivf_probe_sweep]",
     "test_oracle_parity.py::test_driver_canonicalizable[x132_lsh_index_lifecycle]",
     "test_oracle_parity.py::test_driver_canonicalizable[x133_ivf_recluster]",
-    "test_oracle_parity.py::test_driver_canonicalizable[x134_maintenance_sweep]",
-    "test_oracle_parity.py::test_driver_canonicalizable[x135_vocab_publish]",
     "test_oracle_parity.py::test_oracle_parity[l11_dedup_clusters]",
     "test_oracle_parity.py::test_oracle_parity[l15_fuzzy_dedup_keep]",
     "test_oracle_parity.py::test_oracle_parity[l16_dedup_keep_best]",
@@ -161,22 +159,15 @@ _SLOW_TESTS = frozenset({
     "test_oracle_parity.py::test_oracle_parity[x126_ivf_probe_sweep]",
     "test_oracle_parity.py::test_oracle_parity[x132_lsh_index_lifecycle]",
     "test_oracle_parity.py::test_oracle_parity[x133_ivf_recluster]",
-    "test_oracle_parity.py::test_oracle_parity[x134_maintenance_sweep]",
-    "test_oracle_parity.py::test_oracle_parity[x135_vocab_publish]",
     "test_oracle_parity.py::test_oracle_parity[x20_pretrain_pipeline]",
     "test_oracle_parity.py::test_oracle_parity[x36_dupgraph_triangles]",
     "test_oracle_parity.py::test_oracle_parity[x48_cluster_safe_split]",
     "test_oracle_parity.py::test_oracle_parity[x58_cluster_size_histogram]",
     "test_oracle_parity.py::test_oracle_parity[x66_containment_neardup]",
-    "test_publish.py::test_ivf_maintenance_sweep_on_planted_drift",
-    "test_publish.py::test_lsh_maintenance_sweep_end_to_end",
     "test_publish.py::test_lsh_probe_through_pointer",
     "test_publish.py::test_probes_stay_consistent_under_live_daemon",
-    "test_publish.py::test_store_ivf_maintenance_sweep_on_planted_drift",
     "test_publish.py::test_store_lsh_lifecycle_end_to_end",
-    "test_publish.py::test_store_lsh_maintenance_sweep",
     "test_publish.py::test_stream_probe_across_midstream_publish",
-    "test_publish.py::test_vocab_sweep_planted_drift_retrains_once",
     "test_streaming.py::test_s25_batch_replay_rewrites_byte_identical",
     "test_streaming.py::test_stateful_sessions_carry_state_across_batches",
 })

@@ -940,29 +940,31 @@ def test_store_lsh_maintenance_sweep(spark, sf_smoke, tmp_path):
 
     with pytest.raises(ValueError, match="VERSIONED"):
         maintenance.lsh_maintenance_sweep(
-            spark, "idx/other", store=store)
+            spark, store.fs_path("idx/other"))
 
     r0 = maintenance.lsh_maintenance_sweep(
-        spark, "idx/lsh", max_files_per_bucket=3, store=store)
+        spark, store.fs_path("idx/lsh"), max_files_per_bucket=3)
     assert not r0["due"] and r0["version_after"] == 1
 
     for _ in range(3):                   # decay: 3 delta layers
         dedup.lsh_index_append(batch, store.fs_path(pub.resolve()))
-    mx, _n, _t = maintenance.store_bucket_census(store, pub.resolve())
+    mx, _n, _t = maintenance.bucket_file_census(
+        store.fs_path(pub.resolve()))
     assert mx >= 3
 
     probe = lambda: sorted(map(tuple, dedup.lsh_index_probe(
         spark, store.fs_path(pub.resolve()), batch).collect()))
     before = probe()
     r1 = maintenance.lsh_maintenance_sweep(
-        spark, "idx/lsh", max_files_per_bucket=3, store=store)
+        spark, store.fs_path("idx/lsh"), max_files_per_bucket=3)
     assert r1["due"] and r1["acted"] and r1["version_after"] == 2
     assert probe() == before and before
 
     r2 = maintenance.lsh_maintenance_sweep(
-        spark, "idx/lsh", max_files_per_bucket=3, store=store)
+        spark, store.fs_path("idx/lsh"), max_files_per_bucket=3)
     assert not r2["due"] and r2["version_after"] == 2
-    mx2, n2, t2 = maintenance.store_bucket_census(store, pub.resolve())
+    mx2, n2, t2 = maintenance.bucket_file_census(
+        store.fs_path(pub.resolve()))
     assert mx2 == 1 and t2 == n2         # canonical one-file layout
 
 
@@ -984,18 +986,18 @@ def test_store_postings_maintenance_sweep(spark, tmp_path):
                                 store.fs_path(pub.resolve()),
                                 n_buckets=8)
     r = maintenance.postings_maintenance_sweep(
-        spark, "idx/post", max_files_per_bucket=2, store=store)
+        spark, store.fs_path("idx/post"), max_files_per_bucket=2)
     assert r["due"] and r["version_after"] == 2
     got = {(x["doc_id"], x["total_tf"])
            for x in T.postings_probe_and(
                spark, store.fs_path(pub.resolve()), ["big", "cat"],
                n_buckets=8).collect()}
     assert got == {(1, 3), (2, 2), (4, 2)}
-    mx, n, total = maintenance.store_bucket_census(store,
-                                                   pub.resolve())
+    mx, n, total = maintenance.bucket_file_census(
+        store.fs_path(pub.resolve()))
     assert mx == 1 and total == n
     r2 = maintenance.postings_maintenance_sweep(
-        spark, "idx/post", max_files_per_bucket=2, store=store)
+        spark, store.fs_path("idx/post"), max_files_per_bucket=2)
     assert not r2["due"] and r2["version_after"] == 2
 
 
@@ -1018,8 +1020,8 @@ def test_store_ivf_maintenance_sweep_on_planted_drift(spark,
     S.ivf_centroids_write(store.fs_path(v1), cmat)
     pub.publish(v1)
 
-    r0 = maintenance.ivf_maintenance_sweep(spark, "idx/ivf",
-                                           n_cells=8, store=store)
+    r0 = maintenance.ivf_maintenance_sweep(
+        spark, store.fs_path("idx/ivf"), n_cells=8)
     assert not r0["due"] and r0["version_after"] == 1
 
     center = np.array([8.0, 0.0, 0.0, 0.0])
@@ -1030,8 +1032,8 @@ def test_store_ivf_maintenance_sweep_on_planted_drift(spark,
     (S.ivf_assign(drift, cmat).write.mode("append")
      .partitionBy("cell").parquet(store.fs_path(pub.resolve())))
 
-    r1 = maintenance.ivf_maintenance_sweep(spark, "idx/ivf",
-                                           n_cells=8, store=store)
+    r1 = maintenance.ivf_maintenance_sweep(
+        spark, store.fs_path("idx/ivf"), n_cells=8)
     assert r1["due"] and r1["acted"] and r1["version_after"] == 2
     live = store.fs_path(pub.resolve())
     assert os.path.exists(os.path.join(live, "_ivf_centroids.json"))
@@ -1395,14 +1397,13 @@ def test_cas_prune_window_race_keeps_the_racing_publish(tmp_path):
 
 
 def test_cli_maintain_store_uri_with_cas(spark, tmp_path, capsys):
-    """r13: `maintain` accepts an object-store index root —
-    mock:///bucket-dir/prefix routes to the store-native sweep over
-    the file-backed client (s3://bucket/prefix takes the boto3
-    client + s3a data plane, env-gated), and --cas elects the
-    conditional-write pointer mode.  Same hysteresis as the POSIX
-    CLI test: decayed acts once, settled reports not-due."""
-    from samplebatchprocessing_spark.__main__ import (_store_from_uri,
-                                                      main)
+    """r13: `maintain` accepts a URI index root —
+    file:///bucket-dir/prefix sweeps through the file-backed client
+    (s3://bucket/prefix is the s3a path of the boto3 client,
+    env-gated), and --cas elects the conditional-write pointer mode.
+    Same hysteresis as the POSIX CLI test: decayed acts once,
+    settled reports not-due."""
+    from samplebatchprocessing_spark.__main__ import _root_path, main
 
     store = _bucket(tmp_path)
     bucket_dir = store.root
@@ -1419,7 +1420,7 @@ def test_cli_maintain_store_uri_with_cas(spark, tmp_path, capsys):
             doc.filter(f"doc_id = {did}"),
             store.fs_path(pub.resolve()), n_buckets=4)
 
-    uri = f"mock://{bucket_dir}/idx/post"
+    uri = f"file://{bucket_dir}/idx/post"
     assert main(["maintain", "postings", uri, "--once",
                  "--threshold", "2", "--cas"]) == 0
     out = capsys.readouterr().out
@@ -1431,22 +1432,13 @@ def test_cli_maintain_store_uri_with_cas(spark, tmp_path, capsys):
     assert "due=False" in capsys.readouterr().out
     assert pub.current_version() == 2
 
-    # uri parsing contract: canonical split = parent dir as bucket,
-    # final component as root key (equivalent backing files)
-    st, root, _ = _store_from_uri(uri)
-    assert st.root == f"{bucket_dir}/idx" and root == "post"
-    assert _store_from_uri("/plain/posix/path") is None
-    s3p = _store_from_uri("s3://some-bucket/indexes/lsh")
-    assert s3p is not None
-    st3, root3, uri3 = s3p
-    assert st3.bucket == "some-bucket" and root3 == "indexes/lsh"
-    assert uri3("indexes/lsh/layout-v00001/x.parquet") \
-        == "s3a://some-bucket/indexes/lsh/layout-v00001/x.parquet"
-    with pytest.raises(ValueError, match="scheme"):
-        _store_from_uri("ftp://nope/x")
-    # trained-artifact kinds refuse store uris loudly
-    assert main(["maintain", "vocab", uri, "--once",
-                 "--fresh-parquet", "/tmp/nope.parquet"]) == 2
+    # the root rewrite: s3:// is the s3a data plane's path, any other
+    # scheme the publishers do not map raises, naming it
+    assert _root_path("s3://some-bucket/indexes/lsh") \
+        == "s3a://some-bucket/indexes/lsh"
+    assert _root_path(uri) == uri
+    with pytest.raises(ValueError, match="'ftp'"):
+        _root_path("ftp://nope/x")
 
 
 # ---------------------------------------------------------------------------
@@ -1575,10 +1567,6 @@ def test_sidecar_io_runs_no_spark_job(spark, tmp_path, spark_jobs):
     assert got == (("t", "h", "th"), ("th", "e", "the")) and n == 0
 
 
-def _file_uri(store):
-    return lambda key: "file://" + store.fs_path(key)
-
-
 def test_store_lsh_maintenance_sweep_over_file_uri(spark, sf_smoke,
                                                    tmp_path):
     """A store sweep whose data plane is a URI (as `maintain lsh
@@ -1595,8 +1583,8 @@ def test_store_lsh_maintenance_sweep_over_file_uri(spark, sf_smoke,
     for _ in range(2):
         dedup.lsh_index_append(batch, store.fs_path(v1))
     r = maintenance.lsh_maintenance_sweep(
-        spark, "idx/lsh", max_files_per_bucket=3, store=store,
-        spark_uri=_file_uri(store))
+        spark, "file://" + store.fs_path("idx/lsh"),
+        max_files_per_bucket=3)
     assert r["acted"] and r["version_after"] == 2
     live = store.fs_path(pub.resolve())
     assert os.path.exists(os.path.join(live, "_lsh_meta.json"))
@@ -1627,10 +1615,133 @@ def test_store_ivf_maintenance_sweep_over_file_uri(spark, tmp_path):
      .partitionBy("cell").parquet(store.fs_path(v1)))
 
     r = maintenance.ivf_maintenance_sweep(
-        spark, "idx/ivf", n_cells=8, store=store,
-        spark_uri=_file_uri(store))
+        spark, "file://" + store.fs_path("idx/ivf"), n_cells=8)
     assert r["acted"] and r["version_after"] == 2
     recl = S.ivf_index_recluster(spark, store.fs_path(v1),
                                  str(tmp_path / "recl"), n_cells=8)
     assert (S.ivf_centroids_read(store.fs_path(pub.resolve()))
             == recl).all()
+
+
+# ---------------------------------------------------------------------------
+# One path names every maintained root: each sweep maps its path to one
+# client and runs the one census -> due -> rewrite -> publish -> prune chain
+# ---------------------------------------------------------------------------
+
+def test_publish_matches_bare_and_file_uri_spellings(tmp_path):
+    """A bare and a file:// spelling of one directory are one
+    location: a file:// layout publishes under a bare root and a bare
+    layout under a file:// root; a layout outside the root, in
+    either spelling, is still refused."""
+    root = str(tmp_path / "idx")
+    v1 = os.path.join(root, "layout-v00001")
+    _write_layout(v1)
+    assert publish.publish(root, "file://" + v1) == 1
+    v2 = publish.new_layout_dir(root)
+    _write_layout(v2)
+    assert publish.publish("file://" + root, v2) == 2
+    assert publish.resolve(root) == v2
+    elsewhere = str(tmp_path / "elsewhere" / "layout-v00003")
+    _write_layout(elsewhere)
+    for layout in (elsewhere, "file://" + elsewhere):
+        with pytest.raises(ValueError, match="subdirectory"):
+            publish.publish("file://" + root, layout)
+
+
+def _vocab_root(spark, root: str):
+    """A vocab root whose v1 is trained and stamped on a healthy
+    slice; returns (healthy slice, drifted slice)."""
+    from pyspark.sql import functions as F
+
+    from samplebatchprocessing_spark.operators import artifacts
+    df = spark.createDataFrame(
+        [(i, "the cat and the hat and the bat") for i in range(8)],
+        "doc_id long, text string")
+    m1 = T.bpe_train_merges(df, n_merges=3)
+    rules = tuple((l, r, m) for _, l, r, m, _ in m1)
+    v1 = publish.new_layout_dir(root)
+    artifacts.bpe_vocab_write(
+        m1, v1, fertility_x1000=T.encode_fertility_x1000(df, rules))
+    publish.publish(root, v1)
+    return df, df.withColumn("text", F.reverse(F.col("text")))
+
+
+def test_cli_maintain_file_uri_roots(spark, tmp_path, capsys):
+    """`maintain` takes a file:// root for an index kind and for a
+    trained-artifact kind alike: each decayed or drifted root acts
+    once and publishes v2."""
+    from samplebatchprocessing_spark.__main__ import main
+
+    doc = spark.createDataFrame(
+        [(1, "big cat"), (2, "cat dog"), (3, "dog bird")],
+        "doc_id long, text string")
+    post = str(tmp_path / "post")
+    v1 = publish.new_layout_dir(post)
+    T.postings_index_write(doc.filter("doc_id = 1"), v1, n_buckets=4)
+    publish.publish(post, v1)
+    for did in (2, 3):
+        T.postings_index_append(doc.filter(f"doc_id = {did}"), post,
+                                n_buckets=4)
+    assert main(["maintain", "postings", "file://" + post, "--once",
+                 "--threshold", "2"]) == 0
+    assert "due=True" in capsys.readouterr().out
+    assert publish.current_version(post) == 2
+
+    vocab = str(tmp_path / "vocab")
+    _df, drifted = _vocab_root(spark, vocab)
+    fresh = str(tmp_path / "fresh")
+    drifted.write.parquet(fresh)
+    assert main(["maintain", "vocab", "file://" + vocab, "--once",
+                 "--fresh-parquet", fresh, "--n-merges", "3"]) == 0
+    assert "due=True" in capsys.readouterr().out
+    assert publish.current_version(vocab) == 2
+
+
+def test_cli_maintain_vocab_cas_publishes_through_put_if(
+        spark, tmp_path, monkeypatch, capsys):
+    """`maintain vocab --cas` publishes and prunes its pointer with
+    conditional writes, as the index kinds do."""
+    from samplebatchprocessing_spark.__main__ import main
+    from samplebatchprocessing_spark.pipeline.manifest import (
+        LocalObjectStoreClient)
+
+    vocab = str(tmp_path / "vocab")
+    _df, drifted = _vocab_root(spark, vocab)
+    fresh = str(tmp_path / "fresh")
+    drifted.write.parquet(fresh)
+    calls = []
+    put_if = LocalObjectStoreClient.put_if
+
+    def spy(self, key, data, etag):
+        calls.append(key)
+        return put_if(self, key, data, etag)
+
+    monkeypatch.setattr(LocalObjectStoreClient, "put_if", spy)
+    assert main(["maintain", "vocab", vocab, "--once", "--cas",
+                 "--fresh-parquet", fresh, "--n-merges", "3"]) == 0
+    assert "v1 -> v2" in capsys.readouterr().out
+    assert calls and all(k.endswith(publish.POINTER) for k in calls)
+
+
+def test_sweep_job_budgets(spark, sf_smoke, tmp_path, spark_jobs):
+    """Spark jobs per sweep, pinned at the most seen in 5 fresh
+    sessions: a not-due LSH sweep lists files and runs no job; a
+    vocab sweep measures drift once (6 jobs) and an acted one adds
+    the retrain and the new vocab's fertility stamp (23 in all)."""
+    doc = load_table(spark, sf_smoke, "documents").limit(30)
+    lsh = str(tmp_path / "lsh")
+    v1 = publish.new_layout_dir(lsh)
+    dedup.lsh_index_write(doc, v1)
+    publish.publish(lsh, v1)
+    r, n = spark_jobs(lambda: maintenance.lsh_maintenance_sweep(
+        spark, lsh, max_files_per_bucket=3))
+    assert not r["acted"] and n == 0
+
+    vocab = str(tmp_path / "vocab")
+    df, drifted = _vocab_root(spark, vocab)
+    r, n = spark_jobs(lambda: maintenance.vocab_maintenance_sweep(
+        spark, vocab, df, n_merges=3))
+    assert not r["acted"] and n <= 6
+    r, n = spark_jobs(lambda: maintenance.vocab_maintenance_sweep(
+        spark, vocab, drifted, n_merges=3))
+    assert r["acted"] and n <= 23

@@ -354,7 +354,7 @@ def test_put_if_wire_form_is_quoted(s3):
 def test_put_if_locks_never_appear_in_listings(tmp_path):
     """ADVICE r13 #2: r13 placed lock files in a "<root>.locks"
     SIBLING of the client root, so a client re-rooted at a subtree
-    (the __main__._store_from_uri shape, e.g. root=/bucket/idx) left
+    (the publish._publisher shape, e.g. root=/bucket/idx) left
     "idx.locks/<md5>" keys visible to a client rooted at the parent
     /bucket in bare string-prefix listings.  Locks now live under
     the system tempdir keyed by the backing object's absolute path:
@@ -392,3 +392,40 @@ def test_cas_publisher_lifecycle_on_s3_client(s3):
     assert pub.publish(d2) == 2
     assert pub.resolve() == d2
     assert pub.prune(keep=2) == []
+
+
+def test_vocab_sweep_over_s3a_root(spark, monkeypatch):
+    """The vocab retrain sweep runs the one sweep chain on an s3a://
+    root: a drifted slice retrains once, v2's vocab.json lands in the
+    bucket through the S3 client, and the next sweep is not due."""
+    from pyspark.sql import functions as F
+
+    from samplebatchprocessing_spark.operators import (artifacts,
+                                                       maintenance,
+                                                       publish)
+    from samplebatchprocessing_spark.operators import text as T
+    from samplebatchprocessing_spark.pipeline import manifest
+
+    buckets = {"b": {}}
+    monkeypatch.setattr(manifest, "_boto3_client_factory",
+                        lambda: FakeS3Client(buckets))
+    df = spark.createDataFrame(
+        [(i, "the cat and the hat and the bat") for i in range(8)],
+        "doc_id long, text string")
+    m1 = T.bpe_train_merges(df, n_merges=3)
+    rules = tuple((l, r, m) for _, l, r, m, _ in m1)
+    root = "s3a://b/vocab"
+    v1 = publish.new_layout_dir(root)
+    artifacts.bpe_vocab_write(
+        m1, v1, fertility_x1000=T.encode_fertility_x1000(df, rules))
+    publish.publish(root, v1)
+
+    drifted = df.withColumn("text", F.reverse(F.col("text")))
+    r1 = maintenance.vocab_maintenance_sweep(spark, root, drifted,
+                                             n_merges=3)
+    assert r1["acted"] and r1["version_after"] == 2
+    assert "vocab/layout-v00002/vocab.json" in buckets["b"]
+    r2 = maintenance.vocab_maintenance_sweep(spark, root, drifted,
+                                             n_merges=3)
+    assert not r2["due"] and r2["version_after"] == 2
+    assert len(artifacts.bpe_vocab_read(root)) == 3
